@@ -4,9 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps formatted physical plans for the judge-facing evidence in
-  * PLANS.md: parquet filter pushdown + column pruning, broadcast joins,
-  * whole-stage codegen spans, and the pipeline's single-shuffle shape.
+/** Dumps formatted physical plans at sf0.001 on a local[4] session, so
+  * plans are comparable across changes.
+  *
+  * With no arguments it regenerates PLANS.md, the optimizer evidence:
+  * parquet filter pushdown + column pruning, broadcast joins, whole-stage
+  * codegen spans, and the pipeline's single-shuffle shape.
+  *
+  * With `<outDir> <tag> <query...>` it writes each named query's plan to
+  * `<outDir>/<query>_<tag>.txt` (the before/after snapshots under plans/).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,13 +24,23 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
 
-    def plan(name: String): String = {
-      val df = SparkEntry.queries(name)(spark, dir)
-      s"## $name\n\n```\n" +
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode) + "\n```\n"
-    }
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
 
+    if (args.isEmpty) writePlansMd(plan)
+    else {
+      val outDir = args(0); val tag = args(1)
+      Files.createDirectories(Paths.get(outDir))
+      args.drop(2).foreach { n =>
+        Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan(n) + "\n")
+        println(s"wrote $outDir/${n}_$tag.txt")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(plan: String => String): Unit = {
     val out = new StringBuilder
     out ++= "# PLANS.md — optimizer evidence (generated by graft.PlanDump at sf0.001)\n\n"
     out ++= "What to look for:\n" +
@@ -38,9 +54,8 @@ object PlanDump {
       "q_heavy_hitters", "q_cdc_upsert", "text_lm_score", "q_funnel",
       "q_join_bucketed", "q_retention", "q_alerts", "text_bpe_apply",
       "q_scd2", "q_percentiles", "dedup_simhash")
-      .foreach(n => out ++= plan(n))
+      .foreach(n => out ++= s"## $n\n\n```\n" + plan(n) + "\n```\n")
     Files.writeString(Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${out.length} chars)")
-    spark.stop()
   }
 }

@@ -75,155 +75,48 @@ object StreamingPipeline {
       }
   }
 
-  /** Start `build()` with spark.sql.shuffle.partitions narrowed to
-    * [[NarrowStateWidth]] for the stream's own checkpoint, then restore the
-    * session value. Every driver-gated stream here holds manifest-class
-    * state (O(hours x sinks) windows / O(convs) progress rows / O(batch)
-    * dedup keys), yet the stateful shuffle width is captured into the
-    * checkpoint at start — at the bench session's 32 partitions each gate
-    * paid 32 state-store provider inits + commits (plus 32-task stateful
-    * stages) per micro-batch for a handful of state rows. 4 partitions is
-    * plenty for the state (the PARSE width is unaffected: the pre-shuffle
-    * file-source stage is split-bound, not shuffle-bound). The append gate
-    * measured 5.5 s -> ~2 s from this narrowing in r5; this round applies
-    * the same width to the other three gates. At production state sizes
-    * the width is the config the operator sizes to state volume, not the
-    * batch shuffle width.
-    */
   private val NarrowStateWidth = "4"
-  private def startNarrow(spark: SparkSession)(
-      build: () => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
-    try build()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
-  }
 
-  /** Run the mapGroupsWithState conversation-progress stream to completion
-    * over the files currently in inputDir (Update mode: each micro-batch
-    * emits the conversations it touched with their CUMULATIVE state, so the
-    * memory table holds one row per conv per touching batch; the final
-    * state per conv is the row with max turns — `turns` is monotone).
+  /** Run `stream` to completion over the files currently in its source
+    * dir into the memory table `queryName`, and return that table. The
+    * checkpoint goes on tmpfs: a disk-backed checkpoint fsyncs offset and
+    * commit files every batch, which on a throttled virtual disk dominates
+    * (and randomizes) the wall time of a short run. The query is stopped
+    * and the checkpoint deleted even when the run throws or the wait is
+    * interrupted.
+    *
+    * The query starts with spark.sql.shuffle.partitions narrowed to
+    * [[NarrowStateWidth]]; the session value is restored right after. Every
+    * driver-gated stream here holds manifest-class state (O(hours x sinks)
+    * windows / O(convs) progress rows / O(batch) dedup keys), yet the
+    * stateful shuffle width is captured into the checkpoint at start — at
+    * the bench session's 32 partitions each gate paid 32 state-store
+    * provider inits + commits (plus 32-task stateful stages) per
+    * micro-batch for a handful of state rows. 4 partitions is plenty for
+    * the state (the PARSE width is unaffected: the pre-shuffle file-source
+    * stage is split-bound, not shuffle-bound); it cut the append gate from
+    * 5.5 s to ~2 s at sf0.1. At production state sizes the width is the
+    * config the operator sizes to state volume, not the batch shuffle
+    * width.
     */
-  def runProgressOnce(spark: SparkSession, inputDir: String, cfg: PipelineConfig,
-      queryName: String): DataFrame = {
+  def runOnce(spark: SparkSession, queryName: String, mode: OutputMode)(
+      stream: => Dataset[_]): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
-    val q = startNarrow(spark) { () =>
-      conversationProgress(routedStream(spark, inputDir, cfg))
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update)
-        .start()
-    }
-    q.processAllAvailable()
-    q.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    spark.table(queryName)
-  }
-
-  /** Exactly-once delivery from an at-least-once stream: the input dir
-    * contains re-delivered copies (the gate's staging plants a repeat
-    * file), and streaming `dropDuplicates` on the event key restores the
-    * exact un-duplicated rows — the reference's R5 "delivered only once"
-    * invariant (log-ship site/docs/intro.md:39-40) lifted from per-source
-    * offset bookkeeping to content keys, which is also what a streaming
-    * ingest front of a training-data pipeline runs. One micro-batch at
-    * gate scale (a second batch reloads every partition's state store
-    * from the checkpoint — the measured multi-second hazard); the
-    * production shape is `dropDuplicatesWithinWatermark` so dedup state
-    * stays bounded by the re-delivery horizon instead of growing with
-    * the corpus.
-    */
-  def runDedupOnce(spark: SparkSession, inputDir: String, cfg: PipelineConfig,
-      queryName: String): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
-    val q = startNarrow(spark) { () =>
-      routedStream(spark, inputDir, cfg, maxFilesPerTrigger = 10000)
-        .dropDuplicates("conv_id", "turn_idx")
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .start()
-    }
-    q.processAllAvailable()
-    q.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    spark.table(queryName)
-  }
-
-  /** Run the windowed-count stream to completion over the files currently
-    * in inputDir (synchronous local smoke path; a production deployment
-    * would use a continuous trigger + checkpointLocation).
-    */
-  def runWindowedOnce(spark: SparkSession, inputDir: String, cfg: PipelineConfig,
-      queryName: String): DataFrame = {
-    // checkpoint on tmpfs: the default java.io.tmpdir checkpoint fsyncs
-    // offset/commit files to the sandbox's throttled virtio disk, which
-    // dominates (and randomizes) the wall time of a short batch-mode run
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
-    // one micro-batch for the Complete-mode gate: a SECOND batch makes every
-    // partition RELOAD its state store from the checkpoint (measured
-    // loadTimeMs up to ~6 s/partition on this host — 3.4 s -> 40+ s per
-    // run); cross-batch behavior is the progress stream's job
-    val q = startNarrow(spark) { () =>
-      windowedSinkCounts(
-          routedStream(spark, inputDir, cfg, maxFilesPerTrigger = 10000))
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete)
-        .start()
-    }
-    q.processAllAvailable()
-    q.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    spark.table(queryName)
-  }
-
-  /** Append-mode watermarked windows — the EMIT-ON-CLOSE production
-    * semantics the Complete-mode gate cannot show: a window row reaches
-    * the sink only after the watermark passes its end, exactly once, and
-    * its state is evicted. Needs >= 2 micro-batches by construction (the
-    * watermark a batch EMITS against is computed from the PREVIOUS
-    * batch's max event time), so the staged input is 8 real files plus a
-    * later-mtime sentinel "advance" file and maxFilesPerTrigger = 8: the
-    * sentinel's future event time closes every real window in batch 2.
-    * Callers bound the result to windows closed by the REAL data's
-    * watermark, which makes the emitted set independent of whether the
-    * engine also runs a trailing no-data flush batch.
-    */
-  def runWindowedAppendOnce(spark: SparkSession, inputDir: String,
-      cfg: PipelineConfig, queryName: String): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
-    // narrow state width via startNarrow: the gate is 2 batches by
-    // construction, and batch 2 reloads every state-store provider from
-    // the checkpoint at a per-PARTITION fixed cost (the measured
-    // multi-second hazard) — the windowed aggregate holds only
-    // O(hours x sinks) rows, so 4 partitions is plenty and cuts the
-    // reload tax 8x (measured 5.5 s -> ~2 s at sf0.1).
-    val q = startNarrow(spark) { () =>
-      windowedSinkCounts(
-          routedStream(spark, inputDir, cfg, maxFilesPerTrigger = 8))
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .start()
-    }
-    q.processAllAvailable()
-    q.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    try {
+      val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
+      val q =
+        try stream.writeStream
+          .format("memory")
+          .queryName(queryName)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .start()
+        finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+      try q.processAllAvailable()
+      finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     spark.table(queryName)
   }
 }

@@ -78,11 +78,12 @@ object Soak {
     val turns = args.lift(0).map(_.toLong).getOrElse(40000000L)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nEvents = args.lift(2).map(_.toLong).getOrElse(1000000L)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -74,17 +74,26 @@ class DictionarySpec extends SparkSpec {
     assert(cfgWith(csvSpec).validate().isRight)
   }
 
-  test("the parse stage with config formats stays in whole-stage codegen") {
+  test("the parse projection stays in whole-stage codegen") {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // non-foldable input (off spark.range) or the whole parse constant-folds
-    // into a LocalTableScan and there is no stage to inspect
-    val df = PatternDictionary.parse(
-      spark.range(4).select(concat(lit("EVT,click,"), col("id"),
-        lit(",2024-06-01 10:00:00")).as("text")),
-      Transcripts.RunTsMillis, Seq(csvSpec))
-    val plan = df.queryExecution.executedPlan.toString
-    // the fused projection must not fall out of WSCG because of the
-    // config-compiled trees (the CodegenFallback hazard class)
-    assert(plan.contains("*("), s"no WholeStageCodegen span in:\n$plan")
+    // text derived from spark.range, not literals: literal input
+    // constant-folds the whole parse into a LocalTableScan
+    val inputs = Seq(
+      "config formats" -> (Seq(csvSpec), concat(lit("EVT,click,"), col("id"),
+        lit(",2024-06-01 10:00:00"))),
+      "built-in dictionary" -> (Seq.empty[FormatSpec],
+        concat(lit("<13>Jun  5 04:03:02 h"), col("id"), lit(" cron[7]: hello"))))
+    inputs.foreach { case (label, (formats, text)) =>
+      val df = PatternDictionary.parse(
+        spark.range(4).select(text.as("text")), Transcripts.RunTsMillis, formats)
+      val plan = df.queryExecution.executedPlan.toString
+      // the PROJECT must be starred: the Range under it prints "*(1) Range"
+      // even when the parse projection falls out of codegen (one
+      // CodegenFallback expression in the fused trees is enough for that)
+      assert("""\*\(\d+\) Project""".r.findFirstIn(plan).nonEmpty,
+        s"$label: parse projection not in a WholeStageCodegen span:\n$plan")
+      assert("""(?m)^[\s:|+-]*Project \[""".r.findFirstIn(plan).isEmpty,
+        s"$label: an un-fused Project survives in:\n$plan")
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 
 import graft.model.PipelineConfig
 import graft.pipeline.{Pipeline, TranscriptGen, Transcripts}
@@ -22,7 +22,10 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val streamed = StreamingPipeline
-      .runWindowedOnce(spark, in, cfg, "stream_counts")
+      .runOnce(spark, "stream_counts", OutputMode.Complete) {
+        StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
+          spark, in, cfg, maxFilesPerTrigger = 10000))
+      }
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
 
     val batch = Pipeline
@@ -64,7 +67,10 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val emitted = StreamingPipeline
-      .runWindowedAppendOnce(spark, in, cfg, "stream_append_spec")
+      .runOnce(spark, "stream_append_spec", OutputMode.Append) {
+        StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
+          spark, in, cfg, maxFilesPerTrigger = 8))
+      }
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
 
     // exactly once: no (window, sink) appears twice in the raw sink table
@@ -133,7 +139,10 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val deduped = StreamingPipeline
-      .runDedupOnce(spark, in, cfg, "stream_dedup_spec")
+      .runOnce(spark, "stream_dedup_spec", OutputMode.Append) {
+        StreamingPipeline.routedStream(spark, in, cfg, maxFilesPerTrigger = 10000)
+          .dropDuplicates("conv_id", "turn_idx")
+      }
     // input carries the duplicates; the deduped stream must not
     assert(spark.read.parquet(in).count() === N + nDup)
     assert(deduped.count() === N)
@@ -145,5 +154,24 @@ class StreamingSpec extends SparkSpec {
       .groupBy("sink").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got === want)
+  }
+
+  test("a failing run propagates its error, stops the query and removes its checkpoint") {
+    val in = Files.createTempDirectory("graft_corrupt").toString + "/input"
+    TranscriptGen.transcripts(spark, N).coalesce(2).write.parquet(in)
+    Files.write(java.nio.file.Paths.get(in, "part-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
+    def checkpoints() = new java.io.File("/dev/shm").listFiles()
+      .map(_.getName).filter(_.startsWith("graft_ckpt")).toSet
+    val before = checkpoints()
+
+    intercept[StreamingQueryException] {
+      StreamingPipeline.runOnce(spark, "stream_corrupt_spec", OutputMode.Append) {
+        StreamingPipeline.routedStream(spark, in, cfg, maxFilesPerTrigger = 10000)
+      }
+    }
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert((checkpoints() -- before).isEmpty, "the checkpoint dir was left behind")
   }
 }
