@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.state.TableFormat
+
 /** Standard-operator coverage (SURVEY.md §2.6): scans with
   * pushdown/pruning, hash aggregation, broadcast/semi/anti joins, window
   * functions, sort/limit, set ops, rollup, scalar functions, sessionized
@@ -528,10 +530,6 @@ object GenericQueries {
         .when(col("event_id") % 4 === 1,
           concat(lit("warm_"), (col("event_id") % 40).cast("string")))
         .otherwise(concat(lit("cold_"), col("event_id").cast("string")))
-      // sf0.1 events.parquet is ONE 2 MB file — a shuffle-free pass is as
-      // wide as its splits (the pipe_lumberjack lesson), so spread the
-      // sketch pass; at real scale the input has thousands of splits and
-      // this repartition disappears
       val keyed = t(s, dir, "events").select(key.as("k"))
       // TWO corpus passes, not three (VERDICT r5 #3): the exact total row
       // count rides the SKETCH pass as an Observation (the MG aggregator
@@ -539,13 +537,13 @@ object GenericQueries {
       // scan, and pass 2 exact-counts only the O(capacity) candidate set.
       // The collected sketch row is O(capacity) driver metadata — the same
       // bytes the broadcast of the candidate frame shipped before. Only
-      // the sketch pass repartitions (its per-row MG update is the
-      // expensive kernel); pass 2 is an InSet probe + partial agg over at
-      // most Capacity groups — spreading it would cost a 100%-of-rows
-      // shuffle to save per-row work that map-side combine already makes
-      // trivial.
+      // the sketch pass is spread off a one-split input
+      // (TableFormat.spreadScan; its per-row MG update is the expensive
+      // kernel); pass 2 is an InSet probe + partial agg over at most
+      // Capacity groups — spreading it would cost a 100%-of-rows shuffle
+      // to save per-row work that map-side combine already makes trivial.
       val obs = org.apache.spark.sql.Observation()
-      val candRow = keyed.repartition(s.sparkContext.defaultParallelism)
+      val candRow = TableFormat.spreadScan(keyed)
         .observe(obs, count(lit(1)).as("n")).as[String]
         .select(graft.functions.MisraGriesAgg.toColumn.name("cand"))
         .collect()

@@ -26,6 +26,8 @@ import graft.state.{ParquetFormat, TableFormat}
   */
 object TrainingOps {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   /** Max docs a shingle may appear in before it is discarded as a
     * stop-shingle (no-op at test scale, load-bearing at 10^9 docs).
     */
@@ -109,8 +111,12 @@ object TrainingOps {
       sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
     }
 
+  /** The documents table, spread across the cluster when it has too few
+    * populated splits ([[TableFormat.spreadScan]]), so the per-doc kernels
+    * built on it (shingles, signatures) do not run in one task.
+    */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    TableFormat.spreadScan(s.read.parquet(s"$dir/documents.parquet"))
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
@@ -241,7 +247,7 @@ object TrainingOps {
     * derive from this single tokenize+shingle pass (round 1 recomputed
     * shingles from text twice per query and cached an exploded copy each).
     */
-  private def docShingles(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def docShingles(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.ensureRegistered(s)
     docs(s, dir).select(col("doc_id"), shingles(col("text")).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -271,7 +277,7 @@ object TrainingOps {
       liveLabelFrames.remove((sessionKey(s), dir))
     }.foreach(_.foreach(_.unpersist()))
     bpeMemo.keys.filter(_._1 == sessionKey(s)).foreach(bpeMemo.remove)
-    simhashSigs(s, dir).unpersist()
+    simhashSigs(dsh).unpersist()
     keywordTf(s, dir).unpersist()
     dsh.unpersist()
   }
@@ -300,8 +306,8 @@ object TrainingOps {
     * four join sides, and 9x64-bit signature computation over every
     * shingle is the most expensive per-doc kernel in the suite.
     */
-  private def simhashSigs(s: SparkSession, dir: String): DataFrame =
-    docShingles(s, dir).select(col("doc_id"),
+  private def simhashSigs(dsh: DataFrame): DataFrame =
+    dsh.select(col("doc_id"),
       simhash_multi(col("sh"), SimHashSigs).as("sigs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -707,9 +713,6 @@ object TrainingOps {
       val d = df.agg(sum(col("l").cast("decimal(38,0)"))).first.getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    // materialize round 0 (which also builds the upstream pair/shingle
-    // caches at the session's full width) BEFORE narrowing the loop
-    var prevSum = labelSum(labels)
     // A persist()'d plan is by default built WITHOUT adaptive execution
     // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false),
     // so every loop round's cached label frame was built through a full
@@ -727,32 +730,45 @@ object TrainingOps {
     // endorsed pattern elsewhere in this repo).
     val spark = pairs.sparkSession
     val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    ccFlagLock.synchronized {
-    val prevFlag = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
+    // every frame persisted here stays cached until `labels` is handed to
+    // the caller; on failure (the maxIters guard, a failed job) they are
+    // released instead of leaking into the session's CacheManager
+    var next = labels
     try {
-      var changed = true
-      var iters = 0
-      while (changed) {
-        iters += 1
-        require(iters <= maxIters, s"connectedComponents: no fixpoint after $maxIters rounds")
-        val viaEdge = edges
-          .join(labels.select(col("v").as("src"), col("l")), "src")
-          .select(col("dst").as("v"), col("l"))
-        val next = viaEdge.unionAll(labels)
-          .groupBy("v").agg(min("l").as("l"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nextSum = labelSum(next)
-        changed = nextSum.compareTo(prevSum) != 0
-        prevSum = nextSum
-        labels.unpersist()
-        labels = next
+      // materialize round 0 (which also builds the upstream pair/shingle
+      // caches at the session's full width) BEFORE narrowing the loop
+      var prevSum = labelSum(labels)
+      ccFlagLock.synchronized {
+        val prevFlag = spark.conf.getOption(flag)
+        spark.conf.set(flag, "true")
+        try {
+          var changed = true
+          var iters = 0
+          while (changed) {
+            iters += 1
+            require(iters <= maxIters, s"connectedComponents: no fixpoint after $maxIters rounds")
+            val viaEdge = edges
+              .join(labels.select(col("v").as("src"), col("l")), "src")
+              .select(col("dst").as("v"), col("l"))
+            next = viaEdge.unionAll(labels)
+              .groupBy("v").agg(min("l").as("l"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val nextSum = labelSum(next)
+            changed = nextSum.compareTo(prevSum) != 0
+            prevSum = nextSum
+            labels.unpersist()
+            labels = next
+          }
+          log.info(s"[cc] fixpoint after $iters rounds")
+        } finally prevFlag match {
+          case Some(v) => spark.conf.set(flag, v)
+          case None => spark.conf.unset(flag)
+        }
       }
-      System.err.println(s"[cc] fixpoint after $iters rounds")
-    } finally prevFlag match {
-      case Some(v) => spark.conf.set(flag, v)
-      case None => spark.conf.unset(flag)
-    }
+    } catch {
+      case e: Throwable =>
+        Seq(next, labels, edges).foreach(_.unpersist())
+        throw e
     }
     edges.unpersist()
     labels
@@ -1232,7 +1248,7 @@ object TrainingOps {
       // keys, both prefilter sides) — persist so it runs once per corpus
       // (one cache entry via CacheManager plan-dedup; releaseCaches drops
       // it with the shingle cache)
-      val sig = simhashSigs(s, dir)
+      val sig = simhashSigs(dsh)
       val banded = sig.select(col("doc_id"),
         explode(GraftFunctions.simhash_band_keys(col("sigs"), SimHashBandBits))
           .as("bk"))

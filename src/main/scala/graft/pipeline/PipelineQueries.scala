@@ -9,6 +9,7 @@ import graft.functions.GraftFunctions
 import graft.model.PipelineConfig
 import graft.parse.PatternDictionary
 import graft.route.Router
+import graft.state.TableFormat
 import graft.streaming.StreamingPipeline
 
 /** Driver-verified queries for the log-pipeline operator surface
@@ -274,13 +275,9 @@ object PipelineQueries {
       val p2 = concat(lit("{\"etype\": \""), col("event_type"),
         lit("\", \"k\": \""), col("event_id") + 1000000, lit("\"}"))
       val decoded = lumberjack_decode(lumberjack_encode(array(p1, p2)))
-      Transcripts.events(s, dir)
-        // a shuffle-free job is as wide as its input SPLITS, and the events
-        // table is ONE 2 MB file — the zlib codec (the whole cost here) ran
-        // single-threaded. One cheap shuffle of the tiny base columns turns
-        // the CPU-bound codec stage cluster-wide; at real scale a
-        // lumberjack batch source has abundant splits and needs none.
-        .repartition(s.sparkContext.defaultParallelism)
+      // the zlib codec is the whole cost here: spread it off a one-split
+      // input (TableFormat.spreadScan)
+      TableFormat.spreadScan(Transcripts.events(s, dir))
         .select(col("event_id"), explode(decoded).as("e"))
         // hoist the parsed map: a multiply-referenced non-trivial alias stays
         // un-inlined (CollapseProject), so the JSON parse runs ONCE per row
@@ -312,14 +309,9 @@ object PipelineQueries {
     "pipe_e2e_counts" -> { (s, dir) =>
       reg(s)
       // the aggregate needs sink+format for EVERY row, so count() cannot
-      // prune the parse (unlike pipe_e2e_routed) — and the events table is
-      // ONE 2 MB file, so the shuffle-free parse stage ran on a single
-      // split (the pipe_lumberjack lesson: a shuffle-free job is as wide
-      // as its input splits). One cheap shuffle of the tiny envelope
-      // spreads the regex-heavy parse cluster-wide; at real scale the
-      // input has abundant splits and needs none.
-      val t = Transcripts.transcripts(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      // prune the parse (unlike pipe_e2e_routed): spread the regex-heavy
+      // parse off a one-split input (TableFormat.spreadScan)
+      val t = TableFormat.spreadScan(Transcripts.transcripts(s, dir))
       val routed = Pipeline.transform(t, e2eConfig, Enrich.defaultLookup(s))
       Router.sinkAggregates(routed).orderBy("sink", "format")
     },
@@ -342,12 +334,11 @@ object PipelineQueries {
         .when(v === 7, concat(lit("{\"k\": \""), col("event_type")))
         .when(v === 9, lit("\u0007\u001b[2Jboom"))
         .otherwise(repeat(lit("="), 2000))
-      // single-split input + the suite's most expensive per-row work (the
-      // 5k single-token and 2k '='-run probe lines drag every format's
-      // gate regex linearly): spread the probe 32-wide before the parse —
-      // same repartition rationale as pipe_e2e_counts
+      // the suite's most expensive per-row work (the 5k single-token and
+      // 2k '='-run probe lines drag every format's gate regex linearly):
+      // spread the probe before the parse (TableFormat.spreadScan)
       val env = Transcripts.fromEvents(
-        Transcripts.events(s, dir).repartition(s.sparkContext.defaultParallelism),
+        TableFormat.spreadScan(Transcripts.events(s, dir)),
         Some(when(k % 2 === 1, fuzz).otherwise(Transcripts.miniLine)))
       Pipeline.transform(env, e2eConfig, Enrich.defaultLookup(s))
         .groupBy("sink", "format").agg(count(lit(1)).as("n"))
@@ -363,13 +354,12 @@ object PipelineQueries {
       // same partial-mergeable SimHash aggregator, driven through the
       // UNTYPED udaf surface: the groupByKey/mapValues typed pipeline
       // deserialized every row to Scala objects before the partial agg
-      // (AggSpec pins the aggregator's semantics either way). The
-      // repartition spreads the tokenize+64-bit-vote kernel off the one
-      // 2 MB events split (pipe_lumberjack rationale).
+      // (AggSpec pins the aggregator's semantics either way).
+      // TableFormat.spreadScan spreads the tokenize+64-bit-vote kernel off
+      // a one-split input.
       val fpAgg = udaf(graft.functions.SimHashAgg,
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]())
-      Transcripts.transcripts(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
+      TableFormat.spreadScan(Transcripts.transcripts(s, dir))
         .select(col("conv_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
         .groupBy(col("conv_id"))
         .agg(fpAgg(col("toks")).as("fp"))

@@ -1,6 +1,7 @@
 package graft.state
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The narrow table-format seam promised in SURVEY.md §7.1.7: everything the
   * pipeline needs from a table store is "read the current snapshot", "append
@@ -33,6 +34,43 @@ trait TableFormat {
     * with no partition columns, replaces the whole table.
     */
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit
+}
+
+object TableFormat {
+
+  /** Spread a file scan across the cluster when its POPULATED splits cannot
+    * fill it. A shuffle-free job is as wide as the splits that hold rows,
+    * not as wide as the splits Spark plans: a parquet row group is read
+    * whole by the one split holding its midpoint, so sf0.1's
+    * documents.parquet (one 594 KB file, one row group) plans as 4 splits
+    * and reads all its rows in one task — the tokenize+shingle and
+    * 9x64-bit simhash kernels behind the dedup caches, the zlib codec of
+    * pipe_lumberjack and the regex-heavy parse of pipe_e2e_counts ran
+    * single-threaded on such inputs. One cheap round-robin shuffle of the
+    * scan puts that work on every core.
+    *
+    * Populated splits are estimated from facts the read already has:
+    * max(input files, input bytes / `parquet.block.size`), the second
+    * term a row-group count. The shuffle is added only when that estimate
+    * is below `defaultParallelism`, so an input with abundant splits (any
+    * real-scale table) keeps its shuffle-free scan — at 100 TB the same
+    * repartition would be a full extra shuffle. The decision depends only
+    * on the files read, so repeated builds over one directory keep one
+    * logical plan and CacheManager plan-dedup still matches their
+    * persisted frames.
+    */
+  def spreadScan(df: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    val width = s.sparkContext.defaultParallelism
+    val files = df.inputFiles.length
+    val bytes = df.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.sizeInBytes
+    }.sum
+    val block = s.sessionState.newHadoopConf().getLong("parquet.block.size", 128L << 20)
+    val populated = math.max(files.toLong, (bytes + block - 1) / block)
+    if (populated < width) df.repartition(width) else df
+  }
 }
 
 /** NDJSON (json-lines) binding of the same seam — the interop format every

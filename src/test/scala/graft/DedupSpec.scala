@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Pins the dedup paths the driver's data never exercises.
   *
   * The binding-cap test: at sf0.001 the shingle document-frequency
@@ -96,6 +102,21 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("connected components: a failed fixpoint releases its caches") {
+    import spark.implicits._
+    // the chain needs two loop rounds, so maxIters = 1 trips the guard
+    // after edges, round-0 labels and round-1 labels were all persisted
+    val cache = spark.sharedState.cacheManager
+    // the entry count is private[sql] in Scala but a public JVM method
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = entries
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("ia", "ib")
+    intercept[IllegalArgumentException] {
+      graft.ops.TrainingOps.connectedComponents(chain, maxIters = 1)
+    }
+    assert(entries === before)
+  }
+
   test("dedup_clusters: repeated invocations stay correct past the live-frame bound") {
     // each invocation recomputes the fixpoint and registers its persisted
     // labels frame; beyond the bookkeeping bound the oldest frames are
@@ -170,5 +191,48 @@ class DedupSpec extends SparkSpec {
     assert(ngram.nonEmpty)
     assert(ids("dedup_minhash") === ngram)
     assert(ids("dedup_simhash") === ngram)
+  }
+
+  test("populated-split rule: a one-file table is spread, a many-file table is not") {
+    // the rule's sites: the four one-split pipe_* queries and the
+    // documents read behind every dedup cache (the persisted shingle frame)
+    def sites(dir: String) = Seq("pipe_lumberjack", "pipe_e2e_counts",
+        "pipe_quarantine_fuzz", "pipe_conv_fingerprint")
+      .map(q => q -> graft.pipeline.PipelineQueries.queries(q)(spark, dir)) :+
+      ("docShingles" -> graft.ops.TrainingOps.docShingles(spark, dir))
+    // round-robin exchanges in the physical plan, looking through AQE
+    // wrappers (as first planned) and into persisted frames' cached plans
+    def exchanges(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.inputPlan)
+      case m: InMemoryTableScanExec => exchanges(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+        1 + exchanges(e.child)
+      case other => other.children.map(exchanges).sum
+    }
+    def roundRobins(df: org.apache.spark.sql.DataFrame) =
+      exchanges(df.queryExecution.executedPlan)
+    // sf0.001's tables are one file with one row group each
+    val one = sf("0.001")
+    sites(one).foreach { case (name, df) =>
+      assert(roundRobins(df) === 1, s"$name on a one-file table")
+    }
+    val populated = graft.ops.TrainingOps.docShingles(spark, one).rdd
+      .mapPartitions(rows => Iterator(rows.size)).collect().count(_ > 0)
+    assert(populated >= 2, "shingle frame partitions holding rows")
+    // the same tables written as defaultParallelism files fill the cluster
+    // on their own: no exchange is added
+    val width = spark.sparkContext.defaultParallelism
+    val many = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    Seq("documents", "events").foreach { t =>
+      spark.read.parquet(s"$one/$t.parquet").repartition(width)
+        .write.parquet(s"$many/$t.parquet")
+    }
+    assert(spark.read.parquet(s"$many/documents.parquet").inputFiles.length >= width)
+    try sites(many).foreach { case (name, df) =>
+      assert(roundRobins(df) === 0, s"$name on a $width-file table")
+    } finally {
+      graft.ops.TrainingOps.releaseCaches(spark, many)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(many))
+    }
   }
 }
