@@ -19,16 +19,14 @@ object SimHashAgg extends Aggregator[Seq[String], Array[Int], Long] {
 
   override def zero: Array[Int] = new Array[Int](64)
 
-  override def reduce(votes: Array[Int], tokens: Seq[String]): Array[Int] = {
+  override def reduce(tallies: Array[Int], tokens: Seq[String]): Array[Int] = {
+    val n = tokens.size
+    val votes = new SimHashVotes(1, n)
     tokens.foreach { tok =>
-      val h = Fingerprint64.hash64Seeded(UTF8String.fromString(tok), 0L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
+      votes.add(0, Fingerprint64.hash64Seeded(UTF8String.fromString(tok), 0L))
     }
-    votes
+    votes.addTallies(0, n, tallies)
+    tallies
   }
 
   override def merge(a: Array[Int], b: Array[Int]): Array[Int] = {

@@ -151,40 +151,99 @@ case class SimHashMulti(child: Expression, nSigs: Int) extends UnaryExpression {
 
 object SimHashMulti {
   def sigs(tokens: ArrayData, nSigs: Int): ArrayData = {
-    val votes = new Array[Int](nSigs * 64)
     val n = tokens.numElements()
+    val votes = new SimHashVotes(nSigs, n)
+    var voters = 0
     var i = 0
     while (i < n) {
       if (!tokens.isNullAt(i)) {
         val base = Fingerprint64.hash64(tokens.getUTF8String(i))
         var sgi = 0
         while (sgi < nSigs) {
-          val h = Fingerprint64.mix(base + (sgi + 1) * 0x9E3779B97F4A7C15L)
-          val off = sgi * 64
-          var b = 0
-          while (b < 64) {
-            if (((h >>> b) & 1L) == 1L) votes(off + b) += 1 else votes(off + b) -= 1
-            b += 1
-          }
+          votes.add(sgi, Fingerprint64.mix(base + (sgi + 1) * 0x9E3779B97F4A7C15L))
           sgi += 1
         }
+        voters += 1
       }
       i += 1
     }
     val out = new Array[Long](nSigs)
     var sgi = 0
     while (sgi < nSigs) {
-      var sig = 0L
-      val off = sgi * 64
-      var b = 0
-      while (b < 64) {
-        if (votes(off + b) > 0) sig |= (1L << b)
-        b += 1
-      }
-      out(sgi) = sig
+      out(sgi) = votes.signature(sgi, voters)
       sgi += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** The one SimHash vote kernel, shared by [[SimHashMulti]], [[SimHash64]]
+  * and [[SimHashAgg]]. A SimHash bit is the sign of that bit's +1/-1 tally
+  * over the voters' hashes, i.e. whether more than half of them set it, so
+  * only each bit's count of ones is needed. The counts are bit-sliced:
+  * plane k of a signature holds bit k of all 64 lanes' counts, and adding
+  * a hash is a ripple carry through the planes, a few word operations in
+  * place of 64 branches on random hash bits (mispredicted about half the
+  * time).
+  *
+  * `maxVoters` bounds the hashes added to any one signature. Every count is
+  * at most `maxVoters`, below 2^`depth`, so a carry never leaves its
+  * signature's `depth` planes.
+  */
+private[functions] final class SimHashVotes(nSigs: Int, maxVoters: Int) {
+  private val depth = 32 - Integer.numberOfLeadingZeros(maxVoters)
+  private val planes = new Array[Long](nSigs * depth)
+
+  /** Counts one voter's hash `h` for signature `sig`: +1 in every lane whose
+    * bit is set.
+    */
+  def add(sig: Int, h: Long): Unit = {
+    var carry = h
+    var i = sig * depth
+    while (carry != 0L) {
+      val t = planes(i) & carry
+      planes(i) ^= carry
+      carry = t
+      i += 1
+    }
+  }
+
+  /** Signature `sig` over `voters` hashes: bit b is set iff lane b's ones
+    * outnumber its zeros (2·ones > voters), so ties give 0. All 64 lanes
+    * are compared against ⌊voters/2⌋ at once, from the top plane down.
+    */
+  def signature(sig: Int, voters: Int): Long = {
+    val half = voters >>> 1
+    val off = sig * depth
+    var gt = 0L
+    var eq = -1L
+    var k = depth - 1
+    while (k >= 0) {
+      val p = planes(off + k)
+      val bit = -((half >>> k) & 1).toLong
+      gt |= eq & p & ~bit
+      eq &= ~(p ^ bit)
+      k -= 1
+    }
+    gt
+  }
+
+  /** Adds signature `sig`'s +1/-1 tallies over `voters` hashes, 2·ones -
+    * voters per lane, to `tallies`: the mergeable form [[SimHashAgg]] keeps.
+    */
+  def addTallies(sig: Int, voters: Int, tallies: Array[Int]): Unit = {
+    val off = sig * depth
+    var b = 0
+    while (b < 64) {
+      var ones = 0
+      var k = 0
+      while (k < depth) {
+        ones |= ((planes(off + k) >>> b).toInt & 1) << k
+        k += 1
+      }
+      tallies(b) += 2 * ones - voters
+      b += 1
+    }
   }
 }
 
@@ -324,27 +383,18 @@ object RpProject {
 
 object SimHash64 {
   def simhash(tokens: ArrayData, seed: Long): Long = {
-    val votes = new Array[Int](64)
     val n = tokens.numElements()
+    val votes = new SimHashVotes(1, n)
+    var voters = 0
     var i = 0
     while (i < n) {
       if (!tokens.isNullAt(i)) {
-        val h = Fingerprint64.hash64Seeded(tokens.getUTF8String(i), seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
+        votes.add(0, Fingerprint64.hash64Seeded(tokens.getUTF8String(i), seed))
+        voters += 1
       }
       i += 1
     }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
+    votes.signature(0, voters)
   }
 }
 

@@ -172,16 +172,10 @@ object TrainingOps {
   /** BPE training: one distributed corpus pass -> O(vocab) word counts on
     * the driver (min-count floored, size-bounded) -> greedy merge loop
     * (count desc, pair asc argmax; left-to-right application, exactly
-    * [[graft.functions.BpeMerge]]'s semantics). Memoized per (session,
-    * dir) so text_bpe_train and text_bpe_apply share one training run.
-    * Returns (rank, left, right, weighted pair count) for the first 8
-    * merges.
+    * [[graft.functions.BpeMerge]]'s semantics). Each text_bpe_* invocation
+    * trains once. Returns (rank, left, right, weighted pair count) for the
+    * first 8 merges.
     */
-  // memo keyed on sessionUUID, not identityHashCode (ADVICE r5: identity
-  // hashes can be reused after a session is GC'd — stale merges for a new
-  // session); cleared by releaseCaches with the data caches
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Int, String, String, Long)]]
   private def bpeTrain(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
     bpeTrainWithFloor(s, dir, BpeMinWordCount)
 
@@ -190,55 +184,54 @@ object TrainingOps {
     * [[BpeMinWordCount]] on the fixtures).
     */
   private[graft] def bpeTrainWithFloor(s: SparkSession, dir: String,
-      minCount: Long): Seq[(Int, String, String, Long)] =
-    bpeMemo.getOrElseUpdate((sessionKey(s), dir + s"#f$minCount"), {
-      val wc = docs(s, dir)
-        .select(explode(tokens(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
-        .filter(col("wcnt") >= minCount)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      require(wc.length <= BpeMaxCollectedVocab,
-        s"BPE vocabulary after the >= $minCount floor (${wc.length} words) " +
-          s"exceeds the driver bound $BpeMaxCollectedVocab — raise " +
-          "SPARK_GRAFT_BPE_MIN_COUNT or use the distributed escalation")
-      val seqs = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
-      wc.foreach { case (w, c) => seqs += ((w.split("").filter(_.nonEmpty), c)) }
-      val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-      var rank = 1
-      var exhausted = false
-      while (rank <= 8 && !exhausted) {
-        val counts = scala.collection.mutable.Map[(String, String), Long]()
-        seqs.foreach { case (a, c) =>
-          var i = 0
-          while (i < a.length - 1) {
-            val k = (a(i), a(i + 1))
-            counts(k) = counts.getOrElse(k, 0L) + c
-            i += 1
-          }
-        }
-        if (counts.isEmpty) exhausted = true
-        else {
-          val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, s"$l $r") }
-          merges += ((rank, l, r, c))
-          var i = 0
-          while (i < seqs.length) {
-            val (a, cnt) = seqs(i)
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
-            var j = 0
-            while (j < a.length) {
-              if (j < a.length - 1 && a(j) == l && a(j + 1) == r) {
-                buf += (l + r); j += 2
-              } else { buf += a(j); j += 1 }
-            }
-            seqs(i) = (buf.toArray, cnt)
-            i += 1
-          }
-          rank += 1
+      minCount: Long): Seq[(Int, String, String, Long)] = {
+    val wc = docs(s, dir)
+      .select(explode(tokens(col("text"))).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
+      .filter(col("wcnt") >= minCount)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    require(wc.length <= BpeMaxCollectedVocab,
+      s"BPE vocabulary after the >= $minCount floor (${wc.length} words) " +
+        s"exceeds the driver bound $BpeMaxCollectedVocab — raise " +
+        "SPARK_GRAFT_BPE_MIN_COUNT or use the distributed escalation")
+    val seqs = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
+    wc.foreach { case (w, c) => seqs += ((w.split("").filter(_.nonEmpty), c)) }
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var rank = 1
+    var exhausted = false
+    while (rank <= 8 && !exhausted) {
+      val counts = scala.collection.mutable.Map[(String, String), Long]()
+      seqs.foreach { case (a, c) =>
+        var i = 0
+        while (i < a.length - 1) {
+          val k = (a(i), a(i + 1))
+          counts(k) = counts.getOrElse(k, 0L) + c
+          i += 1
         }
       }
-      merges.toSeq
-    })
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, s"$l $r") }
+        merges += ((rank, l, r, c))
+        var i = 0
+        while (i < seqs.length) {
+          val (a, cnt) = seqs(i)
+          val buf = scala.collection.mutable.ArrayBuffer[String]()
+          var j = 0
+          while (j < a.length) {
+            if (j < a.length - 1 && a(j) == l && a(j + 1) == r) {
+              buf += (l + r); j += 2
+            } else { buf += a(j); j += 1 }
+          }
+          seqs(i) = (buf.toArray, cnt)
+          i += 1
+        }
+        rank += 1
+      }
+    }
+    merges.toSeq
+  }
 
   /** Per-doc distinct-shingle ARRAY frame, persisted once per session: the
     * plan is identical across every dedup query, so Spark's CacheManager
@@ -276,7 +269,6 @@ object TrainingOps {
     liveLabelFrames.synchronized {
       liveLabelFrames.remove((sessionKey(s), dir))
     }.foreach(_.foreach(_.unpersist()))
-    bpeMemo.keys.filter(_._1 == sessionKey(s)).foreach(bpeMemo.remove)
     simhashSigs(dsh).unpersist()
     keywordTf(s, dir).unpersist()
     dsh.unpersist()
@@ -303,8 +295,8 @@ object TrainingOps {
 
   /** Per-doc multi-simhash signature frame, persisted once per session
     * (plan-deduped like the shingle cache): dedup_simhash references it on
-    * four join sides, and 9x64-bit signature computation over every
-    * shingle is the most expensive per-doc kernel in the suite.
+    * four join sides, so the 9x64-bit signature pass (about 40 ms of one
+    * core over sf0.1's 260k shingles with bit-sliced votes) runs once.
     */
   private def simhashSigs(dsh: DataFrame): DataFrame =
     dsh.select(col("doc_id"),
@@ -1243,11 +1235,10 @@ object TrainingOps {
       // higher-order composition they replace was CodegenFallback, so the
       // projections emitting 36 exact + 612 probe rows per doc ran
       // interpreted and fell out of whole-stage codegen.
-      // the 576-bit multi-simhash is the most expensive per-doc kernel in
-      // the suite and the plan references it FOUR times (band keys, probe
-      // keys, both prefilter sides) — persist so it runs once per corpus
-      // (one cache entry via CacheManager plan-dedup; releaseCaches drops
-      // it with the shingle cache)
+      // the plan references the 576-bit multi-simhash FOUR times (band
+      // keys, probe keys, both prefilter sides) — persist so it runs once
+      // per corpus (one cache entry via CacheManager plan-dedup;
+      // releaseCaches drops it with the shingle cache)
       val sig = simhashSigs(dsh)
       val banded = sig.select(col("doc_id"),
         explode(GraftFunctions.simhash_band_keys(col("sigs"), SimHashBandBits))

@@ -21,9 +21,13 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
   * Scale design (100 TB / 1000 executors):
   *   - the fact side is never shuffled for the enrich join (broadcast);
   *   - the only shuffle is the salted repartition before the ordered sink
-  *     write: key = (bucket, salt(turn_idx)) so a single giant conversation
-  *     spreads across `saltBuckets` tasks while `bucket` (pure function of
-  *     conv_id) keeps manifest granularity deterministic;
+  *     write: key = (sink, bucket, pmod(turn_idx, 4)). `bucket` is a pure
+  *     function of conv_id, which keeps manifest granularity deterministic,
+  *     so one conversation's rows of a sink land in one bucket and spread
+  *     over at most 4 tasks. The key takes at most sinks × `saltBuckets` × 4
+  *     values, which caps the reducers that receive rows whatever
+  *     [[derivedShufflePartitions]] returns (640 for 5 sinks at
+  *     app.Main's 32 buckets);
   *   - parse-once fan-out: the routed frame is persisted and each sink
   *     filters it (the reference reuses one configured input across routes,
   *     site/docs/config.md:355-358);
@@ -49,10 +53,11 @@ object Pipeline {
 
   /** Shuffle width for the ordered fan-out write: explicit count when the
     * config pins one, else derived from the INPUT SIZE —
-    * max(cluster parallelism, bytes / 128 MB) — so a 100 TB run gets
-    * ~800k reducers instead of a fixed 32 (3 TB/task guaranteed spill;
-    * VERDICT r1 "What's wrong #3"). AQE's coalescing handles the
-    * overshoot on small inputs.
+    * max(cluster parallelism, bytes / 128 MB + 1). This is the partition
+    * count only: the write's key takes at most sinks × `saltBuckets` × 4
+    * distinct values, so no more reducers than that receive rows, and a
+    * 100 TB run's ~800k partitions are mostly empty. AQE's coalescing
+    * handles the overshoot on small inputs.
     */
   def derivedShufflePartitions(spark: SparkSession, cfg: PipelineConfig): Int =
     if (cfg.shufflePartitions > 0) cfg.shufflePartitions

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{Fingerprint64, GraftFunctions, SimHash64}
+import graft.functions.{Fingerprint64, GraftFunctions, SimHash64, SimHashAgg, SimHashMulti}
 
 /** Pins the sketch kernels (fingerprint, minhash, simhash, rp-sign) and the
   * approximate operators built on them (ann_lsh recall vs brute force).
@@ -26,6 +26,72 @@ class SketchSpec extends SparkSpec {
     val c = SimHash64.simhash(arr("q", "r", "s", "t", "u", "v"), 0L)
     assert(a === b)
     assert(a !== c)
+  }
+
+  test("property: the simhash vote kernel equals the plain +1/-1 tally loop") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.scalacheck.Prop.forAllNoShrink
+    import org.scalacheck.{Gen, Test => SCTest}
+    // the definition: per bit, +1 for a set hash bit and -1 for a clear one;
+    // the bit is set iff its tally is positive (ties give 0)
+    def tallies(hashes: Seq[Long]): Array[Int] = {
+      val votes = new Array[Int](64)
+      hashes.foreach { h =>
+        var b = 0
+        while (b < 64) {
+          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+          b += 1
+        }
+      }
+      votes
+    }
+    def sign(votes: Array[Int]): Long =
+      (0 until 64).foldLeft(0L)((sig, b) => if (votes(b) > 0) sig | (1L << b) else sig)
+    def utf8(toks: Seq[String]) = toks.filter(_ != null).map(UTF8String.fromString)
+    def multiRef(toks: Seq[String], nSigs: Int): Seq[Long] = {
+      val bases = utf8(toks).map(Fingerprint64.hash64)
+      (0 until nSigs).map(s => sign(tallies(
+        bases.map(b => Fingerprint64.mix(b + (s + 1) * 0x9E3779B97F4A7C15L)))))
+    }
+    def seededRef(toks: Seq[String], seed: Long): Long =
+      sign(tallies(utf8(toks).map(Fingerprint64.hash64Seeded(_, seed))))
+    def agreesWithReference(toks: Seq[String]): Boolean = {
+      val arr = new GenericArrayData(
+        toks.map(t => if (t == null) null else UTF8String.fromString(t)).toArray[Any])
+      val present = toks.filter(_ != null)
+      val (left, right) = present.splitAt(present.length / 3)
+      val viaAgg = SimHashAgg.finish(SimHashAgg.merge(
+        SimHashAgg.reduce(SimHashAgg.zero, left), SimHashAgg.reduce(SimHashAgg.zero, right)))
+      Seq(1, 9).forall(k => SimHashMulti.sigs(arr, k).toLongArray().toSeq == multiRef(toks, k)) &&
+        Seq(0L, 0x5EEDL).forall(seed => SimHash64.simhash(arr, seed) == seededRef(toks, seed)) &&
+        viaAgg == seededRef(toks, 0L)
+    }
+
+    val word = Gen.frequency(
+      (1, Gen.const(null: String)),
+      (4, Gen.oneOf("a", "b", "c", "the")), // duplicates
+      (6, Gen.alphaNumStr))
+    // two distinct tokens repeated r times: every lane where their hashes
+    // differ is an exact tie at an even count
+    val ties = for {
+      x <- Gen.alphaNumStr; y <- Gen.alphaNumStr.suchThat(_ != x)
+      r <- Gen.choose(1, 20)
+    } yield Seq.fill(r)(Seq(x, y)).flatten
+    val arrays = Gen.frequency(
+      (1, Gen.const(Seq.empty[String])),
+      (6, Gen.listOf(word)),
+      (3, ties))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300),
+      forAllNoShrink(arrays)(agreesWithReference))
+    assert(res.passed, res.status.toString)
+
+    // lane counts near 70,000 need 17 planes (2^16 = 65,536)
+    val rnd = new scala.util.Random(7)
+    val big = Seq.tabulate(140000)(i => if (i % 97 == 0) null else rnd.alphanumeric.take(6).mkString)
+    val voters = utf8(big).length
+    val ones = tallies(utf8(big).map(Fingerprint64.hash64Seeded(_, 0L))).map(v => (v + voters) / 2)
+    assert(voters > 131072 && ones.max >= 65536)
+    assert(agreesWithReference(big))
   }
 
   test("minhash signature positions estimate jaccard") {
