@@ -265,10 +265,7 @@ object TrainingOps {
       explodedIndex(dsh).groupBy("s").agg(count(lit(1)).as("df"))
         .filter(col("df") > ShingleFreqCap).select("s").unpersist()
     }
-    capBindsMemo.clear()
-    liveLabelFrames.synchronized {
-      liveLabelFrames.remove((sessionKey(s), dir))
-    }.foreach(_.foreach(_.unpersist()))
+    capBindsMemo.keys.filter(_._1 == dir).foreach(capBindsMemo.remove)
     simhashSigs(dsh).unpersist()
     keywordTf(s, dir).unpersist()
     dsh.unpersist()
@@ -668,102 +665,72 @@ object TrainingOps {
     * propagation to FIXPOINT: every vertex ends labeled with the smallest
     * doc_id reachable from it, a partition-independent canonical cluster
     * id. Each iteration is one equi-join + min-aggregate (both
-    * partitioned on the vertex key — no driver-side row data, labels
-    * persisted per round and released after); iterations needed =
-    * O(component diameter). Near-dup components are overwhelmingly
-    * near-cliques (every member pairs with most others), so 2-3 rounds
-    * converge even at 10^9 docs; a worst-case long-chain graph would call
-    * for the large-star/small-star contraction (Kiveris et al., COSS
-    * 2014), which this loop's join shape extends to directly. The
+    * partitioned on the vertex key — no driver-side row data); iterations
+    * needed = O(component diameter). Near-dup components are
+    * overwhelmingly near-cliques (every member pairs with most others), so
+    * 2-3 rounds converge even at 10^9 docs; a worst-case long-chain graph
+    * would call for the large-star/small-star contraction (Kiveris et al.,
+    * COSS 2014), which this loop's join shape extends to directly. The
     * `maxIters` guard turns a pathological non-convergence into a loud
     * failure instead of an infinite loop.
+    *
+    * Each round's labels are an eager `localCheckpoint`: the round runs as
+    * an ordinary adaptive query, so AQE sizes its shuffle from the actual
+    * bytes (one task at gate scale, the advisory width at production pair
+    * volumes) — a persist()'d plan is built at the full session width
+    * unless the session sets
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`, which
+    * this method does not touch. The checkpoint also cuts the lineage, so
+    * the returned frame never replays the iterative join chain, and it
+    * adds no CacheManager entry: ContextCleaner frees each round's blocks
+    * once the frame is unreachable. Local checkpoints live in executor
+    * storage, so losing an executor fails the frame's consumers instead of
+    * recomputing it.
     */
-  /** Serializes the loop-scoped conf flip in [[connectedComponents]]. */
-  private val ccFlagLock = new Object
-
   private[graft] def connectedComponents(pairs: DataFrame,
       maxIters: Int = 25): DataFrame = {
     val fwd = pairs.select(col("ia").as("src"), col("ib").as("dst"))
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 1 fused into the vertex-set construction: label = min(self,
-    // min direct neighbor) in ONE aggregation, no join — components that
-    // are single pairs or min-centered stars (the overwhelming near-dup
-    // shape) are already converged here, so the loop below only runs its
-    // one confirming round
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("v"), least(col("src"), col("mn")).as("l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // convergence check: min-label propagation is monotone NON-INCREASING
     // per vertex over a fixed vertex set, so the label sum (DECIMAL — a
     // long sum overflows at ~1e9 docs x 1e9 ids) strictly decreases until
-    // fixpoint. One tiny aggregate on the just-persisted frame replaces
+    // fixpoint. One tiny aggregate on the just-checkpointed frame replaces
     // the join+count change detector (which re-shuffled both label frames
     // every round just to ask "did anything move?").
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val d = df.agg(sum(col("l").cast("decimal(38,0)"))).first.getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    // A persist()'d plan is by default built WITHOUT adaptive execution
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false),
-    // so every loop round's cached label frame was built through a full
-    // session-width shuffle (32 near-empty state tasks per round at gate
-    // scale) no matter what AQE would have coalesced it to. Enable the
-    // flag for the LOOP ONLY and restore it after — scoping matters: on
-    // during round 0 it lets AQE coalesce the upstream CPU-heavy shingle
-    // self-join from its small byte estimate. Inside the loop AQE sizes
-    // each round's shuffle from its actual bytes — one task at gate
-    // scale, the advisory width at production pair volumes.
-    // Scale-adaptive, not a local tune. The flip is serialized under
-    // ccFlagLock: two overlapping invocations on one session would
-    // otherwise interleave their save/restore and could leave the flag
-    // set session-wide (concurrent driver-side job submission is an
-    // endorsed pattern elsewhere in this repo).
-    val spark = pairs.sparkSession
-    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    // every frame persisted here stays cached until `labels` is handed to
-    // the caller; on failure (the maxIters guard, a failed job) they are
-    // released instead of leaking into the session's CacheManager
-    var next = labels
     try {
-      // materialize round 0 (which also builds the upstream pair/shingle
-      // caches at the session's full width) BEFORE narrowing the loop
+      // round 1 fused into the vertex-set construction: label = min(self,
+      // min direct neighbor) in ONE aggregation, no join — components that
+      // are single pairs or min-centered stars (the overwhelming near-dup
+      // shape) are already converged here, so the loop below only runs its
+      // one confirming round
+      var labels = edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("src").as("v"), least(col("src"), col("mn")).as("l"))
+        .localCheckpoint()
       var prevSum = labelSum(labels)
-      ccFlagLock.synchronized {
-        val prevFlag = spark.conf.getOption(flag)
-        spark.conf.set(flag, "true")
-        try {
-          var changed = true
-          var iters = 0
-          while (changed) {
-            iters += 1
-            require(iters <= maxIters, s"connectedComponents: no fixpoint after $maxIters rounds")
-            val viaEdge = edges
-              .join(labels.select(col("v").as("src"), col("l")), "src")
-              .select(col("dst").as("v"), col("l"))
-            next = viaEdge.unionAll(labels)
-              .groupBy("v").agg(min("l").as("l"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val nextSum = labelSum(next)
-            changed = nextSum.compareTo(prevSum) != 0
-            prevSum = nextSum
-            labels.unpersist()
-            labels = next
-          }
-          log.info(s"[cc] fixpoint after $iters rounds")
-        } finally prevFlag match {
-          case Some(v) => spark.conf.set(flag, v)
-          case None => spark.conf.unset(flag)
-        }
+      var changed = true
+      var iters = 0
+      while (changed) {
+        iters += 1
+        require(iters <= maxIters, s"connectedComponents: no fixpoint after $maxIters rounds")
+        val viaEdge = edges
+          .join(labels.select(col("v").as("src"), col("l")), "src")
+          .select(col("dst").as("v"), col("l"))
+        labels = viaEdge.unionAll(labels)
+          .groupBy("v").agg(min("l").as("l"))
+          .localCheckpoint()
+        val nextSum = labelSum(labels)
+        changed = nextSum.compareTo(prevSum) != 0
+        prevSum = nextSum
       }
-    } catch {
-      case e: Throwable =>
-        Seq(next, labels, edges).foreach(_.unpersist())
-        throw e
-    }
-    edges.unpersist()
-    labels
+      log.info(s"[cc] fixpoint after $iters rounds")
+      labels
+    } finally edges.unpersist()
   }
 
   /** Duplicate clusters + canonical keep decision from the verified
@@ -771,39 +738,15 @@ object TrainingOps {
     * pipeline what to DELETE — transitive near-dup groups must collapse
     * to one kept document. keep = (doc == smallest doc_id in its
     * component); only docs that appear in some dup pair are emitted.
+    * Every invocation recomputes the fixpoint from the (cached) pair
+    * frame; the labels it returns are a checkpoint, not a cache entry.
     */
-  /** The fixpoint loop runs EAGERLY at plan-build time (per-round sum
-    * jobs), so its final persisted labels frame outlives the call — each
-    * invocation is tracked here SOLELY so releaseCaches can unpersist it
-    * (storage bookkeeping, not a memo: every invocation recomputes the
-    * fixpoint from the pair frame). Keyed per (session, dir) like the
-    * other session caches, updated under the map's lock (a lost race
-    * would leak a persisted frame forever), and BOUNDED: beyond the
-    * newest [[MaxLiveLabelFrames]] per key the oldest frames are
-    * unpersisted eagerly — consumers of an already-returned result just
-    * recompute through the (still cached) pair frame, so correctness is
-    * unaffected and a release-less long-lived session cannot accumulate
-    * storage.
-    */
-  private val MaxLiveLabelFrames = 4
-  private val liveLabelFrames = scala.collection.mutable.Map
-    .empty[(String, String), List[DataFrame]]
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val labels = connectedComponents(
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    connectedComponents(
       dedupNgram(s, dir, ShingleFreqCap).select(col("ia"), col("ib")))
-    val k = (sessionKey(s), dir)
-    val evicted = liveLabelFrames.synchronized {
-      val all = labels :: liveLabelFrames.getOrElse(k, Nil)
-      val (keep, old) = all.splitAt(MaxLiveLabelFrames)
-      liveLabelFrames.put(k, keep)
-      old
-    }
-    evicted.foreach(_.unpersist())
-    labels
       .select(col("v").as("doc_id"), col("l").as("cluster"),
         (col("v") === col("l")).as("keep"))
       .orderBy("doc_id")
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- text analysis ----

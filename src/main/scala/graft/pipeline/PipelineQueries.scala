@@ -376,9 +376,9 @@ object PipelineQueries {
     "pipe_stream_counts" -> { (s, dir) =>
       reg(s)
       val name = s"stream_counts_${streamQueryN.incrementAndGet()}"
-      StreamingPipeline.runOnce(s, name, OutputMode.Complete) {
+      StreamingPipeline.runOnce(s, name, OutputMode.Complete) { child =>
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
-          s, stagedStreamInput(s, dir), e2eConfig, maxFilesPerTrigger = 10000))
+          child, stagedStreamInput(s, dir), e2eConfig, maxFilesPerTrigger = 10000))
       }.orderBy("w_start", "sink")
     },
     // the arbitrary-stateful-streaming surface (mapGroupsWithState),
@@ -392,9 +392,9 @@ object PipelineQueries {
     "pipe_stream_progress" -> { (s, dir) =>
       reg(s)
       val name = s"stream_progress_${streamQueryN.incrementAndGet()}"
-      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Update) {
+      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Update) { child =>
         StreamingPipeline.conversationProgress(
-          StreamingPipeline.routedStream(s, stagedStreamInput(s, dir), e2eConfig))
+          StreamingPipeline.routedStream(child, stagedStreamInput(s, dir), e2eConfig))
       }
       mem.groupBy("conv_id")
         .agg(max(col("turns")).as("turns"),
@@ -415,8 +415,8 @@ object PipelineQueries {
     "pipe_stream_dedup" -> { (s, dir) =>
       reg(s)
       val name = s"stream_dedup_${streamQueryN.incrementAndGet()}"
-      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Append) {
-        StreamingPipeline.routedStream(s, stagedDedupInput(s, dir), e2eConfig,
+      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Append) { child =>
+        StreamingPipeline.routedStream(child, stagedDedupInput(s, dir), e2eConfig,
           maxFilesPerTrigger = 10000).dropDuplicates("conv_id", "turn_idx")
       }
       mem.groupBy("sink")
@@ -443,9 +443,9 @@ object PipelineQueries {
     "pipe_stream_window_close" -> { (s, dir) =>
       reg(s)
       val name = s"stream_close_${streamQueryN.incrementAndGet()}"
-      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Append) {
+      val mem = StreamingPipeline.runOnce(s, name, OutputMode.Append) { child =>
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
-          s, stagedAppendInput(s, dir), e2eConfig, maxFilesPerTrigger = 8))
+          child, stagedAppendInput(s, dir), e2eConfig, maxFilesPerTrigger = 8))
       }
       val bound = Transcripts.events(s, dir)
         .filter(pmod(col("event_id"), lit(10)) === 0)
@@ -460,29 +460,37 @@ object PipelineQueries {
 
   private val streamQueryN = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Staged file-source input for the two streaming gates, written ONCE per
-    * (session data dir) and shared — staging dominated both queries' wall
-    * time when each staged its own copy per invocation (and the bench suite
-    * invokes each twice). Deterministic 1/10 subset on tmpfs (the sandbox's
-    * virtio disk throttles after bursts): the gates check stream==batch
-    * equality, not volume. 16 files at maxFilesPerTrigger=8 -> >=2
-    * micro-batches, so BOTH gates exercise cross-batch behavior (state
-    * accumulation / watermark advance), not just one pass. Deleted at JVM
-    * exit; testdata dirs are immutable within a run, which makes the memo
-    * sound.
+  /** Staged file-source inputs of the streaming gates, written ONCE per
+    * (kind, session data dir) and shared — staging dominated the gates'
+    * wall time when each staged its own copy per invocation (and the bench
+    * suite invokes each twice). `write` fills a fresh tmpfs dir (the
+    * sandbox's virtio disk throttles after bursts) named after `kind`;
+    * the dir is deleted at JVM exit. Testdata dirs are immutable within a
+    * run, which makes the memo sound.
     */
-  private val stagedStreams = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedStreamInput(s: SparkSession, dir: String): String =
-    stagedStreams.getOrElseUpdate(dir, {
+  private val stagedInputs =
+    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  private def staged(kind: String, dir: String)(write: String => Unit): String =
+    stagedInputs.getOrElseUpdate((kind, dir), {
       val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "graft_stream").toString
+        java.nio.file.Paths.get("/dev/shm"), kind).toString
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))))
+      write(tmp)
+      tmp
+    })
+
+  /** Deterministic 1/10 subset shared by the gates: they check
+    * stream==batch equality, not volume. 16 files at maxFilesPerTrigger=8
+    * -> >=2 micro-batches, so the gates exercise cross-batch behavior
+    * (state accumulation / watermark advance), not just one pass.
+    */
+  private def stagedStreamInput(s: SparkSession, dir: String): String =
+    staged("graft_stream", dir) { tmp =>
       Transcripts.transcripts(s, dir)
         .filter(pmod(col("turn_idx"), lit(10)) === 0).coalesce(16)
         .write.mode("overwrite").parquet(tmp)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))))
-      tmp
-    })
+    }
 
   /** At-least-once staging for the streaming dedup gate: the staged 1/10
     * subset (read back off tmpfs, not re-derived) PLUS a planted
@@ -490,11 +498,8 @@ object PipelineQueries {
     * analogue of a source re-sending events after an un-acked write. The
     * dedup gate must restore exactly the un-duplicated counts.
     */
-  private val stagedDedupStreams = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedDedupInput(s: SparkSession, dir: String): String =
-    stagedDedupStreams.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "graft_stream_dup").toString
+    staged("graft_stream_dup", dir) { tmp =>
       val base = s.read.parquet(stagedStreamInput(s, dir))
       base.coalesce(16).write.mode("overwrite").parquet(tmp)
       val dup = base.filter(pmod(col("turn_idx"), lit(50)) === 0)
@@ -503,10 +508,7 @@ object PipelineQueries {
       // into a vacuous pass — fail staging loudly instead
       require(dup.count() > 0,
         s"stream-dedup staging planted no re-delivered rows for $dir")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))))
-      tmp
-    })
+    }
 
   /** Two-batch staging for the append-mode window gate: the real 1/10
     * subset as 8 files, then a sentinel "advance" transcript 3 h past the
@@ -518,11 +520,8 @@ object PipelineQueries {
     * parses and routes like any turn; its own window stays open and is
     * excluded by the caller's watermark bound.
     */
-  private val stagedAppendStreams = scala.collection.concurrent.TrieMap.empty[String, String]
   private def stagedAppendInput(s: SparkSession, dir: String): String =
-    stagedAppendStreams.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "graft_stream_app").toString
+    staged("graft_stream_app", dir) { tmp =>
       // 8 real files = batch 1 at maxFilesPerTrigger=8 AND 8 parse splits
       // (a one-file batch runs the parse single-threaded — the
       // shuffle-free-width-equals-split-count rule applies per batch)
@@ -547,10 +546,7 @@ object PipelineQueries {
         s"append-gate staging planted no sentinel file for $dir")
       val later = System.currentTimeMillis() + 60000
       added.foreach(p => new java.io.File(p).setLastModified(later))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))))
-      tmp
-    })
+    }
 
   // ---- DuckDB oracle SQL: expected outputs computed directly from the
   // base events columns (never by re-parsing the text) ----

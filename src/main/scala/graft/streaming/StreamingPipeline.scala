@@ -77,46 +77,50 @@ object StreamingPipeline {
 
   private val NarrowStateWidth = "4"
 
-  /** Run `stream` to completion over the files currently in its source
-    * dir into the memory table `queryName`, and return that table. The
-    * checkpoint goes on tmpfs: a disk-backed checkpoint fsyncs offset and
-    * commit files every batch, which on a throttled virtual disk dominates
-    * (and randomizes) the wall time of a short run. The query is stopped
-    * and the checkpoint deleted even when the run throws or the wait is
-    * interrupted.
+  /** Run the stream `stream` builds to completion over the files currently
+    * in its source dir into the memory table `queryName`, and return that
+    * table. The checkpoint goes on tmpfs: a disk-backed checkpoint fsyncs
+    * offset and commit files every batch, which on a throttled virtual disk
+    * dominates (and randomizes) the wall time of a short run. The query is
+    * stopped and the checkpoint deleted even when the run throws or the
+    * wait is interrupted.
     *
-    * The query starts with spark.sql.shuffle.partitions narrowed to
-    * [[NarrowStateWidth]]; the session value is restored right after. Every
-    * driver-gated stream here holds manifest-class state (O(hours x sinks)
-    * windows / O(convs) progress rows / O(batch) dedup keys), yet the
-    * stateful shuffle width is captured into the checkpoint at start — at
-    * the bench session's 32 partitions each gate paid 32 state-store
-    * provider inits + commits (plus 32-task stateful stages) per
-    * micro-batch for a handful of state rows. 4 partitions is plenty for
-    * the state (the PARSE width is unaffected: the pre-shuffle file-source
-    * stage is split-bound, not shuffle-bound); it cut the append gate from
-    * 5.5 s to ~2 s at sf0.1. At production state sizes the width is the
-    * config the operator sizes to state volume, not the batch shuffle
-    * width.
+    * The query is built and started on a child session
+    * (`spark.newSession()`: its own SQL conf, temp views and query
+    * manager; the caller's SparkContext and CacheManager) whose
+    * spark.sql.shuffle.partitions is [[NarrowStateWidth]]; the caller's
+    * session is never modified. Every oracle-gated stream here holds
+    * manifest-class state (O(hours x sinks) windows / O(convs) progress
+    * rows / O(batch) dedup keys), yet the stateful shuffle width is
+    * captured into the checkpoint at start — at the bench session's 32
+    * partitions each gate paid 32 state-store provider inits + commits
+    * (plus 32-task stateful stages) per micro-batch for a handful of state
+    * rows. 4 partitions is plenty for the state (the PARSE width is
+    * unaffected: the pre-shuffle file-source stage is split-bound, not
+    * shuffle-bound); it cut the append gate from 5.5 s to ~2 s at sf0.1.
+    * At production state sizes the width is the config the operator sizes
+    * to state volume, not the batch shuffle width. The child starts from
+    * the SparkContext's conf, not from settings the caller changed at run
+    * time. The returned table belongs to the child session (the memory
+    * sink registers its view there), so queries on it run at the child's
+    * width; it joins with the caller's frames like any other frame.
     */
   def runOnce(spark: SparkSession, queryName: String, mode: OutputMode)(
-      stream: => Dataset[_]): DataFrame = {
+      stream: SparkSession => Dataset[_]): DataFrame = {
+    val child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
     val ckpt = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
     try {
-      val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
-      val q =
-        try stream.writeStream
-          .format("memory")
-          .queryName(queryName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode)
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+      val q = stream(child).writeStream
+        .format("memory")
+        .queryName(queryName)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode)
+        .start()
       try q.processAllAvailable()
       finally q.stop()
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    spark.table(queryName)
+    child.table(queryName)
   }
 }

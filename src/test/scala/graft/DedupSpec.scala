@@ -102,26 +102,59 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** CacheManager entry count (private[sql] in Scala, a public JVM method). */
+  private def cacheEntries: Any = {
+    val cache = spark.sharedState.cacheManager
+    cache.getClass.getMethod("numCachedEntries").invoke(cache)
+  }
+
   test("connected components: a failed fixpoint releases its caches") {
     import spark.implicits._
     // the chain needs two loop rounds, so maxIters = 1 trips the guard
-    // after edges, round-0 labels and round-1 labels were all persisted
-    val cache = spark.sharedState.cacheManager
-    // the entry count is private[sql] in Scala but a public JVM method
-    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
-    val before = entries
+    // after edges and two rounds of labels were materialized
+    val before = cacheEntries
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("ia", "ib")
     intercept[IllegalArgumentException] {
       graft.ops.TrainingOps.connectedComponents(chain, maxIters = 1)
     }
-    assert(entries === before)
+    assert(cacheEntries === before)
+    // a converged run hands back checkpointed labels, not a cache entry
+    val labels = graft.ops.TrainingOps.connectedComponents(chain)
+    assert(labels.collect().map(_.getLong(1)).toSet === Set(1L))
+    assert(cacheEntries === before)
   }
 
-  test("dedup_clusters: repeated invocations stay correct past the live-frame bound") {
-    // each invocation recomputes the fixpoint and registers its persisted
-    // labels frame; beyond the bookkeeping bound the oldest frames are
-    // evicted eagerly — results must be identical throughout (an evicted
-    // frame's consumers recompute through the cached pair frame)
+  test("connected components leave the session's SQL conf alone") {
+    import spark.implicits._
+    // every job a query submits carries the session's explicitly set SQL
+    // conf as job properties; the loop must run on the caller's values
+    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val jobProps = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties).fold(Map.empty[String, String]) { p =>
+          p.stringPropertyNames().toArray.map(_.toString)
+            .filter(_.startsWith("spark.sql.")).map(k => k -> p.getProperty(k)).toMap
+        }
+        jobProps.add(props)
+      }
+    }
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("ia", "ib")
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try graft.ops.TrainingOps.connectedComponents(chain)
+    finally {
+      drainListenerBus()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobProps.size >= 3, "round 0 and the loop rounds submit jobs")
+    jobProps.forEach(p => assert(!p.get(flag).contains("true"), s"$flag in $p"))
+    assert(spark.conf.getOption(flag).forall(_ != "true"))
+  }
+
+  test("dedup_clusters: five invocations give equal results") {
+    // each invocation recomputes the fixpoint from the cached pair frame
+    // and returns its own checkpointed labels
     def run() = graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val first = run()
@@ -193,6 +226,19 @@ class DedupSpec extends SparkSpec {
     assert(ids("dedup_simhash") === ngram)
   }
 
+  /** `dir`'s documents and events tables rewritten as defaultParallelism
+    * files each, in a fresh temp dir.
+    */
+  private def manyFileCopy(dir: String): String = {
+    val many = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    Seq("documents", "events").foreach { t =>
+      spark.read.parquet(s"$dir/$t.parquet")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.parquet(s"$many/$t.parquet")
+    }
+    many
+  }
+
   test("populated-split rule: a one-file table is spread, a many-file table is not") {
     // the rule's sites: the four one-split pipe_* queries and the
     // documents read behind every dedup cache (the persisted shingle frame)
@@ -222,14 +268,32 @@ class DedupSpec extends SparkSpec {
     // the same tables written as defaultParallelism files fill the cluster
     // on their own: no exchange is added
     val width = spark.sparkContext.defaultParallelism
-    val many = java.nio.file.Files.createTempDirectory("graft_spread").toString
-    Seq("documents", "events").foreach { t =>
-      spark.read.parquet(s"$one/$t.parquet").repartition(width)
-        .write.parquet(s"$many/$t.parquet")
-    }
+    val many = manyFileCopy(one)
     assert(spark.read.parquet(s"$many/documents.parquet").inputFiles.length >= width)
     try sites(many).foreach { case (name, df) =>
       assert(roundRobins(df) === 0, s"$name on a $width-file table")
+    } finally {
+      graft.ops.TrainingOps.releaseCaches(spark, many)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(many))
+    }
+  }
+
+  test("releaseCaches drops only its own directory's caches") {
+    // run A, run B, release A, release B: B's release must still find
+    // and drop B's persisted n-gram pair frame
+    val one = sf("0.001")
+    val many = manyFileCopy(one)
+    try {
+      // start with sf0.001's pair frame registered and then released, so
+      // no cache entry left by earlier tests hides a leak
+      graft.ops.TrainingOps.queries("dedup_ngram")(spark, one)
+      graft.ops.TrainingOps.releaseCaches(spark, one)
+      val before = cacheEntries
+      Seq(one, many).foreach(d =>
+        graft.ops.TrainingOps.queries("dedup_ngram")(spark, d).count())
+      assert(cacheEntries != before, "the dedup runs cache nothing")
+      Seq(one, many).foreach(graft.ops.TrainingOps.releaseCaches(spark, _))
+      assert(cacheEntries === before)
     } finally {
       graft.ops.TrainingOps.releaseCaches(spark, many)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(many))

@@ -7,6 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(scale: String): String = s"/root/testdata/sf$scale"
+
+  /** Block until every listener has seen the events posted so far (the bus
+    * and its `waitUntilEmpty` are private[spark] in Scala but public JVM
+    * methods).
+    */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
 }
 
 object SparkSpec {

@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, StreamingQueryListener}
 
 import graft.model.PipelineConfig
 import graft.pipeline.{Pipeline, TranscriptGen, Transcripts}
@@ -22,9 +23,9 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val streamed = StreamingPipeline
-      .runOnce(spark, "stream_counts", OutputMode.Complete) {
+      .runOnce(spark, "stream_counts", OutputMode.Complete) { s =>
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
-          spark, in, cfg, maxFilesPerTrigger = 10000))
+          s, in, cfg, maxFilesPerTrigger = 10000))
       }
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
 
@@ -67,9 +68,9 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val emitted = StreamingPipeline
-      .runOnce(spark, "stream_append_spec", OutputMode.Append) {
+      .runOnce(spark, "stream_append_spec", OutputMode.Append) { s =>
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
-          spark, in, cfg, maxFilesPerTrigger = 8))
+          s, in, cfg, maxFilesPerTrigger = 8))
       }
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
 
@@ -139,8 +140,8 @@ class StreamingSpec extends SparkSpec {
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
 
     val deduped = StreamingPipeline
-      .runOnce(spark, "stream_dedup_spec", OutputMode.Append) {
-        StreamingPipeline.routedStream(spark, in, cfg, maxFilesPerTrigger = 10000)
+      .runOnce(spark, "stream_dedup_spec", OutputMode.Append) { s =>
+        StreamingPipeline.routedStream(s, in, cfg, maxFilesPerTrigger = 10000)
           .dropDuplicates("conv_id", "turn_idx")
       }
     // input carries the duplicates; the deduped stream must not
@@ -166,12 +167,46 @@ class StreamingSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("graft_ckpt")).toSet
     val before = checkpoints()
 
+    var starter: SparkSession = null
     intercept[StreamingQueryException] {
-      StreamingPipeline.runOnce(spark, "stream_corrupt_spec", OutputMode.Append) {
-        StreamingPipeline.routedStream(spark, in, cfg, maxFilesPerTrigger = 10000)
+      StreamingPipeline.runOnce(spark, "stream_corrupt_spec", OutputMode.Append) { s =>
+        starter = s
+        StreamingPipeline.routedStream(s, in, cfg, maxFilesPerTrigger = 10000)
       }
     }
-    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert(starter.streams.active.isEmpty, "the failed query is still active")
     assert((checkpoints() -- before).isEmpty, "the checkpoint dir was left behind")
+  }
+
+  test("a stream run narrows its state width without touching the caller's session") {
+    val in = Files.createTempDirectory("graft_width").toString + "/input"
+    TranscriptGen.transcripts(spark, N).coalesce(2).write.parquet(in)
+    val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "8")
+    def callerWidth = caller.conf.get("spark.sql.shuffle.partitions")
+    val stateWidths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    var widthInBuilder = ""
+    val counts = StreamingPipeline
+      .runOnce(caller, "stream_width_spec", OutputMode.Complete) { s =>
+        widthInBuilder = callerWidth
+        s.streams.addListener(new StreamingQueryListener {
+          def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+            e.progress.stateOperators.foreach(o => stateWidths.add(o.numShufflePartitions))
+          def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        })
+        StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
+          s, in, cfg, maxFilesPerTrigger = 10000))
+      }
+    drainListenerBus()
+    assert(!stateWidths.isEmpty, "no state operator progress was reported")
+    stateWidths.forEach(w => assert(w === 4L, "state operator width"))
+    assert(widthInBuilder === "8", "caller's width inside the stream builder")
+    assert(callerWidth === "8", "caller's width after the run")
+    // the memory table belongs to the starting session, and it still
+    // joins with a frame of the caller's session
+    val sinks = caller.range(1).select(lit("system").as("sink"))
+    assert(counts.join(sinks, Seq("sink")).count() > 0)
   }
 }
