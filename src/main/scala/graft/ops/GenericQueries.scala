@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.state.TableFormat
+import graft.state.{Scratch, TableFormat}
 
 /** Standard-operator coverage (SURVEY.md §2.6): scans with
   * pushdown/pruning, hash aggregation, broadcast/semi/anti joins, window
@@ -18,30 +18,21 @@ object GenericQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Bucketed catalog tables for q_join_bucketed, staged once per
-    * (session, dir): orders and customer both written CLUSTERED BY the
-    * join key into the same bucket count, so the join needs NO exchange —
-    * the layout-level co-location a 100 TB fact/dim pair is stored with
-    * (the write pays the shuffle once; every subsequent join rides it).
-    * Parquet bucketing metadata lives in the catalog, hence saveAsTable
-    * rather than a path write. Staged on tmpfs, deleted at JVM exit.
-    */
-  private val bucketedStaged =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
   /** Catalog names for the staged bucketed pair (spec needs them too). */
-  def bucketedTableNames(dir: String): (String, String) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
-  }
-  // memo keyed on sessionUUID (identityHashCode can be reused after a
-  // session is GC'd — stale catalog names for a new session); the staging
-  // dir is FIXED per dir tag and written with overwrite, so repeated
-  // sessions reuse one /dev/shm footprint instead of accumulating a temp
-  // dir per (session, dir) until JVM exit (ADVICE r5).
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketedStaged.getOrElseUpdate((TrainingOps.sessionKey(s), dir), {
-      val (oT, cT) = bucketedTableNames(dir)
-      val base = "/dev/shm/graft_bkt_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+  def bucketedTableNames(dir: String): (String, String) =
+    (s"graft_bkt_orders_${Scratch.tag(dir)}", s"graft_bkt_customer_${Scratch.tag(dir)}")
+
+  /** Bucketed catalog tables for q_join_bucketed, staged once per context
+    * ([[Scratch.staged]]; every session shares the catalog): orders and
+    * customer both written CLUSTERED BY the join key into the same bucket
+    * count, so the join needs NO exchange — the layout-level co-location a
+    * 100 TB fact/dim pair is stored with (the write pays the shuffle once;
+    * every subsequent join rides it). Parquet bucketing metadata lives in
+    * the catalog, hence saveAsTable rather than a path write.
+    */
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
+    val (oT, cT) = bucketedTableNames(dir)
+    Scratch.staged("bkt", dir) { base =>
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .write.mode("overwrite").format("parquet")
@@ -52,10 +43,9 @@ object GenericQueries {
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$base/customer").saveAsTable(cT)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))))
-      (oT, cT)
-    })
+    }
+    (oT, cT)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1-shaped hash aggregate: partial+final comes from Catalyst;

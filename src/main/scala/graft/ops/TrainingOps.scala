@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions.{cosine_sim, fingerprint64, minhash_sig, rp_project, rp_sign, simhash_multi}
-import graft.state.{ParquetFormat, TableFormat}
+import graft.state.{ParquetFormat, Scratch, TableFormat}
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard,
@@ -97,19 +97,6 @@ object TrainingOps {
   val SubstrWin = 8
   val SubstrFooter =
     "this footer text is shared verbatim across all mirrored documents"
-
-  /** Session-lifecycle-safe memo key (ADVICE r5): a UUID held in a WEAK
-    * map on the session object — identityHashCode can be reused after a
-    * session is GC'd (stale memo hits for a new session), while a weak key
-    * dies with the session it identifies. (Spark's own sessionUUID is
-    * private[sql].)
-    */
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-  private[ops] def sessionKey(s: SparkSession): String =
-    sessionIds.synchronized {
-      sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-    }
 
   /** The documents table, spread across the cluster when it has too few
     * populated splits ([[TableFormat.spreadScan]]), so the per-doc kernels
@@ -429,10 +416,10 @@ object TrainingOps {
     ivfProbeRerank(q, ivfAssign(cand, slots), ivfCentsFrame(s, slots), probes)
   }
 
-  /** On-disk home of the persisted IVF index for a given data dir (tmpfs —
-    * the sandbox stand-in for the object store an index service would use;
-    * IO goes through the [[graft.state.TableFormat]] seam, so the
-    * one-line-Iceberg production binding covers the ANN artifact too).
+  /** On-disk home of the persisted IVF index for a given data dir, in the
+    * context's [[Scratch]] (the stand-in for the object store an index
+    * service would use; IO goes through the [[graft.state.TableFormat]]
+    * seam, so the one-line-Iceberg production binding covers it too).
     *
     * The path is keyed by BOTH the data dir and a corpus fingerprint
     * (file-level name/size/mtime of the embeddings table): regenerating
@@ -449,14 +436,8 @@ object TrainingOps {
       .sorted.mkString("|")
     val fp = java.lang.Long.toHexString(graft.functions.Fingerprint64.hash64(
       org.apache.spark.unsafe.types.UTF8String.fromString(manifest)))
-    ivfIndexDirPrefix(dir) + fp
+    Scratch.dir("ivf_index_" + Scratch.tag(dir)) + "/" + fp
   }
-
-  /** All index dirs for one data dir share this prefix; only the corpus
-    * fingerprint suffix varies. Lets the build GC stale siblings.
-    */
-  private def ivfIndexDirPrefix(dir: String): String =
-    "/dev/shm/graft_ivf_index_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_"
 
   /** Build and PERSIST the index artifact — the deployment shape of a
     * 100 TB similarity service, where index construction (k-means over the
@@ -498,19 +479,14 @@ object TrainingOps {
     require(fs.rename(new org.apache.hadoop.fs.Path(tmp), fsPath),
       s"atomic index swap failed: rename $tmp -> $idx")
     // GC stale fingerprint-keyed siblings for the same data dir: every
-    // corpus regeneration changes the fingerprint and would otherwise
-    // strand the previous index (and any crashed .build- staging dir of a
-    // dead fingerprint) on tmpfs — a RAM leak. Dirs carrying the LIVE
-    // fingerprint are kept: a concurrent build of the same corpus may own
-    // a .build- sibling under this prefix.
-    val prefix = ivfIndexDirPrefix(dir)
-    val livePrefix = fsPath.getName
-    val parent = fsPath.getParent
-    if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(new org.apache.hadoop.fs.Path(prefix).getName) &&
-          !n.startsWith(livePrefix))
-        fs.delete(st.getPath, true)
+    // corpus regeneration within one context changes the fingerprint and
+    // would otherwise strand the previous index (and any crashed .build-
+    // staging dir of a dead fingerprint) in scratch. Dirs carrying the
+    // LIVE fingerprint are kept: a concurrent build of the same corpus may
+    // own a .build- sibling.
+    val live = fsPath.getName
+    fs.listStatus(fsPath.getParent).foreach { st =>
+      if (!st.getPath.getName.startsWith(live)) fs.delete(st.getPath, true)
     }
     fmt.readSnapshot(s, s"$idx/centroids")
   }

@@ -9,7 +9,7 @@ import graft.functions.GraftFunctions
 import graft.model.PipelineConfig
 import graft.parse.PatternDictionary
 import graft.route.Router
-import graft.state.TableFormat
+import graft.state.{Scratch, TableFormat}
 import graft.streaming.StreamingPipeline
 
 /** Driver-verified queries for the log-pipeline operator surface
@@ -460,46 +460,28 @@ object PipelineQueries {
 
   private val streamQueryN = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Staged file-source inputs of the streaming gates, written ONCE per
-    * (kind, session data dir) and shared — staging dominated the gates'
-    * wall time when each staged its own copy per invocation (and the bench
-    * suite invokes each twice). `write` fills a fresh tmpfs dir (the
-    * sandbox's virtio disk throttles after bursts) named after `kind`;
-    * the dir is deleted at JVM exit. Testdata dirs are immutable within a
-    * run, which makes the memo sound.
-    */
-  private val stagedInputs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def staged(kind: String, dir: String)(write: String => Unit): String =
-    stagedInputs.getOrElseUpdate((kind, dir), {
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), kind).toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))))
-      write(tmp)
-      tmp
-    })
-
-  /** Deterministic 1/10 subset shared by the gates: they check
+  /** Deterministic 1/10 subset shared by the gates, staged once per
+    * context ([[Scratch.staged]]; staging dominated the gates' wall time
+    * when each invocation staged its own copy): the gates check
     * stream==batch equality, not volume. 16 files at maxFilesPerTrigger=8
     * -> >=2 micro-batches, so the gates exercise cross-batch behavior
     * (state accumulation / watermark advance), not just one pass.
     */
   private def stagedStreamInput(s: SparkSession, dir: String): String =
-    staged("graft_stream", dir) { tmp =>
+    Scratch.staged("stream", dir) { tmp =>
       Transcripts.transcripts(s, dir)
         .filter(pmod(col("turn_idx"), lit(10)) === 0).coalesce(16)
         .write.mode("overwrite").parquet(tmp)
     }
 
   /** At-least-once staging for the streaming dedup gate: the staged 1/10
-    * subset (read back off tmpfs, not re-derived) PLUS a planted
+    * subset (read back from its staged dir, not re-derived) PLUS a planted
     * "redelivered" file repeating every 5th staged row — the file-source
     * analogue of a source re-sending events after an un-acked write. The
     * dedup gate must restore exactly the un-duplicated counts.
     */
   private def stagedDedupInput(s: SparkSession, dir: String): String =
-    staged("graft_stream_dup", dir) { tmp =>
+    Scratch.staged("stream_dup", dir) { tmp =>
       val base = s.read.parquet(stagedStreamInput(s, dir))
       base.coalesce(16).write.mode("overwrite").parquet(tmp)
       val dup = base.filter(pmod(col("turn_idx"), lit(50)) === 0)
@@ -521,7 +503,7 @@ object PipelineQueries {
     * excluded by the caller's watermark bound.
     */
   private def stagedAppendInput(s: SparkSession, dir: String): String =
-    staged("graft_stream_app", dir) { tmp =>
+    Scratch.staged("stream_app", dir) { tmp =>
       // 8 real files = batch 1 at maxFilesPerTrigger=8 AND 8 parse splits
       // (a one-file batch runs the parse single-threaded — the
       // shuffle-free-width-equals-split-count rule applies per batch)

@@ -9,6 +9,7 @@ import graft.enrich.Enrich
 import graft.functions.GraftFunctions
 import graft.model.PipelineConfig
 import graft.pipeline.Pipeline
+import graft.state.Scratch
 
 /** Structured Streaming deployment of the SAME parse → enrich → route plan
   * (Pipeline.transform is a pure streaming-safe transformation) — the
@@ -77,40 +78,44 @@ object StreamingPipeline {
 
   private val NarrowStateWidth = "4"
 
+  /** The child session [[runOnce]] starts its queries on, one per
+    * SparkContext (a race at a context change at worst makes one extra).
+    */
+  @volatile private var narrow: SparkSession = _
+
+  private def narrowSession(spark: SparkSession): SparkSession =
+    Option(narrow).filter(_.sparkContext eq spark.sparkContext).getOrElse {
+      val child = spark.newSession()
+      child.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
+      narrow = child
+      child
+    }
+
   /** Run the stream `stream` builds to completion over the files currently
     * in its source dir into the memory table `queryName`, and return that
-    * table. The checkpoint goes on tmpfs: a disk-backed checkpoint fsyncs
-    * offset and commit files every batch, which on a throttled virtual disk
-    * dominates (and randomizes) the wall time of a short run. The query is
-    * stopped and the checkpoint deleted even when the run throws or the
-    * wait is interrupted.
+    * table. The checkpoint goes in the context's [[Scratch]] (Spark's local
+    * dirs), not on a disk that fsyncs offset and commit files every batch
+    * (on a throttled virtual disk that dominates a short run). The query is
+    * stopped, its view dropped and its checkpoint deleted even when the run
+    * throws or the wait is interrupted.
     *
-    * The query is built and started on a child session
-    * (`spark.newSession()`: its own SQL conf, temp views and query
-    * manager; the caller's SparkContext and CacheManager) whose
-    * spark.sql.shuffle.partitions is [[NarrowStateWidth]]; the caller's
-    * session is never modified. Every oracle-gated stream here holds
-    * manifest-class state (O(hours x sinks) windows / O(convs) progress
-    * rows / O(batch) dedup keys), yet the stateful shuffle width is
-    * captured into the checkpoint at start — at the bench session's 32
-    * partitions each gate paid 32 state-store provider inits + commits
-    * (plus 32-task stateful stages) per micro-batch for a handful of state
-    * rows. 4 partitions is plenty for the state (the PARSE width is
-    * unaffected: the pre-shuffle file-source stage is split-bound, not
-    * shuffle-bound); it cut the append gate from 5.5 s to ~2 s at sf0.1.
-    * At production state sizes the width is the config the operator sizes
-    * to state volume, not the batch shuffle width. The child starts from
-    * the SparkContext's conf, not from settings the caller changed at run
-    * time. The returned table belongs to the child session (the memory
-    * sink registers its view there), so queries on it run at the child's
-    * width; it joins with the caller's frames like any other frame.
+    * The query runs on one child session per SparkContext
+    * (`spark.newSession()`: its own SQL conf, temp views and query manager;
+    * the caller's SparkContext and CacheManager) at [[NarrowStateWidth]]
+    * shuffle partitions; the caller's session is never modified. Every gate
+    * here holds manifest-class state (O(hours x sinks) windows, O(convs)
+    * progress rows, O(batch) dedup keys), yet each state partition pays a
+    * state-store init + commit per micro-batch, and the width is fixed into
+    * the checkpoint at start: at 32 partitions the append gate took 5.5 s
+    * at sf0.1, at 4 about 2 s. The parse stage is split-bound, so its width
+    * is unaffected. One child keeps one query manager on the context's bus.
+    * The returned frame holds the sink's plan, so it outlives the dropped
+    * view; it joins with the caller's frames like any other frame.
     */
   def runOnce(spark: SparkSession, queryName: String, mode: OutputMode)(
       stream: SparkSession => Dataset[_]): DataFrame = {
-    val child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", NarrowStateWidth)
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_ckpt").toString
+    val child = narrowSession(spark)
+    val ckpt = Scratch.dir(s"ckpt_${java.util.UUID.randomUUID()}")
     try {
       val q = stream(child).writeStream
         .format("memory")
@@ -118,9 +123,13 @@ object StreamingPipeline {
         .option("checkpointLocation", ckpt)
         .outputMode(mode)
         .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      try {
+        q.processAllAvailable()
+        child.table(queryName)
+      } finally {
+        q.stop()
+        child.catalog.dropTempView(queryName)
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    child.table(queryName)
   }
 }

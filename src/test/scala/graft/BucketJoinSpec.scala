@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Pins the point of q_join_bucketed — the co-located layout makes the
@@ -48,6 +50,29 @@ class BucketJoinSpec extends SparkSpec {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  test("bucketed staging happens once per context, not once per session") {
+    val dir = sf("0.001")
+    val (oT, cT) = graft.ops.GenericQueries.bucketedTableNames(dir)
+    // every staged table file with its mtime, found through the catalog
+    def staged(): Map[String, Long] = Seq(oT, cT).flatMap { tbl =>
+      val loc = spark.sql(s"DESCRIBE FORMATTED $tbl")
+        .filter(col("col_name") === "Location").head().getString(1)
+      org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(new java.net.URI(loc)), null, true).asScala
+        .map(f => f.getPath -> f.lastModified())
+    }.toMap
+    val q = graft.ops.GenericQueries.queries("q_join_bucketed")
+    val first = q(spark, dir).collect().toSet
+    val files = staged()
+    assert(files.nonEmpty)
+    // a second session shares the catalog, so it must reuse the staged
+    // files rather than rewrite them under the first session's tables
+    val second = q(spark.newSession(), dir).collect().toSet
+    val rewritten = (files.toSet -- staged().toSet).size
+    assert(rewritten === 0, s"of ${files.size} staged files, $rewritten were rewritten")
+    assert(second === first)
   }
 
   test("q_funnel: matches a plain-Scala ordered-step recomputation") {

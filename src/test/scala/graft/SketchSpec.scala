@@ -167,6 +167,16 @@ class SketchSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
   }
 
+  test("ivf index dir lies under the context's scratch root") {
+    // an index outside the context's root would outlive the process, and a
+    // later process's serve would skip its build: a cross-process memo
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+      .getCanonicalPath + java.io.File.separator
+    val idx = new java.io.File(
+      graft.ops.TrainingOps.ivfIndexDir(spark, sf("0.001"))).getCanonicalPath
+    assert(idx.startsWith(root), s"$idx is not under $root")
+  }
+
   test("text_fingerprint golden values are stable across runs") {
     val a = graft.ops.TrainingOps.queries("text_fingerprint")(spark, sf("0.001"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

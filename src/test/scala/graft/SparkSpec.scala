@@ -8,14 +8,23 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(scale: String): String = s"/root/testdata/sf$scale"
 
-  /** Block until every listener has seen the events posted so far (the bus
-    * and its `waitUntilEmpty` are private[spark] in Scala but public JVM
-    * methods).
+  /** The SparkContext's listener bus (the bus and its methods are
+    * private[spark] in Scala but public JVM methods).
     */
-  def drainListenerBus(): Unit = {
+  private def listenerBus: AnyRef = {
     val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    sc.getClass.getMethod("listenerBus").invoke(sc)
+  }
+
+  /** Block until every listener has seen the events posted so far. */
+  def drainListenerBus(): Unit =
+    listenerBus.getClass.getMethod("waitUntilEmpty").invoke(listenerBus)
+
+  /** The number of listeners on the bus, once it is drained. */
+  def busListeners(): Int = {
+    drainListenerBus()
+    listenerBus.getClass.getMethod("listeners").invoke(listenerBus)
+      .asInstanceOf[java.util.List[_]].size
   }
 }
 

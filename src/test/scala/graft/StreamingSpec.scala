@@ -163,8 +163,10 @@ class StreamingSpec extends SparkSpec {
     Files.write(java.nio.file.Paths.get(in, "part-corrupt.parquet"),
       "not a parquet file".getBytes("UTF-8"))
     val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
-    def checkpoints() = new java.io.File("/dev/shm").listFiles()
-      .map(_.getName).filter(_.startsWith("graft_ckpt")).toSet
+    // the scratch root: the context's temp dir, where runOnce checkpoints
+    val scratch = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), "graft")
+    def checkpoints() = Option(scratch.listFiles()).getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith("ckpt")).toSet
     val before = checkpoints()
 
     var starter: SparkSession = null
@@ -187,19 +189,24 @@ class StreamingSpec extends SparkSpec {
     def callerWidth = caller.conf.get("spark.sql.shuffle.partitions")
     val stateWidths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     var widthInBuilder = ""
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => stateWidths.add(o.numShufflePartitions))
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    var starter: SparkSession = null
     val counts = StreamingPipeline
       .runOnce(caller, "stream_width_spec", OutputMode.Complete) { s =>
         widthInBuilder = callerWidth
-        s.streams.addListener(new StreamingQueryListener {
-          def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-          def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-            e.progress.stateOperators.foreach(o => stateWidths.add(o.numShufflePartitions))
-          def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        })
+        starter = s
+        s.streams.addListener(listener)
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
           s, in, cfg, maxFilesPerTrigger = 10000))
       }
     drainListenerBus()
+    // the starting session is shared by later runs: take the listener off
+    starter.streams.removeListener(listener)
     assert(!stateWidths.isEmpty, "no state operator progress was reported")
     stateWidths.forEach(w => assert(w === 4L, "state operator width"))
     assert(widthInBuilder === "8", "caller's width inside the stream builder")
@@ -208,5 +215,44 @@ class StreamingSpec extends SparkSpec {
     // joins with a frame of the caller's session
     val sinks = caller.range(1).select(lit("system").as("sink"))
     assert(counts.join(sinks, Seq("sink")).count() > 0)
+  }
+
+  test("repeated runs share one narrow session and keep no result tables") {
+    val in = Files.createTempDirectory("graft_listeners").toString + "/input"
+    TranscriptGen.transcripts(spark, N).coalesce(2).write.parquet(in)
+    val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
+    def counts(s: SparkSession) = StreamingPipeline.windowedSinkCounts(
+      StreamingPipeline.routedStream(s, in, cfg, maxFilesPerTrigger = 10000))
+    def run(name: String): Unit = {
+      var starter: SparkSession = null
+      val table = StreamingPipeline.runOnce(spark, name, OutputMode.Complete) { s =>
+        starter = s
+        counts(s)
+      }
+      assert(!starter.catalog.tableExists(name), s"the temp view $name was left behind")
+      assert(table.count() > 0, "the returned frame lost its rows")
+    }
+    run("stream_reuse_warmup")
+    val beforeRuns = busListeners()
+    (1 to 4).foreach(i => run(s"stream_reuse_$i"))
+    val viaRunOnce = busListeners() - beforeRuns
+
+    // the same four stateful queries started directly on one session whose
+    // query manager already exists
+    val direct = spark.newSession()
+    direct.streams.active
+    val beforeDirect = busListeners()
+    (1 to 4).foreach { i =>
+      val q = counts(direct).writeStream.format("memory")
+        .queryName(s"stream_direct_$i")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_direct_ckpt").toString)
+        .outputMode(OutputMode.Complete).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    val viaSession = busListeners() - beforeDirect
+    info(s"four runs added $viaRunOnce bus listeners, four direct queries $viaSession")
+    assert(viaRunOnce <= viaSession,
+      s"four runs added $viaRunOnce bus listeners, four direct queries $viaSession")
   }
 }
