@@ -3,13 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.ops.TrainingOps
 
-/** Candidate-funnel diagnostics for the LSH dedup queries: prints, per
-  * stage, how many pairs each mechanism generates before the exact-Jaccard
-  * verify — the number that decides whether the banding survives a 1000x
-  * scale-up (VERDICT r1 asked for the candidate count to be logged).
+/** Candidate-funnel diagnostics for the dedup queries: prints, per
+  * mechanism, how many distinct pairs its candidate join generates before
+  * the prefilter and exact-Jaccard verify — the number that decides
+  * whether the banding survives a 1000x scale-up. The counts come from the
+  * frames and candidate joins the dedup queries themselves build
+  * (`TrainingOps.docShingles`, `minhashSigs`/`minhashCandidates`,
+  * `simhashSigs`/`simhashCandidates`, `explodedIndex`), so they cannot
+  * drift from them.
   *
   * Usage: `sbt "runMain graft.DedupStats [sfDir]"` (default sf0.1).
   */
@@ -22,50 +25,31 @@ object DedupStats {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.ensureRegistered(spark)
 
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-    val nDocs = d.count()
-    val tok = split(lower(trim(col("text"))), "\\s+")
-    val dsh = d.select(col("doc_id"), GraftFunctions.word_shingles(tok, 3).as("sh"))
-      .persist()
-
-    // same encoded single-long band keys as the production queries
-    def banding(banded: DataFrame, probed: DataFrame, label: String): Unit = {
-      val raw = banded.as("x").join(probed.as("y"),
-        col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
-      val distinctPairs = raw.distinct().count()
-      println(f"$label%-10s candidates=$distinctPairs%,d " +
-        f"(${distinctPairs * 2.0 / (nDocs * (nDocs - 1))}%.2e of all pairs)")
+    val dsh = TrainingOps.docShingles(spark, dir)
+    val nDocs = dsh.count()
+    def report(label: String, pairs: DataFrame, note: String = ""): Unit = {
+      val n = pairs.select("ia", "ib").distinct().count()
+      println(f"$label%-10s candidates=$n%,d " +
+        f"(${n * 2.0 / (nDocs * (nDocs - 1))}%.2e of all pairs$note)")
     }
 
     // minhash: 16 bands x 4 rows, exact band-key join
-    val mSig = dsh.select(col("doc_id"),
-      GraftFunctions.minhash_sig(col("sh"), TrainingOps.MinHashK).as("sig"))
-    val mBanded = mSig.select(col("doc_id"),
-      explode(GraftFunctions.minhash_band_keys(col("sig"),
-        TrainingOps.MinHashBands)).as("bk"))
-    banding(mBanded, mBanded, "minhash")
+    report("minhash",
+      TrainingOps.minhashCandidates(TrainingOps.minhashSigs(dsh)))
 
     // simhash: 36 bands x 16 bits, hamming<=1 multi-probe join
-    val sSig = dsh.select(col("doc_id"),
-      GraftFunctions.simhash_multi(col("sh"), TrainingOps.SimHashSigs).as("sigs"))
-    val sBanded = sSig.select(col("doc_id"),
-      explode(GraftFunctions.simhash_band_keys(col("sigs"),
-        TrainingOps.SimHashBandBits)).as("bk"))
-    val sProbed = sSig.select(col("doc_id"),
-      explode(GraftFunctions.simhash_probe_keys(col("sigs"),
-        TrainingOps.SimHashBandBits)).as("bk"))
-    banding(sBanded, sProbed, "simhash")
+    report("simhash",
+      TrainingOps.simhashCandidates(TrainingOps.simhashSigs(dsh)))
 
-    // ngram: co-shingle pairs off the (capped) inverted index
-    val ex = dsh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val ng = ex.select(col("doc_id").as("ia"), col("s"))
+    // ngram: co-shingle pairs off the uncapped inverted index
+    val ex = TrainingOps.explodedIndex(dsh)
+    report("ngram", ex.select(col("doc_id").as("ia"), col("s"))
       .join(ex.select(col("doc_id").as("ib"), col("s")), Seq("s"))
-      .filter(col("ia") < col("ib")).select("ia", "ib").distinct().count()
-    println(f"ngram      candidates=$ng%,d (co-shingle pairs; " +
-      f"cap=${TrainingOps.ShingleFreqCap} never binds at this sf)")
+      .filter(col("ia") < col("ib")),
+      s"; co-shingle pairs, cap=${TrainingOps.ShingleFreqCap} not applied")
+
+    TrainingOps.releaseCaches(spark, dir)
     spark.stop()
   }
 }

@@ -1,19 +1,15 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 
 import graft.model.PipelineConfig
-import graft.pipeline.{Pipeline, TranscriptGen, Transcripts}
+import graft.pipeline.{Pipeline, Transcripts}
 
 /** N vs 4N scaling evidence for BENCH/BASELINE.md (sandbox protocol in
   * BASELINE.md): the FULL disk-to-disk pipeline (read parquet -> parse ->
   * enrich -> route -> per-sink ordered writes + manifest + metrics) runs on
   * the identical input at local[N] and local[4N]; reports turns/sec at both
   * and efficiency (tput_4N / tput_N) / 4.
-  *
-  * Usage: runMain graft.ScaleBench [turns] [nSmall] [nBig]
   */
 /** Child-JVM entry for [[ScaleBench.corun]]: a full-size warmup pipeline
   * run (pays JIT compilation and the fresh-heap page faults of a cold
@@ -448,389 +444,5 @@ object ScaleBench {
     corun(nBig / nSmall, nSmall, input, s"$outRoot/kids", turns,
       execs = execsSmall).map(leg =>
       CorunPair(big.tput, leg.aggTput, leg.childCpuSecMean, big.cpuSec))
-  }
-
-  /** Ambient ceiling: how well THIS machine scales embarrassingly parallel
-    * pure-CPU work from n to m threads (VM neighbors / turbo / scheduler
-    * effects cap it well below 1.0 regardless of Spark). Reported alongside
-    * so the job's efficiency can be read against what the box allows.
-    */
-  private def cpuCeiling(nSmall: Int, nBig: Int): (Double, Double, Double) = {
-    def unitsPerSec(threads: Int): Double = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val units = threads * 4
-      def work(): Long = { var s = 0L; var i = 0L
-        while (i < 80000000L) { s += i * i; i += 1 }; s }
-      // warm
-      (1 to threads).map(_ => pool.submit(() => work())).foreach(_.get)
-      val t0 = System.nanoTime()
-      (1 to units).map(_ => pool.submit(() => work())).foreach(_.get)
-      val dt = (System.nanoTime() - t0) / 1e9
-      pool.shutdown()
-      units / dt
-    }
-    // interleaved best-of-3 per level, like the Spark trials — a single
-    // calibration pair is as noise-hostage as a single Spark run
-    val as = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val bs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    (1 to 3).foreach { _ =>
-      as += unitsPerSec(nSmall)
-      bs += unitsPerSec(nBig)
-    }
-    val a = as.max
-    val b = bs.max
-    (a, b, (b / a) / (nBig.toDouble / nSmall))
-  }
-
-  def main(args: Array[String]): Unit = {
-    // 4M default: the per-trial driver tail (commit + listing + read-back
-    // scheduling, ~1.5 s fixed) is ~19% of the big level's wall at 1M
-    // turns and ~5% at 4M — the fixed tail must not masquerade as poor
-    // engine scaling (at 100 TB it is noise)
-    val turns = args.lift(0).map(_.toLong).getOrElse(4000000L)
-    val nSmall = args.lift(1).map(_.toInt).getOrElse(2)
-    val nBig = args.lift(2).map(_.toInt).getOrElse(8)
-    // tmpfs: the sandbox's single virtio disk throttles after a burst
-    // (writes degrade 16s -> 90s run-over-run), which measures the disk's
-    // token bucket, not the engine. On a real cluster sink bandwidth
-    // scales with executors; RAM-backed IO is the honest local analogue.
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_scale").toString
-    val (cpuSmall, cpuBig, ceiling) = cpuCeiling(nSmall, nBig)
-
-    // PRIMARY protocol: "cluster" — each level is a local-cluster of
-    // forked 2-core executor JVMs (1 worker vs 4 workers), the faithful
-    // sandbox analogue of two cluster sizes (see session()). "threads"
-    // (local[N] vs local[4N], one shared heap) remains available for
-    // comparison via SPARK_GRAFT_SCALE_MODE=threads.
-    val clusterMode =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "cluster") == "cluster"
-    def execsFor(cpus: Int): Option[Int] =
-      if (clusterMode) Some(math.max(1, cpus / 2)) else None
-
-    // identical input for both levels, written once
-    val gen = session(nBig)
-    TranscriptGen.transcripts(gen, turns)
-      .repartition(nBig * 4) // enough splits that local[8] and local[32] both parallelize
-      .write.parquet(s"$root/input")
-    gen.stop()
-    // warmup corpus for the per-trial in-session warm run: cluster trials
-    // fork COLD executor JVMs, and each executor must Janino+C2-compile
-    // its own copy of every codegen class. A quarter-size warm left the
-    // 4-worker level intermittently interpreter-bound (measured: +70
-    // CPU-sec inside one trial's window when an executor entered cold) —
-    // the warm is therefore the FULL input, run inside the session before
-    // the listener attaches, symmetrically at both levels.
-    val warmInput = if (clusterMode) Some(s"$root/input") else None
-
-    // best of N full runs per level, INTERLEAVED (small, big, small, big,
-    // ...) so an ambient noisy-neighbor window degrades both levels
-    // instead of silently cratering whichever one it lands on — a single
-    // contiguous block per level under- or over-states that level by up
-    // to 2x on this VM. Each pair is additionally LOAD-GATED (bounded wait
-    // for ambient busy-cores < 2.5 via /proc/stat) and the harness runs a
-    // FIXED pair budget. Cluster-mode trials are RAW (see the parity note
-    // above runOnce); thread-mode trials keep the clock-parity spinners.
-    val bySmall = scala.collection.mutable.ArrayBuffer.empty[Trial]
-    val byBig = scala.collection.mutable.ArrayBuffer.empty[Trial]
-    val gateOk = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val bySmallRaw = scala.collection.mutable.ArrayBuffer.empty[Trial]
-    val byBigRaw = scala.collection.mutable.ArrayBuffer.empty[Trial]
-    // FIXED pair budget: stopping the moment best-of efficiency clears the
-    // bar is optional stopping on the published metric (extra pairs could
-    // only raise the 2c max and pull efficiency back down, so an early
-    // stop selects favorable noise) — every run now samples all pairs and
-    // reports the efficiency over the full distribution
-    val maxPairs = args.lift(3).map(_.toInt)
-      .orElse(sys.env.get("SPARK_GRAFT_SCALE_PAIRS").map(_.toInt))
-      .getOrElse(if (clusterMode) 4 else 6)
-    // 10 waves at the big level: at 6 waves the best 8c trials still idled
-    // ~25% of core-seconds behind last-wave stragglers (util 0.75); finer
-    // tasks pack the tail better, and both levels pay the identical
-    // per-task fixed cost (same width — the r4 fairness rule)
-    val width = 10 * nBig
-    var i = 0
-    while (i < maxPairs) {
-      i += 1
-      gateOk += awaitQuiet(90000, 2.5)
-      bySmall += runOnce(nSmall, s"$root/input", s"$root/out-$nSmall-$i", turns,
-        parity = !clusterMode, shuffleParts = width,
-        execs = execsFor(nSmall), warmInput = warmInput)
-      byBig += runOnce(nBig, s"$root/input", s"$root/out-$nBig-$i", turns,
-        parity = !clusterMode, shuffleParts = width,
-        execs = execsFor(nBig), warmInput = warmInput)
-    }
-    // thread mode only: a no-parity pair alongside (in cluster mode the
-    // primary trials ARE raw, so a second raw pair would be redundant)
-    if (!clusterMode) (1 to 2).foreach { i =>
-      bySmallRaw += runOnce(nSmall, s"$root/input", s"$root/out-r$nSmall-$i",
-        turns, parity = false, shuffleParts = width)
-      byBigRaw += runOnce(nBig, s"$root/input", s"$root/out-r$nBig-$i",
-        turns, parity = false, shuffleParts = width)
-    }
-    val tputSmall = bySmall.map(_.tput).max
-    val tputBig = byBig.map(_.tput).max
-    val eff = (tputBig / tputSmall) / (nBig.toDouble / nSmall)
-    val effRaw = if (clusterMode) eff
-      else (byBigRaw.map(_.tput).max / bySmallRaw.map(_.tput).max) /
-        (nBig.toDouble / nSmall)
-    // neighbor-immune companion: min per-turn task-CPU per level (noise
-    // inflates CPU via context switches/cache pollution, so min is the
-    // clean estimate); its ratio is the engine's work amplification N->4N
-    val cpuEff = bySmall.map(_.cpuSec).min / byBig.map(_.cpuSec).min
-    val utilSmall = bySmall.maxBy(_.tput).utilization(nSmall)
-    val utilBig = byBig.maxBy(_.tput).utilization(nBig)
-
-    // hardware-normalized leg: one 4N-cluster job vs (nBig/nSmall)
-    // concurrent N-cluster child JVMs — see corun()/corunPaired(). Raw
-    // like the main trials; the children themselves keep the box's task
-    // cores as busy as the 4N trial does, so the turbo confound cancels
-    // by construction. THREE TIME-PAIRED legs (each leg measures its own
-    // fresh 4N trial right before the children — see corunPaired); a
-    // single leg is hostage to a host-steal window hitting the widest-
-    // parallelism section of the whole harness (measured: one window
-    // dropped a leg's aggregate 90k vs 196k steady and inflated child
-    // task-CPU 2.4x). The reported leg is the one with the LOWEST
-    // combined task-CPU (the steal diagnosis), never the best ratio.
-    val corunLegs: Seq[Option[CorunPair]] = (1 to 3).map { i =>
-      awaitQuiet(90000, 2.5)
-      corunPaired(nSmall, nBig, s"$root/input", s"$root/co-$i", turns,
-        width, execsFor(nSmall), execsFor(nBig), warmInput)
-    }
-    // None = a child JVM failed; the leg reports n/a rather than an
-    // aggregate silently missing a job's worth of throughput. Validity
-    // bound: 1.35x the same run's steady-trial CPU expectation — see
-    // pickCorunLeg.
-    val corunCpuBound =
-      1.35 * (byBig.map(_.cpuSec).min + bySmall.map(_.cpuSec).min)
-    val corunBest: Option[CorunPair] =
-      pickCorunLeg(corunLegs.flatten, corunCpuBound)
-    val effCorun: Option[Double] = corunBest.map(_.eff)
-
-    // saturation probe: the same job at all 32 local threads, to document
-    // where the single-VM memory system caps out
-    val tput32 = if (nBig < 32) (1 to 3).map(i =>
-      runOnce(32, s"$root/input", s"$root/out-32-$i", turns,
-        shuffleParts = 64).tput).max
-    else tputBig
-
-    val levelDesc = if (clusterMode)
-      s"""two CLUSTER SIZES — Spark standalone `local-cluster` mode with
-         |FORKED executor JVMs on this host: ${nSmall / 2} worker vs
-         |${nBig / 2} workers, each an executor JVM with 2 cores and its
-         |own pre-touched 2 GB heap (-Xms = -Xmx -XX:+AlwaysPreTouch — the
-         |host zeroes fresh pages at ~100-250 MB/s and a task thread's
-         |first touch is charged to task CPU, so heap faulting must land
-         |in the fork window, not the measured one), GC (threads sized to
-         |its cores), allocator and JIT, shuffle blocks traveling
-         |executor-to-executor. This is the faithful sandbox analogue of
-         |the rule's two-cluster-size criterion: adding workers of a FIXED
-         |shape. (Thread-mode `local[N]` runs all workers in one shared
-         |heap whose allocation rate and GC couple the levels — measured:
-         |four concurrent 2-core JVMs aggregate ~173k turns/s where one
-         |8-thread JVM caps at ~132k on identical work, a single-JVM
-         |artifact no real cluster exhibits. SPARK_GRAFT_SCALE_MODE=threads
-         |reruns that protocol for comparison.) Cluster trials fork cold
-         |executor JVMs, so each trial first runs a FULL-SIZE warmup pass
-         |inside the session, before the metrics listener attaches — every
-         |executor Janino-compiles and C2-warms its own copy of the codegen
-         |classes outside the measured window, symmetrically at both levels
-         |(a quarter-size warm measurably left 4-worker trials
-         |intermittently interpreter-bound: +70 CPU-sec in one window)"""
-        .stripMargin
-    else
-      s"""two local parallelism levels (`local[$nSmall]` vs
-         |`local[$nBig]`), same JVM heap (pre-touched — see below)"""
-        .stripMargin
-    val parityDesc = if (clusterMode)
-      s"""**Why cluster trials run RAW (no clock-parity machinery):** three
-         |parity designs were tried and each perturbed the measurement more
-         |than the turbo confound it removes — nice-19 spinners and
-         |SCHED_IDLE spinners both roughly halved the 4-worker level's wall
-         |(utilization 0.39 / 0.31 vs 0.60-0.73 raw; cross-JVM RPC and
-         |shuffle wakeups pay scheduler-class preemption latency thousands
-         |of times per run), and a hard cpuset partition (executors pinned
-         |to disjoint core slices, pinned spinners on the rest) strangled
-         |the executors' own service threads — netty shuffle server, GC,
-         |JIT — onto the task cores (utilization 0.45/0.30). Raw trials
-         |instead carry the idle-core-turbo confound openly: the 1-worker
-         |level runs on an otherwise-idle box and is inflated ~1.2-1.3x
-         |(measured: a pinned single-thread probe runs 1.88M vs 1.41M
-         |iters/s with other cores idle vs busy) relative to what a loaded
-         |cluster node gets, which biases the reported wall efficiency
-         |DOWNWARD — the conservative direction. The co-run leg below is
-         |the turbo-free wall estimate."""
-        .stripMargin
-    else
-      s"""**Clock parity (primary protocol):** every level runs with all 32
-         |cores of the box occupied — Spark gets N cores and the
-         |remaining ones run SCHED_IDLE spinner processes. An idle-class
-         |spinner consumes only cycles no normal task wants (it cannot
-         |preempt or delay Spark's threads) but keeps the package at
-         |all-core clocks.
-         |Without it, the idle-core turbo of this host inflates the
-         |small-parallelism level ~1.33x (measured: a pinned single-thread
-         |probe runs 1.88M vs 1.41M iters/s with the other cores idle vs
-         |busy) — headroom a real N-executor cluster, whose nodes are as
-         |loaded as the 4N one's, never gets."""
-        .stripMargin
-    val rawDesc = if (clusterMode) "" else
-      s"""
-         |Raw (no parity, idle-core turbo inflating the N level):
-         |${bySmallRaw.map(_.tput).max.round} ->
-         |${byBigRaw.map(_.tput).max.round} turns/s,
-         |efficiency ${f"$effRaw%.3f"}.
-         |""".stripMargin
-    val md =
-      s"""# BENCH/BASELINE.md — N vs 4N scaling evidence
-         |
-         |Protocol (BASELINE.md): identical end-to-end pipeline job
-         |(parquet scan -> dictionary parse -> broadcast enrich -> route ->
-         |per-(sink,bucket) ordered parquet writes + manifest + aggregates +
-         |metrics) on the identical $turns-turn input, at
-         |$levelDesc. AQE
-         |on, IDENTICAL shuffle width at both levels (see below), tmpfs IO
-         |(the sandbox's
-         |lone virtio disk throttles after a burst — it would measure the
-         |disk's token bucket, not the engine; a real cluster's sink/shuffle
-         |bandwidth scales with executors). Best-of runs per level, trials
-         |INTERLEAVED across levels so an ambient noise window cannot
-         |silently crater one level.
-         |
-         |$parityDesc
-         |
-         || level | cores | turns/sec (best) | all trials (turns/s) | task-CPU sec (all trials) | utilization@best |
-         ||---|---|---|---|---|---|
-         || N | $nSmall | ${tputSmall.round} | ${bySmall.map(_.tput.round).mkString(", ")} | ${bySmall.map(t => f"${t.cpuSec}%.1f").mkString(", ")} | ${f"$utilSmall%.2f"} |
-         || 4N | $nBig | ${tputBig.round} | ${byBig.map(_.tput.round).mkString(", ")} | ${byBig.map(t => f"${t.cpuSec}%.1f").mkString(", ")} | ${f"$utilBig%.2f"} |
-         || (saturation probe) | 32 | ${tput32.round} | | | |
-         |
-         |**Wall-clock scaling efficiency = (tput_4N / tput_N) / 4 =
-         |${f"$eff%.3f"}**. Criterion (BASELINE.md): three legs — wall,
-         |CPU-time, co-run — each estimating engine-attributable N->4N
-         |efficiency under disjoint hardware confounders; **pass = any two
-         |>= 0.8**. Trials were load-gated
-         |(bounded wait for ambient busy-cores < 2.5 between pairs; gate
-         |outcomes: ${gateOk.mkString(", ")}) and the harness runs a FIXED
-         |budget of $maxPairs interleaved pairs — no early stop on the
-         |published metric, which would select favorable noise.
-         |
-         |**Companion CPU-time efficiency (neighbor-immune) =
-         |min-task-CPU_N / min-task-CPU_4N = ${f"$cpuEff%.3f"}.** A noisy
-         |co-tenant steals wall-clock but barely changes the cycles the
-         |tasks burn, so this ratio isolates the ENGINE's work
-         |amplification from N to 4N cores; wall efficiency factors
-         |exactly into cpuEff x (utilization_4N / utilization_N). A
-         |wall-clock miss with cpuEff >= 0.8 and depressed utilization is
-         |a noise diagnosis, not an engine regression.
-         |
-         |**Hardware-normalized co-run efficiency = tput_4N / (aggregate
-         |of ${nBig / nSmall} CONCURRENT ${nSmall}-core jobs) =
-         |${effCorun.map(e => f"$e%.3f")
-            .getOrElse("n/a (no storm-free valid leg — see diagnoses below)")}**.
-         |Each of the ${corunLegs.size} legs is TIME-PAIRED — a fresh
-         |${nBig}-core cluster trial immediately followed by its
-         |${nBig / nSmall} concurrent ${nSmall}-core jobs, so numerator and
-         |denominator share one noise window (taking tput_4N from the pairs
-         |phase and the aggregate minutes later let host drift between
-         |phases enter the ratio directly). Per-leg 4N tput / aggregate /
-         |ratio / window task-CPU:
-         |${corunLegs.map(_.map(l => f"${l.tputBig.round} / ${l.agg.round} /" +
-            f" ${l.eff}%.3f / ${l.windowCpu}%.0f s").getOrElse("failed"))
-            .mkString("; ")}.
-         |The reported leg passes TWO symmetric validity checks — a
-         |PLAUSIBILITY filter (ratio <= 1.05: ${nBig / nSmall} independent
-         |${nSmall}-core clusters cannot collectively run slower than the
-         |one ${nBig}-core cluster, so a higher ratio is physical proof
-         |the children were degraded mid-leg) and a CPU-CLEANLINESS bound
-         |(window task-CPU <= 1.35x this run's steady-trial expectation of
-         |${f"${corunCpuBound / 1.35}%.0f"} s — hypervisor steal inflates
-         |guest task-CPU, and a storm on the ${nBig}-core trial biases the
-         |ratio DOWN exactly as one on the children biases it UP) — and is
-         |then the one with the LOWEST combined measured task-CPU (the
-         |steal diagnosis, invisible to in-guest load gates), never the
-         |best ratio. If no leg passes both, the figure is n/a and the
-         |per-leg diagnoses above stand: a number the diagnostics prove
-         |contaminated is never published as the efficiency. Both sides
-         |put identical aggregate pressure on the box's shared
-         |L3/DRAM/clocks — the plain N-vs-4N pair cannot ($nSmall lone
-         |threads enjoy the whole cache hierarchy, headroom no real
-         |N-executor cluster has over its 4N sibling, since both clusters
-         |have the same per-core hardware). The residual ratio is the
-         |engine's own wide-vs-narrow overhead: shuffle width,
-         |coordination, commit serialization.
-         |$rawDesc
-         |Run-to-run variance: ambient neighbor load AND the host's turbo
-         |behavior both drift on minute timescales (CLAUDE.md documents
-         |±2x single-run swings), so single-sample efficiencies from other
-         |sessions ranged ~0.63-1.0 before this harness; the trial
-         |distributions above carry the noise diagnosis with the artifact.
-         |Rerun `sbt "runMain graft.ScaleBench"` to reproduce.
-         |
-         |## Why N=$nSmall: the single-VM memory wall
-         |
-         |This sandbox is ONE machine: adding local threads adds cores but
-         |not memory channels, so per-core throughput decays once the
-         |allocation/bandwidth budget saturates (~8-16 threads for this
-         |parse-heavy job). A real 4N-executor cluster adds 4N memory
-         |systems. At the unsaturated sizes (N=$nSmall -> 4N=$nBig) the
-         |ENGINE's scaling is ${f"$eff%.3f"}; the 32-thread probe shows the
-         |VM cap, not a Spark-plan bottleneck (the plan has one shuffle and
-         |no driver-side row work). Historical context: rounds 3-4 measured
-         |wall 0.66-0.71 under the thread-mode protocol (`local[2]` vs
-         |`local[8]`, one shared heap) — a deficit consistent with
-         |single-JVM allocator/GC coupling rather than the engine (four
-         |concurrent 2-core JVMs aggregate ~173k turns/s where one 8-thread
-         |JVM caps at ~132k on identical work), which is why the cluster
-         |protocol (each worker owning its heap) is now primary: the same
-         |plan, the same per-core hardware budget, per-worker heaps — the
-         |efficiency above is the engine's, not the shared allocator's.
-         |
-         |## Heap preallocation
-         |
-         |The host serves fresh pages at ~100-250 MB/s: with a lazily-GROWN
-         |heap, young-GC copies stalled up to 18 s per pause (~95 s total
-         |STW in one bench run). Bench JVMs now start with -Xms = -Xmx so
-         |region boundaries are stable and the page-fault cost lands in the
-         |warmup trials, not in measured collections (full -XX:+AlwaysPreTouch
-         |also works — max pause ~1.7 s — but costs ~3 min of page-zeroing
-         |per JVM launch on this host; opt-in via SPARK_GRAFT_PRETOUCH=1).
-         |
-         |## Shuffle width derivation
-         |
-         |The pipeline sizes its one shuffle from the DATA unless pinned:
-         |partitions = max(defaultParallelism, inputBytes / 128 MB)
-         |(Pipeline.derivedShufflePartitions; AQE coalesces overshoot on
-         |small inputs). This benchmark pins the SAME width ($width) at
-         |both levels — the N -> 4N question is "same job, more workers",
-         |and a per-level width would bake 4x the per-task fixed cost into
-         |the small level — sized for 10 task waves at the big level so
-         |stragglers pack (2 waves measured utilization 0.65; 6 waves
-         |still idled ~25% at the best 8c trials). Input
-         |splits are likewise equalized (2 MB bins; Spark's maxSplitBytes
-         |formula would otherwise pick per-level split counts and ran the
-         |whole parse phase ~3 tasks wide at every level). At 100 TB
-         |the formula yields ~800k reducer tasks of ~128 MB each, where a
-         |fixed count of 32 would mean 3 TB per task (guaranteed spill).
-         |The same green e2e oracle rows hold under the derived width
-         |(CORRECTNESS rows pipe_e2e_routed / pipe_e2e_counts).
-         |
-         |## Machine calibration (ambient ceiling)
-         |
-         |Embarrassingly parallel pure-CPU JVM work (no Spark, no IO, no
-         |allocation) on the same box scales from $nSmall to $nBig threads
-         |at efficiency **${f"$ceiling%.3f"}** ($nSmall-thread:
-         |${cpuSmall.round} units/s, $nBig-thread: ${cpuBig.round} units/s).
-         |Efficiency normalized to the ceiling: **${f"${eff / ceiling}%.3f"}**.
-         |
-         |Input: deterministic synthetic transcripts (TranscriptGen, seedless
-         |closed-form columns, FIXTURES.md mix incl. 1% heavy conversations
-         |at 100x turns). Generated ${java.time.Instant.now()}.
-         |""".stripMargin
-    Files.createDirectories(Paths.get("BENCH"))
-    Files.writeString(Paths.get("BENCH/BASELINE.md"), md)
-    println(md)
-    // tmpfs is RAM: don't leak gigabytes across rounds
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 }

@@ -61,9 +61,9 @@ object TrainingOps {
     *
     * Scale shape: 16-bit keys give 65,536 buckets per band, and the
     * uniform-model candidate rate for unrelated docs is 36·17/2^16 =
-    * 0.0093 per pair — 6.7x below the round-1 8-bit banding (16/2^8 =
-    * 0.0625; measured by graft.DedupStats at sf0.1: 126,177 candidates,
-    * 1.0e-2 of all pairs) — with per-band
+    * 0.0093 per pair (measured by graft.DedupStats at sf0.1: 126,177
+    * candidates, 1.0e-2 of all pairs) — 6.7x below the round-1 8-bit
+    * banding (16/2^8 = 0.0625) — with per-band
     * bucket fan-in shrunk 256x. The probe side emits 36·17 = 612 rows/doc:
     * linear, skew-free. At extreme n the band width should grow with
     * log2(n) (Manku et al., WWW'07), which this layout supports by
@@ -142,11 +142,9 @@ object TrainingOps {
     * winning counts are corpus-scale (BpeSpec pins floor-invariance of
     * all 8 merges AND their counts on the fixtures, where no word is ever
     * dropped — the fixture vocab has no sub-floor words at any SF, so the
-    * floor is a pure scale guard with bit-identical output). Env-tunable
-    * for corpora whose tail calls for a higher floor.
+    * floor is a pure scale guard with bit-identical output).
     */
-  val BpeMinWordCount: Long =
-    sys.env.get("SPARK_GRAFT_BPE_MIN_COUNT").map(_.toLong).getOrElse(2L)
+  val BpeMinWordCount: Long = 2L
 
   /** Hard bound on the collected vocabulary: a corpus whose >= floor
     * vocabulary still exceeds this must raise the floor (or move the loop
@@ -181,7 +179,7 @@ object TrainingOps {
     require(wc.length <= BpeMaxCollectedVocab,
       s"BPE vocabulary after the >= $minCount floor (${wc.length} words) " +
         s"exceeds the driver bound $BpeMaxCollectedVocab — raise " +
-        "SPARK_GRAFT_BPE_MIN_COUNT or use the distributed escalation")
+        "TrainingOps.BpeMinWordCount or use the distributed escalation")
     val seqs = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
     wc.foreach { case (w, c) => seqs += ((w.split("").filter(_.nonEmpty), c)) }
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
@@ -274,7 +272,7 @@ object TrainingOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Exploded inverted index (doc_id, shingle) off the cached array frame. */
-  private def explodedIndex(dsh: DataFrame): DataFrame =
+  private[graft] def explodedIndex(dsh: DataFrame): DataFrame =
     dsh.select(col("doc_id"), explode(col("sh")).as("s"))
 
   /** Per-doc multi-simhash signature frame, persisted once per session
@@ -282,10 +280,65 @@ object TrainingOps {
     * four join sides, so the 9x64-bit signature pass (about 40 ms of one
     * core over sf0.1's 260k shingles with bit-sliced votes) runs once.
     */
-  private def simhashSigs(dsh: DataFrame): DataFrame =
+  private[graft] def simhashSigs(dsh: DataFrame): DataFrame =
     dsh.select(col("doc_id"),
       simhash_multi(col("sh"), SimHashSigs).as("sigs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Per-doc MinHash signature frame (doc_id, sig) off the shingle frame. */
+  private[graft] def minhashSigs(dsh: DataFrame): DataFrame =
+    dsh.select(col("doc_id"), minhash_sig(col("sh"), MinHashK).as("sig"))
+
+  /** MinHash LSH candidates off the [[minhashSigs]] frame: the distinct pairs
+    * (ia < ib) that share any of the MinHashBands band keys. One hashed
+    * long per band (native MinHashBandKeys, codegen'd) replaces the
+    * transform(sequence)+slice() composition whose higher-order functions
+    * are CodegenFallback and whose array-valued key made the LSH self-join
+    * compare 4-element arrays.
+    */
+  private[graft] def minhashCandidates(sig: DataFrame): DataFrame = {
+    val banded = sig.select(col("doc_id"),
+      explode(GraftFunctions.minhash_band_keys(col("sig"), MinHashBands))
+        .as("bk"))
+    banded.as("x").join(banded.as("y"),
+        col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib")).distinct()
+  }
+
+  /** SimHash LSH candidates off the [[simhashSigs]] frame: the pairs
+    * (ia < ib) whose keys agree, within Hamming distance 1, on some of the
+    * 36 16-bit bands. NOT deduplicated: a pair appears once per colliding
+    * band and probe, and dedup_simhash prefilters before its distinct.
+    *
+    * Band keys come from native codegen'd expressions as ONE encoded long
+    * (band << 16 | key): the transform(sequence)/flatten higher-order
+    * composition they replace was CodegenFallback, so the projections
+    * emitting 36 exact + 612 probe rows per doc ran interpreted and fell
+    * out of whole-stage codegen.
+    */
+  private[graft] def simhashCandidates(sig: DataFrame): DataFrame = {
+    val banded = sig.select(col("doc_id"),
+      explode(GraftFunctions.simhash_band_keys(col("sigs"), SimHashBandBits))
+        .as("bk"))
+    // one-sided multi-probe: the probe side emits key ^ mask for all 17
+    // masks of Hamming weight <= 1, so the equi-join catches every pair
+    // whose band keys differ in <= 1 bit (see SimHashSigs doc for the
+    // recall budget); the exact side stays 36 rows/doc
+    val probed = sig.select(col("doc_id"),
+      explode(GraftFunctions.simhash_probe_keys(col("sigs"), SimHashBandBits))
+        .as("bk"))
+    // probed LEFT, banded RIGHT: both explode the same cached sig frame,
+    // so the planner's size estimates tie and it builds/broadcasts the
+    // RIGHT side — with banded on the left it collected the 612-rows/doc
+    // PROBE explode (3M rows at sf0.1) into the hash relation while the
+    // 17x smaller 36-rows/doc exact side streamed (measured ~1.5 s per
+    // execution just building that relation). Keeping the exact side as
+    // the build side is also the right shuffle-join orientation at 100 TB
+    // (smaller side sorts/builds). Join output is identical.
+    probed.as("y").join(banded.as("x"),
+        col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
+  }
 
   /** Per-doc shingle counts — array size, no shuffle. */
   private def shingleCounts(dsh: DataFrame): DataFrame =
@@ -1122,17 +1175,8 @@ object TrainingOps {
     "dedup_minhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val dsh = docShingles(s, dir)
-      val sig = dsh.select(col("doc_id"), minhash_sig(col("sh"), MinHashK).as("sig"))
-      // one hashed long per band (native MinHashBandKeys, codegen'd):
-      // replaces the transform(sequence)+slice() composition whose
-      // higher-order functions are CodegenFallback and whose array-valued
-      // key made the LSH self-join compare 4-element arrays
-      val banded = sig.select(col("doc_id"),
-        explode(GraftFunctions.minhash_band_keys(col("sig"), MinHashBands))
-          .as("bk"))
-      val candidates = banded.as("x").join(banded.as("y"),
-          col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib")).distinct()
+      val sig = minhashSigs(dsh)
+      val candidates = minhashCandidates(sig)
       // signature prefilter before the exact-Jaccard join (recall budget in
       // the MinHashPrefilterMin doc): slashes the verify join's input;
       // match_count is the codegen'd form of the zip_with position count
@@ -1149,37 +1193,12 @@ object TrainingOps {
       val dsh = docShingles(s, dir)
       // 9 independent 64-bit simhashes in one token pass (one base hash per
       // shingle, mixed per signature), sliced into 36 bands of 16 bits.
-      // Band keys come from native codegen'd expressions as ONE encoded
-      // long (band << 16 | key): the transform(sequence)/flatten
-      // higher-order composition they replace was CodegenFallback, so the
-      // projections emitting 36 exact + 612 probe rows per doc ran
-      // interpreted and fell out of whole-stage codegen.
       // the plan references the 576-bit multi-simhash FOUR times (band
       // keys, probe keys, both prefilter sides) — persist so it runs once
       // per corpus (one cache entry via CacheManager plan-dedup;
       // releaseCaches drops it with the shingle cache)
       val sig = simhashSigs(dsh)
-      val banded = sig.select(col("doc_id"),
-        explode(GraftFunctions.simhash_band_keys(col("sigs"), SimHashBandBits))
-          .as("bk"))
-      // one-sided multi-probe: the probe side emits key ^ mask for all 17
-      // masks of Hamming weight <= 1, so the equi-join catches every pair
-      // whose band keys differ in <= 1 bit (see SimHashSigs doc for the
-      // recall budget); the exact side stays 36 rows/doc
-      val probed = sig.select(col("doc_id"),
-        explode(GraftFunctions.simhash_probe_keys(col("sigs"), SimHashBandBits))
-          .as("bk"))
-      // probed LEFT, banded RIGHT: both explode the same cached sig frame,
-      // so the planner's size estimates tie and it builds/broadcasts the
-      // RIGHT side — with banded on the left it collected the 612-rows/doc
-      // PROBE explode (3M rows at sf0.1) into the hash relation while the
-      // 17x smaller 36-rows/doc exact side streamed (measured ~1.5 s per
-      // execution just building that relation). Keeping the exact side as
-      // the build side is also the right shuffle-join orientation at 100 TB
-      // (smaller side sorts/builds). Join output is identical.
-      val candidates = probed.as("y").join(banded.as("x"),
-          col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
+      val candidates = simhashCandidates(sig)
       // Hamming prefilter over all 576 signature bits BEFORE the distinct
       // (cutoff budget in the SimHashSigs doc): the prefilter rejects
       // ~99.8% of band collisions, so deduplicating the survivors is free,

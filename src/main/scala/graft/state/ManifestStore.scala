@@ -51,9 +51,4 @@ final class ManifestStore(spark: SparkSession, path: String,
         .coalesce(1),
       path)
   }
-
-  /** Single-sink convenience (tests). */
-  def commit(runId: String, sink: String, bucketRows: Seq[(Int, Long)], wallMs: Long,
-      committedAt: Long): Unit =
-    commit(runId, bucketRows.map { case (b, n) => (sink, b, n) }, wallMs, committedAt)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -224,6 +225,23 @@ class DedupSpec extends SparkSpec {
     assert(ngram.nonEmpty)
     assert(ids("dedup_minhash") === ngram)
     assert(ids("dedup_simhash") === ngram)
+  }
+
+  test("LSH candidates cover every verified pair at sf0.01") {
+    // the funnel's recall: every pair a banded query verifies must come
+    // out of the candidate join graft.DedupStats counts for it
+    import graft.ops.TrainingOps._
+    val dir = sf("0.01")
+    def missing(query: String, candidates: DataFrame) = {
+      val verified = queries(query)(spark, dir).select("ia", "ib")
+      assert(verified.count() > 0, s"$query verified no pairs")
+      verified.join(candidates, Seq("ia", "ib"), "left_anti").collect().toSeq
+    }
+    try {
+      val dsh = docShingles(spark, dir)
+      assert(missing("dedup_minhash", minhashCandidates(minhashSigs(dsh))) === Nil)
+      assert(missing("dedup_simhash", simhashCandidates(simhashSigs(dsh))) === Nil)
+    } finally releaseCaches(spark, dir)
   }
 
   /** `dir`'s documents and events tables rewritten as defaultParallelism

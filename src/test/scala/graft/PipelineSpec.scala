@@ -92,7 +92,7 @@ class PipelineSpec extends SparkSpec {
     // pre-commit buckets 0..3 for sink 'system' (simulates a crash after
     // those buckets' data+manifest committed, before the rest)
     val manifest = new ManifestStore(spark, s"$out/_manifest")
-    manifest.commit(cfg.runId, "system", Seq((0, 0L), (1, 0L), (2, 0L), (3, 0L)),
+    manifest.commit(cfg.runId, (0 to 3).map(b => ("system", b, 0L)),
       wallMs = 0L, committedAt = cfg.runTsMillis)
 
     val report = Pipeline.run(spark, cfg)
