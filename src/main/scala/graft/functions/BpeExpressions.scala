@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ALL adjacent pairs of an array<string>, space-joined, WITH multiplicity
@@ -16,35 +12,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * measured 3-5x hazard class). Feeds text_lm_score's bigram explode and
   * text_bpe_train's pair counting.
   */
-case class WordPairs(child: Expression) extends UnaryExpression {
-
-  // containsNull follows the CHILD's array type (ADVICE r5): the kernel
-  // propagates elements verbatim, so declaring a null-free output over a
-  // nullable-element input would let codegen elide null checks downstream
-  // and corrupt/NPE on the first null element
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(_, n) => ArrayType(StringType, containsNull = n)
-    case _ => ArrayType(StringType, containsNull = false)
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"word_pairs requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordPairs.pairs(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordPairs.pairs($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordPairs =
-    copy(child = newChild)
-
-  override def prettyName: String = "word_pairs"
-}
-
 object WordPairs {
   private val Space = UTF8String.fromString(" ")
 
@@ -70,39 +37,6 @@ object WordPairs {
   * per learned rank over the base split, all inside one codegen'd
   * projection per iteration.
   */
-case class BpeMerge(child: Expression, left: String, right: String)
-    extends UnaryExpression {
-
-  // containsNull follows the child (ADVICE r5) — see WordPairs.dataType
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(_, n) => ArrayType(StringType, containsNull = n)
-    case _ => ArrayType(StringType, containsNull = false)
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge requires array<string>, got ${dt.sql}")
-  }
-
-  @transient private lazy val leftU = UTF8String.fromString(left)
-  @transient private lazy val rightU = UTF8String.fromString(right)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeMerge.merge(input.asInstanceOf[ArrayData], leftU, rightU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = ctx.addReferenceObj("bpeLeft", leftU, classOf[UTF8String].getName)
-    val r = ctx.addReferenceObj("bpeRight", rightU, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeMerge.merge($c, $l, $r)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMerge =
-    copy(child = newChild)
-
-  override def prettyName: String = "bpe_merge"
-}
-
 object BpeMerge {
   def merge(syms: ArrayData, left: UTF8String, right: UTF8String): ArrayData = {
     val m = syms.numElements()

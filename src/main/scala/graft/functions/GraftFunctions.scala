@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.types._
 
 /** Session-scoped registration of graft's custom Catalyst expressions plus
   * Column-level wrappers. Registration is idempotent; every query builder
@@ -21,43 +22,12 @@ object GraftFunctions {
     // dropping valueless keys discards the bare SD-id tokens for free
     "logfmt_parse_sd" -> ((exprs: Seq[Expression]) =>
       LogfmtParse(exprs.head, dropNullValues = true)),
-    "cosine_sim" -> ((exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))),
-    "fingerprint64" -> ((exprs: Seq[Expression]) => Fingerprint64(exprs.head)),
-    // k is passed as a literal int expression
-    "minhash_sig" -> ((exprs: Seq[Expression]) => MinHashSig(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "simhash64" -> ((exprs: Seq[Expression]) => SimHash64(exprs(0),
-      exprs(1).eval() match { case i: Int => i.toLong; case l: Long => l })),
-    "simhash_multi" -> ((exprs: Seq[Expression]) => SimHashMulti(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "rp_sign" -> ((exprs: Seq[Expression]) => RpSign(exprs(0),
-      exprs(1).eval().asInstanceOf[Int], exprs(2).eval() match {
-        case i: Int => i.toLong
-        case l: Long => l
-      })),
     "regexp_groups" -> ((exprs: Seq[Expression]) => RegexpGroups(exprs(0),
       exprs(1).eval().toString)),
     "compact_map" -> ((exprs: Seq[Expression]) => CompactMap(exprs)),
-    "word_shingles" -> ((exprs: Seq[Expression]) => WordShingles(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "word_pairs" -> ((exprs: Seq[Expression]) => WordPairs(exprs(0))),
-    "bpe_merge" -> ((exprs: Seq[Expression]) => BpeMerge(exprs(0),
-      exprs(1).eval().toString, exprs(2).eval().toString)),
-    "lumberjack_encode" -> ((exprs: Seq[Expression]) => LumberjackEncode(exprs.head)),
-    "lumberjack_decode" -> ((exprs: Seq[Expression]) => LumberjackDecode(exprs.head)),
-    "merge_maps" -> ((exprs: Seq[Expression]) => MergeMaps(exprs(0), exprs(1))),
     "merge_maps_field" -> ((exprs: Seq[Expression]) => MergeFieldMaps(exprs(0),
       exprs(1), exprs(2).eval().toString,
       exprs(3).eval().asInstanceOf[Boolean])),
-    "simhash_band_keys" -> ((exprs: Seq[Expression]) => SimHashBandKeys(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "simhash_probe_keys" -> ((exprs: Seq[Expression]) => SimHashProbeKeys(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "minhash_band_keys" -> ((exprs: Seq[Expression]) => MinHashBandKeys(exprs(0),
-      exprs(1).eval().asInstanceOf[Int])),
-    "hamming_total" -> ((exprs: Seq[Expression]) => HammingTotal(exprs(0), exprs(1))),
-    "match_count" -> ((exprs: Seq[Expression]) => MatchCount(exprs(0), exprs(1))),
-    "json_flat_map" -> ((exprs: Seq[Expression]) => JsonFlatMap(exprs.head)),
     // centroid table arrives as a foldable array<array<float>> literal and
     // is baked into the expression at build time
     "nearest_cell" -> ((exprs: Seq[Expression]) => {
@@ -74,12 +44,89 @@ object GraftFunctions {
     // numeric-key list arrives as one csv literal
     "event_json" -> ((exprs: Seq[Expression]) => EventJson(exprs(0),
       exprs(1).eval().toString.split(',').toSeq.filter(_.nonEmpty))),
-    "rp_project" -> ((exprs: Seq[Expression]) => RpProject(exprs(0),
-      exprs(1).eval().asInstanceOf[Int], exprs(2).eval() match {
-        case i: Int => i.toLong
-        case l: Long => l
-      }))
+    kernel("cosine_sim", "CosineSim.cosine", Floats, Floats)(_ => DoubleType),
+    kernel("fingerprint64", "Fingerprint64.hash64", StringType)(_ => LongType),
+    kernel("minhash_sig", "MinHashSig.sig", Strings, IntegerType)(
+      _ => Signature, args = withInt),
+    kernel("simhash64", "SimHash64.simhash", Strings, LongType)(
+      _ => LongType, args = e => Seq(e(0), longParam(e(1)))),
+    kernel("simhash_multi", "SimHashMulti.sigs", Strings, IntegerType)(
+      _ => Signature, args = withInt),
+    kernel("rp_sign", "RpSign.sign", Floats, IntegerType, LongType)(
+      _ => LongType, args = e => Seq(e(0), intParam(e(1)), longParam(e(2)))),
+    kernel("word_shingles", "WordShingles.shingles", Strings, IntegerType)(
+      _ => ArrayType(StringType, containsNull = false),
+      args = withInt),
+    // the pair kernels pass elements through, so the output's containsNull
+    // follows the input's: declaring null-free elements over a nullable
+    // input would let codegen elide null checks downstream and NPE
+    kernel("word_pairs", "WordPairs.pairs", Strings)(
+      c => ArrayType(StringType, elementsMayBeNull(c(0)))),
+    kernel("bpe_merge", "BpeMerge.merge", Strings, StringType, StringType)(
+      c => ArrayType(StringType, elementsMayBeNull(c(0))),
+      args = e => Seq(e(0), stringParam(e(1)), stringParam(e(2)))),
+    kernel("lumberjack_encode", "LumberjackCodec.encode", Strings)(_ => BinaryType),
+    kernel("lumberjack_decode", "LumberjackCodec.decode", BinaryType)(
+      _ => ArrayType(StructType(Seq(
+        StructField("seq", IntegerType, nullable = false),
+        StructField("payload", StringType, nullable = false))), containsNull = false),
+      mayReturnNull = true),
+    kernel("merge_maps", "MergeMaps.merge", StringMap, StringMap)(
+      c => MapType(StringType, StringType, c.exists(_.dataType match {
+        case MapType(_, _, n) => n
+        case _ => true
+      }))),
+    kernel("simhash_band_keys", "SimHashBandKeys.keys", Longs, IntegerType)(
+      _ => Signature, args = withInt),
+    kernel("simhash_probe_keys", "SimHashProbeKeys.keys", Longs, IntegerType)(
+      _ => Signature, args = withInt),
+    kernel("minhash_band_keys", "MinHashBandKeys.keys", Longs, IntegerType)(
+      _ => Signature, args = withInt),
+    kernel("hamming_total", "HammingTotal.dist", Signature, Signature)(_ => IntegerType),
+    kernel("match_count", "MatchCount.count", Signature, Signature)(_ => IntegerType),
+    kernel("json_flat_map", "JsonFlatMap.parse", StringType)(
+      _ => MapType(StringType, StringType, valueContainsNull = true),
+      mayReturnNull = true),
+    kernel("rp_project", "RpProject.project", Floats, IntegerType, LongType)(
+      _ => ArrayType(FloatType, containsNull = false),
+      args = e => Seq(e(0), intParam(e(1)), longParam(e(2))))
   )
+
+  // Declared argument types of the kernel calls. Element nullability is
+  // free except where containsNull = false is declared (see KernelCall).
+  private val Strings = ArrayType(StringType)
+  private val Floats = ArrayType(FloatType)
+  private val Longs = ArrayType(LongType)
+  private val Signature = ArrayType(LongType, containsNull = false)
+  private val StringMap = MapType(StringType, StringType)
+
+  /** `name` as one [[KernelCall]] of `graft.functions.<method>`, whose
+    * arguments have the declared `inputs` types. `args` maps the call's
+    * arguments to the kernel's; `out` gives the result type from those.
+    */
+  private def kernel(name: String, method: String, inputs: DataType*)(
+      out: Seq[Expression] => DataType, mayReturnNull: Boolean = false,
+      args: Seq[Expression] => Seq[Expression] = identity) =
+    name -> ((exprs: Seq[Expression]) => {
+      val children = args(exprs)
+      KernelCall(name, Kernel(s"graft.functions.$method", inputs), children,
+        out(children), mayReturnNull)
+    })
+
+  // Kernel parameters (k, bandBits, seed, the BPE pair) must be foldable;
+  // they are evaluated once here and passed on as literals.
+  private def intParam(e: Expression) = Literal(e.eval().asInstanceOf[Int])
+  private def longParam(e: Expression) = Literal(e.eval() match {
+    case i: Int => i.toLong
+    case l: Long => l
+  })
+  private def stringParam(e: Expression) = Literal(e.eval().toString)
+  private val withInt = (e: Seq[Expression]) => Seq(e(0), intParam(e(1)))
+
+  private def elementsMayBeNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, n) => n
+    case _ => false
+  }
 
   /** Idempotent AND once-per-session: re-registering on every query call
     * spammed "function X replaced a previously registered function" WARNs

@@ -2,20 +2,17 @@ package graft.functions
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `from_json(text, map<string,string>)` as a CODEGEN'D expression.
+/** `from_json(text, map<string,string>)` as a CODEGEN'D kernel: the
+  * `json_flat_map` function, null for malformed input.
   *
   * Spark's own JsonToStructs is CodegenFallback, and whole-stage codegen
   * EXCLUDES any operator containing a fallback expression — so the single
   * from_json inside the parse projection (the `{`-gated JSON format branch,
   * plugins/file.rs:136-151) silently pushed the ENTIRE fused
-  * parse/enrich/route projection out of WholeStageCodegen. This expression
+  * parse/enrich/route projection out of WholeStageCodegen. This kernel
   * restores fusion; the parse itself replicates JacksonParser's
   * StringType-value semantics:
   *
@@ -30,40 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - trailing content after the closing brace is ignored (Spark reads
   *     one root value and stops)
   */
-case class JsonFlatMap(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    MapType(StringType, StringType, valueContainsNull = true)
-
-  // malformed JSON -> null from a non-null input: nullable must be true or
-  // the generated assignment fails to compile and the whole stage falls
-  // back to the interpreter (CLAUDE.md codegen hazard)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"json_flat_map requires a string argument, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    JsonFlatMap.parse(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.freshName("jfm")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.MapData $m =
-        graft.functions.JsonFlatMap.parse($c);
-      if ($m == null) { ${ev.isNull} = true; } else { ${ev.value} = $m; }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): JsonFlatMap =
-    copy(child = newChild)
-
-  override def prettyName: String = "json_flat_map"
-}
-
 object JsonFlatMap {
 
   private val factory = new JsonFactory()

@@ -1,13 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Lumberjack v2 (Elastic Beats) batch codec as Catalyst expressions — the
+/** Lumberjack v2 (Elastic Beats) batch codec, the kernels of the
+  * `lumberjack_decode` / `lumberjack_encode` functions — the
   * batch-decode analogue of the reference's wire decoder
   * (/root/reference/log-ship/src/lumberjack_decoder.rs:33-36,121-148):
   *
@@ -20,71 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * downstream the payloads get the same JSON-object treatment the reference
   * applies (plugins/lumberjack.rs:92-101). A malformed frame decodes to
   * null (the warn+drop error policy, never an exception).
+  *
+  * `encode` is the frame builder (the test-harness half — the reference
+  * ships only the decoder; encoding lives in the Beats client). Sequence
+  * numbers are 1-based in payload order.
   */
-case class LumberjackDecode(child: Expression) extends UnaryExpression {
-
-  // malformed frames decode to null even when the input is non-nullable;
-  // without this the codegen template makes ev.isNull a literal and the
-  // generated assignment fails to compile (whole-stage codegen falls back
-  // to the interpreter for the entire stage)
-  override def nullable: Boolean = true
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("seq", IntegerType, nullable = false),
-      StructField("payload", StringType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"lumberjack_decode requires binary, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    LumberjackCodec.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = ctx.freshName("frame")
-    nullSafeCodeGen(ctx, ev, frame => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $c =
-        graft.functions.LumberjackCodec.decode($frame);
-      if ($c == null) { ${ev.isNull} = true; } else { ${ev.value} = $c; }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LumberjackDecode =
-    copy(child = newChild)
-
-  override def prettyName: String = "lumberjack_decode"
-}
-
-/** Frame builder (the test-harness half — the reference ships only the
-  * decoder; encoding lives in the Beats client). Sequence numbers are
-  * 1-based in payload order.
-  */
-case class LumberjackEncode(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"lumberjack_encode requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    LumberjackCodec.encode(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LumberjackCodec.encode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): LumberjackEncode =
-    copy(child = newChild)
-
-  override def prettyName: String = "lumberjack_encode"
-}
-
 object LumberjackCodec {
 
   private final val Version: Int = '2'

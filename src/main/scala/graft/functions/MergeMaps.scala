@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types.{DataType, MapType, StringType}
 
-/** Merge map `right` into map `left`, right winning on key collision — the
+/** The `merge_maps` kernel: merge map `right` into map `left`, right
+  * winning on key collision — the
   * reference's serde_json insert-overwrite (log-ship/src/plugins/syslog.rs:70-94),
   * executed 2-3 times per syslog row (SD merge + JSON-body merge).
   *
@@ -14,59 +15,12 @@ import org.apache.spark.sql.types.{DataType, MapType, StringType}
   * upper)` composition: `map_filter` is a higher-order function and therefore
   * CodegenFallback, so that subtree ran INTERPRETED inside the engine's
   * hottest projection, re-evaluating `upper` per lower key (O(k²) with two
-  * intermediate map allocations). This expression is whole-stage-codegen'd
+  * intermediate map allocations). This kernel is whole-stage-codegen'd
   * and builds the result in one allocation.
   *
   * Key order matches the composition it replaces (surviving left keys in
   * order, then all right keys), so oracle hashes are unchanged.
   */
-case class MergeMaps(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = {
-    val vNull = Seq(left, right).exists {
-      _.dataType match {
-        case MapType(_, _, n) => n
-        case _ => true
-      }
-    }
-    MapType(StringType, StringType, valueContainsNull = vNull)
-  }
-
-  // null only when an input is null (BinaryExpression's default null-safe
-  // eval/codegen handles that), so the inherited children-based nullable
-  // is correct.
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    // NullType keys/values admit the untyped empty `map()` literal (SQL
-    // map() is map<void,void>); a valid map can't hold null KEYS so a
-    // NullType-keyed side is necessarily empty and never dereferenced
-    def strOrVoid(dt: DataType): Boolean =
-      dt == StringType || dt == org.apache.spark.sql.types.NullType
-    val ok = Seq(left, right).forall {
-      _.dataType match {
-        case MapType(k, v, _) => strOrVoid(k) && strOrVoid(v)
-        case _ => false
-      }
-    }
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "merge_maps requires two map<string,string> arguments")
-  }
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    MergeMaps.merge(l.asInstanceOf[MapData], r.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.MergeMaps.merge($l, $r)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MergeMaps =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "merge_maps"
-}
-
 object MergeMaps {
 
   /** One-pass merge; small-map (≤ ~16 key) nested scan beats building a

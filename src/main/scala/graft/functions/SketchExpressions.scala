@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** MinHash signature of a shingle set: for each of `k` seeded hash
   * functions, the minimum hash over the distinct shingles. Jaccard(A,B) is
@@ -15,28 +11,6 @@ import org.apache.spark.sql.types._
   * One pass over the shingle array per row, all k mins updated in place —
   * a native expression instead of k array-transform steps.
   */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.sig(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSig.sig($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig"
-}
-
 object MinHashSig {
   /** Each shingle's bytes are hashed ONCE; the k per-position values are
     * derived from that base hash with a splitmix64 mix per position
@@ -75,28 +49,6 @@ object MinHashSig {
   * Spark's `split` so the oracle-mirrored semantics are untouched.
   * Under n tokens -> empty array (matching the `when(size >= n)` guard).
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingles.shingles(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordShingles.shingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-
-  override def prettyName: String = "word_shingles"
-}
-
 object WordShingles {
   private val Space = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
 
@@ -127,28 +79,6 @@ object WordShingles {
   * nSigs — the multi-signature LSH source for near-dup banding (16-bit bands
   * sliced from the concatenated signatures).
   */
-case class SimHashMulti(child: Expression, nSigs: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash_multi requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashMulti.sigs(input.asInstanceOf[ArrayData], nSigs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashMulti.sigs($c, $nSigs)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashMulti =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash_multi"
-}
-
 object SimHashMulti {
   def sigs(tokens: ArrayData, nSigs: Int): ArrayData = {
     val n = tokens.numElements()
@@ -247,60 +177,12 @@ private[functions] final class SimHashVotes(nSigs: Int, maxVoters: Int) {
   }
 }
 
-/** 64-bit SimHash over a token array: each token's 64-bit hash votes +1/-1
-  * per bit position; the sign of each tally forms the fingerprint. Near-dup
-  * detection = Hamming distance on the resulting long (bit_count(a XOR b)).
-  */
-case class SimHash64(child: Expression, seed: Long = 0L) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires array<string>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.simhash(input.asInstanceOf[ArrayData], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash64.simhash($c, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
-}
-
 /** Random-hyperplane (signed random projection) signature of a float
   * vector: bit p = sign(sum_d vec[d] * u(seed,p,d)) with u a deterministic
   * Rademacher (+1/-1) sequence derived from splitmix64 — the LSH bucketing
   * primitive for cosine similarity search (two vectors with high cosine get
   * equal signatures with high probability). nBits <= 64, packed in a long.
   */
-case class RpSign(child: Expression, nBits: Int, seed: Long) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"rp_sign requires array<float>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    RpSign.sign(input.asInstanceOf[ArrayData], nBits, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RpSign.sign($c, $nBits, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): RpSign =
-    copy(child = newChild)
-
-  override def prettyName: String = "rp_sign"
-}
-
 object RpSign {
   def mixPublic(z: Long): Long = mix(z)
 
@@ -338,28 +220,6 @@ object RpSign {
   * LSH unrecallable; projection+rerank trades a tunable candidate depth for
   * a ~dims/outDims flop and IO reduction instead.
   */
-case class RpProject(child: Expression, outDims: Int, seed: Long) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"rp_project requires array<float>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    RpProject.project(input.asInstanceOf[ArrayData], outDims, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RpProject.project($c, $outDims, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): RpProject =
-    copy(child = newChild)
-
-  override def prettyName: String = "rp_project"
-}
-
 object RpProject {
   def project(vec: ArrayData, outDims: Int, seed: Long): ArrayData = {
     val n = vec.numElements()
@@ -381,6 +241,10 @@ object RpProject {
   }
 }
 
+/** 64-bit SimHash over a token array: each token's 64-bit hash votes +1/-1
+  * per bit position; the sign of each tally forms the fingerprint. Near-dup
+  * detection = Hamming distance on the resulting long (bit_count(a XOR b)).
+  */
 object SimHash64 {
   def simhash(tokens: ArrayData, seed: Long): Long = {
     val n = tokens.numElements()
@@ -406,29 +270,6 @@ object SimHash64 {
   * out of whole-stage codegen; the encoded single-long key also replaces a
   * two-column (band, key) join key.
   */
-case class SimHashBandKeys(child: Expression, bandBits: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash_band_keys requires array<long>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashBandKeys.keys(input.asInstanceOf[ArrayData], bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashBandKeys.keys($c, $bandBits)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashBandKeys =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash_band_keys"
-}
-
 object SimHashBandKeys {
   def keys(sigs: ArrayData, bandBits: Int): ArrayData = {
     val perSig = 64 / bandBits
@@ -456,29 +297,6 @@ object SimHashBandKeys {
   * of exact keys against probe keys catches every pair whose band keys
   * differ in at most one bit.
   */
-case class SimHashProbeKeys(child: Expression, bandBits: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash_probe_keys requires array<long>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashProbeKeys.keys(input.asInstanceOf[ArrayData], bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashProbeKeys.keys($c, $bandBits)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashProbeKeys =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash_probe_keys"
-}
-
 object SimHashProbeKeys {
   def keys(sigs: ArrayData, bandBits: Int): ArrayData = {
     val perSig = 64 / bandBits
@@ -518,29 +336,6 @@ object SimHashProbeKeys {
   * candidate is exact-verified downstream, so the result set is unchanged
   * while the LSH join runs on a primitive key.
   */
-case class MinHashBandKeys(child: Expression, bands: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"minhash_band_keys requires array<long>, got ${dt.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashBandKeys.keys(input.asInstanceOf[ArrayData], bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashBandKeys.keys($c, $bands)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_band_keys"
-}
-
 object MinHashBandKeys {
   def keys(sig: ArrayData, bands: Int): ArrayData = {
     val n = sig.numElements()
@@ -566,38 +361,12 @@ object MinHashBandKeys {
   * codegen'd call; the `aggregate(zip_with(..., bit_count(...)))`
   * composition it replaces is a higher-order-function tree, which is
   * CodegenFallback and excluded its projection from whole-stage codegen.
+  *
+  * `hamming_total` rejects array<long> inputs with containsNull at ANALYSIS
+  * time: getLong would read a null slot as 0 and silently mis-measure.
+  * Inputs are always sketch outputs (minhash_sig / simhash_multi), which
+  * declare containsNull=false.
   */
-case class HammingTotal(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  // containsNull inputs are rejected at ANALYSIS time: getLong would read a
-  // null slot as 0 and silently mis-measure. Inputs are always sketch
-  // outputs (minhash_sig / simhash_multi), which declare containsNull=false.
-  private def ok(dt: DataType) = dt match {
-    case ArrayType(LongType, containsNull) => !containsNull
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "hamming_total requires two array<long containsNull=false> arguments " +
-        "(sketch signatures; null slots have no Hamming semantics)")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HammingTotal.dist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HammingTotal.dist($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): HammingTotal = copy(left = l, right = r)
-
-  override def prettyName: String = "hamming_total"
-}
-
 object HammingTotal {
   def dist(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()
@@ -618,37 +387,11 @@ object HammingTotal {
 /** Count of equal positions between two array<long> signatures — the
   * MinHash prefilter (estimated-Jaccard bar) as one codegen'd call,
   * replacing a `size(filter(zip_with(...)))` CodegenFallback tree.
+  *
+  * Same analysis-time containsNull rejection as [[HammingTotal]]: a null
+  * slot read as 0 could spuriously "match" and inflate the estimated
+  * Jaccard.
   */
-case class MatchCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  // same analysis-time containsNull rejection as HammingTotal: a null slot
-  // read as 0 could spuriously "match" and inflate the estimated Jaccard
-  private def ok(dt: DataType) = dt match {
-    case ArrayType(LongType, containsNull) => !containsNull
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "match_count requires two array<long containsNull=false> arguments " +
-        "(sketch signatures; null slots have no match semantics)")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MatchCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MatchCount.count($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): MatchCount = copy(left = l, right = r)
-
-  override def prettyName: String = "match_count"
-}
-
 object MatchCount {
   def count(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()

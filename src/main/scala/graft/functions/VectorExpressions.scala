@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,34 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * brute-force top-k scan stays inside WholeStageCodegen over 10^2..10^9
   * candidate pairs.
   */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  private def isFloatArray(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires two array<float> arguments, got " +
-        s"${left.dataType.sql}, ${right.dataType.sql}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.CosineSim.cosine($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-
-  override def prettyName: String = "cosine_sim"
-}
-
 object CosineSim {
   /** Sequential left-to-right accumulation (deterministic across runs and
     * partitionings; matches a naive loop oracle).
@@ -146,27 +118,6 @@ object NearestCell {
   * runs/engines/partitions, unlike Spark's Murmur `hash` which is
   * seed-coupled to Spark internals).
   */
-case class Fingerprint64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fingerprint64 requires a string argument, got ${child.dataType.sql}")
-
-  override def nullSafeEval(input: Any): Any =
-    Fingerprint64.hash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Fingerprint64.hash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "fingerprint64"
-}
-
 object Fingerprint64 {
   def hash64(s: UTF8String): Long = {
     val bytes = s.getBytes

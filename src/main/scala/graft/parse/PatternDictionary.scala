@@ -2,7 +2,6 @@ package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
 import graft.functions.GraftFunctions.{logfmt_parse, logfmt_parse_fortinet, regexp_groups}
 
 /** The compiled pattern dictionary — the Spark-native replacement for the
@@ -31,17 +30,14 @@ import graft.functions.GraftFunctions.{logfmt_parse, logfmt_parse_fortinet, rege
   */
 object PatternDictionary {
 
-  /** Open flat JSON object -> map<string,string>. */
-  val FlatMapType: MapType = MapType(StringType, StringType)
-
   val Formats: Seq[String] =
     Seq("fortinet", "syslog", "combined", "error", "kern", "json", "mini")
 
-  // ---- detection predicates ----
+  // ---- detection ----
   // Detection and extraction share ONE regex execution per format: the
   // RegexpGroups expression returns all capture groups in a single match
-  // (null = no match), and codegen CSE dedups the identical subtree between
-  // the `format` tag and the field extraction.
+  // (null = no match), and `parse` hoists each format's match into one
+  // column that both the `format` tag and the field extraction read.
 
   // Each regex is additionally GATED behind a cheap prefix/contains test
   // implied by the pattern itself (e.g. fortinet/syslog lines must start
@@ -58,29 +54,6 @@ object PatternDictionary {
     */
   private def maybe5424(text: Column): Column =
     text.contains(">1 ") && regexp_groups(text, Syslog5424Re).isNotNull
-
-  def isSyslog(text: Column): Column =
-    text.startsWith("<") && (maybe5424(text) ||
-      regexp_groups(text, SyslogRe).isNotNull)
-
-  def isCombined(text: Column): Column =
-    text.contains("] \"") && regexp_groups(text, CombinedRe).isNotNull
-
-  def isError(text: Column): Column =
-    text.startsWith("[") && regexp_groups(text, ErrorRe).isNotNull
-
-  def isKern(text: Column): Column =
-    text.contains(" kernel: [") && regexp_groups(text, KernRe).isNotNull
-
-  // json_flat_map, not from_json: JsonToStructs is CodegenFallback and ONE
-  // fallback expression excludes the whole fused parse projection from
-  // WholeStageCodegen (measured: the parse stage ran as an un-fused
-  // Project until this was replaced)
-  def isJson(text: Column): Column =
-    text.startsWith("{") &&
-      graft.functions.GraftFunctions.json_flat_map(text).isNotNull
-
-  def isMini(text: Column): Column = regexp_groups(text, MiniRe).isNotNull
 
   // ---- regexes (shared by detect + extract) ----
 
@@ -114,8 +87,8 @@ object PatternDictionary {
   // Guarded casts use try_* so rows that matched the cheap regex but carry
   // garbage in a group degrade to null instead of throwing under ANSI mode.
   //
-  // EVALUATION DISCIPLINE (the engine's hottest code): every extractor has
-  // a *G form taking the regexp_groups ARRAY column, and `parse` hoists
+  // EVALUATION DISCIPLINE (the engine's hottest code): every extractor (the
+  // *G names) takes the regexp_groups ARRAY column, and `parse` hoists
   // each format's (gated) regex into ONE intermediate projection column
   // that the format tag and all field extractions then read. Spark's
   // codegen subexpression elimination does NOT look inside CASE WHEN
@@ -126,12 +99,9 @@ object PatternDictionary {
   // non-trivial and multiply referenced, and both projections fuse into
   // the same WholeStageCodegen stage.
   //
-  // g(gs, i) is 1-based like regexp_extract; unparticipating optional
+  // ga(gs, i) is 1-based like regexp_extract; unparticipating optional
   // groups are null (Java regex), not "" (a fidelity improvement over
   // regexp_extract, matching Python's m.group(i) in the reference scripts).
-
-  private def g(text: Column, re: String, i: Int): Column =
-    get(regexp_groups(text, re), lit(i - 1))
 
   /** 1-based group read off a hoisted regexp_groups array column. */
   private def ga(gs: Column, i: Int): Column = get(gs, lit(i - 1))
@@ -255,9 +225,6 @@ object PatternDictionary {
     withMessageBody(base, ga(gs, 6))
   }
 
-  def syslog3164Map(text: Column, defaultYear: Column, runTsMillis: Long): Column =
-    syslog3164MapG(regexp_groups(text, SyslogRe), defaultYear, runTsMillis)
-
   private def nilToNull(c: Column): Column = when(c =!= "-", c)
 
   /** RFC5424 event map: header (nil-aware) + msg_id + structured-data
@@ -298,9 +265,6 @@ object PatternDictionary {
     withMessageBody(withSd, coalesce(ga(gs, 8), lit("")))
   }
 
-  def syslog5424Map(text: Column, runTsMillis: Long): Column =
-    syslog5424MapG(regexp_groups(text, Syslog5424Re), runTsMillis)
-
   /** The loose fallback event ({t: run clock, +message: line}). */
   private def looseMap(text: Column, runTsMillis: Long): Column =
     map(lit("t"), lit(runTsMillis).cast("string"), lit("+message"), text)
@@ -339,9 +303,6 @@ object PatternDictionary {
     )
   }
 
-  def combinedCols(text: Column): Seq[(String, Column)] =
-    combinedColsG(regexp_groups(text, CombinedRe))
-
   def errorColsG(gs: Column): Seq[(String, Column)] = Seq(
     // day-of-week is redundant for parsing and Spark's formatter rejects a
     // parse-side EEE; strip it (dateutil in web_servers.py:68 ignores it too)
@@ -355,9 +316,6 @@ object PatternDictionary {
     "message" -> ga(gs, 6)
   )
 
-  def errorCols(text: Column): Seq[(String, Column)] =
-    errorColsG(regexp_groups(text, ErrorRe))
-
   def kernColsG(gs: Column, defaultYear: Column): Seq[(String, Column)] = Seq(
     "t" -> rfc3164Millis(ga(gs, 1), defaultYear),
     "since_start_sec" -> try_cast_long(ga(gs, 3)),
@@ -365,18 +323,12 @@ object PatternDictionary {
     "message" -> trim(ga(gs, 5))
   )
 
-  def kernCols(text: Column, defaultYear: Column): Seq[(String, Column)] =
-    kernColsG(regexp_groups(text, KernRe), defaultYear)
-
   def miniColsG(gs: Column): Seq[(String, Column)] = Seq(
     "method" -> ga(gs, 1),
     "path" -> ga(gs, 2),
     // status stays a string (test_input1.py:11 returns it unconverted)
     "status" -> ga(gs, 3)
   )
-
-  def miniCols(text: Column): Seq[(String, Column)] =
-    miniColsG(regexp_groups(text, MiniRe))
 
   private def try_cast_long(c: Column): Column = c.try_cast("long")
 
@@ -462,6 +414,10 @@ object PatternDictionary {
         "_gcomb" -> when(text.contains("] \""), regexp_groups(text, CombinedRe)),
         "_gerr" -> when(text.startsWith("["), regexp_groups(text, ErrorRe)),
         "_gkern" -> when(text.contains(" kernel: ["), regexp_groups(text, KernRe)),
+        // json_flat_map, not from_json: JsonToStructs is CodegenFallback
+        // and ONE fallback expression excludes the whole fused parse
+        // projection from WholeStageCodegen (measured: the parse stage ran
+        // as an un-fused Project until this was replaced)
         "_gjson" -> when(text.startsWith("{"),
           graft.functions.GraftFunctions.json_flat_map(text)),
         "_gfd" -> when(isf, regexp_groups(text, FortinetDateRe)),

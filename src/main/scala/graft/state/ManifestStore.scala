@@ -25,14 +25,10 @@ final class ManifestStore(spark: SparkSession, path: String,
 
   def read(): DataFrame = format.readSnapshot(spark, path, schema)
 
-  /** Buckets already durably committed for a sink. The manifest is tiny
+  /** All durably committed (sink, bucket) pairs. The manifest is tiny
     * (O(sinks × buckets) rows), so collecting to the driver is safe at any
     * data scale — it never grows with row count.
     */
-  def committedBuckets(sink: String): Set[Int] =
-    committedPairs().collect { case (s, b) if s == sink => b }
-
-  /** All committed (sink, bucket) pairs. */
   def committedPairs(): Set[(String, Int)] =
     if (!format.exists(spark, path)) Set.empty
     else read().select("sink", "bucket")

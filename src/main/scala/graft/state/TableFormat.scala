@@ -73,6 +73,38 @@ object TableFormat {
   }
 }
 
+/** A file-backed table: one directory per table in the Spark data source
+  * `source`, dynamic partition overwrite.
+  */
+class FileTableFormat(source: String) extends TableFormat {
+
+  override def readSnapshot(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
+    if (exists(spark, path)) spark.read.schema(schemaDdl).format(source).load(path)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
+
+  override def readSnapshot(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(source).load(path)
+
+  override def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  override def append(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Append).format(source).save(path)
+
+  override def overwritePartitions(df: DataFrame, path: String,
+      partitionCols: Seq[String]): Unit = {
+    val w = df.write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+      .format(source).save(path)
+  }
+}
+
 /** NDJSON (json-lines) binding of the same seam — the interop format every
   * reference sink emits (file.rs:859-871, stdio.rs:120-124,
   * tcp_socket.rs:62-70: one JSON object per line). `Pipeline.run(spark,
@@ -83,61 +115,7 @@ object TableFormat {
   * is lost (text format) — parquet/Iceberg stays the default for anything
   * scanned again at scale; NDJSON is for interop boundaries.
   */
-object NdjsonFormat extends TableFormat {
-
-  override def readSnapshot(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
-    if (exists(spark, path)) spark.read.schema(schemaDdl).json(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-
-  override def readSnapshot(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
-  override def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  override def append(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).json(path)
-
-  override def overwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val w = df.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .json(path)
-  }
-}
+object NdjsonFormat extends FileTableFormat("json")
 
 /** Parquet binding: directory-per-table, dynamic partition overwrite. */
-object ParquetFormat extends TableFormat {
-
-  override def readSnapshot(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
-    if (exists(spark, path)) spark.read.schema(schemaDdl).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-
-  override def readSnapshot(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  override def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  override def append(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
-  override def overwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val w = df.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
-  }
-}
+object ParquetFormat extends FileTableFormat("parquet")

@@ -92,10 +92,8 @@ object Soak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/dev/shm"), "graft_soak").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))))
+    // under the context's scratch root: deleted when spark.stop() runs
+    val root = graft.state.Scratch.dir("soak")
     val soakDir = s"$root/data"
     System.err.println(s"[soak] staging 10x corpus under $soakDir")
     TranscriptGen.events(spark, nEvents).write.parquet(s"$soakDir/events.parquet")
