@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans at sf0.001 on a local[4] session, so
-  * plans are comparable across changes.
+  * plans are comparable across changes. Paths under the context's scratch
+  * root, a new random dir per run, print as `<scratch>/...`, so two runs
+  * write the same text.
   *
   * With no arguments it regenerates PLANS.md, the optimizer evidence:
   * parquet filter pushdown + column pruning, broadcast joins, whole-stage
@@ -27,6 +29,7 @@ object PlanDump {
     def plan(name: String): String =
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
+        .replace(graft.state.Scratch.root, "<scratch>")
 
     if (args.isEmpty) writePlansMd(plan)
     else {

@@ -231,30 +231,17 @@ object TrainingOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Drop the session-scoped shingle cache (ONE MEMORY_AND_DISK entry
-    * shared by the dedup/decontamination queries). Verify/Bench call this
-    * after the query suite so a long-lived session doesn't keep holding the
-    * corpus; uncache matches by logical plan and is a no-op when nothing
-    * was cached.
+  /** Drop every cache entry built on `dir`'s documents: the shingle frame
+    * and everything derived from it (signatures, stop-shingles, pair
+    * frames at any cap) plus the keyword tf frame. One cascading uncache of
+    * the documents scan matches each entry whose plan reads that scan and
+    * leaves other dirs' entries alone. Verify/Bench call this after the
+    * query suite so a long-lived session doesn't keep holding the corpus.
     */
-  def releaseCaches(s: SparkSession, dir: String): Unit = {
-    val dsh = docShingles(s, dir)
-    // Release dedupNgram's caches only if it actually RAN this session
-    // (memo entry present). Rebuilding the plan with a cold memo would run
-    // the emptiness-probe Spark job inside the release path and, when the
-    // cap binds, re-persist the stop-shingle frame just to drop the pair
-    // cache. Pair cache goes first, then the stop-shingle table it reads
-    // (unpersist matches by logical plan, no-op if never cached).
-    if (capBindsMemo.contains((dir, ShingleFreqCap))) {
-      dedupNgram(s, dir, ShingleFreqCap).unpersist()
-      explodedIndex(dsh).groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") > ShingleFreqCap).select("s").unpersist()
-    }
-    capBindsMemo.keys.filter(_._1 == dir).foreach(capBindsMemo.remove)
-    simhashSigs(dsh).unpersist()
-    keywordTf(s, dir).unpersist()
-    dsh.unpersist()
-  }
+  def releaseCaches(s: SparkSession, dir: String): Unit =
+    s.sharedState.cacheManager.uncacheQuery(
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(docs(s, dir)),
+      cascade = true)
 
   /** Per-(doc,term) frequency frame for keyword extraction, persisted once
     * per session (CacheManager dedups the identical plan, releaseCaches
@@ -344,25 +331,23 @@ object TrainingOps {
   private def shingleCounts(dsh: DataFrame): DataFrame =
     dsh.select(col("doc_id"), size(col("sh")).cast("long").as("c"))
 
-  /** Exact-Jaccard verification of candidate (ia, ib) pairs at threshold
-    * num/den via the inverted shingle index (no array materialization on
-    * the pair — counts only).
+  /** Number of shingles each (ia, ib) pair of `pairs` has in common, as
+    * column `name`, counted over the inverted indexes `a` (ia side) and `b`
+    * (ib side) — a join on the pair plus shingle, no array materialization.
+    */
+  private def sharedShingles(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      name: String): DataFrame =
+    pairs
+      .join(a.select(col("doc_id").as("ia"), col("s")), "ia")
+      .join(b.select(col("doc_id").as("ib"), col("s")), Seq("ib", "s"))
+      .groupBy("ia", "ib").agg(count(lit(1)).as(name))
+
+  /** Exact-Jaccard verification of candidate (ia, ib) pairs at J >= 0.9
+    * via the inverted shingle index.
     */
   private def verifiedPairs(sh: DataFrame, counts: DataFrame,
-      candidates: DataFrame, num: Int, den: Int): DataFrame = {
-    val a = sh.select(col("doc_id").as("ia"), col("s"))
-    val b = sh.select(col("doc_id").as("ib"), col("s"))
-    val common = candidates
-      .join(a, "ia").join(b, Seq("ib", "s"))
-      .groupBy("ia", "ib").agg(count(lit(1)).as("common"))
-    common
-      .join(counts.select(col("doc_id").as("ia"), col("c").as("ca")), "ia")
-      .join(counts.select(col("doc_id").as("ib"), col("c").as("cb")), "ib")
-      .withColumn("n_union", col("ca") + col("cb") - col("common"))
-      .filter(col("common") * den >= col("n_union") * num)
-      .select(col("ia"), col("ib"), col("common"), col("n_union"))
-      .orderBy("ia", "ib")
-  }
+      candidates: DataFrame): DataFrame =
+    jaccardThresholdTail(sharedShingles(candidates, sh, sh, "common"), counts)
 
   // ---- IVF-flat similarity index (ann_ivf / ann_ivf_build / ann_ivf_serve) ----
 
@@ -386,24 +371,27 @@ object TrainingOps {
     cand.select(col("nid"), col("nv"),
       GraftFunctions.nearest_cell(col("nv"), slots).as("cell"))
 
+  /** `f` over `df` persisted, unpersisting it however `f` ends: for a
+    * frame several jobs of one call read, whose cache must not outlive it.
+    */
+  private def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally p.unpersist()
+  }
+
   /** Run the deterministic spherical-k-means chain (seed centroids = first
     * `cells` candidates, 2 Lloyd iterations with DECIMAL-sum averaging) and
     * return the dense driver-side centroid table indexed by cell id
     * (O(cells·dim) — manifest-class metadata). Dead cells (all members
     * reassigned away) become empty slots the argmin skips. The chain's
     * three materializing collects each drive one scan of the candidates,
-    * so the candidate frame is persisted FOR THE DURATION OF TRAINING
-    * ONLY (one parquet read + two cached scans instead of three parquet
-    * reads) and released before returning — every invocation trains from
-    * the parquet inputs; the centroid table is the only artifact.
+    * so callers run it on a [[persisted]] candidate frame (one parquet
+    * read + two cached scans instead of three parquet reads) that is
+    * released once they are done — every invocation trains from the
+    * parquet inputs; the centroid table is the only artifact.
     */
-  private def ivfLloyd(cand0: DataFrame, cells: Int): Seq[Seq[Float]] = {
-    val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try ivfLloydBody(cand, cells) finally cand.unpersist()
-  }
-
-  private def ivfLloydBody(cand: DataFrame, cells: Int): Seq[Seq[Float]] = {
-    def centroids0: DataFrame = cand.orderBy("nid").limit(cells)
+  private def ivfLloyd(cand: DataFrame): Seq[Seq[Float]] = {
+    def centroids0: DataFrame = cand.orderBy("nid").limit(IvfCells)
       .select((row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("nid"))) - 1).as("cell"), col("nv").as("cv"))
     def centroidTable(cents: DataFrame): Seq[Seq[Float]] = {
@@ -439,14 +427,14 @@ object TrainingOps {
     * cells (equi-join on cell — scan fraction = probes/cells).
     */
   private def ivfProbeRerank(q: DataFrame, assigned: DataFrame,
-      centsFrame: DataFrame, probes: Int): DataFrame = {
+      centsFrame: DataFrame): DataFrame = {
     val wCell = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cdist"), col("cell"))
     val probedCells = q.crossJoin(broadcast(centsFrame))
       .select(col("qid"), col("qv"), col("cell"),
         (-cosine_sim(col("qv"), col("cv"))).as("cdist"))
       .withColumn("crank", row_number().over(wCell))
-      .filter(col("crank") <= probes)
+      .filter(col("crank") <= IvfProbes)
       .select(col("qid"), col("qv"), col("cell"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
@@ -460,13 +448,12 @@ object TrainingOps {
   }
 
   /** IVF-flat approximate top-5, built and served in one plan (see the
-    * ann_ivf entry comment). `cells` and `probes` are the
-    * scan-fraction/recall knobs, exposed for the SketchSpec recall sweep.
+    * ann_ivf entry comment).
     */
-  def annIvf(s: SparkSession, dir: String, cells: Int, probes: Int): DataFrame = {
+  def annIvf(s: SparkSession, dir: String): DataFrame = {
     val (q, cand) = ivfInputs(s, dir)
-    val slots = ivfLloyd(cand, cells)
-    ivfProbeRerank(q, ivfAssign(cand, slots), ivfCentsFrame(s, slots), probes)
+    val slots = persisted(cand)(ivfLloyd)
+    ivfProbeRerank(q, ivfAssign(cand, slots), ivfCentsFrame(s, slots))
   }
 
   /** On-disk home of the persisted IVF index for a given data dir, in the
@@ -503,46 +490,39 @@ object TrainingOps {
     * window between the two table writes. A complete `centroids` write
     * (its _SUCCESS marker) marks the index valid, same commit-after-data
     * ordering as the pipeline manifest. Returns the centroid table.
+    *
+    * The candidate cache lives through BOTH the Lloyd chain's collects AND
+    * the eager assignments write (unpersisting between them would re-read
+    * the full corpus from parquet for a frame cached moments earlier — at
+    * the 100 TB deployment shape, one avoidable corpus scan per index
+    * build); released before returning.
     */
-  def buildIvfIndex(s: SparkSession, dir: String, cells: Int,
-      fmt: TableFormat = ParquetFormat): DataFrame = {
-    val (_, cand0) = ivfInputs(s, dir)
-    // the candidate cache lives through BOTH the Lloyd chain's collects
-    // AND the eager assignments write (unpersisting between them would
-    // re-read the full corpus from parquet for a frame cached moments
-    // earlier — at the 100 TB deployment shape, one avoidable corpus
-    // scan per index build); released before returning.
-    val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try buildIvfIndexStaged(s, dir, cand, cells, fmt)
-    finally cand.unpersist()
-  }
-
-  private def buildIvfIndexStaged(s: SparkSession, dir: String,
-      cand: DataFrame, cells: Int, fmt: TableFormat): DataFrame = {
-    val slots = ivfLloydBody(cand, cells)
-    val idx = ivfIndexDir(s, dir)
-    val tmp = idx + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-    fmt.overwritePartitions(ivfAssign(cand, slots), s"$tmp/assignments", Seq.empty)
-    fmt.overwritePartitions(ivfCentsFrame(s, slots), s"$tmp/centroids", Seq.empty)
-    val fsPath = new org.apache.hadoop.fs.Path(idx)
-    val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(fsPath, true)
-    // local-FS rename signals failure by RETURNING false, not throwing —
-    // an unchecked miss here would leave serve reading a half-deleted dir
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), fsPath),
-      s"atomic index swap failed: rename $tmp -> $idx")
-    // GC stale fingerprint-keyed siblings for the same data dir: every
-    // corpus regeneration within one context changes the fingerprint and
-    // would otherwise strand the previous index (and any crashed .build-
-    // staging dir of a dead fingerprint) in scratch. Dirs carrying the
-    // LIVE fingerprint are kept: a concurrent build of the same corpus may
-    // own a .build- sibling.
-    val live = fsPath.getName
-    fs.listStatus(fsPath.getParent).foreach { st =>
-      if (!st.getPath.getName.startsWith(live)) fs.delete(st.getPath, true)
+  def buildIvfIndex(s: SparkSession, dir: String): DataFrame =
+    persisted(ivfInputs(s, dir)._2) { cand =>
+      val slots = ivfLloyd(cand)
+      val idx = ivfIndexDir(s, dir)
+      val tmp = idx + ".build-" + java.util.UUID.randomUUID().toString.take(8)
+      ParquetFormat.overwritePartitions(ivfAssign(cand, slots), s"$tmp/assignments", Seq.empty)
+      ParquetFormat.overwritePartitions(ivfCentsFrame(s, slots), s"$tmp/centroids", Seq.empty)
+      val fsPath = new org.apache.hadoop.fs.Path(idx)
+      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.delete(fsPath, true)
+      // local-FS rename signals failure by RETURNING false, not throwing —
+      // an unchecked miss here would leave serve reading a half-deleted dir
+      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), fsPath),
+        s"atomic index swap failed: rename $tmp -> $idx")
+      // GC stale fingerprint-keyed siblings for the same data dir: every
+      // corpus regeneration within one context changes the fingerprint and
+      // would otherwise strand the previous index (and any crashed .build-
+      // staging dir of a dead fingerprint) in scratch. Dirs carrying the
+      // LIVE fingerprint are kept: a concurrent build of the same corpus
+      // may own a .build- sibling.
+      val live = fsPath.getName
+      fs.listStatus(fsPath.getParent).foreach { st =>
+        if (!st.getPath.getName.startsWith(live)) fs.delete(st.getPath, true)
+      }
+      ParquetFormat.readSnapshot(s, s"$idx/centroids")
     }
-    fmt.readSnapshot(s, s"$idx/centroids")
-  }
 
   /** Serve queries from the PERSISTED index: no k-means, no corpus-wide
     * scan — read centroids (tiny, broadcast), probe, and rerank inside the
@@ -550,83 +530,24 @@ object TrainingOps {
     * first if absent for this corpus fingerprint; rows are identical to
     * ann_ivf by construction (pinned by SketchSpec).
     */
-  def annIvfServe(s: SparkSession, dir: String, probes: Int,
-      fmt: TableFormat = ParquetFormat): DataFrame = {
+  def annIvfServe(s: SparkSession, dir: String): DataFrame = {
     val idx = ivfIndexDir(s, dir)
-    if (!fmt.exists(s, s"$idx/centroids/_SUCCESS"))
-      buildIvfIndex(s, dir, IvfCells, fmt)
+    if (!ParquetFormat.exists(s, s"$idx/centroids/_SUCCESS")) buildIvfIndex(s, dir)
     val (q, _) = ivfInputs(s, dir)
-    ivfProbeRerank(q, fmt.readSnapshot(s, s"$idx/assignments"),
-      fmt.readSnapshot(s, s"$idx/centroids"), probes)
+    ivfProbeRerank(q, ParquetFormat.readSnapshot(s, s"$idx/assignments"),
+      ParquetFormat.readSnapshot(s, s"$idx/centroids"))
   }
 
-  /** n-gram Jaccard dedup with the stop-shingle cap. The cap keeps the
-    * inverted-index join linear-ish at scale, but applies ONLY to
-    * candidate/intersection generation — the final Jaccard is made exact
-    * again by adding back each candidate pair's hot-shingle intersections
-    * (an EMPTY join whenever the cap never binds; max df in the testdata
-    * is 25 at sf0.1) and taking per-doc counts from the uncapped arrays,
-    * so the query always agrees with the uncapped oracle (round 1 deflated
-    * the numerator only). The one recall exception stays: a true pair
-    * sharing ONLY hot shingles never becomes a candidate. `cap` is a
-    * parameter so DedupSpec can pin the binding-cap path that the driver
-    * data never exercises.
+  /** n-gram Jaccard dedup with the stop-shingle cap over all pairs
+    * (ia < ib); see [[cappedJaccard]]. `cap` is a parameter so DedupSpec
+    * can pin the binding-cap path that the testdata never exercises.
     */
-  def dedupNgram(s: SparkSession, dir: String, cap: Int): DataFrame = {
-    val dsh = docShingles(s, dir)
-    val sh0 = explodedIndex(dsh)
-    val (capBinds, hotF) = stopShingleGate(s, dir, cap)
-    // when the cap binds, the persisted frame is recovered by CacheManager
-    // plan-dedup (identical logical plan -> same cache entry)
-    lazy val hot = hotF()
-    val capped = if (capBinds) sh0.join(hot, Seq("s"), "left_anti") else sh0
-    // ONE pass: the capped self-join directly yields per-pair
-    // intersection counts (no candidate materialization + re-join)
-    val common0 = capped.select(col("doc_id").as("ia"), col("s"))
-      .join(capped.select(col("doc_id").as("ib"), col("s")), Seq("s"))
-      .filter(col("ia") < col("ib"))
-      .groupBy("ia", "ib").agg(count(lit(1)).as("common0"))
-    val withCommon = if (capBinds)
-      hotCorrected(common0, sh0.join(hot, Seq("s")), identity, identity)
-    else common0.withColumn("common", col("common0"))
-    jaccardThresholdTail(withCommon, shingleCounts(dsh))
+  def dedupNgram(s: SparkSession, dir: String, cap: Int): DataFrame =
+    cappedJaccard(s, dir, cap, lit(true), lit(true), col("ia") < col("ib"))
       // the verified pair set is tiny (dup pairs only) and consumed by
       // BOTH dedup_ngram and dedup_clusters in a suite pass — one cache
       // entry via plan-dedup; released with the shingle cache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  private val capBindsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Boolean]
-
-  /** Stop-shingle gate shared by the n-gram dedup family. The stop-shingle
-    * table is TINY by construction (<= occurrences/cap rows), but deriving
-    * it costs a full groupBy pass over the exploded index — it is persisted
-    * so the pass runs ONCE (the lazy plan re-ran it for the left_anti cap
-    * AND the correction join, the r3 regression), and emptiness is probed
-    * so the whole correction subtree drops out of the plan when the cap
-    * never binds (the common case below ~10^8 docs; DedupSpec pins the
-    * binding-cap branch with a tiny cap). The probe is one aggregation
-    * job, memoized per (dir, cap) so every builder in a session pays it
-    * once — testdata dirs are immutable within a run, which is what makes
-    * the memo sound. Returns (capBinds, () => hot): call the thunk only
-    * when capBinds — CacheManager plan-dedup recovers the one persisted
-    * frame, and releaseCaches drops it by reconstructing the same plan.
-    */
-  private def stopShingleGate(s: SparkSession, dir: String, cap: Int)
-      : (Boolean, () => DataFrame) = {
-    val sh0 = explodedIndex(docShingles(s, dir))
-    def stopShingles() = sh0.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select("s")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capBinds = capBindsMemo.getOrElseUpdate((dir, cap), {
-      val hot = stopShingles()
-      val binds = !hot.isEmpty
-      if (!binds) hot.unpersist()
-      binds
-    })
-    (capBinds, () => stopShingles())
-  }
 
   /** Incremental dedup: near-dup-join a NEW batch of docs (doc_id % 10
     * == 7, the arriving-shard stand-in) against the EXISTING corpus (the
@@ -635,46 +556,76 @@ object TrainingOps {
     * asymmetric equi-join of batch shingles against the corpus-side
     * inverted index (at 100 TB that index is the persisted build artifact;
     * here both sides derive from the shared session shingle cache), so the
-    * work is O(batch x bucket), not O(corpus^2). Shares dedupNgram's
-    * stop-shingle cap + exact-count correction joins, so the result is
-    * EXACT Jaccard at J >= 0.9 with the same documented all-hot recall
-    * exception. Output: (ia=corpus doc, ib=batch doc, common, n_union).
+    * work is O(batch x bucket), not O(corpus^2). Built by the same
+    * [[cappedJaccard]] as dedupNgram, so the result is EXACT Jaccard at
+    * J >= 0.9 with the same documented all-hot recall exception. Output:
+    * (ia=corpus doc, ib=batch doc, common, n_union).
     */
   def dedupIncremental(s: SparkSession, dir: String, cap: Int): DataFrame = {
+    val isBatch = col("doc_id") % 10 === 7
+    cappedJaccard(s, dir, cap, !isBatch, isBatch, lit(true))
+  }
+
+  /** The exact J >= 0.9 pairs of the inverted-index join between the docs
+    * matching `aDocs` (ia side) and those matching `bDocs` (ib side),
+    * keeping joined pairs that satisfy `pair`. The stop-shingle cap keeps
+    * the join linear-ish at scale, but applies ONLY to candidate and
+    * intersection generation — the final Jaccard is made exact again by
+    * adding back each candidate pair's hot-shingle intersections
+    * ([[hotCorrected]]) and taking per-doc counts from the uncapped
+    * arrays, so the result always agrees with the uncapped oracle (round 1
+    * deflated the numerator only). The one recall exception stays: a true
+    * pair sharing ONLY hot shingles never becomes a candidate.
+    */
+  private def cappedJaccard(s: SparkSession, dir: String, cap: Int,
+      aDocs: Column, bDocs: Column, pair: Column): DataFrame = {
     val dsh = docShingles(s, dir)
     val sh0 = explodedIndex(dsh)
-    val isBatch = col("doc_id") % 10 === 7
-    val (capBinds, hotF) = stopShingleGate(s, dir, cap)
-    lazy val hot = hotF()
-    val capped = if (capBinds) sh0.join(hot, Seq("s"), "left_anti") else sh0
-    val common0 = capped.filter(!isBatch).select(col("doc_id").as("ia"), col("s"))
-      .join(capped.filter(isBatch).select(col("doc_id").as("ib"), col("s")),
+    val hot = stopShingles(sh0, cap)
+    val capped = hot.fold(sh0)(sh0.join(_, Seq("s"), "left_anti"))
+    // ONE pass: the capped self-join directly yields per-pair
+    // intersection counts (no candidate materialization + re-join)
+    val common0 = capped.filter(aDocs).select(col("doc_id").as("ia"), col("s"))
+      .join(capped.filter(bDocs).select(col("doc_id").as("ib"), col("s")),
         Seq("s"))
+      .filter(pair)
       .groupBy("ia", "ib").agg(count(lit(1)).as("common0"))
-    val withCommon = if (capBinds)
-      hotCorrected(common0, sh0.join(hot, Seq("s")),
-        _.filter(!isBatch), _.filter(isBatch))
-    else common0.withColumn("common", col("common0"))
+    val withCommon = hot match {
+      case Some(h) => hotCorrected(common0, sh0.join(h, Seq("s")), aDocs, bDocs)
+      case None => common0.withColumn("common", col("common0"))
+    }
     jaccardThresholdTail(withCommon, shingleCounts(dsh))
+  }
+
+  /** The stop-shingle table (shingles in more than `cap` docs of the
+    * exploded index `sh0`), or None when the cap never binds — the common
+    * case below ~10^8 docs, where the whole correction subtree stays out
+    * of the plan. The table is TINY by construction (<= occurrences/cap
+    * rows), but deriving it costs a full groupBy pass over the exploded
+    * index, so it is persisted, empty or not, like the other reused
+    * frames: the pass runs ONCE per session (the lazy plan re-ran it for
+    * the left_anti cap AND the correction join, the r3 regression), and
+    * the emptiness probe on later calls reads the cache entry.
+    */
+  private def stopShingles(sh0: DataFrame, cap: Int): Option[DataFrame] = {
+    val hot = sh0.groupBy("s").agg(count(lit(1)).as("df"))
+      .filter(col("df") > cap).select("s")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (hot.isEmpty) None else Some(hot)
   }
 
   /** Exact-count correction for a capped candidate set: re-count ONLY the
     * already-candidate pairs' hot-shingle intersections and add them back,
     * so the final `common` is exact despite candidate generation dropping
-    * stop-shingles (the r3-regression-class logic, now in ONE place for
-    * both the symmetric and the incremental builders). `aSide`/`bSide`
-    * restrict the hot-shingle frame to each pair side's doc class
-    * (identity for the symmetric self-join).
+    * stop-shingles. `aDocs`/`bDocs` restrict the hot-shingle frame to each
+    * pair side's doc class.
     */
   private def hotCorrected(common0: DataFrame, hotSh: DataFrame,
-      aSide: DataFrame => DataFrame, bSide: DataFrame => DataFrame): DataFrame = {
-    val hotCommon = common0.select("ia", "ib")
-      .join(aSide(hotSh).select(col("doc_id").as("ia"), col("s")), "ia")
-      .join(bSide(hotSh).select(col("doc_id").as("ib"), col("s")), Seq("ib", "s"))
-      .groupBy("ia", "ib").agg(count(lit(1)).as("hcommon"))
-    common0.join(hotCommon, Seq("ia", "ib"), "left_outer")
+      aDocs: Column, bDocs: Column): DataFrame =
+    common0.join(sharedShingles(common0.select("ia", "ib"),
+        hotSh.filter(aDocs), hotSh.filter(bDocs), "hcommon"),
+        Seq("ia", "ib"), "left_outer")
       .withColumn("common", col("common0") + coalesce(col("hcommon"), lit(0L)))
-  }
 
   /** Shared J >= 0.9 integer-threshold tail: attach per-doc shingle counts,
     * derive the union size, filter, and emit the canonical sorted pair
@@ -719,8 +670,7 @@ object TrainingOps {
   private[graft] def connectedComponents(pairs: DataFrame,
       maxIters: Int = 25): DataFrame = {
     val fwd = pairs.select(col("ia").as("src"), col("ib").as("dst"))
-    val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bothWays = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
     // convergence check: min-label propagation is monotone NON-INCREASING
     // per vertex over a fixed vertex set, so the label sum (DECIMAL — a
     // long sum overflows at ~1e9 docs x 1e9 ids) strictly decreases until
@@ -731,7 +681,7 @@ object TrainingOps {
       val d = df.agg(sum(col("l").cast("decimal(38,0)"))).first.getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    try {
+    persisted(bothWays) { edges =>
       // round 1 fused into the vertex-set construction: label = min(self,
       // min direct neighbor) in ONE aggregation, no join — components that
       // are single pairs or min-centered stars (the overwhelming near-dup
@@ -759,7 +709,7 @@ object TrainingOps {
       }
       log.info(s"[cc] fixpoint after $iters rounds")
       labels
-    } finally edges.unpersist()
+    }
   }
 
   /** Duplicate clusters + canonical keep decision from the verified
@@ -1186,7 +1136,7 @@ object TrainingOps {
         .filter(GraftFunctions.match_count(col("sa"), col("sb"))
           >= MinHashPrefilterMin)
         .select("ia", "ib")
-      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered, 9, 10)
+      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered)
     },
     "dedup_simhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
@@ -1209,7 +1159,7 @@ object TrainingOps {
         .filter(GraftFunctions.hamming_total(col("sa"), col("sb"))
           <= SimHashHammingMax)
         .select("ia", "ib").distinct()
-      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered, 9, 10)
+      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered)
     },
     "dedup_embed" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
@@ -1293,7 +1243,7 @@ object TrainingOps {
     // Recall@5 >= 0.9 vs ann_brute is pinned by SketchSpec at sf0.1. The
     // centroid table is O(cells·dim) metadata — the only driver-side data,
     // same class as the manifest.
-    "ann_ivf" -> { (s, dir) => annIvf(s, dir, IvfCells, IvfProbes) },
+    "ann_ivf" -> { (s, dir) => annIvf(s, dir) },
     // the persisted-index pair: build writes the centroid + bucketed
     // assignment tables to the index dir (the deployment artifact a
     // similarity service ships); serve answers queries from the artifact
@@ -1305,11 +1255,11 @@ object TrainingOps {
     // column (CORRECTNESS_r03); SketchSpec pins the same values in vector
     // form. Serve returns exactly ann_ivf's rows (SketchSpec-pinned).
     "ann_ivf_build" -> { (s, dir) =>
-      buildIvfIndex(s, dir, IvfCells)
+      buildIvfIndex(s, dir)
         .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "val")))
         .orderBy("cell", "pos")
     },
-    "ann_ivf_serve" -> { (s, dir) => annIvfServe(s, dir, IvfProbes) },
+    "ann_ivf_serve" -> { (s, dir) => annIvfServe(s, dir) },
     "ann_rp_rerank" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val e = embs(s, dir)

@@ -12,11 +12,12 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
 
 /** End-to-end parse → enrich → route → aggregate job (the reference's route
   * pipeline, log-ship/src/main.rs:155-211, re-expressed as one declarative
-  * plan per sink):
+  * plan):
   *
   *   scan → dictionary parse (WholeStageCodegen) → broadcast enrich →
-  *   sink tag projection → per-sink filtered write (dynamic partition
-  *   overwrite, manifest-gated) → per-sink aggregates + lineage metrics.
+  *   sink tag projection → one write partitioned by (sink, bucket)
+  *   (dynamic partition overwrite, manifest-gated) → per-sink aggregates
+  *   + lineage metrics from one read-back of the written table.
   *
   * Scale design (100 TB / 1000 executors):
   *   - the fact side is never shuffled for the enrich join (broadcast);
@@ -28,9 +29,9 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
   *     values, which caps the reducers that receive rows whatever
   *     [[derivedShufflePartitions]] returns (640 for 5 sinks at
   *     app.Main's 32 buckets);
-  *   - parse-once fan-out: the routed frame is persisted and each sink
-  *     filters it (the reference reuses one configured input across routes,
-  *     site/docs/config.md:355-358);
+  *   - parse-once fan-out: ONE write job partitions the routed frame by
+  *     sink, with nothing persisted (the reference reuses one configured
+  *     input across routes, site/docs/config.md:355-358);
   *   - resume skips committed (sink, bucket) pairs via the manifest, so a
   *     rerun after failure reprocesses only missing buckets.
   */
@@ -130,8 +131,8 @@ object Pipeline {
 
     // ONE read-back pass over the durable table yields BOTH the
     // per-(sink,bucket) lineage the manifest commits AND the per-(sink,
-    // format) delivery aggregates (the reference's counters), with the
-    // Observation metrics riding the same action. The finest grouping is
+    // format) delivery aggregates (the reference's counters) and the
+    // observed row counters. The finest grouping is
     // (sink, bucket, format) — manifest-class metadata (sinks x buckets x
     // formats rows) — and per-(sink,format) distinct-conversation counts
     // are EXACT sums of per-bucket distincts because bucket is a pure
@@ -141,10 +142,7 @@ object Pipeline {
     // 100 TB, and a second fixed job cost in the post-write tail that
     // throttled N->4N wall-clock scaling (the tail does not shrink with
     // the write).
-    val obs = org.apache.spark.sql.Observation(s"agg-${cfg.runId}")
     val cube = written
-      .observe(obs, count(lit(1)).as("rows_total"),
-        sum(when(col("format") === "malformed", 1L).otherwise(0L)).as("rows_malformed"))
       .groupBy("sink", "bucket", "format")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("conv_id")).as("n_conv"),
@@ -153,7 +151,8 @@ object Pipeline {
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-    val observed = obs.get
+    val observedTotal = cube.map(_._4).sum
+    val observedMalformed = cube.filter(_._3 == "malformed").map(_._4).sum
 
     val allPairs = cube.groupBy(t => (t._1, t._2)).view
       .mapValues(_.map(_._4).sum).toSeq
@@ -209,8 +208,7 @@ object Pipeline {
         format.append(
           reports.map(r => (cfg.runId, r.sink, r.rows, r.buckets, r.skippedBuckets,
               r.wallMs, if (r.wallMs == 0) 0.0 else r.rows * 1000.0 / r.wallMs,
-              observed.getOrElse("rows_total", 0L).asInstanceOf[Long],
-              observed.getOrElse("rows_malformed", 0L).asInstanceOf[Long]))
+              observedTotal, observedMalformed))
             .toDF("run_id", "sink", "rows", "buckets", "skipped_buckets",
               "wall_ms", "rows_per_sec", "observed_total", "observed_malformed")
             .coalesce(1),

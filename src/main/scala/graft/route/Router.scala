@@ -7,8 +7,8 @@ import graft.model.PipelineConfig
 /** Tag-based fan-out router — the Spark form of the reference's
   * one-input-many-routes wiring (log-ship/src/main.rs:162-167,
   * config_file.rs:144-153): a single projection computes the `sink` tag,
-  * then each sink consumes a filtered view of the SAME parsed DataFrame
-  * (parse once; reuse via persist at the pipeline level).
+  * and the pipeline writes the SAME parsed DataFrame once, partitioned by
+  * that tag (parse once, nothing persisted).
   *
   * Malformed rows route to the quarantine sink and are counted, never
   * silently dropped (warn+drop+advance policy, file.rs:142-147 lifted to

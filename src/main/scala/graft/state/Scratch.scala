@@ -13,9 +13,11 @@ import org.apache.spark.SparkFiles
   */
 object Scratch {
 
+  /** This context's scratch root, the prefix of every [[dir]]. */
+  def root: String = new File(SparkFiles.getRootDirectory(), "graft").getPath
+
   /** `name` under this context's scratch root (its writer makes it). */
-  def dir(name: String): String =
-    new File(SparkFiles.getRootDirectory(), s"graft/$name").getPath
+  def dir(name: String): String = new File(root, name).getPath
 
   /** A data dir as a file- and table-name fragment. */
   def tag(dataDir: String): String = dataDir.replaceAll("[^A-Za-z0-9]", "_")

@@ -296,6 +296,22 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("releaseCaches drops every frame the dedup queries cached, at any cap") {
+    import graft.ops.TrainingOps
+    val dir = sf("0.001")
+    TrainingOps.releaseCaches(spark, dir)
+    val before = cacheEntries
+    Seq("dedup_ngram", "dedup_incremental", "dedup_clusters", "dedup_simhash",
+      "text_keywords", "text_decontaminate")
+      .foreach(q => TrainingOps.queries(q)(spark, dir).count())
+    // cap = 5 binds at sf0.001: a stop-shingle table and a second pair frame
+    TrainingOps.dedupNgram(spark, dir, 5).count()
+    TrainingOps.dedupIncremental(spark, dir, 5).count()
+    assert(cacheEntries != before, "the dedup runs cache nothing")
+    TrainingOps.releaseCaches(spark, dir)
+    assert(cacheEntries === before)
+  }
+
   test("releaseCaches drops only its own directory's caches") {
     // run A, run B, release A, release B: B's release must still find
     // and drop B's persisted n-gram pair frame

@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
+import graft.enrich.Enrich
 import graft.model.PipelineConfig
 import graft.pipeline.{Pipeline, TranscriptGen, Transcripts}
+import graft.route.Router
 import graft.state.ManifestStore
 
 /** End-to-end pipeline behavior: per-sink counts vs a scalar oracle,
@@ -102,5 +104,36 @@ class PipelineSpec extends SparkSpec {
     // rows written = expected minus rows living in pre-committed buckets
     val expectedSystem = expectedSinks(N)("system")
     assert(sys.rows < expectedSystem && sys.rows > 0)
+  }
+
+  test("metrics: observed counters count every row under data/") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+    def observed(root: String): (Long, Long) = {
+      val rows = spark.read.parquet(s"$root/_metrics")
+        .select("observed_total", "observed_malformed").distinct().collect()
+      assert(rows.length === 1, "one pair of counters per run")
+      (rows(0).getLong(0), rows(0).getLong(1))
+    }
+
+    // fresh: the input rows, and the malformed rows the router tags
+    Pipeline.run(spark, cfg)
+    val routedMalformed = Router.sinkAggregates(Pipeline.transform(
+        spark.read.parquet(in), cfg, Enrich.defaultLookup(spark)))
+      .filter(col("format") === "malformed").agg(sum("n")).first().getLong(0)
+    assert(routedMalformed > 0, "fixture should contain malformed rows")
+    assert(observed(out) === ((N, routedMalformed)))
+
+    // resumed over a manifest that already holds four 'system' buckets:
+    // those are never written, and the counters follow what data/ holds
+    val out2 = out + "_resumed"
+    new ManifestStore(spark, s"$out2/_manifest").commit(cfg.runId,
+      (0 to 3).map(b => ("system", b, 0L)), wallMs = 0L, committedAt = cfg.runTsMillis)
+    Pipeline.run(spark, cfg.copy(outputRoot = out2))
+    val data = spark.read.parquet(s"$out2/data")
+    assert(data.count() < N)
+    assert(observed(out2) ===
+      ((data.count(), data.filter(col("format") === "malformed").count())))
   }
 }
