@@ -10,14 +10,6 @@ import graft.model.LookupRow
   */
 object Enrich {
 
-  /** insert_field on a typed top-level column.
-    * overwrite=false keeps an existing non-null value (insert_field.rs:84-86:
-    * only insert if the key is absent).
-    */
-  def insertField(df: DataFrame, field: String, value: Column, overwrite: Boolean): DataFrame =
-    if (overwrite || !df.columns.contains(field)) df.withColumn(field, value)
-    else df.withColumn(field, coalesce(col(field), value))
-
   /** insert_field into the open-schema `fields` map (the reference's JSON
     * object). The overwrite branch is merge_maps (native, codegen'd —
     * upper side wins, which IS insert-overwrite); the previous map_filter
@@ -55,8 +47,10 @@ object Enrich {
     * back in; on key collision with overwrite=false the incoming key is
     * renamed `"<field>.<key>"` (logfmt.rs:86-90), and a renamed key that
     * collides with a pre-existing `"<field>.<key>"` entry overwrites it
-    * (serde_json insert). A non-string/absent field leaves the event
-    * unchanged.
+    * (serde_json insert). An absent or null field leaves the event
+    * unchanged. One `logfmt_merge_field` kernel call, so the projection
+    * stays in whole-stage codegen (the map_filter/transform_keys
+    * composition it replaced was CodegenFallback).
     *
     * Known deviation: duplicate keys INSIDE the field value are deduped
     * last-wins by the map-typed parse before merging, whereas the
@@ -65,15 +59,8 @@ object Enrich {
     * require an ordered pair list, and no shipped reference config feeds
     * duplicate-keyed logfmt through this transform.
     */
-  def logfmtMergeField(fields: Column, field: String, overwrite: Boolean): Column = {
-    import graft.functions.GraftFunctions.{logfmt_parse, merge_maps_field}
-    // pop + rename-on-collision + merge + null-parsed-passthrough all live
-    // in ONE native expression: the map_filter/transform_keys composition
-    // this replaces was CodegenFallback and ran any route putting
-    // T4-as-transform on the hot path interpreted (round-2 hazard class)
-    merge_maps_field(fields,
-      logfmt_parse(try_element_at(fields, lit(field))), field, overwrite)
-  }
+  def logfmtMergeField(fields: Column, field: String, overwrite: Boolean): Column =
+    graft.functions.GraftFunctions.logfmt_merge_field(fields, field, overwrite)
 
   /** The default role/tool metadata lookup (FIXTURES.md §3). Tiny: always a
     * broadcast-hash join, no shuffle of the fact side.

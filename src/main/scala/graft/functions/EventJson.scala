@@ -1,55 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.MapData
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Serialize an open-schema event map to the reference's NDJSON line format
-  * (log-ship/src/plugins/file.rs:859-871 — `event.to_string()` + '\n'):
-  * serde_json with the default BTreeMap event map, i.e. COMPACT output with
-  * keys in ascending byte order, string values JSON-escaped exactly like
-  * serde_json (`"` `\` and C0 controls only; \b \t \n \f \r shorthands,
-  * \u00xx lowercase otherwise). Keys listed in `numericKeys` whose value is
-  * a canonical integer are emitted as bare JSON numbers — the reference
-  * inserts `t` (and numeric proc_id) as i64, everything else as strings
-  * (fortinet.rs:90,105; syslog.rs:55-64).
-  *
-  * Codegen'd (no CodegenFallback): output serialization rides the same
-  * WholeStageCodegen stage as the sink projection.
+/** The `event_json` kernel: serialize an open-schema event map to the
+  * reference's NDJSON line format (log-ship/src/plugins/file.rs:859-871 —
+  * `event.to_string()` + '\n'): serde_json with the default BTreeMap event
+  * map, i.e. COMPACT output with keys in ascending byte order, string
+  * values JSON-escaped exactly like serde_json (`"` `\` and C0 controls
+  * only; \b \t \n \f \r shorthands, \u00xx lowercase otherwise). A `t`
+  * whose value is a canonical integer is emitted as a bare JSON number: the
+  * reference inserts `t` as i64 and everything else of the map as strings
+  * (fortinet.rs:90,105; syslog.rs:55-64; the numeric proc_id is the
+  * documented string deviation, see PatternDictionary.syslog3164MapG).
   */
-case class EventJson(child: Expression, numericKeys: Seq[String])
-    extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case MapType(StringType, StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      "event_json requires a map<string,string> argument")
-  }
-
-  @transient private lazy val numericU8: Array[UTF8String] =
-    numericKeys.map(UTF8String.fromString).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    EventJson.serialize(input.asInstanceOf[MapData], numericU8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ejNumeric", numericU8,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.EventJson.serialize($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): EventJson =
-    copy(child = newChild)
-
-  override def prettyName: String = "event_json"
-}
-
 object EventJson {
+
+  private val NumericKey = UTF8String.fromString("t")
 
   /** serde_json-compatible string escape into `sb`. */
   private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
@@ -85,7 +52,7 @@ object EventJson {
       (body.length == 1 || body.charAt(0) != '0')
   }
 
-  def serialize(map: MapData, numericKeys: Array[UTF8String]): UTF8String = {
+  def serialize(map: MapData): UTF8String = {
     val n = map.numElements()
     val ka = map.keyArray(); val va = map.valueArray()
     // ascending byte order = Rust String Ord = serde_json BTreeMap order
@@ -106,7 +73,7 @@ object EventJson {
       if (va.isNullAt(i)) sb.append("null")
       else {
         val v = va.getUTF8String(i)
-        if (numericKeys.exists(_.equals(keys(i))) && isCanonicalInt(v))
+        if (keys(i).equals(NumericKey) && isCanonicalInt(v))
           sb.append(v.toString)
         else appendEscaped(sb, v.toString)
       }

@@ -13,21 +13,14 @@ import org.apache.spark.sql.types._
 object GraftFunctions {
 
   private def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "logfmt_parse" -> ((exprs: Seq[Expression]) => LogfmtParse(exprs.head)),
-    // fortinet flavor: drop valueless keys, exclude date/time (stitched
-    // separately into the ts field; fortinet.rs:78-105)
-    "logfmt_parse_fortinet" -> ((exprs: Seq[Expression]) =>
-      LogfmtParse(exprs.head, dropNullValues = true, excludeKeys = Seq("date", "time"))),
-    // RFC5424 structured-data params: k="v" pairs are logfmt-compatible and
-    // dropping valueless keys discards the bare SD-id tokens for free
-    "logfmt_parse_sd" -> ((exprs: Seq[Expression]) =>
-      LogfmtParse(exprs.head, dropNullValues = true)),
+    kernel("logfmt_parse", "LogfmtParse.logfmt", StringType)(_ => StringMap),
+    kernel("logfmt_parse_fortinet", "LogfmtParse.fortinet", StringType)(
+      _ => MapType(StringType, StringType, valueContainsNull = false)),
+    kernel("logfmt_parse_sd", "LogfmtParse.structuredData", StringType)(
+      _ => MapType(StringType, StringType, valueContainsNull = false)),
     "regexp_groups" -> ((exprs: Seq[Expression]) => RegexpGroups(exprs(0),
       exprs(1).eval().toString)),
     "compact_map" -> ((exprs: Seq[Expression]) => CompactMap(exprs)),
-    "merge_maps_field" -> ((exprs: Seq[Expression]) => MergeFieldMaps(exprs(0),
-      exprs(1), exprs(2).eval().toString,
-      exprs(3).eval().asInstanceOf[Boolean])),
     // centroid table arrives as a foldable array<array<float>> literal and
     // is baked into the expression at build time
     "nearest_cell" -> ((exprs: Seq[Expression]) => {
@@ -41,9 +34,6 @@ object GraftFunctions {
       }
       NearestCell(exprs(0), cents)
     }),
-    // numeric-key list arrives as one csv literal
-    "event_json" -> ((exprs: Seq[Expression]) => EventJson(exprs(0),
-      exprs(1).eval().toString.split(',').toSeq.filter(_.nonEmpty))),
     kernel("cosine_sim", "CosineSim.cosine", Floats, Floats)(_ => DoubleType),
     kernel("fingerprint64", "Fingerprint64.hash64", StringType)(_ => LongType),
     kernel("minhash_sig", "MinHashSig.sig", Strings, IntegerType)(
@@ -89,7 +79,11 @@ object GraftFunctions {
       mayReturnNull = true),
     kernel("rp_project", "RpProject.project", Floats, IntegerType, LongType)(
       _ => ArrayType(FloatType, containsNull = false),
-      args = e => Seq(e(0), intParam(e(1)), longParam(e(2))))
+      args = e => Seq(e(0), intParam(e(1)), longParam(e(2)))),
+    kernel("event_json", "EventJson.serialize", StringMap)(_ => StringType),
+    kernel("logfmt_merge_field", "MergeFieldMaps.mergeField",
+      StringMap, StringType, BooleanType)(_ => StringMap,
+      args = e => Seq(e(0), stringParam(e(1)), Literal(e(2).eval().asInstanceOf[Boolean])))
   )
 
   // Declared argument types of the kernel calls. Element nullability is
@@ -113,7 +107,8 @@ object GraftFunctions {
         out(children), mayReturnNull)
     })
 
-  // Kernel parameters (k, bandBits, seed, the BPE pair) must be foldable;
+  // Kernel parameters (k, bandBits, seed, the BPE pair, the logfmt field
+  // and its overwrite flag) must be foldable;
   // they are evaluated once here and passed on as literals.
   private def intParam(e: Expression) = Literal(e.eval().asInstanceOf[Int])
   private def longParam(e: Expression) = Literal(e.eval() match {
@@ -234,15 +229,14 @@ object GraftFunctions {
   def merge_maps(lower: Column, upper: Column): Column =
     call_function("merge_maps", lower, upper)
 
-  /** The logfmt-transform merge (pop `field`, merge `parsed` in, rename
-    * collisions "<field>.<key>" unless overwrite; null `parsed` returns
-    * `fields` unchanged) as one codegen'd expression — the map_filter /
-    * transform_keys composition it replaces was CodegenFallback.
+  /** The logfmt transform on an event map: pop `field`, logfmt-parse its
+    * value and merge the pairs in, renaming collisions "<field>.<key>"
+    * unless overwrite; an absent or null `field` leaves `fields` unchanged.
+    * See [[MergeFieldMaps]].
     */
-  def merge_maps_field(fields: Column, parsed: Column, field: String,
-      overwrite: Boolean): Column = {
+  def logfmt_merge_field(fields: Column, field: String, overwrite: Boolean): Column = {
     import org.apache.spark.sql.functions.lit
-    call_function("merge_maps_field", fields, parsed, lit(field), lit(overwrite))
+    call_function("logfmt_merge_field", fields, lit(field), lit(overwrite))
   }
 
   /** from_json(c, map<string,string>) as a codegen'd expression (null for
@@ -253,12 +247,10 @@ object GraftFunctions {
   def json_flat_map(c: Column): Column = call_function("json_flat_map", c)
 
   /** Reference-parity NDJSON event line (serde_json over a BTreeMap event:
-    * compact, sorted keys; `numericKeys` emitted as bare i64 when canonical
-    * — fortinet.rs:105 / syslog.rs:55-64). See [[EventJson]].
+    * compact, sorted keys; `t` emitted as a bare i64 when canonical —
+    * fortinet.rs:105). See [[EventJson]].
     */
-  def event_json(m: Column, numericKeys: Seq[String] = Seq("t")): Column =
-    call_function("event_json", m,
-      org.apache.spark.sql.functions.lit(numericKeys.mkString(",")))
+  def event_json(m: Column): Column = call_function("event_json", m)
 
   /** Nearest-centroid index (max cosine, ties low) against a driver-side
     * centroid table (empty/null slots = dead cells, skipped).

@@ -1,17 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
-/** Catalyst expression: parse a logfmt-formatted string into
-  * `MapType(String, String)` (null value = key present without `=value`).
+/** The logfmt kernels: parse a logfmt-formatted string into
+  * `map<string,string>` (null value = key present without `=value`).
   *
   * Built because `str_to_map` cannot handle double-quoted values containing
   * spaces / `=` / delimiters, which the reference's data has everywhere
@@ -28,59 +23,36 @@ import scala.collection.mutable
   *     logfmt.rs inserts it as JSON null, fortinet.rs drops it)
   *   - duplicate keys: last occurrence wins (serde_json Map insert)
   *
-  * Codegen-capable: `doGenCode` emits a call to the static parser so the
-  * expression stays inside WholeStageCodegen (no UDF, no interpreter
-  * fallback on the hot parse path).
+  * One static entry point per registered flavour, each a `KernelCall` in
+  * [[GraftFunctions]], so the parse stays inside WholeStageCodegen (no UDF,
+  * no interpreter fallback on the hot parse path).
   */
-/** @param dropNullValues fortinet mode: drop bare keys with no `=value`
-  *   (fortinet.rs:85-88 `if let Some(val) = pair.val`); logfmt mode keeps
-  *   them as nulls (logfmt.rs:84 `Value::from(pair.val)`).
-  * @param excludeKeys keys consumed by the caller and kept out of the map
-  *   (fortinet.rs:80-88 pulls `date`/`time` out for the timestamp stitch).
-  */
-case class LogfmtParse(
-    child: Expression,
-    dropNullValues: Boolean = false,
-    excludeKeys: Seq[String] = Nil)
-    extends UnaryExpression {
+object LogfmtParse {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"logfmt_parse requires a string argument, got ${child.dataType.sql}")
+  private val NoExclude = new java.util.HashSet[String]()
 
-  override def dataType: DataType =
-    MapType(StringType, StringType, valueContainsNull = !dropNullValues)
-
-  @transient private lazy val excludeSet: java.util.HashSet[String] = {
+  /** Keys fortinet.rs:80-88 pulls out for the timestamp stitch. */
+  private val FortinetExclude = {
     val s = new java.util.HashSet[String]()
-    excludeKeys.foreach(s.add)
+    s.add("date"); s.add("time")
     s
   }
 
-  def parseUTF8(input: UTF8String): MapData =
-    LogfmtParse.parse(input, dropNullValues, excludeSet)
+  /** `logfmt_parse`: bare keys kept as null values (logfmt.rs:84
+    * `Value::from(pair.val)`).
+    */
+  def logfmt(input: UTF8String): MapData = parse(input, false, NoExclude)
 
-  override def nullSafeEval(input: Any): Any =
-    parseUTF8(input.asInstanceOf[UTF8String])
+  /** `logfmt_parse_fortinet`: bare keys dropped (fortinet.rs:85-88 `if let
+    * Some(val) = pair.val`), date/time kept out of the map.
+    */
+  def fortinet(input: UTF8String): MapData = parse(input, true, FortinetExclude)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("logfmtParse", this, classOf[LogfmtParse].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.parseUTF8($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LogfmtParse =
-    copy(child = newChild)
-
-  override def prettyName: String = "logfmt_parse"
-}
-
-object LogfmtParse {
-
-  private val noExclude = new java.util.HashSet[String]()
-
-  /** Static entry point shared by interpreted eval and generated code. */
-  def parseUTF8(input: UTF8String): MapData = parse(input, false, noExclude)
+  /** `logfmt_parse_sd`: RFC5424 structured-data params. k="v" pairs are
+    * logfmt-compatible, and dropping valueless keys discards the bare SD-id
+    * tokens.
+    */
+  def structuredData(input: UTF8String): MapData = parse(input, true, NoExclude)
 
   def parse(
       input: UTF8String,

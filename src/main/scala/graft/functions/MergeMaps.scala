@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
 
 /** The `merge_maps` kernel: merge map `right` into map `left`, right
   * winning on key collision — the
@@ -73,108 +69,42 @@ object MergeMaps {
       new GenericArrayData(Array.empty[Any]))
 }
 
-/** The full logfmt-TRANSFORM merge (log-ship/src/plugins/logfmt.rs:75-95) as
-  * ONE codegen'd expression: pop key `field` from the event map, then merge
-  * the separately-parsed `parsed` map in; with overwrite=false an incoming
-  * key that collides with the EVOLVING map (surviving event keys plus
-  * already-inserted parsed keys, matching the reference's sequential
-  * `contains_key` check) is renamed `"<field>.<key>"`, and a (possibly
-  * renamed) key that still collides overwrites (serde_json insert — last
-  * write wins).
+/** The `logfmt_merge_field` kernel: the full logfmt TRANSFORM
+  * (log-ship/src/plugins/logfmt.rs:75-95) on one event map. Read string
+  * key `field`; an absent or null value returns the event unchanged.
+  * Otherwise pop `field`, logfmt-parse its value and merge the pairs in;
+  * with overwrite=false an incoming key that collides with the EVOLVING map
+  * (surviving event keys plus already-inserted parsed keys, matching the
+  * reference's sequential `contains_key` check) is renamed
+  * `"<field>.<key>"`, and a (possibly renamed) key that still collides
+  * overwrites (serde_json insert — last write wins).
   *
   * Replaces the `map_filter` (pop) + `transform_keys` (rename) + `when`
   * composition: both HOFs are CodegenFallback, and a single fallback
   * expression excludes its WHOLE operator from whole-stage codegen — the
-  * exact hazard class that cost the round-2 parse stage 3-5x. This
-  * expression needed custom null handling anyway: a null `parsed` (field
-  * absent / not logfmt) must return `fields` UNCHANGED, not null, which no
-  * null-safe binary template expresses.
+  * exact hazard class that cost the round-2 parse stage 3-5x.
   *
   * Deviation from the composition (not the reference): two parsed keys that
   * rename to the SAME final key resolve last-wins here, where
   * `transform_keys` throws DUPLICATED_MAP_KEY under Spark's default dedup
   * policy; last-wins matches the reference's sequential insert loop.
   */
-case class MergeFieldMaps(fields: Expression, parsed: Expression,
-    field: String, overwrite: Boolean) extends BinaryExpression {
-
-  override def left: Expression = fields
-  override def right: Expression = parsed
-
-  // null parsed returns fields, so null-ness tracks fields alone
-  override def nullable: Boolean = fields.nullable
-
-  override def dataType: DataType = {
-    val vNull = Seq(fields, parsed).exists {
-      _.dataType match {
-        case MapType(_, _, n) => n
-        case _ => true
-      }
-    }
-    MapType(StringType, StringType, valueContainsNull = vNull)
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def strOrVoid(dt: DataType): Boolean =
-      dt == StringType || dt == org.apache.spark.sql.types.NullType
-    val ok = Seq(fields, parsed).forall {
-      _.dataType match {
-        case MapType(k, v, _) => strOrVoid(k) && strOrVoid(v)
-        case _ => false
-      }
-    }
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "merge_maps_field requires two map<string,string> arguments")
-  }
-
-  @transient private lazy val fieldU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(field)
-  @transient private lazy val prefixU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(field + ".")
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val f = fields.eval(input)
-    if (f == null) return null
-    val p = parsed.eval(input)
-    if (p == null) f
-    else MergeFieldMaps.merge(f.asInstanceOf[MapData], p.asInstanceOf[MapData],
-      fieldU8, prefixU8, overwrite)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val fGen = fields.genCode(ctx)
-    val pGen = parsed.genCode(ctx)
-    val fieldRef = ctx.addReferenceObj("mfmField", fieldU8)
-    val prefixRef = ctx.addReferenceObj("mfmPrefix", prefixU8)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      ${fGen.code}
-      boolean ${ev.isNull} = ${fGen.isNull};
-      $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-      if (!${ev.isNull}) {
-        ${pGen.code}
-        if (${pGen.isNull}) {
-          ${ev.value} = ${fGen.value};
-        } else {
-          ${ev.value} = graft.functions.MergeFieldMaps.merge(
-            ${fGen.value}, ${pGen.value}, $fieldRef, $prefixRef, $overwrite);
-        }
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MergeFieldMaps =
-    copy(fields = newLeft, parsed = newRight)
-
-  override def prettyName: String = "merge_maps_field"
-}
-
 object MergeFieldMaps {
 
   import org.apache.spark.unsafe.types.UTF8String
+
+  private val Dot = UTF8String.fromString(".")
+
+  def mergeField(fields: MapData, field: UTF8String, overwrite: Boolean): MapData = {
+    val n = fields.numElements()
+    val fk = fields.keyArray()
+    var i = 0
+    while (i < n && !fk.getUTF8String(i).equals(field)) i += 1
+    val fv = fields.valueArray()
+    if (i == n || fv.isNullAt(i)) fields
+    else merge(fields, LogfmtParse.logfmt(fv.getUTF8String(i)), field,
+      UTF8String.concat(field, Dot), overwrite)
+  }
 
   /** Pop `field` from `fields`, rename colliding parsed keys (unless
     * overwrite), merge last-write-wins. Small-map nested scans, same

@@ -232,8 +232,8 @@ object TrainingOps {
   }
 
   /** Drop every cache entry built on `dir`'s documents: the shingle frame
-    * and everything derived from it (signatures, stop-shingles, pair
-    * frames at any cap) plus the keyword tf frame. One cascading uncache of
+    * and everything derived from it (signatures, stop-shingles at any cap)
+    * plus the keyword tf frame. One cascading uncache of
     * the documents scan matches each entry whose plan reads that scan and
     * leaves other dirs' entries alone. Verify/Bench call this after the
     * query suite so a long-lived session doesn't keep holding the corpus.
@@ -544,10 +544,6 @@ object TrainingOps {
     */
   def dedupNgram(s: SparkSession, dir: String, cap: Int): DataFrame =
     cappedJaccard(s, dir, cap, lit(true), lit(true), col("ia") < col("ib"))
-      // the verified pair set is tiny (dup pairs only) and consumed by
-      // BOTH dedup_ngram and dedup_clusters in a suite pass — one cache
-      // entry via plan-dedup; released with the shingle cache
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Incremental dedup: near-dup-join a NEW batch of docs (doc_id % 10
     * == 7, the arriving-shard stand-in) against the EXISTING corpus (the
@@ -669,8 +665,12 @@ object TrainingOps {
     */
   private[graft] def connectedComponents(pairs: DataFrame,
       maxIters: Int = 25): DataFrame = {
-    val fwd = pairs.select(col("ia").as("src"), col("ib").as("dst"))
-    val bothWays = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    // both orientations of each pair from ONE read of `pairs`
+    val bothWays = pairs
+      .select(explode(array(
+        struct(col("ia").as("src"), col("ib").as("dst")),
+        struct(col("ib").as("src"), col("ia").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
     // convergence check: min-label propagation is monotone NON-INCREASING
     // per vertex over a fixed vertex set, so the label sum (DECIMAL — a
     // long sum overflows at ~1e9 docs x 1e9 ids) strictly decreases until
@@ -717,8 +717,8 @@ object TrainingOps {
     * pipeline what to DELETE — transitive near-dup groups must collapse
     * to one kept document. keep = (doc == smallest doc_id in its
     * component); only docs that appear in some dup pair are emitted.
-    * Every invocation recomputes the fixpoint from the (cached) pair
-    * frame; the labels it returns are a checkpoint, not a cache entry.
+    * Every invocation recomputes the pair frame and the fixpoint; the
+    * labels it returns are a checkpoint, not a cache entry.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     connectedComponents(

@@ -2,13 +2,13 @@ package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{logfmt_parse, logfmt_parse_fortinet, regexp_groups}
+import graft.functions.GraftFunctions.{logfmt_parse_fortinet, regexp_groups}
 
 /** The compiled pattern dictionary — the Spark-native replacement for the
   * reference's per-row Python transform (log-ship/src/plugins/python.rs) and
   * native parsers (syslog.rs, fortinet.rs, logfmt.rs). Each entry compiles a
   * fixed parse recipe to a Catalyst `Column` tree (`regexp_extract`, `split`,
-  * `try_to_timestamp`, casts, one custom `LogfmtParse` expression) so the
+  * `try_to_timestamp`, casts, the logfmt kernel calls) so the
   * whole parse stage runs inside WholeStageCodegen with no per-row UDF — the
   * exact optimization the reference docs beg operators to do by hand
   * (site/docs/config.md:166-174,214-217).
@@ -47,13 +47,6 @@ object PatternDictionary {
 
   def isFortinet(text: Column): Column =
     text.startsWith("<") && text.rlike("^<\\d+>date=")
-
-  /** Necessary-but-cheap gate for the RFC5424 regex: every 5424 line
-    * contains ">1 " (pri close + version); one byte scan skips the regex
-    * for the RFC3164 majority.
-    */
-  private def maybe5424(text: Column): Column =
-    text.contains(">1 ") && regexp_groups(text, Syslog5424Re).isNotNull
 
   // ---- regexes (shared by detect + extract) ----
 
@@ -130,13 +123,18 @@ object PatternDictionary {
     fortinetTG(regexp_groups(text, FortinetDateRe),
       regexp_groups(text, FortinetTimeRe), runTsMillis)
 
+  /** The loose fallback event ({t: run clock, +message: line}). */
+  private def looseMap(text: Column, runTsMillis: Long): Column =
+    map(lit("t"), lit(runTsMillis).cast("string"), lit("+message"), text)
+
   /** The full fortinet ROUTE-TRANSFORM semantics (fortinet.rs:73-111): a
     * line containing '>' is pri-stripped (everything after the FIRST '>')
     * and logfmt-parsed with the date/time → epoch-seconds stitch; a line
-    * with no '>' at all falls back to the whole parse_syslog treatment
-    * ("parse as syslog, and hope for the best", fortinet.rs:108-111).
+    * with no '>' at all falls back to parse_syslog ("parse as syslog, and
+    * hope for the best", fortinet.rs:108-111). Both syslog forms start
+    * `<pri>`, so parse_syslog gives such a line the loose map.
     */
-  def fortinetTransform(text: Column, defaultYear: Column, runTsMillis: Long): Column =
+  def fortinetTransform(text: Column, runTsMillis: Long): Column =
     when(instr(text, ">") > 0,
       // merge_maps (not map_concat): a line carrying a literal t= logfmt key
       // must be overwritten by the stitched timestamp, not throw under
@@ -144,7 +142,7 @@ object PatternDictionary {
       // fortinet.rs:105)
       mergeMaps(fortinetKv(text),
         map(lit("t"), fortinetT(text, runTsMillis).cast("string"))))
-      .otherwise(syslogMap(text, defaultYear, runTsMillis))
+      .otherwise(looseMap(text, runTsMillis))
 
   /** RFC3164 year resolution: the wire format has no year; syslog_loose
     * resolves against the current clock — we inject the run clock's year for
@@ -265,25 +263,13 @@ object PatternDictionary {
     withMessageBody(withSd, coalesce(ga(gs, 8), lit("")))
   }
 
-  /** The loose fallback event ({t: run clock, +message: line}). */
-  private def looseMap(text: Column, runTsMillis: Long): Column =
-    map(lit("t"), lit(runTsMillis).cast("string"), lit("+message"), text)
-
-  /** Unified `parse_syslog` off hoisted (gated) group columns: 5424, then
-    * 3164, then loose (syslog_loose never fails; an unrecognized line is
-    * all-message).
+  /** `parse_syslog` off hoisted (gated) group columns, at least one of
+    * them non-null: 5424 first, else 3164.
     */
-  def syslogMapG(g5424: Column, g3164: Column, text: Column,
-      defaultYear: Column, runTsMillis: Long): Column =
+  def syslogMapG(g5424: Column, g3164: Column, defaultYear: Column,
+      runTsMillis: Long): Column =
     when(g5424.isNotNull, syslog5424MapG(g5424, runTsMillis))
-      .when(g3164.isNotNull, syslog3164MapG(g3164, defaultYear, runTsMillis))
-      .otherwise(looseMap(text, runTsMillis))
-
-  /** Text-based form (route transforms, specs — NOT the fused parse). */
-  def syslogMap(text: Column, defaultYear: Column, runTsMillis: Long): Column =
-    syslogMapG(
-      when(maybe5424(text), regexp_groups(text, Syslog5424Re)),
-      regexp_groups(text, SyslogRe), text, defaultYear, runTsMillis)
+      .otherwise(syslog3164MapG(g3164, defaultYear, runTsMillis))
 
   def combinedColsG(gs: Column): Seq[(String, Column)] = {
     val user = ga(gs, 3)
@@ -459,7 +445,7 @@ object PatternDictionary {
 
     val fieldsBuiltin = when(isf, fortinetMap)
       .when(g5424.isNotNull || g3164.isNotNull,
-        syslogMapG(g5424, g3164, text, year, runTsMillis))
+        syslogMapG(g5424, g3164, year, runTsMillis))
       .when(gcomb.isNotNull, toMap(combinedColsG(gcomb)))
       .when(gerr.isNotNull, toMap(errorColsG(gerr)))
       .when(gkern.isNotNull, toMap(kernColsG(gkern, year)))

@@ -57,7 +57,7 @@ object PipelineQueries {
 
   /** fmtQuery with the shared parse result HOISTED into one intermediate
     * column: codegen CSE does not dedupe repeated subtrees, so extracting
-    * 13 fields from `syslogMap(text)` directly re-built the whole map (and
+    * several fields from a parsed map directly re-built the whole map (and
     * re-ran its regexes) once per field. CollapseProject keeps the hoisted
     * alias because it is non-trivial and multiply referenced.
     */
@@ -81,7 +81,7 @@ object PipelineQueries {
     // the loose fallback {t: run-clock millis, +message: raw line}
     "pipe_fortinet_parse" -> { (s, dir) =>
       fmtQueryHoisted(Transcripts.fortinetRouteLine,
-        PatternDictionary.fortinetTransform(col("text"), year2024, RunTsMillis),
+        PatternDictionary.fortinetTransform(col("text"), RunTsMillis),
         kv => Seq("t" -> try_element_at(kv, lit("t")).try_cast("long")) ++
           mapCols(kv, Seq("devname", "subtype", "vd", "action")) ++
           Seq(
@@ -93,31 +93,34 @@ object PipelineQueries {
     },
     // full parse_syslog fidelity (syslog.rs:22-97): RFC3164 + RFC5424,
     // named facility/severity, msg_id, SD id+param flattening, JSON message
-    // bodies merged, nil/unparseable timestamp -> run clock
+    // bodies merged, nil/unparseable timestamp -> run clock. Read off the
+    // pipeline's own parse, whose hoisted group arrays run each syslog
+    // regex once per row.
     "pipe_syslog_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.syslogLine,
-        PatternDictionary.syslogMap(col("text"), year2024, RunTsMillis),
-        m => {
-          def f(k: String) = try_element_at(m, lit(k))
-          Seq(
-            "t" -> f("t").try_cast("long"),
-            "facility" -> f("facility"),
-            "severity" -> f("severity"),
-            "hostname" -> f("hostname"),
-            "app_name" -> f("app_name"),
-            "proc_id" -> f("proc_id"),
-            // the reference's int-or-string proc_id typing (syslog.rs:55-64)
-            // recovered as a typed column from the all-string open map
-            // (the documented third knowing deviation, PatternDictionary)
-            "proc_id_int" -> f("proc_id").try_cast("long"),
-            "msg_id" -> f("msg_id"),
-            "sd_id" -> f("id"),
-            "iut" -> f("iut"),
-            "event_source" -> f("eventSource"),
-            "etype" -> f("etype"),
-            "k_merged" -> f("k"),
-            "message" -> f("+message"))
-        })(s, dir)
+      reg(s)
+      def f(k: String) = try_element_at(col("fields"), lit(k))
+      val cols = Seq(
+        "t" -> f("t").try_cast("long"),
+        "facility" -> f("facility"),
+        "severity" -> f("severity"),
+        "hostname" -> f("hostname"),
+        "app_name" -> f("app_name"),
+        "proc_id" -> f("proc_id"),
+        // the reference's int-or-string proc_id typing (syslog.rs:55-64)
+        // recovered as a typed column from the all-string open map
+        // (the documented third knowing deviation, PatternDictionary)
+        "proc_id_int" -> f("proc_id").try_cast("long"),
+        "msg_id" -> f("msg_id"),
+        "sd_id" -> f("id"),
+        "iut" -> f("iut"),
+        "event_source" -> f("eventSource"),
+        "etype" -> f("etype"),
+        "k_merged" -> f("k"),
+        "message" -> f("+message"))
+      PatternDictionary.parse(
+          Transcripts.withText(s, dir, Transcripts.syslogLine), RunTsMillis)
+        .select(col("event_id") +: cols.map { case (n, c) => c.as(n) }: _*)
+        .orderBy("event_id")
     },
     "pipe_combined_parse" -> { (s, dir) =>
       fmtQueryHoisted(Transcripts.combinedLine,

@@ -153,9 +153,20 @@ class DedupSpec extends SparkSpec {
     assert(spark.conf.getOption(flag).forall(_ != "true"))
   }
 
+  test("dedup_ngram leaves no cache entry of its own result") {
+    // a cached pair frame would turn every later dedup_ngram call of the
+    // session into a cache read of the whole result
+    val dir = sf("0.001")
+    val df = graft.ops.TrainingOps.queries("dedup_ngram")(spark, dir)
+    assert(df.count() > 0)
+    assert(df.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    assert(graft.ops.TrainingOps.dedupNgram(spark, dir, 5).storageLevel ===
+      org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("dedup_clusters: five invocations give equal results") {
-    // each invocation recomputes the fixpoint from the cached pair frame
-    // and returns its own checkpointed labels
+    // each invocation recomputes the pair frame and the fixpoint and
+    // returns its own checkpointed labels
     def run() = graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val first = run()
@@ -304,7 +315,7 @@ class DedupSpec extends SparkSpec {
     Seq("dedup_ngram", "dedup_incremental", "dedup_clusters", "dedup_simhash",
       "text_keywords", "text_decontaminate")
       .foreach(q => TrainingOps.queries(q)(spark, dir).count())
-    // cap = 5 binds at sf0.001: a stop-shingle table and a second pair frame
+    // cap = 5 binds at sf0.001: a second stop-shingle table
     TrainingOps.dedupNgram(spark, dir, 5).count()
     TrainingOps.dedupIncremental(spark, dir, 5).count()
     assert(cacheEntries != before, "the dedup runs cache nothing")
@@ -314,12 +325,12 @@ class DedupSpec extends SparkSpec {
 
   test("releaseCaches drops only its own directory's caches") {
     // run A, run B, release A, release B: B's release must still find
-    // and drop B's persisted n-gram pair frame
+    // and drop B's persisted shingle frame
     val one = sf("0.001")
     val many = manyFileCopy(one)
     try {
-      // start with sf0.001's pair frame registered and then released, so
-      // no cache entry left by earlier tests hides a leak
+      // start with sf0.001's shingle frame registered and then released,
+      // so no cache entry left by earlier tests hides a leak
       graft.ops.TrainingOps.queries("dedup_ngram")(spark, one)
       graft.ops.TrainingOps.releaseCaches(spark, one)
       val before = cacheEntries

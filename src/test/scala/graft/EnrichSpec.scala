@@ -44,6 +44,15 @@ class EnrichSpec extends SparkSpec {
     assert(mapOf(out, "m") === Map("x" -> "1"))
   }
 
+  test("a field present with a null value leaves the event unchanged") {
+    GraftFunctions.ensureRegistered(spark)
+    val df = spark.range(1).select(
+      map(lit("message"), lit(null).cast("string"), lit("x"), lit("1")).as("f"))
+    val out = df.select(
+      Enrich.logfmtMergeField(col("f"), "message", overwrite = false).as("m"))
+    assert(mapOf(out, "m") === Map("message" -> null, "x" -> "1"))
+  }
+
   test("logfmt merge: renamed key overwrites a pre-existing field.key entry") {
     GraftFunctions.ensureRegistered(spark)
     val df = spark.range(1).select(

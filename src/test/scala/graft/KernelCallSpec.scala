@@ -57,7 +57,15 @@ class KernelCallSpec extends SparkSpec {
       ("json_flat_map", Seq(lit("""{"k":"v","n":1,"o":{"x":[1,2]}}""")),
         a => json_flat_map(a(0))),
       ("merge_maps", Seq(typedlit(Map("a" -> "1", "b" -> "2")),
-        typedlit(Map("b" -> "3", "c" -> "4"))), a => merge_maps(a(0), a(1))))
+        typedlit(Map("b" -> "3", "c" -> "4"))), a => merge_maps(a(0), a(1))),
+      ("logfmt_parse", Seq(lit("""a=1 b="x y" c""")), a => logfmt_parse(a(0))),
+      ("logfmt_parse_fortinet", Seq(lit("date=2024-06-01 time=00:00:00 vd=root c")),
+        a => logfmt_parse_fortinet(a(0))),
+      ("logfmt_parse_sd", Seq(lit(""" id@1 k="v w" """)), a => logfmt_parse_sd(a(0))),
+      ("event_json", Seq(typedlit(Map("t" -> "5", "b" -> "x\"y"))),
+        a => event_json(a(0))),
+      ("logfmt_merge_field", Seq(typedlit(Map("message" -> "a=1 b=2", "a" -> "keep"))),
+        a => logfmt_merge_field(a(0), "message", overwrite = false)))
   }
 
   /** The same value as `c`, but read per row, so nothing constant-folds. */
@@ -72,14 +80,15 @@ class KernelCallSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.expressions
       .map(_.collect { case k: KernelCall => k }.size).sum
 
-  test("all 19 kernel calls run in one whole-stage-codegen projection") {
+  test("all 24 kernel calls run in one whole-stage-codegen projection") {
     val base = strict.range(8).select(
       split(concat_ws(" ", lit("a b"), col("id").cast("string"), lit("a b c")), " ")
         .as("toks"),
       array(col("id").cast("float"), lit(1.0f), lit(-0.5f)).as("vec"),
       concat(lit("{\"k\":\""), col("id").cast("string"), lit("\"}")).as("js"),
-      map(lit("a"), col("id").cast("string")).as("m"))
-    val t = col("toks"); val v = col("vec")
+      map(lit("a"), col("id").cast("string")).as("m"),
+      concat(lit("a="), col("id").cast("string"), lit(" b=\"x y\" c")).as("lf"))
+    val t = col("toks"); val v = col("vec"); val lf = col("lf")
     val df = base.select(
       minhash_band_keys(minhash_sig(t, 8), 2).as("mbk"),
       hamming_total(simhash_multi(t, 2), simhash_multi(t, 2)).as("ht"),
@@ -94,7 +103,13 @@ class KernelCallSpec extends SparkSpec {
       word_shingles(t, 2).as("ws"),
       bpe_merge(word_pairs(t), "a", "b").as("bm"),
       lumberjack_decode(lumberjack_encode(t)).as("lj"),
-      merge_maps(col("m"), json_flat_map(col("js"))).as("mm"))
+      merge_maps(col("m"), json_flat_map(col("js"))).as("mm"),
+      logfmt_parse(lf).as("lp"),
+      logfmt_parse_fortinet(lf).as("lpf"),
+      logfmt_parse_sd(lf).as("lps"),
+      event_json(col("m")).as("ej"),
+      logfmt_merge_field(map(lit("message"), lf, lit("a"), lit("keep")), "message",
+        overwrite = false).as("lmf"))
     val plan = df.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan).nonEmpty, plan)
     assert("""(?m)^[\s:|+-]*Project \[""".r.findFirstIn(plan).isEmpty, plan)
@@ -103,6 +118,10 @@ class KernelCallSpec extends SparkSpec {
     assert(rows.length === 8)
     assert(rows.forall(r => r.getInt(2) == 8 && r.getInt(1) == 0))
     assert(rows.map(_.getMap[String, String](13)("k")).toSeq ===
+      (0 until 8).map(_.toString))
+    assert(rows.map(_.getMap[String, String](14)("a")).toSeq ===
+      (0 until 8).map(_.toString))
+    assert(rows.map(_.getMap[String, String](18)("message.a")).toSeq ===
       (0 until 8).map(_.toString))
   }
 
@@ -137,6 +156,11 @@ class KernelCallSpec extends SparkSpec {
     Seq(map(), perRow(map())).foreach { lower =>
       assert(one(merge_maps(lower, upper))._2.getMap[String, String](0) ===
         Map("a" -> "1"))
+    }
+    // an event without the logfmt field comes back unchanged, not null
+    Seq(upper, perRow(upper)).foreach { event =>
+      assert(one(logfmt_merge_field(event, "message", overwrite = false))._2
+        .getMap[String, String](0) === Map("a" -> "1"))
     }
   }
 

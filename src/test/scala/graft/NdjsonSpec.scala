@@ -48,7 +48,7 @@ class NdjsonSpec extends SparkSpec {
     val lines = try src.getLines().toList finally src.close()
     val out = lines.toDF("text")
       .select(GraftFunctions.event_json(
-        PatternDictionary.fortinetTransform(col("text"), lit("2024"),
+        PatternDictionary.fortinetTransform(col("text"),
           Transcripts.RunTsMillis)).as("j"))
       .as[String].collect()
 

@@ -17,12 +17,16 @@ class SyslogSpec extends SparkSpec {
 
   private val RunTs = 1717200000000L
 
+  /** The pipeline parse of one syslog line: its `fields` map, after
+    * checking that the line was recognized as syslog.
+    */
   private def parseOne(line: String): Map[String, String] = {
     GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
-    val df = Seq(line).toDF("text")
-      .select(PatternDictionary.syslogMap(col("text"), lit("2024"), RunTs).as("m"))
-    df.head().getMap[String, String](0).toMap
+    val row = PatternDictionary.parse(Seq(line).toDF("text"), RunTs)
+      .select("format", "fields").head()
+    assert(row.getString(0) === "syslog", line)
+    row.getMap[String, String](1).toMap
   }
 
   test("RFC5424 multi-block SD: last id wins, all params merged") {
@@ -74,30 +78,22 @@ class SyslogSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq("<190>date=2024-06-01 time=00:00:00 t=bogus action=pass")
       .toDF("text").select(
-        PatternDictionary.fortinetTransform(col("text"), lit("2024"), RunTs).as("m"))
+        PatternDictionary.fortinetTransform(col("text"), RunTs).as("m"))
     val m = df.head().getMap[String, String](0).toMap
     assert(m("t") === "1717200000") // stitched epoch-sec wins over t=bogus
     assert(m("action") === "pass")
   }
 
-  test("unrecognized line falls to loose {t, +message}") {
-    val m = parseOne("just some text")
-    assert(m === Map("t" -> RunTs.toString, "+message" -> "just some text"))
-  }
-
   test("fortinet transform: '>' anywhere triggers pri-strip+logfmt; none -> syslog fallback") {
     GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
-    val df = Seq(
-      "<190>date=2024-06-01 time=00:00:00 devname=F1 action=pass",
-      "date=2024-06-01 time=00:00:00 devname=F1 action=pass" // no '>'
-    ).toDF("text").select(
-      PatternDictionary.fortinetTransform(col("text"), lit("2024"), RunTs).as("m"))
+    val noPri = "date=2024-06-01 time=00:00:00 devname=F1 action=pass"
+    val df = Seq("<190>" + noPri, noPri).toDF("text").select(
+      PatternDictionary.fortinetTransform(col("text"), RunTs).as("m"))
     val Array(withPri, without) = df.collect().map(
       (r: Row) => r.getMap[String, String](0).toMap)
     assert(withPri("devname") === "F1" && withPri("t") === "1717200000") // epoch SECONDS
-    assert(without("t") === RunTs.toString) // fallback: parse_syslog millis
-    assert(without("+message").startsWith("date=2024-06-01"))
-    assert(!without.contains("devname"))
+    // fallback: parse_syslog's loose map, run-clock millis + the raw line
+    assert(without === Map("t" -> RunTs.toString, "+message" -> noPri))
   }
 }
