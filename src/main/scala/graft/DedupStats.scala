@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.ops.TrainingOps
 
 /** Candidate-funnel diagnostics for the dedup queries: prints, per
-  * mechanism, how many distinct pairs its candidate join generates before
-  * the prefilter and exact-Jaccard verify — the number that decides
-  * whether the banding survives a 1000x scale-up. The counts come from the
-  * frames and candidate joins the dedup queries themselves build
-  * (`TrainingOps.docShingles`, `minhashSigs`/`minhashCandidates`,
-  * `simhashSigs`/`simhashCandidates`, `explodedIndex`), so they cannot
-  * drift from them.
+  * mechanism, how many distinct pairs its candidate join generates — the
+  * number that decides whether the banding survives a 1000x scale-up —
+  * and, for the LSH mechanisms, how many of them pass the signature
+  * prefilter into the exact verify. The counts come from the frames, joins
+  * and prefilters the dedup queries themselves build
+  * (`TrainingOps.docShingles`, `minhashSigs`/`minhashCandidates`/
+  * `minhashPrefiltered`, their simhash twins, `explodedIndex`), so they
+  * cannot drift from them.
   *
   * Usage: `sbt "runMain graft.DedupStats [sfDir]"` (default sf0.1).
   */
@@ -28,19 +29,23 @@ object DedupStats {
 
     val dsh = TrainingOps.docShingles(spark, dir)
     val nDocs = dsh.count()
-    def report(label: String, pairs: DataFrame, note: String = ""): Unit = {
+    def report(label: String, pairs: DataFrame, note: String = "",
+        verify: Option[DataFrame] = None): Unit = {
       val n = pairs.select("ia", "ib").distinct().count()
-      println(f"$label%-10s candidates=$n%,d " +
+      val v = verify.fold("")(p => f" verify=${p.count()}%,d")
+      println(f"$label%-10s candidates=$n%,d$v " +
         f"(${n * 2.0 / (nDocs * (nDocs - 1))}%.2e of all pairs$note)")
     }
 
-    // minhash: 16 bands x 4 rows, exact band-key join
-    report("minhash",
-      TrainingOps.minhashCandidates(TrainingOps.minhashSigs(dsh)))
+    // minhash: 16 bands x 4 rows, exact band-key join, >=42/64 prefilter
+    val mh = TrainingOps.minhashSigs(dsh)
+    report("minhash", TrainingOps.minhashCandidates(mh),
+      verify = Some(TrainingOps.minhashPrefiltered(mh)))
 
-    // simhash: 36 bands x 16 bits, hamming<=1 multi-probe join
-    report("simhash",
-      TrainingOps.simhashCandidates(TrainingOps.simhashSigs(dsh)))
+    // simhash: 36 bands x 16 bits, hamming<=1 probes, <=120/576 prefilter
+    val sh = TrainingOps.simhashSigs(dsh)
+    report("simhash", TrainingOps.simhashCandidates(sh),
+      verify = Some(TrainingOps.simhashPrefiltered(sh)))
 
     // ngram: co-shingle pairs off the uncapped inverted index
     val ex = TrainingOps.explodedIndex(dsh)

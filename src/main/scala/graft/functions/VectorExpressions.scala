@@ -51,10 +51,25 @@ object CosineSim {
   * left-to-right double accumulation) so assignments are bit-identical to
   * the join-based plan it replaced. Empty slots (a cell that lost all its
   * members) are skipped, matching the old plan where such a cell simply had
-  * no row to join.
+  * no row to join. Equality and the printed form (`table[cells x dim,
+  * fingerprint]`) follow the table's values, not the array's identity.
   */
 case class NearestCell(child: Expression, centroids: Array[Array[Float]])
     extends UnaryExpression {
+
+  private def table = centroids.asInstanceOf[Array[AnyRef]]
+
+  override def equals(o: Any): Boolean = o match {
+    case n: NearestCell => child == n.child && java.util.Arrays.deepEquals(table, n.table)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode + java.util.Arrays.deepHashCode(table)
+
+  override protected def stringArgs: Iterator[Any] = {
+    val dim = centroids.map(c => if (c == null) 0 else c.length).maxOption.getOrElse(0)
+    Iterator(child, f"table[${centroids.length}x$dim, ${java.util.Arrays.deepHashCode(table)}%08x]")
+  }
 
   override def dataType: DataType = IntegerType
 

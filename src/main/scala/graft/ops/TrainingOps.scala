@@ -16,10 +16,11 @@ import graft.state.{ParquetFormat, Scratch, TableFormat}
   * Scale shape (the point at 10^9+ docs):
   *   - candidate generation is always an equi-join on a bucket key
   *     (band hash / signature), never an O(n^2) cross product;
-  *   - a shingle frequency cap drops degenerate stop-shingles so the
-  *     inverted-index join cannot quadratically explode on a hot key
-  *     (same role as skew salting);
-  *   - verification (exact Jaccard / cosine) runs only on candidates.
+  *   - a shingle frequency cap drops degenerate stop-shingles from
+  *     candidate generation so the inverted-index join cannot
+  *     quadratically explode on a hot key (same role as skew salting);
+  *   - verification (exact Jaccard over the cached shingle arrays /
+  *     cosine) runs only on candidates.
   *
   * Thresholds use integer math (10*common >= 9*union  <=>  J >= 0.9) so
   * oracle comparison never touches float summation order.
@@ -221,7 +222,7 @@ object TrainingOps {
   /** Per-doc distinct-shingle ARRAY frame, persisted once per session: the
     * plan is identical across every dedup query, so Spark's CacheManager
     * dedups repeat persist() calls to ONE cache entry (no per-query leak),
-    * and signatures, the exploded inverted index AND per-doc counts all
+    * and signatures, the exploded inverted index AND the exact verify all
     * derive from this single tokenize+shingle pass (round 1 recomputed
     * shingles from text twice per query and cached an exploded copy each).
     */
@@ -295,7 +296,7 @@ object TrainingOps {
   /** SimHash LSH candidates off the [[simhashSigs]] frame: the pairs
     * (ia < ib) whose keys agree, within Hamming distance 1, on some of the
     * 36 16-bit bands. NOT deduplicated: a pair appears once per colliding
-    * band and probe, and dedup_simhash prefilters before its distinct.
+    * band and probe; [[simhashPrefiltered]] filters before its distinct.
     *
     * Band keys come from native codegen'd expressions as ONE encoded long
     * (band << 16 | key): the transform(sequence)/flatten higher-order
@@ -327,27 +328,49 @@ object TrainingOps {
       .select(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
   }
 
-  /** Per-doc shingle counts — array size, no shuffle. */
-  private def shingleCounts(dsh: DataFrame): DataFrame =
-    dsh.select(col("doc_id"), size(col("sh")).cast("long").as("c"))
-
-  /** Number of shingles each (ia, ib) pair of `pairs` has in common, as
-    * column `name`, counted over the inverted indexes `a` (ia side) and `b`
-    * (ib side) — a join on the pair plus shingle, no array materialization.
+  /** The MinHash candidates of the [[minhashSigs]] frame `sig` that pass
+    * the signature prefilter (recall budget in the MinHashPrefilterMin
+    * doc): the pairs that reach the exact verify. match_count is the
+    * codegen'd form of the zip_with position count.
     */
-  private def sharedShingles(pairs: DataFrame, a: DataFrame, b: DataFrame,
-      name: String): DataFrame =
-    pairs
-      .join(a.select(col("doc_id").as("ia"), col("s")), "ia")
-      .join(b.select(col("doc_id").as("ib"), col("s")), Seq("ib", "s"))
-      .groupBy("ia", "ib").agg(count(lit(1)).as(name))
+  private[graft] def minhashPrefiltered(sig: DataFrame): DataFrame =
+    minhashCandidates(sig)
+      .join(sig.select(col("doc_id").as("ia"), col("sig").as("sa")), "ia")
+      .join(sig.select(col("doc_id").as("ib"), col("sig").as("sb")), "ib")
+      .filter(GraftFunctions.match_count(col("sa"), col("sb"))
+        >= MinHashPrefilterMin)
+      .select("ia", "ib")
 
-  /** Exact-Jaccard verification of candidate (ia, ib) pairs at J >= 0.9
-    * via the inverted shingle index.
+  /** The distinct SimHash candidates of the [[simhashSigs]] frame `sig`
+    * within the Hamming prefilter over all 576 bits (cutoff budget in the
+    * SimHashSigs doc): the pairs that reach the exact verify. It rejects
+    * ~99.8% of band collisions, so it runs before the distinct.
     */
-  private def verifiedPairs(sh: DataFrame, counts: DataFrame,
-      candidates: DataFrame): DataFrame =
-    jaccardThresholdTail(sharedShingles(candidates, sh, sh, "common"), counts)
+  private[graft] def simhashPrefiltered(sig: DataFrame): DataFrame =
+    simhashCandidates(sig)
+      .join(sig.select(col("doc_id").as("ia"), col("sigs").as("sa")), "ia")
+      .join(sig.select(col("doc_id").as("ib"), col("sigs").as("sb")), "ib")
+      .filter(GraftFunctions.hamming_total(col("sa"), col("sb"))
+        <= SimHashHammingMax)
+      .select("ia", "ib").distinct()
+
+  /** Exact J >= 0.9 verification of candidate (ia, ib) pairs against the
+    * persisted per-doc shingle arrays `dsh`: |A|, |B| and |A∩B| are array
+    * sizes, exact because shingle arrays are distinct. `common > 0` keeps
+    * the oracle's shared-shingle join semantics: two docs with empty
+    * arrays (under 3 tokens) collide in both LSH paths and would pass as
+    * 0 >= 0. A null array (null text) shares nothing: `common` is 0.
+    */
+  private def verifiedPairs(dsh: DataFrame, pairs: DataFrame): DataFrame =
+    jaccardThresholdTail(pairs.select("ia", "ib")
+      .join(dsh.select(col("doc_id").as("ia"), col("sh").as("sa")), "ia")
+      .join(dsh.select(col("doc_id").as("ib"), col("sh").as("sb")), "ib")
+      .select(col("ia"), col("ib"),
+        size(col("sa")).cast("long").as("ca"),
+        size(col("sb")).cast("long").as("cb"),
+        coalesce(size(array_intersect(col("sa"), col("sb"))).cast("long"),
+          lit(0L)).as("common"))
+      .filter(col("common") > 0))
 
   // ---- IVF-flat similarity index (ann_ivf / ann_ivf_build / ann_ivf_serve) ----
 
@@ -540,7 +563,8 @@ object TrainingOps {
 
   /** n-gram Jaccard dedup with the stop-shingle cap over all pairs
     * (ia < ib); see [[cappedJaccard]]. `cap` is a parameter so DedupSpec
-    * can pin the binding-cap path that the testdata never exercises.
+    * can pin the binding-cap path that the testdata never exercises. The
+    * result is unordered; the dedup_ngram query sorts it.
     */
   def dedupNgram(s: SparkSession, dir: String, cap: Int): DataFrame =
     cappedJaccard(s, dir, cap, lit(true), lit(true), col("ia") < col("ib"))
@@ -555,7 +579,8 @@ object TrainingOps {
     * work is O(batch x bucket), not O(corpus^2). Built by the same
     * [[cappedJaccard]] as dedupNgram, so the result is EXACT Jaccard at
     * J >= 0.9 with the same documented all-hot recall exception. Output:
-    * (ia=corpus doc, ib=batch doc, common, n_union).
+    * (ia=corpus doc, ib=batch doc, common, n_union), unordered; the
+    * dedup_incremental query sorts it.
     */
   def dedupIncremental(s: SparkSession, dir: String, cap: Int): DataFrame = {
     val isBatch = col("doc_id") % 10 === 7
@@ -564,44 +589,36 @@ object TrainingOps {
 
   /** The exact J >= 0.9 pairs of the inverted-index join between the docs
     * matching `aDocs` (ia side) and those matching `bDocs` (ib side),
-    * keeping joined pairs that satisfy `pair`. The stop-shingle cap keeps
-    * the join linear-ish at scale, but applies ONLY to candidate and
-    * intersection generation — the final Jaccard is made exact again by
-    * adding back each candidate pair's hot-shingle intersections
-    * ([[hotCorrected]]) and taking per-doc counts from the uncapped
-    * arrays, so the result always agrees with the uncapped oracle (round 1
-    * deflated the numerator only). The one recall exception stays: a true
-    * pair sharing ONLY hot shingles never becomes a candidate.
+    * keeping joined pairs that satisfy `pair`. Index rows carry their
+    * doc's shingle count, so the grouping yields (ia, ib, ca, cb, common)
+    * with no count join. The stop-shingle cap keeps the join linear-ish at
+    * scale; when it binds, `common` misses the hot shingles and the pairs
+    * go to the exact [[verifiedPairs]]. The one recall exception stays: a
+    * true pair sharing ONLY hot shingles never becomes a candidate.
     */
   private def cappedJaccard(s: SparkSession, dir: String, cap: Int,
       aDocs: Column, bDocs: Column, pair: Column): DataFrame = {
     val dsh = docShingles(s, dir)
-    val sh0 = explodedIndex(dsh)
+    val sh0 = dsh.select(col("doc_id"), size(col("sh")).cast("long").as("c"),
+      explode(col("sh")).as("s"))
     val hot = stopShingles(sh0, cap)
     val capped = hot.fold(sh0)(sh0.join(_, Seq("s"), "left_anti"))
-    // ONE pass: the capped self-join directly yields per-pair
-    // intersection counts (no candidate materialization + re-join)
-    val common0 = capped.filter(aDocs).select(col("doc_id").as("ia"), col("s"))
-      .join(capped.filter(bDocs).select(col("doc_id").as("ib"), col("s")),
-        Seq("s"))
+    val counted = capped.filter(aDocs)
+      .select(col("doc_id").as("ia"), col("c").as("ca"), col("s"))
+      .join(capped.filter(bDocs)
+        .select(col("doc_id").as("ib"), col("c").as("cb"), col("s")), Seq("s"))
       .filter(pair)
-      .groupBy("ia", "ib").agg(count(lit(1)).as("common0"))
-    val withCommon = hot match {
-      case Some(h) => hotCorrected(common0, sh0.join(h, Seq("s")), aDocs, bDocs)
-      case None => common0.withColumn("common", col("common0"))
-    }
-    jaccardThresholdTail(withCommon, shingleCounts(dsh))
+      .groupBy("ia", "ib", "ca", "cb").agg(count(lit(1)).as("common"))
+    if (hot.isEmpty) jaccardThresholdTail(counted)
+    else verifiedPairs(dsh, counted)
   }
 
   /** The stop-shingle table (shingles in more than `cap` docs of the
     * exploded index `sh0`), or None when the cap never binds — the common
-    * case below ~10^8 docs, where the whole correction subtree stays out
-    * of the plan. The table is TINY by construction (<= occurrences/cap
-    * rows), but deriving it costs a full groupBy pass over the exploded
-    * index, so it is persisted, empty or not, like the other reused
-    * frames: the pass runs ONCE per session (the lazy plan re-ran it for
-    * the left_anti cap AND the correction join, the r3 regression), and
-    * the emptiness probe on later calls reads the cache entry.
+    * case below ~10^8 docs, where no verify join enters the plan. TINY by
+    * construction (<= occurrences/cap rows), but it costs a groupBy pass
+    * over the index, so it is persisted, empty or not: the pass runs ONCE
+    * per session, and later emptiness probes read the cache entry.
     */
   private def stopShingles(sh0: DataFrame, cap: Int): Option[DataFrame] = {
     val hot = sh0.groupBy("s").agg(count(lit(1)).as("df"))
@@ -610,32 +627,14 @@ object TrainingOps {
     if (hot.isEmpty) None else Some(hot)
   }
 
-  /** Exact-count correction for a capped candidate set: re-count ONLY the
-    * already-candidate pairs' hot-shingle intersections and add them back,
-    * so the final `common` is exact despite candidate generation dropping
-    * stop-shingles. `aDocs`/`bDocs` restrict the hot-shingle frame to each
-    * pair side's doc class.
+  /** The one J >= 0.9 integer-threshold filter over (ia, ib, ca, cb,
+    * common) rows: derive the union size and emit the canonical pair
+    * columns, unordered.
     */
-  private def hotCorrected(common0: DataFrame, hotSh: DataFrame,
-      aDocs: Column, bDocs: Column): DataFrame =
-    common0.join(sharedShingles(common0.select("ia", "ib"),
-        hotSh.filter(aDocs), hotSh.filter(bDocs), "hcommon"),
-        Seq("ia", "ib"), "left_outer")
-      .withColumn("common", col("common0") + coalesce(col("hcommon"), lit(0L)))
-
-  /** Shared J >= 0.9 integer-threshold tail: attach per-doc shingle counts,
-    * derive the union size, filter, and emit the canonical sorted pair
-    * columns. One implementation for every exact-Jaccard builder.
-    */
-  private def jaccardThresholdTail(withCommon: DataFrame,
-      counts: DataFrame): DataFrame =
-    withCommon
-      .join(counts.select(col("doc_id").as("ia"), col("c").as("ca")), "ia")
-      .join(counts.select(col("doc_id").as("ib"), col("c").as("cb")), "ib")
-      .withColumn("n_union", col("ca") + col("cb") - col("common"))
+  private def jaccardThresholdTail(p: DataFrame): DataFrame =
+    p.withColumn("n_union", col("ca") + col("cb") - col("common"))
       .filter(col("common") * 10 >= col("n_union") * 9)
       .select(col("ia"), col("ib"), col("common"), col("n_union"))
-      .orderBy("ia", "ib")
 
   /** Connected components over an (ia, ib) pair frame by min-label
     * propagation to FIXPOINT: every vertex ends labeled with the smallest
@@ -1090,9 +1089,10 @@ object TrainingOps {
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .orderBy("keep_id")
     },
-    "dedup_ngram" -> { (s, dir) => dedupNgram(s, dir, ShingleFreqCap) },
+    "dedup_ngram" -> { (s, dir) =>
+      dedupNgram(s, dir, ShingleFreqCap).orderBy("ia", "ib") },
     "dedup_incremental" -> { (s, dir) =>
-      dedupIncremental(s, dir, ShingleFreqCap) },
+      dedupIncremental(s, dir, ShingleFreqCap).orderBy("ia", "ib") },
     "dedup_clusters" -> { (s, dir) => dedupClusters(s, dir) },
     // the full curation funnel AS ONE DECLARATIVE PLAN — what the
     // training-data ops exist for: quality-filter (drop junk), hold out
@@ -1125,41 +1125,14 @@ object TrainingOps {
     "dedup_minhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val dsh = docShingles(s, dir)
-      val sig = minhashSigs(dsh)
-      val candidates = minhashCandidates(sig)
-      // signature prefilter before the exact-Jaccard join (recall budget in
-      // the MinHashPrefilterMin doc): slashes the verify join's input;
-      // match_count is the codegen'd form of the zip_with position count
-      val prefiltered = candidates
-        .join(sig.select(col("doc_id").as("ia"), col("sig").as("sa")), "ia")
-        .join(sig.select(col("doc_id").as("ib"), col("sig").as("sb")), "ib")
-        .filter(GraftFunctions.match_count(col("sa"), col("sb"))
-          >= MinHashPrefilterMin)
-        .select("ia", "ib")
-      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered)
+      verifiedPairs(dsh, minhashPrefiltered(minhashSigs(dsh)))
+        .orderBy("ia", "ib")
     },
     "dedup_simhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val dsh = docShingles(s, dir)
-      // 9 independent 64-bit simhashes in one token pass (one base hash per
-      // shingle, mixed per signature), sliced into 36 bands of 16 bits.
-      // the plan references the 576-bit multi-simhash FOUR times (band
-      // keys, probe keys, both prefilter sides) — persist so it runs once
-      // per corpus (one cache entry via CacheManager plan-dedup;
-      // releaseCaches drops it with the shingle cache)
-      val sig = simhashSigs(dsh)
-      val candidates = simhashCandidates(sig)
-      // Hamming prefilter over all 576 signature bits BEFORE the distinct
-      // (cutoff budget in the SimHashSigs doc): the prefilter rejects
-      // ~99.8% of band collisions, so deduplicating the survivors is free,
-      // while distinct-first shuffled the full collision set
-      val prefiltered = candidates
-        .join(sig.select(col("doc_id").as("ia"), col("sigs").as("sa")), "ia")
-        .join(sig.select(col("doc_id").as("ib"), col("sigs").as("sb")), "ib")
-        .filter(GraftFunctions.hamming_total(col("sa"), col("sb"))
-          <= SimHashHammingMax)
-        .select("ia", "ib").distinct()
-      verifiedPairs(explodedIndex(dsh), shingleCounts(dsh), prefiltered)
+      verifiedPairs(dsh, simhashPrefiltered(simhashSigs(dsh)))
+        .orderBy("ia", "ib")
     },
     "dedup_embed" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)

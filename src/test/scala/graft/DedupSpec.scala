@@ -11,17 +11,23 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *
   * The binding-cap test: at sf0.001 the shingle document-frequency
   * histogram reaches df=9, so cap=5 actually drops shingles from candidate
-  * generation — the hot-intersection correction join must restore EXACT
-  * Jaccard counts, making the capped result identical to the effectively
-  * uncapped one (every sf0.001 true pair also shares df<=5 shingles, so
-  * the documented all-hot recall exception does not trigger here).
+  * generation — the exact verify over the uncapped shingle arrays must
+  * restore EXACT Jaccard counts, making the capped result identical to the
+  * effectively uncapped one (every sf0.001 true pair also shares df<=5
+  * shingles, so the documented all-hot recall exception does not trigger
+  * here).
   */
 class DedupSpec extends SparkSpec {
 
+  /** Collected (ia, ib, common, n_union) rows, sorted on (ia, ib): the
+    * builders' pair frames are unordered.
+    */
+  private def sortedRows(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq.sortBy(p => (p._1, p._2))
+
   private def pairs(cap: Int) =
-    graft.ops.TrainingOps.dedupNgram(spark, sf("0.001"), cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
+    sortedRows(graft.ops.TrainingOps.dedupNgram(spark, sf("0.001"), cap))
 
   test("ngram cap correction: binding cap returns exact uncapped Jaccard") {
     val uncapped = pairs(1000000)
@@ -30,9 +36,7 @@ class DedupSpec extends SparkSpec {
   }
 
   private def incPairs(cap: Int) =
-    graft.ops.TrainingOps.dedupIncremental(spark, sf("0.001"), cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
+    sortedRows(graft.ops.TrainingOps.dedupIncremental(spark, sf("0.001"), cap))
 
   test("incremental dedup: equals the full pair set restricted to cross-class") {
     val inc = incPairs(1000000)
@@ -193,6 +197,56 @@ class DedupSpec extends SparkSpec {
     val ngram = ids("dedup_ngram")
     assert(ids("dedup_minhash") === ngram)
     assert(ids("dedup_simhash") === ngram)
+  }
+
+  test("dedup_ngram's pair frame is unsorted at any cap") {
+    // the sort belongs to the dedup_ngram query: dedup_clusters and
+    // text_curate read the pair frame through connectedComponents, which
+    // ignores row order
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    Seq(graft.ops.TrainingOps.ShingleFreqCap, 5).foreach { cap =>
+      val plan = graft.ops.TrainingOps.dedupNgram(spark, sf("0.001"), cap)
+        .queryExecution.optimizedPlan
+      assert(plan.collect { case s: Sort => s }.isEmpty, s"Sort at cap $cap")
+    }
+  }
+
+  test("the LSH queries explode band and probe keys, never the shingle arrays") {
+    // the exact verify intersects the cached arrays instead of joining an
+    // exploded shingle index
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    Seq("dedup_minhash", "dedup_simhash").foreach { q =>
+      val gens = graft.ops.TrainingOps.queries(q)(spark, sf("0.001"))
+        .queryExecution.optimizedPlan.collect { case g: Generate => g.generator }
+      assert(gens.nonEmpty, s"$q explodes its band keys")
+      gens.foreach(g => assert(
+        !g.children.exists { case a: Attribute => a.name == "sh"; case _ => false },
+        s"$q: $g"))
+    }
+  }
+
+  test("docs with no shingles never pair") {
+    import spark.implicits._
+    // docs under 3 tokens have empty shingle arrays: all-Long.MaxValue
+    // MinHash signatures and zero SimHash signatures, so both LSH paths
+    // make them a candidate pair that passes the signature prefilter;
+    // sharing no shingle, they must not pass the exact verify as 0 >= 0
+    val dir = java.nio.file.Files.createTempDirectory("graft_noshingle").toString
+    val words = (1 to 30).map(i => s"word$i")
+    Seq(
+      1L -> "hello",
+      2L -> "two tokens",
+      3L -> words.mkString(" "), // 28 shingles
+      4L -> (words :+ "tail").mkString(" ") // the same 28 plus one
+    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    try Seq("dedup_minhash", "dedup_simhash", "dedup_ngram").foreach { q =>
+      assert(sortedRows(graft.ops.TrainingOps.queries(q)(spark, dir)) ===
+        Seq((3L, 4L, 28L, 29L)), q)
+    } finally {
+      graft.ops.TrainingOps.releaseCaches(spark, dir)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("dedup_substring: exact 8-token window boundary semantics") {

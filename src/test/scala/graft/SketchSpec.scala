@@ -147,6 +147,27 @@ class SketchSpec extends SparkSpec {
     assert(buildTriples() === cents)
   }
 
+  test("nearest_cell: equal centroid tables compare equal and print the same") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions.NearestCell
+    val v = Literal.create(Array(1f, 0f), ArrayType(FloatType))
+    // built separately: equal values, distinct array instances
+    def table() = Array(Array(1f, 2f), Array.emptyFloatArray, Array(3f, 4f))
+    val (a, b) = (NearestCell(v, table()), NearestCell(v, table()))
+    assert(a === b)
+    assert(a.hashCode === b.hashCode)
+    assert(a.toString === b.toString)
+    assert(!a.toString.contains("[F@"), a.toString)
+    assert(a !== NearestCell(v, Array(Array(1f, 2f), Array.emptyFloatArray)))
+    // two builds of the ann_ivf plan differ only in expression ids
+    def ivfPlan() = graft.ops.TrainingOps.annIvf(spark, sf("0.01"))
+      .queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "#x")
+    val plan = ivfPlan()
+    assert(plan.contains("nearest_cell"))
+    assert(ivfPlan() === plan)
+  }
+
   test("ivf index dir is keyed by a corpus fingerprint, not just the path") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(sf("0.001"), "embeddings.parquet")
