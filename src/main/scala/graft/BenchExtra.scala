@@ -55,9 +55,6 @@ object BenchExtra {
     val json = s"""{"queries":${js(warm)},"queries_cold":${js(cold)},""" +
       s""""total":${f"${warm.map(_._2).sum}%.3f"},""" +
       s""""cold_total":${f"${cold.map(_._2).sum}%.3f"},"sf":"$sfDir"}"""
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("BENCH"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH/last_benchextra.json"), json + "\n")
     spark.sparkContext.setLogLevel("OFF")
     println(json)
     spark.stop()

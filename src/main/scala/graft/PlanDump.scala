@@ -50,13 +50,14 @@ object PlanDump {
       "- `PushedFilters` + pruned `ReadSchema` on the parquet scans\n" +
       "- `BroadcastHashJoin` on every dimension/lookup join (fact side never shuffled)\n" +
       "- wide `WholeStageCodegen` spans over the parse stage (no UDF breaks)\n" +
-      "- exactly one `Exchange` in the pipeline transform (the salted fan-out)\n\n"
+      "- exactly one `Exchange` in the pipeline transform (the salted fan-out)\n" +
+      "- a parse query's `Sort` over the scan, and the parse above it\n\n"
     Seq("q_agg_pricing", "q_join_broadcast", "pipe_e2e_counts",
       "dedup_minhash", "text_keywords", "embed_quantize",
       "q_histogram", "q_join_salted", "q_zorder", "dedup_substring",
       "q_heavy_hitters", "q_cdc_upsert", "text_lm_score", "q_funnel",
       "q_join_bucketed", "q_retention", "q_alerts", "text_bpe_apply",
-      "q_scd2", "q_percentiles", "dedup_simhash")
+      "q_scd2", "q_percentiles", "dedup_simhash", "pipe_syslog_parse")
       .foreach(n => out ++= s"## $n\n\n```\n" + plan(n) + "\n```\n")
     Files.writeString(Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${out.length} chars)")

@@ -7,7 +7,7 @@ import graft.functions.GraftFunctions.{logfmt_parse_fortinet, regexp_groups}
 /** The compiled pattern dictionary — the Spark-native replacement for the
   * reference's per-row Python transform (log-ship/src/plugins/python.rs) and
   * native parsers (syslog.rs, fortinet.rs, logfmt.rs). Each entry compiles a
-  * fixed parse recipe to a Catalyst `Column` tree (`regexp_extract`, `split`,
+  * fixed parse recipe to a Catalyst `Column` tree (`regexp_groups`,
   * `try_to_timestamp`, casts, the logfmt kernel calls) so the
   * whole parse stage runs inside WholeStageCodegen with no per-row UDF — the
   * exact optimization the reference docs beg operators to do by hand
@@ -27,6 +27,11 @@ import graft.functions.GraftFunctions.{logfmt_parse_fortinet, regexp_groups}
   * (fortinet.rs:105 `.timestamp()`). Unparseable rows are tagged
   * `malformed`, never dropped silently (warn+drop+count policy,
   * file.rs:142-147 — here: quarantine sink + count).
+  *
+  * The public surface is `Formats`, `parse` (the format tag and `fields`
+  * map the pipeline and every single-format parse query read) and
+  * `fortinetTransform` (the fortinet route transform, whose no-'>' lines
+  * get the loose fallback). The regexes and extractors are private to them.
   */
 object PatternDictionary {
 
@@ -45,49 +50,50 @@ object PatternDictionary {
   // regex executions on NON-matching formats, and the gates let a row skip
   // most of the dictionary in a few byte comparisons.
 
-  def isFortinet(text: Column): Column =
+  private def isFortinet(text: Column): Column =
     text.startsWith("<") && text.rlike("^<\\d+>date=")
 
   // ---- regexes (shared by detect + extract) ----
 
   // RFC3164: <pri>MMM [d]d HH:mm:ss host app[pid]: msg   (syslog.rs:22-97)
-  val SyslogRe: String =
+  private val SyslogRe: String =
     "^<(\\d+)>([A-Z][a-z]{2} +\\d{1,2} \\d{2}:\\d{2}:\\d{2}) (\\S+) ([^:\\[\\s]+)(?:\\[(\\d+)\\])?: (.*)$"
 
   // RFC5424: <pri>1 TIMESTAMP HOSTNAME APP-NAME PROCID MSGID SD [MSG]
   // ('-' = nil; SD = '-' or one-or-more [id k="v" ...] blocks)
-  val Syslog5424Re: String =
+  private val Syslog5424Re: String =
     "^<(\\d+)>1 (\\S+) (\\S+) (\\S+) (\\S+) (\\S+) (-|(?:\\[[^\\]]*\\])+)(?: (.*))?$"
 
   // host ident user [ts] "METHOD path proto" status size "ref" "ua"
   // (web_servers.py:7 anchored combined_pattern + the split(' ', 3) prefix)
-  val CombinedRe: String =
+  private val CombinedRe: String =
     "^(\\S+) (\\S+) (\\S+) \\[(.+)\\] \"([A-Z]+) (.+) (.+)\" (\\d+) (\\d+) \"(.+)\" \"(.+)\"$"
 
   // [ts] [module:level] [pid N(:tid M)?] ([client IP] )?message
   // (web_servers.py:54-89 split('] ', 3) recipe)
-  val ErrorRe: String =
+  private val ErrorRe: String =
     "^\\[([^\\]]+)\\] \\[([^\\]]+)\\] \\[pid (\\d+)(?::tid (\\d+))?\\] (?:\\[client ([^\\]]+)\\] )?(.*)$"
 
   // MMM [d]d HH:mm:ss host kernel: [sec.frac] message   (kern.py:13-33)
-  val KernRe: String =
+  private val KernRe: String =
     "^([A-Z][a-z]{2} +\\d{1,2} \\d{2}:\\d{2}:\\d{2}) (\\S+) kernel: \\[(\\d+)\\.(\\d+)\\] (.*)$"
 
   // exactly three space-separated tokens (test_input1.py:4-12)
-  val MiniRe: String = "^(\\S+) (\\S+) (\\S+)$"
+  private val MiniRe: String = "^(\\S+) (\\S+) (\\S+)$"
 
   // ---- per-format extractors ----
   // Guarded casts use try_* so rows that matched the cheap regex but carry
   // garbage in a group degrade to null instead of throwing under ANSI mode.
   //
   // EVALUATION DISCIPLINE (the engine's hottest code): every extractor (the
-  // *G names) takes the regexp_groups ARRAY column, and `parse` hoists
-  // each format's (gated) regex into ONE intermediate projection column
-  // that the format tag and all field extractions then read. Spark's
-  // codegen subexpression elimination does NOT look inside CASE WHEN
-  // branches, so the previous text-based composition re-executed the
-  // format regex once per extracted field (~9x per syslog row, measured in
-  // the generated code: 298 regex call sites, zero subexpressions).
+  // private *G names, called only by `parse`; `fortinetMap`, called by
+  // `parse` and `fortinetTransform`) takes regexp_groups ARRAY columns, and
+  // `parse` hoists each format's (gated) regex into ONE intermediate
+  // projection column that the format tag and all field extractions then
+  // read. Spark's codegen subexpression elimination does NOT look inside
+  // CASE WHEN branches, so the previous text-based composition re-executed
+  // the format regex once per extracted field (~9x per syslog row, measured
+  // in the generated code: 298 regex call sites, zero subexpressions).
   // CollapseProject keeps the hoisted aliases un-inlined because they are
   // non-trivial and multiply referenced, and both projections fuse into
   // the same WholeStageCodegen stage.
@@ -101,27 +107,27 @@ object PatternDictionary {
 
   private def emptyToNull(c: Column): Column = when(c =!= "", c)
 
-  /** fortinet: strip `<pri>`, logfmt the rest, stitch date+time into epoch
-    * seconds (fortinet.rs:73-105). Returns (t epoch-sec, kv map).
+  private val FortinetDateRe = "date=(\\S+)"
+  private val FortinetTimeRe = "(?:^|\\s)time=(\\S+)"
+
+  /** fortinet event (fortinet.rs:73-105): strip `<pri>`, logfmt the rest,
+    * and set `t` to the date+time stitch in epoch seconds, read off the
+    * date=/time= group arrays `gd`/`gt`. merge_maps (not map_concat): a
+    * line carrying a literal t= logfmt key is overwritten by the stitched
+    * timestamp instead of throwing under Spark's default DUPLICATED_MAP_KEY
+    * policy (insert-overwrite, fortinet.rs:105).
     */
-  def fortinetKv(text: Column): Column =
-    logfmt_parse_fortinet(text.substr(instr(text, ">") + 1, length(text)))
-
-  val FortinetDateRe = "date=(\\S+)"
-  val FortinetTimeRe = "(?:^|\\s)time=(\\S+)"
-
-  /** Stitched epoch-sec timestamp from hoisted date=/time= group arrays. */
-  def fortinetTG(gd: Column, gt: Column, runTsMillis: Long): Column = {
-    val d = emptyToNull(ga(gd, 1))
-    val t = emptyToNull(ga(gt, 1))
-    coalesce(
-      unix_timestamp(try_to_timestamp(concat_ws(" ", d, t), lit("yyyy-MM-dd HH:mm:ss"))),
+  private def fortinetMap(text: Column, gd: Column, gt: Column,
+      runTsMillis: Long): Column = {
+    val t = coalesce(
+      unix_timestamp(try_to_timestamp(
+        concat_ws(" ", emptyToNull(ga(gd, 1)), emptyToNull(ga(gt, 1))),
+        lit("yyyy-MM-dd HH:mm:ss"))),
       lit(runTsMillis / 1000L)) // Local::now() fallback -> injected run clock
+    mergeMaps(
+      logfmt_parse_fortinet(text.substr(instr(text, ">") + 1, length(text))),
+      map(lit("t"), t.cast("string")))
   }
-
-  def fortinetT(text: Column, runTsMillis: Long): Column =
-    fortinetTG(regexp_groups(text, FortinetDateRe),
-      regexp_groups(text, FortinetTimeRe), runTsMillis)
 
   /** The loose fallback event ({t: run clock, +message: line}). */
   private def looseMap(text: Column, runTsMillis: Long): Column =
@@ -136,12 +142,8 @@ object PatternDictionary {
     */
   def fortinetTransform(text: Column, runTsMillis: Long): Column =
     when(instr(text, ">") > 0,
-      // merge_maps (not map_concat): a line carrying a literal t= logfmt key
-      // must be overwritten by the stitched timestamp, not throw under
-      // Spark's default DUPLICATED_MAP_KEY policy (insert-overwrite,
-      // fortinet.rs:105)
-      mergeMaps(fortinetKv(text),
-        map(lit("t"), fortinetT(text, runTsMillis).cast("string"))))
+      fortinetMap(text, regexp_groups(text, FortinetDateRe),
+        regexp_groups(text, FortinetTimeRe), runTsMillis))
       .otherwise(looseMap(text, runTsMillis))
 
   /** RFC3164 year resolution: the wire format has no year; syslog_loose
@@ -169,10 +171,10 @@ object PatternDictionary {
   private val SeverityNames = Seq(
     "emerg", "alert", "crit", "err", "warning", "notice", "info", "debug")
 
-  def facilityName(pri: Column): Column =
+  private def facilityName(pri: Column): Column =
     get(array(FacilityNames.map(lit): _*), shiftright(pri, 3).cast("int"))
 
-  def severityName(pri: Column): Column =
+  private def severityName(pri: Column): Column =
     get(array(SeverityNames.map(lit): _*), (pri bitwiseAND lit(7L)).cast("int"))
 
   /** Merge `upper` into `lower` with upper winning on key collision (the
@@ -210,7 +212,7 @@ object PatternDictionary {
     * open-schema map here is map<string,string>, so proc_id is always a
     * string. Numeric-typed filtering on proc_id must cast downstream.
     */
-  def syslog3164MapG(gs: Column, defaultYear: Column, runTsMillis: Long): Column = {
+  private def syslog3164MapG(gs: Column, defaultYear: Column, runTsMillis: Long): Column = {
     val pri = try_cast_long(ga(gs, 1))
     val base = toMap(Seq(
       "t" -> coalesce(rfc3164Millis(ga(gs, 2), defaultYear),
@@ -229,7 +231,7 @@ object PatternDictionary {
     * flattening (last block's id under `id`, every block's params merged —
     * syslog.rs:70-78) + body JSON-merge. Nil timestamp → run clock.
     */
-  def syslog5424MapG(gs: Column, runTsMillis: Long): Column = {
+  private def syslog5424MapG(gs: Column, runTsMillis: Long): Column = {
     val pri = try_cast_long(ga(gs, 1))
     // RFC5424 allows fractional seconds (TIME-SECFRAC, up to 6 digits) and
     // the offset is Z or ±HH:MM; syslog_loose parses both. [.SSSSSS]
@@ -266,12 +268,12 @@ object PatternDictionary {
   /** `parse_syslog` off hoisted (gated) group columns, at least one of
     * them non-null: 5424 first, else 3164.
     */
-  def syslogMapG(g5424: Column, g3164: Column, defaultYear: Column,
+  private def syslogMapG(g5424: Column, g3164: Column, defaultYear: Column,
       runTsMillis: Long): Column =
     when(g5424.isNotNull, syslog5424MapG(g5424, runTsMillis))
       .otherwise(syslog3164MapG(g3164, defaultYear, runTsMillis))
 
-  def combinedColsG(gs: Column): Seq[(String, Column)] = {
+  private def combinedColsG(gs: Column): Seq[(String, Column)] = {
     val user = ga(gs, 3)
     val ref = ga(gs, 10)
     Seq(
@@ -289,7 +291,7 @@ object PatternDictionary {
     )
   }
 
-  def errorColsG(gs: Column): Seq[(String, Column)] = Seq(
+  private def errorColsG(gs: Column): Seq[(String, Column)] = Seq(
     // day-of-week is redundant for parsing and Spark's formatter rejects a
     // parse-side EEE; strip it (dateutil in web_servers.py:68 ignores it too)
     "t" -> unix_millis(try_to_timestamp(
@@ -302,14 +304,14 @@ object PatternDictionary {
     "message" -> ga(gs, 6)
   )
 
-  def kernColsG(gs: Column, defaultYear: Column): Seq[(String, Column)] = Seq(
+  private def kernColsG(gs: Column, defaultYear: Column): Seq[(String, Column)] = Seq(
     "t" -> rfc3164Millis(ga(gs, 1), defaultYear),
     "since_start_sec" -> try_cast_long(ga(gs, 3)),
     "since_start_ns" -> try_cast_long(ga(gs, 4)),
     "message" -> trim(ga(gs, 5))
   )
 
-  def miniColsG(gs: Column): Seq[(String, Column)] = Seq(
+  private def miniColsG(gs: Column): Seq[(String, Column)] = Seq(
     "method" -> ga(gs, 1),
     "path" -> ga(gs, 2),
     // status stays a string (test_input1.py:11 returns it unconverted)
@@ -323,7 +325,7 @@ object PatternDictionary {
   /** Cheap pre-regex gate of a config format (startsWith/contains AND-ed);
     * no gate declared = always probe (like the built-in mini entry).
     */
-  def specGate(spec: graft.model.FormatSpec, text: Column): Column =
+  private def specGate(spec: graft.model.FormatSpec, text: Column): Column =
     (spec.gatePrefix.map(p => text.startsWith(p)) ++
       spec.gateContains.map(c => text.contains(c)))
       .reduceOption(_ && _).getOrElse(lit(true))
@@ -332,7 +334,7 @@ object PatternDictionary {
     * identical discipline to the built-in *G extractors (the regex ran once
     * in the hoist stage; this only reads array slots).
     */
-  def specColsG(spec: graft.model.FormatSpec, gs: Column,
+  private def specColsG(spec: graft.model.FormatSpec, gs: Column,
       runTsMillis: Long): Seq[(String, Column)] = {
     val ts = spec.ts.map { t =>
       val raw = emptyToNull(ga(gs, t.group))
@@ -436,14 +438,8 @@ object PatternDictionary {
       case (acc, (sp, i)) => acc.when(col(s"_gx$i").isNotNull, sp.name)
     }.otherwise("malformed")
 
-    // merge_maps, not map_concat: stitched t overwrites a literal t= key
-    // instead of throwing (DUPLICATED_MAP_KEY) — see fortinetTransform
-    val fortinetMap = mergeMaps(
-      fortinetKv(text),
-      map(lit("t"),
-        fortinetTG(col("_gfd"), col("_gft"), runTsMillis).cast("string")))
-
-    val fieldsBuiltin = when(isf, fortinetMap)
+    val fieldsBuiltin = when(isf,
+        fortinetMap(text, col("_gfd"), col("_gft"), runTsMillis))
       .when(g5424.isNotNull || g3164.isNotNull,
         syslogMapG(g5424, g3164, year, runTsMillis))
       .when(gcomb.isNotNull, toMap(combinedColsG(gcomb)))

@@ -203,14 +203,15 @@ object Pipeline {
           s"${cfg.outputRoot}/_aggregates", Nil)
       },
       Future {
-        // per-sink throughput/lineage metrics table — the Spark form of the
-        // reference's rate logs (speed.rs:54-60, unix_socket.rs:82-85)
+        // per-sink lineage metrics table — the Spark form of the
+        // reference's rate logs (speed.rs:54-60, unix_socket.rs:82-85).
+        // wall_ms is the one write job's wall, shared by every sink, so no
+        // per-sink rate is derived from it.
         format.append(
           reports.map(r => (cfg.runId, r.sink, r.rows, r.buckets, r.skippedBuckets,
-              r.wallMs, if (r.wallMs == 0) 0.0 else r.rows * 1000.0 / r.wallMs,
-              observedTotal, observedMalformed))
+              r.wallMs, observedTotal, observedMalformed))
             .toDF("run_id", "sink", "rows", "buckets", "skipped_buckets",
-              "wall_ms", "rows_per_sec", "observed_total", "observed_malformed")
+              "wall_ms", "observed_total", "observed_malformed")
             .coalesce(1),
           s"${cfg.outputRoot}/_metrics")
       })

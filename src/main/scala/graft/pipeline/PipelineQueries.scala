@@ -25,8 +25,6 @@ object PipelineQueries {
 
   private def reg(s: SparkSession): Unit = GraftFunctions.ensureRegistered(s)
 
-  private val year2024 = lit("2024")
-
   /** Default pipeline config used by the e2e queries (output paths unused
     * by the pure transform).
     */
@@ -47,114 +45,88 @@ object PipelineQueries {
     ts = Some(graft.model.TsSpec(5, "yyyy-MM-dd HH:mm:ss")),
     gateContains = Some(" /"))
 
-  private def fmtQuery(line: Column, cols: Seq[(String, Column)])(
-      s: SparkSession, dir: String): DataFrame = {
-    reg(s)
-    Transcripts.withText(s, dir, line)
-      .select(col("event_id") +: cols.map { case (n, c) => c.as(n) }: _*)
-      .orderBy("event_id")
-  }
-
-  /** fmtQuery with the shared parse result HOISTED into one intermediate
-    * column: codegen CSE does not dedupe repeated subtrees, so extracting
-    * several fields from a parsed map directly re-built the whole map (and
-    * re-ran its regexes) once per field. CollapseProject keeps the hoisted
-    * alias because it is non-trivial and multiply referenced.
+  /** A single-format parse query: `line` over the events, sorted by
+    * event_id, then `parse` adds a `fields` map that each output column
+    * reads. The sort sits UNDER the parse: the range partitioner's two
+    * sampling jobs and the shuffle map stage each evaluate whatever lies
+    * below the sort, so a sort over the parse ran it three times, each in
+    * one task. A projection over a global sort keeps the sort's order, and
+    * event_id is unique, so the rows and their order are the same.
+    * `fields` stays one column that every output reads (CollapseProject
+    * does not inline a non-trivial alias referenced more than once), so
+    * the map is built once per row.
     */
-  private def fmtQueryHoisted(line: Column, shared: Column,
-      cols: Column => Seq[(String, Column)])(
-      s: SparkSession, dir: String): DataFrame = {
-    reg(s)
-    Transcripts.withText(s, dir, line)
-      .withColumn("_m", shared)
-      .select(col("event_id") +:
-        cols(col("_m")).map { case (n, c) => c.as(n) }: _*)
-      .orderBy("event_id")
-  }
+  private def parseQuery(line: Column, parse: DataFrame => DataFrame,
+      cols: Seq[(String, Column)]): (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      reg(s)
+      parse(Transcripts.withText(s, dir, line).orderBy("event_id"))
+        .select(col("event_id") +: cols.map { case (n, c) => c.as(n) }: _*)
+    }
 
-  private def mapCols(kv: Column, names: Seq[String]): Seq[(String, Column)] =
-    names.map(n => n -> try_element_at(kv, lit(n)))
+  /** The pipeline's own parse, whose `fields` map the dictionary queries
+    * read.
+    */
+  private def dictionary(df: DataFrame): DataFrame =
+    PatternDictionary.parse(df, RunTsMillis)
+
+  private def field(k: String): Column = try_element_at(col("fields"), lit(k))
+
+  private def longField(k: String): Column = field(k).try_cast("long")
+
+  private def fields(names: String*): Seq[(String, Column)] =
+    names.map(n => n -> field(n))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // full route-transform semantics incl. the no-'>' parse_syslog fallback
     // (fortinet.rs:73-111): 1/5 of the input lines carry no pri and land in
     // the loose fallback {t: run-clock millis, +message: raw line}
-    "pipe_fortinet_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.fortinetRouteLine,
-        PatternDictionary.fortinetTransform(col("text"), RunTsMillis),
-        kv => Seq("t" -> try_element_at(kv, lit("t")).try_cast("long")) ++
-          mapCols(kv, Seq("devname", "subtype", "vd", "action")) ++
-          Seq(
-            "ftype" -> try_element_at(kv, lit("type")),
-            "usr" -> try_element_at(kv, lit("user")),
-            "srcport" -> try_element_at(kv, lit("srcport")).try_cast("long"),
-            "msg" -> try_element_at(kv, lit("msg")),
-            "pmsg" -> try_element_at(kv, lit("+message"))))(s, dir)
-    },
+    "pipe_fortinet_parse" -> parseQuery(Transcripts.fortinetRouteLine,
+      _.withColumn("fields",
+        PatternDictionary.fortinetTransform(col("text"), RunTsMillis)),
+      Seq("t" -> longField("t")) ++
+        fields("devname", "subtype", "vd", "action") ++
+        Seq("ftype" -> field("type"), "usr" -> field("user"),
+          "srcport" -> longField("srcport"), "msg" -> field("msg"),
+          "pmsg" -> field("+message"))),
     // full parse_syslog fidelity (syslog.rs:22-97): RFC3164 + RFC5424,
     // named facility/severity, msg_id, SD id+param flattening, JSON message
-    // bodies merged, nil/unparseable timestamp -> run clock. Read off the
-    // pipeline's own parse, whose hoisted group arrays run each syslog
-    // regex once per row.
-    "pipe_syslog_parse" -> { (s, dir) =>
-      reg(s)
-      def f(k: String) = try_element_at(col("fields"), lit(k))
-      val cols = Seq(
-        "t" -> f("t").try_cast("long"),
-        "facility" -> f("facility"),
-        "severity" -> f("severity"),
-        "hostname" -> f("hostname"),
-        "app_name" -> f("app_name"),
-        "proc_id" -> f("proc_id"),
-        // the reference's int-or-string proc_id typing (syslog.rs:55-64)
-        // recovered as a typed column from the all-string open map
-        // (the documented third knowing deviation, PatternDictionary)
-        "proc_id_int" -> f("proc_id").try_cast("long"),
-        "msg_id" -> f("msg_id"),
-        "sd_id" -> f("id"),
-        "iut" -> f("iut"),
-        "event_source" -> f("eventSource"),
-        "etype" -> f("etype"),
-        "k_merged" -> f("k"),
-        "message" -> f("+message"))
-      PatternDictionary.parse(
-          Transcripts.withText(s, dir, Transcripts.syslogLine), RunTsMillis)
-        .select(col("event_id") +: cols.map { case (n, c) => c.as(n) }: _*)
-        .orderBy("event_id")
-    },
-    "pipe_combined_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.combinedLine,
-        graft.functions.GraftFunctions.regexp_groups(
-          col("text"), PatternDictionary.CombinedRe),
-        gs => PatternDictionary.combinedColsG(gs).map {
-          case ("user", c) => ("usr", c)
-          case ("size", c) => ("size_b", c)
-          case other       => other
-        })(s, dir)
-    },
-    "pipe_error_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.errorLine,
-        graft.functions.GraftFunctions.regexp_groups(
-          col("text"), PatternDictionary.ErrorRe),
-        gs => PatternDictionary.errorColsG(gs))(s, dir)
-    },
-    "pipe_kern_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.kernLine,
-        graft.functions.GraftFunctions.regexp_groups(
-          col("text"), PatternDictionary.KernRe),
-        gs => PatternDictionary.kernColsG(gs, year2024))(s, dir)
-    },
-    "pipe_json_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.jsonLine,
-        graft.functions.GraftFunctions.json_flat_map(col("text")),
-        kv => mapCols(kv, Seq("etype", "k")))(s, dir)
-    },
-    "pipe_mini_parse" -> { (s, dir) =>
-      fmtQueryHoisted(Transcripts.miniLine,
-        graft.functions.GraftFunctions.regexp_groups(
-          col("text"), PatternDictionary.MiniRe),
-        gs => PatternDictionary.miniColsG(gs))(s, dir)
-    },
+    // bodies merged, nil/unparseable timestamp -> run clock
+    "pipe_syslog_parse" -> parseQuery(Transcripts.syslogLine, dictionary,
+      Seq("t" -> longField("t")) ++
+        fields("facility", "severity", "hostname", "app_name", "proc_id") ++
+        Seq(
+          // the reference's int-or-string proc_id typing (syslog.rs:55-64)
+          // recovered as a typed column from the all-string open map
+          // (the documented third knowing deviation, PatternDictionary)
+          "proc_id_int" -> longField("proc_id"),
+          "msg_id" -> field("msg_id"),
+          "sd_id" -> field("id"),
+          "iut" -> field("iut"),
+          "event_source" -> field("eventSource"),
+          "etype" -> field("etype"),
+          "k_merged" -> field("k"),
+          "message" -> field("+message"))),
+    "pipe_combined_parse" -> parseQuery(Transcripts.combinedLine, dictionary,
+      Seq("host" -> field("host"), "usr" -> field("user"),
+        "t" -> longField("t")) ++
+        fields("method", "path", "proto") ++
+        Seq("status" -> longField("status"), "size_b" -> longField("size")) ++
+        fields("ref", "user_agent")),
+    "pipe_error_parse" -> parseQuery(Transcripts.errorLine, dictionary,
+      Seq("t" -> longField("t"), "level" -> field("level"),
+        "pid" -> longField("pid"), "tid" -> longField("tid")) ++
+        fields("client", "message")),
+    // kern.log carries no year: the dictionary takes the run clock's (2024)
+    "pipe_kern_parse" -> parseQuery(Transcripts.kernLine, dictionary,
+      Seq("t" -> longField("t"), "since_start_sec" -> longField("since_start_sec"),
+        "since_start_ns" -> longField("since_start_ns"),
+        "message" -> field("message"))),
+    "pipe_json_parse" -> parseQuery(Transcripts.jsonLine, dictionary,
+      fields("etype", "k")),
+    // status stays a string (test_input1.py:11 returns it unconverted)
+    "pipe_mini_parse" -> parseQuery(Transcripts.miniLine, dictionary,
+      fields("method", "path", "status")),
     // the reference's add-a-format-WITHOUT-RECOMPILING workflow
     // (main.rs:115-137 name->factory registry + config_file.rs:45-77 TOML
     // bindings) as config data: a mini variant with a numeric duration and
@@ -177,25 +149,18 @@ object PipelineQueries {
       Pipeline.transform(env, cfg, Enrich.defaultLookup(s))
         .select(col("turn_idx").cast("long").as("event_id"), col("format"),
           col("sink"),
-          try_element_at(col("fields"), lit("t")).try_cast("long").as("t"),
-          try_element_at(col("fields"), lit("method")).as("method"),
-          try_element_at(col("fields"), lit("path")).as("path"),
-          try_element_at(col("fields"), lit("status")).try_cast("long").as("status"),
-          try_element_at(col("fields"), lit("duration_ms")).try_cast("long")
-            .as("duration_ms"))
+          longField("t").as("t"), field("method").as("method"),
+          field("path").as("path"), longField("status").as("status"),
+          longField("duration_ms").as("duration_ms"))
         .orderBy("event_id")
     },
-    "pipe_logfmt" -> { (s, dir) =>
-      reg(s)
-      import graft.functions.GraftFunctions.logfmt_parse
-      val line = concat(
-        lit("a="), col("event_id"), lit(" b=\""), col("event_type"),
-        lit(" x=1\" c=\"\" d"))
-      val kv = logfmt_parse(col("text"))
-      fmtQuery(line, mapCols(kv, Seq("a", "b", "c")) :+
-        ("d_is_null_value" -> (map_contains_key(kv, lit("d")) &&
-          try_element_at(kv, lit("d")).isNull)))(s, dir)
-    },
+    "pipe_logfmt" -> parseQuery(
+      concat(lit("a="), col("event_id"), lit(" b=\""), col("event_type"),
+        lit(" x=1\" c=\"\" d")),
+      _.withColumn("fields", GraftFunctions.logfmt_parse(col("text"))),
+      fields("a", "b", "c") :+
+        ("d_is_null_value" -> (map_contains_key(col("fields"), lit("d")) &&
+          field("d").isNull))),
     "pipe_insert_field" -> { (s, dir) =>
       reg(s)
       val base = map(lit("etype"), col("event_type"))
@@ -305,8 +270,7 @@ object PipelineQueries {
       val t = Transcripts.transcripts(s, dir)
       Pipeline.transform(t, e2eConfig, Enrich.defaultLookup(s))
         .select(col("conv_id"), col("turn_idx"), col("sink"), col("format"),
-          try_element_at(col("fields"), lit("t")).try_cast("long").as("t"),
-          col("role_kind"), col("tool_category"))
+          longField("t").as("t"), col("role_kind"), col("tool_category"))
         .orderBy("turn_idx")
     },
     "pipe_e2e_counts" -> { (s, dir) =>

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
 
 import graft.model.{FieldSpec, FormatSpec, PipelineConfig, SinkRule, TsSpec}
@@ -94,6 +95,26 @@ class DictionarySpec extends SparkSpec {
         s"$label: parse projection not in a WholeStageCodegen span:\n$plan")
       assert("""(?m)^[\s:|+-]*Project \[""".r.findFirstIn(plan).isEmpty,
         s"$label: an un-fused Project survives in:\n$plan")
+    }
+  }
+
+  test("the parse queries sort their input, not the parse") {
+    // a parse under the sort runs in the range partitioner's two sampling
+    // jobs and in the shuffle map stage: three times instead of once
+    def isParse(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.prettyName == "regexp_groups" || e.prettyName == "json_flat_map" ||
+        e.prettyName.startsWith("logfmt_parse")
+    Seq("pipe_fortinet_parse", "pipe_syslog_parse", "pipe_combined_parse",
+      "pipe_error_parse", "pipe_kern_parse", "pipe_json_parse",
+      "pipe_mini_parse", "pipe_logfmt").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, sf("0.001"))
+        .queryExecution.optimizedPlan
+      val sorts = plan.collect { case s: Sort => s }
+      assert(sorts.size === 1, s"$q: expected one Sort in:\n$plan")
+      assert(!sorts.head.exists(_.expressions.exists(_.exists(isParse))),
+        s"$q: a parse call runs under the Sort in:\n$plan")
+      assert(plan.exists(_.expressions.exists(_.exists(isParse))),
+        s"$q: no parse call in:\n$plan")
     }
   }
 }

@@ -111,7 +111,10 @@ class PipelineSpec extends SparkSpec {
     TranscriptGen.transcripts(spark, N).write.parquet(in)
     val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
     def observed(root: String): (Long, Long) = {
-      val rows = spark.read.parquet(s"$root/_metrics")
+      val metrics = spark.read.parquet(s"$root/_metrics")
+      assert(metrics.columns.toSet === Set("run_id", "sink", "rows", "buckets",
+        "skipped_buckets", "wall_ms", "observed_total", "observed_malformed"))
+      val rows = metrics
         .select("observed_total", "observed_malformed").distinct().collect()
       assert(rows.length === 1, "one pair of counters per run")
       (rows(0).getLong(0), rows(0).getLong(1))
