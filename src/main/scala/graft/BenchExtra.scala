@@ -9,7 +9,11 @@ import org.apache.spark.sql.SparkSession
   * comparable to the driver's BENCH_r*.json without paying a full bench per
   * iteration. Bench.scala itself stays frozen; this main only adds
   * measurement. Optional args: query-name substrings to restrict the sweep.
-  * Prints one JSON line {"queries": {...}, "queries_cold": {...}}.
+  * Prints one JSON line {"queries": {...}, "queries_cold": {...},
+  * "queries_full": {...}}: `queries` and `queries_cold` time `count()`,
+  * which lets Catalyst prune every column it does not need (a parse query
+  * is timed as a scan); `queries_full` is one more warm pass that writes
+  * each query through the `noop` sink, so every output column is computed.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -30,13 +34,14 @@ object BenchExtra {
     val wanted = args.toSeq
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => wanted.isEmpty || wanted.exists(n.contains))
-    def timeQuery(name: String): Double = {
+    def time(name: String)(run: org.apache.spark.sql.DataFrame => Unit): Double = {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
+      try run(SparkEntry.queries(name)(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bx] $name FAILED: $e") }
       (System.nanoTime() - t0) / 1e9
     }
+    def timeQuery(name: String): Double = time(name)(_.count())
     ScaleBench.awaitQuiet(60000, 2.5)
     val cold = names.map(n => n -> timeQuery(n))
     val coldByName = cold.toMap
@@ -49,10 +54,13 @@ object BenchExtra {
       } else t
       n -> t2
     }
+    val full = names.map(n =>
+      n -> time(n)(_.write.format("noop").mode("overwrite").save()))
     graft.ops.TrainingOps.releaseCaches(spark, sfDir)
     def js(xs: Seq[(String, Double)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val json = s"""{"queries":${js(warm)},"queries_cold":${js(cold)},""" +
+      s""""queries_full":${js(full)},""" +
       s""""total":${f"${warm.map(_._2).sum}%.3f"},""" +
       s""""cold_total":${f"${cold.map(_._2).sum}%.3f"},"sf":"$sfDir"}"""
     spark.sparkContext.setLogLevel("OFF")

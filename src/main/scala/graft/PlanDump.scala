@@ -51,7 +51,7 @@ object PlanDump {
       "- `BroadcastHashJoin` on every dimension/lookup join (fact side never shuffled)\n" +
       "- wide `WholeStageCodegen` spans over the parse stage (no UDF breaks)\n" +
       "- exactly one `Exchange` in the pipeline transform (the salted fan-out)\n" +
-      "- a parse query's `Sort` over the scan, and the parse above it\n\n"
+      "- no presentation `Sort` at any plan's root\n\n"
     Seq("q_agg_pricing", "q_join_broadcast", "pipe_e2e_counts",
       "dedup_minhash", "text_keywords", "embed_quantize",
       "q_histogram", "q_join_salted", "q_zorder", "dedup_substring",

@@ -59,7 +59,6 @@ object GenericQueries {
           sum(floor(col("l_extendedprice") * 100)).cast("long").as("sum_price_cents"),
           sum(floor(col("l_discount") * 100)).cast("long").as("sum_disc_cents"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")
     },
     // broadcast dimension chain: nation/customer broadcast, orders never
     // shuffled until the final (small) aggregate.
@@ -73,26 +72,25 @@ object GenericQueries {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_orders"),
           sum(floor(col("o_totalprice"))).cast("long").as("total_floor"))
-        .orderBy("n_name")
     },
     // EXISTS via left-semi: orders having a high-quantity line
     "q_join_semi" -> { (s, dir) =>
       val orders = t(s, dir, "orders")
       val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
       orders.join(li, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select("o_orderkey", "o_orderstatus").orderBy("o_orderkey")
+        .select("o_orderkey", "o_orderstatus")
     },
     // NOT EXISTS via left-anti: customers with no orders
     "q_join_anti" -> { (s, dir) =>
       val cust = t(s, dir, "customer")
       val orders = t(s, dir, "orders")
       cust.join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name").orderBy("c_custkey")
+        .select("c_custkey", "c_name")
     },
     // full outer join (the join-matrix completion next to broadcast/
     // semi/anti): per-customer order rollup keeps BOTH customers with no
     // orders AND orders whose customer key misses the dimension; null
-    // keys surface as sentinel -1 so the presentation order is total.
+    // keys surface as sentinel -1.
     // Scale shape: the orders side pre-aggregates to O(custkeys) BEFORE
     // the join (never row-level fan-in), then a shuffle full-outer on the
     // key — partial-agg map-side combine keeps hot customers bounded.
@@ -107,7 +105,6 @@ object GenericQueries {
           coalesce(col("c_name"), lit("(none)")).as("name"),
           coalesce(col("n_orders"), lit(0L)).as("n_orders"),
           coalesce(col("total_floor"), lit(0L)).as("total_floor"))
-        .orderBy("custkey", "name")
     },
     // window: first 3 shipments per supplier under a total tie-break order
     "q_window_topn" -> { (s, dir) =>
@@ -117,7 +114,6 @@ object GenericQueries {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("l_suppkey"), col("rn"), col("l_orderkey"), col("l_linenumber"))
-        .orderBy("l_suppkey", "rn")
     },
     // running per-conversation turn number over the transcripts-shaped
     // events table (the ordering primitive of the north rule)
@@ -129,7 +125,6 @@ object GenericQueries {
           sum(floor(col("value") * 100)).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
         .select(col("user_id"), col("event_id"), col("turn_no"), col("running_cents"))
-        .orderBy("user_id", "event_id")
     },
     // global sort + limit (top-k with total tie-break)
     "q_topk_orders" -> { (s, dir) =>
@@ -145,13 +140,12 @@ object GenericQueries {
         .select("o_custkey")
       val low = orders.filter(col("o_orderpriority") === "5-LOW")
         .select("o_custkey")
-      urgent.distinct().except(low.distinct()).orderBy("o_custkey")
+      urgent.distinct().except(low.distinct())
     },
     "q_intersect" -> { (s, dir) =>
       val ev = t(s, dir, "events")
       ev.filter(col("event_type") === "click").select("user_id").distinct()
         .intersect(ev.filter(col("event_type") === "error").select("user_id").distinct())
-        .orderBy("user_id")
     },
     // rollup (grouping sets)
     "q_rollup" -> { (s, dir) =>
@@ -161,7 +155,6 @@ object GenericQueries {
         // rollup nulls -> sentinel: engines disagree on null sort order
         .select(coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
           coalesce(col("o_orderpriority"), lit("(all)")).as("priority"), col("n"))
-        .orderBy("status", "priority")
     },
     // scalar function surface (string/date/cast kernel used by the parse
     // stage, SURVEY.md §2.6 "Scalar functions")
@@ -177,7 +170,7 @@ object GenericQueries {
         concat_ws("|", col("p_brand"), col("p_type")).as("joined"),
         trim(lit("  x  ")).as("trimmed"),
         lpad(col("p_size").cast("string"), 4, "0").as("padded")
-      ).orderBy("p_partkey")
+      )
     },
     // sessionized (tumbling-hour) aggregation over the event stream — the
     // batch form of the Structured Streaming windowed count
@@ -186,7 +179,6 @@ object GenericQueries {
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
         .agg(count(lit(1)).as("n"),
           sum(floor(col("value") * 100)).cast("long").as("cents"))
-        .orderBy("user_id", "hour")
     },
     // gap-based sessionization via the native session_window (the
     // streaming-native operator, run in batch): a session closes when the
@@ -198,7 +190,6 @@ object GenericQueries {
           sum(floor(col("value") * 100)).cast("long").as("cents"))
         .select(col("user_id"), col("session_window.start").as("s_start"),
           col("n"), col("cents"))
-        .orderBy("user_id", "s_start")
     },
     // distinct count per group (exact; the reference's lineage counters)
     "q_count_distinct" -> { (s, dir) =>
@@ -206,7 +197,6 @@ object GenericQueries {
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_orderkey")).as("n_orders"),
           countDistinct(col("l_suppkey")).as("n_supp"))
-        .orderBy("l_returnflag")
     },
     // cube (all grouping-set combinations; rollup's big sibling)
     "q_cube" -> { (s, dir) =>
@@ -217,7 +207,6 @@ object GenericQueries {
         .select(coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
           coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
           col("n"), col("total_floor"))
-        .orderBy("status", "priority")
     },
     // explicit GROUPING SETS (the multi-dim agg family's third member —
     // the NON-hierarchical set {(a,b),(a),(b)} that neither rollup nor
@@ -243,7 +232,6 @@ object GenericQueries {
           coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
           coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
           col("n"), col("total_floor"))
-        .orderBy("lvl", "status", "priority")
     },
     // salted join — the skew rewrite as a first-class operator, pinned by
     // RESULT EQUALITY to the plain equi-join (the oracle runs the unsalted
@@ -272,7 +260,6 @@ object GenericQueries {
         .groupBy(col("c_nationkey").cast("long").as("nationkey"))
         .agg(count(lit(1)).as("n_orders"),
           sum(floor(col("o_totalprice"))).cast("long").as("total_floor"))
-        .orderBy("nationkey")
     },
     // Z-order layout key (space-filling curve) — the data-LAYOUT primitive
     // behind multi-dimensional min/max file pruning at 100 TB: interleave
@@ -305,7 +292,6 @@ object GenericQueries {
         .agg(count(lit(1)).as("n"),
           min(col("x")).as("min_x"), max(col("x")).as("max_x"),
           min(col("y")).as("min_y"), max(col("y")).as("max_y"))
-        .orderBy("tile")
     },
     // pivot with an EXPLICIT value list (omitting it costs an extra
     // distinct-collect pass over the fact table — never at 100 TB)
@@ -321,14 +307,12 @@ object GenericQueries {
           coalesce(col("`3-MEDIUM`"), lit(0L)).as("n_medium"),
           coalesce(col("`4-NOT SPECIFIED`"), lit(0L)).as("n_unspec"),
           coalesce(col("`5-LOW`"), lit(0L)).as("n_low"))
-        .orderBy("status")
     },
     // lateral one-to-many: posexplode (generator/flatMap surface)
     "q_explode" -> { (s, dir) =>
       t(s, dir, "part")
         .select(col("p_partkey"),
           posexplode(split(col("p_name"), " ")).as(Seq("pos", "word")))
-        .orderBy("p_partkey", "pos")
     },
     // as-of join: attach each event's most recent PRIOR click by the same
     // user. Spark expresses it as a running window over the partitioned
@@ -343,7 +327,6 @@ object GenericQueries {
           last(when(col("event_type") === "click", col("event_id")),
             ignoreNulls = true).over(w))
         .select(col("user_id"), col("event_id"), col("prev_click_id"))
-        .orderBy("user_id", "event_id")
     },
     // unpivot / melt (q_pivot's inverse — wide metrics to long (key,
     // metric, value) rows, the shape metric stores and training-feature
@@ -358,7 +341,6 @@ object GenericQueries {
           col("c_nationkey").cast("long").as("nationkey"))
         .unpivot(Array(col("c_custkey")),
           Array(col("acctbal_cents"), col("nationkey")), "metric", "val")
-        .orderBy("c_custkey", "metric")
     },
     // range (interval containment) join — the operator Spark itself has
     // no native plan for: a raw `e.ts BETWEEN w.start AND w.end` join
@@ -384,7 +366,6 @@ object GenericQueries {
       winB.join(evB, Seq("hb"))
         .filter(col("ts") >= col("w_start") && col("ts") < col("w_end"))
         .groupBy("window_id").agg(count(lit(1)).as("n_events"))
-        .orderBy("window_id")
     },
     // deterministic content-hash train/val split (every training pipeline
     // needs one that is reproducible across engines and runs): md5 of the
@@ -394,7 +375,6 @@ object GenericQueries {
         .select(col("doc_id"),
           when(substring(md5(col("text").cast("binary")), 1, 1) < "c", "train")
             .otherwise("val").as("split"))
-        .orderBy("doc_id")
     },
     // approximate distinct (HyperLogLog) vs exact, compared with INTEGER
     // threshold math: both engines' sketches differ, so the oracle-checked
@@ -407,7 +387,6 @@ object GenericQueries {
         .select(col("l_returnflag"), col("n_exact"),
           (abs(col("n_approx") - col("n_exact")) * 20 <= col("n_exact"))
             .as("approx_within_5pct"))
-        .orderBy("l_returnflag")
     },
     // time-series gap-fill (resample): dashboards need a row for EVERY
     // hour in the observed range, zero-filled where no events landed —
@@ -430,7 +409,6 @@ object GenericQueries {
       hours.join(hourly, Seq("h"), "left_outer")
         .select(col("h"), coalesce(col("n_raw"), lit(0L)).as("n"),
           col("n_raw").isNull.as("gap"))
-        .orderBy("h")
     },
     // fixed-width histogram (data profiling's other half next to
     // percentiles): bin = floor(value / width) — ONE exact-rounded IEEE
@@ -444,7 +422,6 @@ object GenericQueries {
         .groupBy(floor(col("o_totalprice") / 10000).cast("long").as("bin"))
         .agg(count(lit(1)).as("n"),
           sum(floor(col("o_totalprice"))).cast("long").as("sum_floor"))
-        .orderBy("bin")
     },
     // per-group percentiles, both forms a 100-TB engine needs: EXACT
     // discrete quantiles by rank selection (the value at ceil(p*n) —
@@ -495,7 +472,6 @@ object GenericQueries {
           col("p99"),
           (abs(col("a90") - col("p90")) <= lit(2.0d))
             .as("approx_within_2units"))
-        .orderBy("l_returnflag")
     },
     // heavy hitters (frequency > n/16) over an unbounded key domain via a
     // Misra-Gries sketch + exact verification — the two-pass plan that
@@ -543,7 +519,6 @@ object GenericQueries {
         .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") * 16 > lit(n))
         .select(col("k"), col("cnt"))
-        .orderBy("k")
     },
     // CDC upsert / MERGE INTO: compact a change batch (multi-version
     // updates, deletes, inserts) onto a base snapshot — the maintenance
@@ -594,7 +569,6 @@ object GenericQueries {
         .select(col("key"),
           coalesce(col("new_status"), col("status")).as("status"),
           coalesce(col("new_cents"), col("cents")).as("cents"))
-        .orderBy("key")
     },
     // ordered-sequence funnel (view -> click -> purchase per user): each
     // step is the FIRST qualifying event strictly after the previous
@@ -626,7 +600,6 @@ object GenericQueries {
           col("purchase_ts"),
           (lit(1) + col("click_ts").isNotNull.cast("int") +
             col("purchase_ts").isNotNull.cast("int")).as("steps"))
-        .orderBy("user_id")
     },
     // SCD-2 history build — the other consumer of a change log next to
     // q_cdc_upsert's compaction: per key, each surviving version becomes
@@ -667,7 +640,6 @@ object GenericQueries {
         .select(col("key"), col("op"), col("status"),
           col("version").as("valid_from"), col("valid_to"),
           col("valid_to").isNull.as("is_current"))
-        .orderBy("key", "valid_from")
     },
     // cohort retention: users bucketed by first-seen week, per
     // (cohort, activity-week) distinct-active counts — the product-
@@ -693,7 +665,6 @@ object GenericQueries {
         .select(col("cohort"), col("wk"),
           (datediff(col("wk"), col("cohort")) / 7).cast("long").as("week_no"),
           col("n_active"))
-        .orderBy("cohort", "wk")
     },
     // threshold alerting over the hourly error series (NON-empty hours
     // only — the ROWS frame spans the 3 preceding hours THAT HAD ERRORS,
@@ -717,7 +688,6 @@ object GenericQueries {
         .select(col("h"), col("n"), col("trail_sum"), col("trail_n"),
           (col("trail_n") > 0 &&
             col("n") * col("trail_n") > col("trail_sum") * 2).as("alert"))
-        .orderBy("h")
     },
     // co-located bucketed join: both sides stored CLUSTERED BY the join
     // key into the same bucket count, so the join plan has ZERO exchanges
@@ -732,7 +702,6 @@ object GenericQueries {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           sum(floor(col("o_totalprice"))).cast("long").as("total_floor"))
-        .orderBy("c_mktsegment")
     }
   )
 

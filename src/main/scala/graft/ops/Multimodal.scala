@@ -328,7 +328,6 @@ object Multimodal {
       decodeMeta(mediaTable(s, dir)).toDF()
         .select(col("doc_id"), col("kind"), col("n_bytes"),
           col("width"), col("height"), col("n_frames"), col("sample_rate"))
-        .orderBy("doc_id")
     },
     // frame-sample + resize plumbing: every ceil(n_frames/4)-th frame index
     // exploded to a row (<= 4 sampled frames per media item), with
@@ -347,7 +346,6 @@ object Multimodal {
           when(col("width") > 0, lit(224)).otherwise(lit(0)).as("out_w"),
           when(col("width") > 0, floor(col("height") * 224 / col("width")))
             .otherwise(lit(0)).cast("int").as("out_h"))
-        .orderBy("doc_id", "frame_idx")
     }
   )
 

@@ -126,6 +126,14 @@ object TrainingOps {
   private def stopHits(text: Column): Column =
     size(filter(tokens(text), t => t.isInCollection(Stopwords)))
 
+  /** The good/fair/junk quality bucket of a doc with `nTok` tokens and
+    * `hits` stopword hits (text_quality, the stratified sample and the
+    * curation funnel share it).
+    */
+  private def qualityBucket(nTok: Column, hits: Column): Column =
+    when(nTok.between(20, 200) && hits >= 1, "good")
+      .when(nTok >= 5, "fair").otherwise("junk")
+
   /** PII patterns, byte-identical in Java regex and DuckDB RE2 (ASCII
     * classes, `\b`, bounded repeats only) — queries and [[oracleSql]]
     * share these literals so redaction parity is by construction.
@@ -467,7 +475,6 @@ object TrainingOps {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("nid"))
-      .orderBy("qid", "rank")
   }
 
   /** IVF-flat approximate top-5, built and served in one plan (see the
@@ -564,7 +571,7 @@ object TrainingOps {
   /** n-gram Jaccard dedup with the stop-shingle cap over all pairs
     * (ia < ib); see [[cappedJaccard]]. `cap` is a parameter so DedupSpec
     * can pin the binding-cap path that the testdata never exercises. The
-    * result is unordered; the dedup_ngram query sorts it.
+    * result is unordered.
     */
   def dedupNgram(s: SparkSession, dir: String, cap: Int): DataFrame =
     cappedJaccard(s, dir, cap, lit(true), lit(true), col("ia") < col("ib"))
@@ -579,8 +586,7 @@ object TrainingOps {
     * work is O(batch x bucket), not O(corpus^2). Built by the same
     * [[cappedJaccard]] as dedupNgram, so the result is EXACT Jaccard at
     * J >= 0.9 with the same documented all-hot recall exception. Output:
-    * (ia=corpus doc, ib=batch doc, common, n_union), unordered; the
-    * dedup_incremental query sorts it.
+    * (ia=corpus doc, ib=batch doc, common, n_union), unordered.
     */
   def dedupIncremental(s: SparkSession, dir: String, cap: Int): DataFrame = {
     val isBatch = col("doc_id") % 10 === 7
@@ -724,7 +730,6 @@ object TrainingOps {
       dedupNgram(s, dir, ShingleFreqCap).select(col("ia"), col("ib")))
       .select(col("v").as("doc_id"), col("l").as("cluster"),
         (col("v") === col("l")).as("keep"))
-      .orderBy("doc_id")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- text analysis ----
@@ -740,7 +745,7 @@ object TrainingOps {
         size(regexp_extract_all(lower(col("text")), lit(bpe), lit(0)))
           .cast("long").as("n_bpe"),
         length(col("text")).cast("long").as("n_chars_len")
-      ).orderBy("doc_id")
+      )
     },
     "text_quality" -> { (s, dir) =>
       val nTok = size(tokens(col("text"))).cast("long")
@@ -752,9 +757,8 @@ object TrainingOps {
       docs(s, dir).select(
         col("doc_id"), nTok.as("n_tokens"), nPunct.as("n_punct"),
         nDigit.as("n_digit"), hits.as("stop_hits"),
-        when(nTok.between(20, 200) && hits >= 1, "good")
-          .when(nTok >= 5, "fair").otherwise("junk").as("quality")
-      ).orderBy("doc_id")
+        qualityBucket(nTok, hits).as("quality")
+      )
     },
     "text_langid" -> { (s, dir) =>
       val nTok = size(tokens(col("text"))).cast("long")
@@ -764,7 +768,7 @@ object TrainingOps {
         when(nTok === 0, "unk")
           .when(hits * 20 >= nTok, "en")
           .otherwise("other").as("lang_guess")
-      ).orderBy("doc_id")
+      )
     },
     // keyword extraction: per-doc top-5 terms by TF-IDF with a linear
     // (rational) idf — rank key tf/df is ONE IEEE division of two small
@@ -791,7 +795,6 @@ object TrainingOps {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 5)
         .select(col("doc_id"), col("rnk"), col("term"), col("tf"), col("df"))
-        .orderBy("doc_id", "rnk")
     },
     // training-window chunking: split each doc's token stream into
     // stride-overlapped windows (win=64, stride=48 — the canonical
@@ -799,10 +802,9 @@ object TrainingOps {
     // starts at every stride multiple < n_tokens and the tail chunk is
     // short (len = min(win, n - start)); indices are pure integer math so
     // both engines enumerate identical windows. Scale shape: one linear
-    // pass — sequence+explode is per-row generation (no shuffle at all
-    // until the final presentation sort), and chunk COUNT per doc is
-    // n/stride, so output is O(corpus tokens / stride) rows with no skew
-    // beyond doc length itself.
+    // pass — sequence+explode is per-row generation (no shuffle at all),
+    // and chunk COUNT per doc is n/stride, so output is O(corpus tokens /
+    // stride) rows with no skew beyond doc length itself.
     "text_chunk" -> { (s, dir) =>
       val win = 64
       val stride = 48
@@ -820,7 +822,6 @@ object TrainingOps {
             .as("first_tok"),
           try_element_at(col("tok"), (col("start") + col("len")).cast("int"))
             .as("last_tok"))
-        .orderBy("doc_id", "chunk_idx")
     },
     // int8 embedding quantization (the serving-side compression step a
     // 100-TB similarity index runs before shipping vectors): symmetric
@@ -844,7 +845,6 @@ object TrainingOps {
         .groupBy(col("vec_id"), col("scale"))
         .agg(count(lit(1)).as("dims"), sum(col("q")).as("sum_q"),
           min(col("q")).as("min_q"), max(col("q")).as("max_q"))
-        .orderBy("vec_id")
     },
     "text_fingerprint" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
@@ -852,7 +852,7 @@ object TrainingOps {
         col("doc_id"),
         fingerprint64(col("text")).as("fp"),
         fingerprint64(concat_ws(" ", tokens(col("text")))).as("fp_norm")
-      ).orderBy("doc_id")
+      )
     },
     // decontamination: flag training docs sharing n-grams with a
     // benchmark/eval set (here: the deterministic doc_id % 97 == 0 subset
@@ -873,7 +873,6 @@ object TrainingOps {
         .select(col("doc_id"),
           coalesce(col("n_hit"), lit(0L)).as("n_contaminated"),
           (coalesce(col("n_hit"), lit(0L)) >= 3).as("contaminated"))
-        .orderBy("doc_id")
     },
     // sequence packing: stream documents into fixed token-budget bins
     // (capacity 2048) — the curation step that turns a deduped corpus into
@@ -893,7 +892,6 @@ object TrainingOps {
         .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
         .select(col("doc_id"), col("shard"), col("n_tokens"),
           expr("cum_before div 2048").as("pack_id"))
-        .orderBy("doc_id")
     },
     // stratified sampling for curation: keep 100% of 'good', ~1/2 of
     // 'fair', ~1/16 of 'junk', selected by a DETERMINISTIC content hash
@@ -902,16 +900,14 @@ object TrainingOps {
     "text_sample_stratified" -> { (s, dir) =>
       val nTok = size(tokens(col("text"))).cast("long")
       val hits = stopHits(col("text")).cast("long")
-      val bucket = when(nTok.between(20, 200) && hits >= 1, "good")
-        .when(nTok >= 5, "fair").otherwise("junk")
       val h2 = substring(md5(col("text").cast("binary")), 1, 2)
       docs(s, dir)
-        .select(col("doc_id"), bucket.as("quality"), h2.as("h2"))
+        .select(col("doc_id"), qualityBucket(nTok, hits).as("quality"),
+          h2.as("h2"))
         .filter(col("quality") === "good" ||
           (col("quality") === "fair" && col("h2") < "80") ||
           (col("quality") === "junk" && col("h2") < "10"))
         .select(col("doc_id"), col("quality"))
-        .orderBy("doc_id")
     },
     // PII redaction: plant deterministic synthetic PII (emails, IPv4s,
     // phone extensions) into doc_id-keyed subsets — the corpus itself is
@@ -947,7 +943,6 @@ object TrainingOps {
           regexp_replace(regexp_replace(regexp_replace(col("t"),
             PiiEmailRe, "<EMAIL>"), PiiIpRe, "<IP>"), PiiPhoneRe, "<PHONE>")
             .as("redacted"))
-        .orderBy("doc_id")
     },
     // Within-document repetition (the Gopher-style repetition filter):
     // duplicate word-trigram fraction. n_grams counts ALL trigram slots
@@ -971,7 +966,7 @@ object TrainingOps {
         col("doc_id"), nGrams.as("n_grams"), nDistinct.as("n_distinct"),
         nDup.as("n_dup"),
         (nGrams > 0 && nDup * 10 >= nGrams * 3).as("repetitive")
-      ).orderBy("doc_id")
+      )
     },
     // Domain/source mixture planning: per-source token budgets plus the
     // deterministic keep-rate (ppm) that equalizes every source's token
@@ -994,7 +989,6 @@ object TrainingOps {
         .select(col("source"), col("n_docs"), col("n_tokens"),
           expr("min_tokens * 1000000 div n_tokens").cast("long")
             .as("keep_ppm"))
-        .orderBy("source")
     },
     // Corpus-familiarity scoring — the integer surrogate for n-gram LM
     // perplexity filtering (the CCNet/KenLM quality step): each doc is
@@ -1030,7 +1024,6 @@ object TrainingOps {
           when(col("n_bigrams").isNotNull,
             expr("familiarity div n_bigrams")).otherwise(lit(0L))
             .as("fam_per_gram"))
-        .orderBy("doc_id")
     },
     // BPE vocabulary training — learn the first 8 byte-pair merges from
     // the corpus (the tokenizer-training step of a data pipeline). The
@@ -1049,7 +1042,6 @@ object TrainingOps {
       import s.implicits._
       bpeTrain(s, dir)
         .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-        .orderBy("merge_rank")
     },
     // BPE application — segment every corpus word with the learned
     // merges: the production tokenize step, and the per-row HOT path the
@@ -1078,7 +1070,6 @@ object TrainingOps {
           coalesce(col("n_words"), lit(0L)).as("n_words"),
           coalesce(col("n_chars_tok"), lit(0L)).as("n_chars_tok"),
           coalesce(col("n_segments"), lit(0L)).as("n_segments"))
-        .orderBy("doc_id")
     },
     // ---- deduplication ----
     "dedup_exact" -> { (s, dir) =>
@@ -1087,12 +1078,11 @@ object TrainingOps {
       val in = d.unionAll(d.withColumn("doc_id", col("doc_id") + 100000))
       in.groupBy(md5(col("text").cast("binary")).as("text_md5"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-        .orderBy("keep_id")
     },
     "dedup_ngram" -> { (s, dir) =>
-      dedupNgram(s, dir, ShingleFreqCap).orderBy("ia", "ib") },
+      dedupNgram(s, dir, ShingleFreqCap) },
     "dedup_incremental" -> { (s, dir) =>
-      dedupIncremental(s, dir, ShingleFreqCap).orderBy("ia", "ib") },
+      dedupIncremental(s, dir, ShingleFreqCap) },
     "dedup_clusters" -> { (s, dir) => dedupClusters(s, dir) },
     // the full curation funnel AS ONE DECLARATIVE PLAN — what the
     // training-data ops exist for: quality-filter (drop junk), hold out
@@ -1107,10 +1097,9 @@ object TrainingOps {
     "text_curate" -> { (s, dir) =>
       val nTok = size(tokens(col("text"))).cast("long")
       val hits = stopHits(col("text")).cast("long")
-      val bucket = when(nTok.between(20, 200) && hits >= 1, "good")
-        .when(nTok >= 5, "fair").otherwise("junk")
       val base = docs(s, dir)
-        .select(col("doc_id"), bucket.as("quality"), nTok.as("n_tokens"))
+        .select(col("doc_id"), qualityBucket(nTok, hits).as("quality"),
+          nTok.as("n_tokens"))
         .filter(col("quality") =!= "junk")
         .filter(col("doc_id") % 97 =!= 0)
       val dupLosers = dedupClusters(s, dir)
@@ -1120,19 +1109,16 @@ object TrainingOps {
       base
         .join(dupLosers, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
-        .orderBy("doc_id")
     },
     "dedup_minhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val dsh = docShingles(s, dir)
       verifiedPairs(dsh, minhashPrefiltered(minhashSigs(dsh)))
-        .orderBy("ia", "ib")
     },
     "dedup_simhash" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
       val dsh = docShingles(s, dir)
       verifiedPairs(dsh, simhashPrefiltered(simhashSigs(dsh)))
-        .orderBy("ia", "ib")
     },
     "dedup_embed" -> { (s, dir) =>
       GraftFunctions.ensureRegistered(s)
@@ -1147,7 +1133,7 @@ object TrainingOps {
         .select(col("x.vec_id").as("ia"), col("y.vec_id").as("ib"),
           cosine_sim(col("x.embedding"), col("y.embedding")).as("cos"))
       pairs.filter(col("cos") >= 0.99)
-        .select("ia", "ib").orderBy("ia", "ib")
+        .select("ia", "ib")
     },
     // Substring-level dedup (Lee et al. 2022 "Deduplicating Training Data
     // Makes Language Models Better", the ExactSubstr variant): doc-level
@@ -1187,7 +1173,6 @@ object TrainingOps {
           sum(coalesce(col("dup"), lit(0L))).as("n_dup_win"))
         .select(col("doc_id"), col("n_win"), col("n_dup_win"),
           (col("n_dup_win") * 10 >= col("n_win") * 2).as("span_dup"))
-        .orderBy("doc_id")
     },
     // ---- similarity search ----
     "ann_brute" -> { (s, dir) =>
@@ -1204,7 +1189,6 @@ object TrainingOps {
       scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select(col("qid"), col("rank"), col("nid"))
-        .orderBy("qid", "rank")
     },
     // IVF-flat: the partitioned candidate path. A K-cell coarse quantizer
     // (spherical k-means: deterministic seed centroids = first K
@@ -1230,7 +1214,6 @@ object TrainingOps {
     "ann_ivf_build" -> { (s, dir) =>
       buildIvfIndex(s, dir)
         .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "val")))
-        .orderBy("cell", "pos")
     },
     "ann_ivf_serve" -> { (s, dir) => annIvfServe(s, dir) },
     "ann_rp_rerank" -> { (s, dir) =>
@@ -1265,7 +1248,6 @@ object TrainingOps {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select(col("qid"), col("rank"), col("nid"))
-        .orderBy("qid", "rank")
     }
   )
 

@@ -45,22 +45,16 @@ object PipelineQueries {
     ts = Some(graft.model.TsSpec(5, "yyyy-MM-dd HH:mm:ss")),
     gateContains = Some(" /"))
 
-  /** A single-format parse query: `line` over the events, sorted by
-    * event_id, then `parse` adds a `fields` map that each output column
-    * reads. The sort sits UNDER the parse: the range partitioner's two
-    * sampling jobs and the shuffle map stage each evaluate whatever lies
-    * below the sort, so a sort over the parse ran it three times, each in
-    * one task. A projection over a global sort keeps the sort's order, and
-    * event_id is unique, so the rows and their order are the same.
-    * `fields` stays one column that every output reads (CollapseProject
-    * does not inline a non-trivial alias referenced more than once), so
-    * the map is built once per row.
+  /** A single-format parse query: `line` over the events, then `parse`
+    * adds a `fields` map that each output column reads. `fields` stays one
+    * column (CollapseProject does not inline a non-trivial alias referenced
+    * more than once), so the map is built once per row.
     */
   private def parseQuery(line: Column, parse: DataFrame => DataFrame,
       cols: Seq[(String, Column)]): (SparkSession, String) => DataFrame =
     (s, dir) => {
       reg(s)
-      parse(Transcripts.withText(s, dir, line).orderBy("event_id"))
+      parse(Transcripts.withText(s, dir, line))
         .select(col("event_id") +: cols.map { case (n, c) => c.as(n) }: _*)
     }
 
@@ -152,7 +146,6 @@ object PipelineQueries {
           longField("t").as("t"), field("method").as("method"),
           field("path").as("path"), longField("status").as("status"),
           longField("duration_ms").as("duration_ms"))
-        .orderBy("event_id")
     },
     "pipe_logfmt" -> parseQuery(
       concat(lit("a="), col("event_id"), lit(" b=\""), col("event_type"),
@@ -172,7 +165,7 @@ object PipelineQueries {
         try_element_at(keep, lit("etype")).as("v_keep"),
         try_element_at(over, lit("etype")).as("v_over"),
         try_element_at(fresh, lit("x")).as("v_new")
-      ).orderBy("event_id")
+      )
     },
     "pipe_insert_ts" -> { (s, dir) =>
       reg(s)
@@ -182,7 +175,7 @@ object PipelineQueries {
         try_element_at(Enrich.insertTs(base, "t", RunTsMillis, "epoch", true), lit("t")).as("t_epoch"),
         try_element_at(Enrich.insertTs(base, "t", RunTsMillis, "rfc3339", true), lit("t")).as("t_rfc3339"),
         try_element_at(Enrich.insertTs(base, "t", RunTsMillis, "rfc2822", true), lit("t")).as("t_rfc2822")
-      ).orderBy("event_id")
+      )
     },
     // sonicwall enrich-in-place (T10, sonicwall.py:5-28): logfmt-split an
     // ALREADY-PARSED field and merge the pairs back into the event
@@ -202,7 +195,7 @@ object PipelineQueries {
         try_element_at(enriched, lit("sess")).as("sess"),
         try_element_at(enriched, lit("act")).as("act"),
         try_element_at(enriched, lit("src")).as("src")
-      ).orderBy("event_id")
+      )
     },
     // logfmt TRANSFORM merge semantics (logfmt.rs:75-95): pop the field,
     // merge parsed pairs; collision rename "<field>.<key>" on
@@ -229,7 +222,7 @@ object PipelineQueries {
         map_contains_key(noOver, lit("attrs")).as("attrs_still_there"),
         try_element_at(over, lit("a")).as("a_over"),
         try_element_at(over, lit("host")).as("host_over")
-      ).orderBy("event_id")
+      )
     },
     // lumberjack v2 batch decode (S6/S7, lumberjack_decoder.rs:121-148):
     // each event synthesizes a 2-payload compressed frame, the codec
@@ -255,7 +248,6 @@ object PipelineQueries {
         .select(col("event_id"), col("seq"),
           try_element_at(col("m"), lit("etype")).as("etype"),
           try_element_at(col("m"), lit("k")).as("k"))
-        .orderBy("event_id", "seq")
     },
     "pipe_enrich" -> { (s, dir) =>
       reg(s)
@@ -263,7 +255,6 @@ object PipelineQueries {
       Enrich.withLookup(t, Enrich.defaultLookup(s))
         .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
           col("role_kind"), col("tool_category"))
-        .orderBy("turn_idx")
     },
     "pipe_e2e_routed" -> { (s, dir) =>
       reg(s)
@@ -271,7 +262,6 @@ object PipelineQueries {
       Pipeline.transform(t, e2eConfig, Enrich.defaultLookup(s))
         .select(col("conv_id"), col("turn_idx"), col("sink"), col("format"),
           longField("t").as("t"), col("role_kind"), col("tool_category"))
-        .orderBy("turn_idx")
     },
     "pipe_e2e_counts" -> { (s, dir) =>
       reg(s)
@@ -280,7 +270,7 @@ object PipelineQueries {
       // parse off a one-split input (TableFormat.spreadScan)
       val t = TableFormat.spreadScan(Transcripts.transcripts(s, dir))
       val routed = Pipeline.transform(t, e2eConfig, Enrich.defaultLookup(s))
-      Router.sinkAggregates(routed).orderBy("sink", "format")
+      Router.sinkAggregates(routed)
     },
     // warn+drop+count policy under HOSTILE input (file.rs:142-147 lifted
     // to quarantine-and-count): odd rows carry fuzz-shaped lines — empty
@@ -309,7 +299,6 @@ object PipelineQueries {
         Some(when(k % 2 === 1, fuzz).otherwise(Transcripts.miniLine)))
       Pipeline.transform(env, e2eConfig, Enrich.defaultLookup(s))
         .groupBy("sink", "format").agg(count(lit(1)).as("n"))
-        .orderBy("sink", "format")
     },
     // conversation-level fingerprint via the custom typed AGGREGATOR
     // (partial-mergeable SimHash votes — no group ever materializes its
@@ -330,7 +319,6 @@ object PipelineQueries {
         .select(col("conv_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
         .groupBy(col("conv_id"))
         .agg(fpAgg(col("toks")).as("fp"))
-        .orderBy("conv_id")
     },
     // Structured Streaming driver gate: the SAME transform as a file-source
     // stream, watermarked hourly windows, run to completion synchronously —
@@ -346,7 +334,7 @@ object PipelineQueries {
       StreamingPipeline.runOnce(s, name, OutputMode.Complete) { child =>
         StreamingPipeline.windowedSinkCounts(StreamingPipeline.routedStream(
           child, stagedStreamInput(s, dir), e2eConfig, maxFilesPerTrigger = 10000))
-      }.orderBy("w_start", "sink")
+      }
     },
     // the arbitrary-stateful-streaming surface (mapGroupsWithState),
     // driver-gated like pipe_stream_counts: run the per-conversation
@@ -366,7 +354,6 @@ object PipelineQueries {
       mem.groupBy("conv_id")
         .agg(max(col("turns")).as("turns"),
           max(col("max_turn")).cast("long").as("max_turn"))
-        .orderBy("conv_id")
     },
     // exactly-once from at-least-once: the staged input re-delivers every
     // 5th row in a planted repeat file; streaming dropDuplicates on the
@@ -389,7 +376,6 @@ object PipelineQueries {
       mem.groupBy("sink")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("conv_id")).as("n_conv"))
-        .orderBy("sink")
     },
     // append-mode watermarked windows (emit-on-close — the production
     // streaming contract the Complete-mode gate can't show): a window row
@@ -421,7 +407,6 @@ object PipelineQueries {
       mem.crossJoin(broadcast(bound))
         .filter(col("w_start") + expr("INTERVAL 1 HOUR") < col("wm"))
         .select(col("w_start"), col("sink"), col("n"))
-        .orderBy("w_start", "sink")
     }
   )
 

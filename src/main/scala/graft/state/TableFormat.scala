@@ -110,8 +110,9 @@ class FileTableFormat(source: String) extends TableFormat {
   * tcp_socket.rs:62-70: one JSON object per line). `Pipeline.run(spark,
   * cfg, NdjsonFormat)` therefore fans out NDJSON sinks with identical
   * manifest/resume semantics; per-EVENT byte parity with the reference's
-  * file sink is the [[graft.functions.EventJson]] expression (this binding
-  * writes the full typed envelope per line, a superset). Columnar pushdown
+  * file sink is the `event_json` kernel ([[graft.functions.EventJson]]
+  * under `KernelCall`; this binding writes the full typed envelope per
+  * line, a superset). Columnar pushdown
   * is lost (text format) — parquet/Iceberg stays the default for anything
   * scanned again at scale; NDJSON is for interop boundaries.
   */

@@ -50,6 +50,7 @@ class BpeSpec extends SparkSpec {
     val got = graft.ops.TrainingOps.queries("text_bpe_train")(spark, sf("0.001"))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .sortBy(_._1)
     assert(got.length == 8)
     assert(got.toSeq === local.toSeq)
     // later merges genuinely build on earlier ones (some merged symbol is
@@ -75,7 +76,7 @@ class BpeSpec extends SparkSpec {
 
   test("text_bpe_apply: matches a plain-Scala segmentation with the learned merges") {
     val merges = graft.ops.TrainingOps.queries("text_bpe_train")(spark, sf("0.001"))
-      .collect().map(r => (r.getString(1), r.getString(2)))
+      .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2)))
     val d = spark.read.parquet(sf("0.001") + "/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))

@@ -172,7 +172,7 @@ class DedupSpec extends SparkSpec {
     // each invocation recomputes the pair frame and the fixpoint and
     // returns its own checkpointed labels
     def run() = graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
     val first = run()
     (1 to 4).foreach(_ =>
       graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001")).count())
@@ -200,9 +200,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedup_ngram's pair frame is unsorted at any cap") {
-    // the sort belongs to the dedup_ngram query: dedup_clusters and
-    // text_curate read the pair frame through connectedComponents, which
-    // ignores row order
+    // dedup_clusters and text_curate read the pair frame through
+    // connectedComponents, which ignores row order
     import org.apache.spark.sql.catalyst.plans.logical.Sort
     Seq(graft.ops.TrainingOps.ShingleFreqCap, 5).foreach { cap =>
       val plan = graft.ops.TrainingOps.dedupNgram(spark, sf("0.001"), cap)
@@ -268,7 +267,7 @@ class DedupSpec extends SparkSpec {
     val got = graft.ops.TrainingOps.queries("dedup_substring")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      .toSeq
+      .toSeq.sorted
     assert(got === Seq(
       (1L, 1L, 1L, true), // its lone window recurs inside doc 2
       (2L, 3L, 1L, true),

@@ -135,11 +135,12 @@ class SketchSpec extends SparkSpec {
 
   test("ann_ivf_serve from the persisted index returns exactly ann_ivf's rows") {
     def rows(name: String) = graft.ops.TrainingOps.queries(name)(spark, sf("0.01"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
     // build explicitly (idempotent atomic swap), then serve reads the
     // artifact; build's query shape is scalar (cell, pos, val)
     def buildTriples() = graft.ops.TrainingOps.queries("ann_ivf_build")(spark, sf("0.01"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getFloat(2))).toSeq
+      .sortBy(t => (t._1, t._2))
     val cents = buildTriples()
     assert(cents.map(_._1).distinct.length === graft.ops.TrainingOps.IvfCells)
     assert(rows("ann_ivf_serve") === rows("ann_ivf"))
@@ -200,9 +201,9 @@ class SketchSpec extends SparkSpec {
 
   test("text_fingerprint golden values are stable across runs") {
     val a = graft.ops.TrainingOps.queries("text_fingerprint")(spark, sf("0.001"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     val b = graft.ops.TrainingOps.queries("text_fingerprint")(spark, sf("0.001"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(a.sameElements(b))
   }
 }
