@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 
 /** Dumps formatted physical plans at sf0.001 on a local[4] session, so
   * plans are comparable across changes. Paths under the context's scratch
@@ -11,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * With no arguments it regenerates PLANS.md, the optimizer evidence:
   * parquet filter pushdown + column pruning, broadcast joins, whole-stage
-  * codegen spans, and the pipeline's single-shuffle shape.
+  * codegen spans, the pipeline's single-shuffle shape, and each plan's
+  * largest generated method.
   *
   * With `<outDir> <tag> <query...>` it writes each named query's plan to
   * `<outDir>/<query>_<tag>.txt` (the before/after snapshots under plans/).
@@ -26,10 +28,15 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
 
+    val noAqe = withoutAqe(spark)
+
     def plan(name: String): String =
       SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-        .replace(graft.state.Scratch.root, "<scratch>")
+        .replace(graft.state.Scratch.root, "<scratch>") +
+        "\n\nLargest generated method (AQE off): " +
+        generatedMethodBytes(SparkEntry.queries(name)(noAqe, dir)).maxOption
+          .fold("no whole-stage codegen")(b => s"$b bytes")
 
     if (args.isEmpty) writePlansMd(plan)
     else {
@@ -51,7 +58,9 @@ object PlanDump {
       "- `BroadcastHashJoin` on every dimension/lookup join (fact side never shuffled)\n" +
       "- wide `WholeStageCodegen` spans over the parse stage (no UDF breaks)\n" +
       "- exactly one `Exchange` in the pipeline transform (the salted fan-out)\n" +
-      "- no presentation `Sort` at any plan's root\n\n"
+      "- no presentation `Sort` at any plan's root\n" +
+      "- no generated method over 8,000 bytes: HotSpot interprets any larger\n" +
+      "  method (`HugeMethodLimit`), and whole-stage codegen does not split one\n\n"
     Seq("q_agg_pricing", "q_join_broadcast", "pipe_e2e_counts",
       "dedup_minhash", "text_keywords", "embed_quantize",
       "q_histogram", "q_join_salted", "q_zorder", "dedup_substring",
@@ -62,4 +71,21 @@ object PlanDump {
     Files.writeString(Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${out.length} chars)")
   }
+
+  /** A child session without adaptive execution, so a physical plan is
+    * final (and its whole-stage-codegen subtrees known) before it runs.
+    */
+  def withoutAqe(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
+
+  /** Bytes of bytecode in the largest generated method of each
+    * WholeStageCodegen subtree of `df`'s physical plan (Spark's
+    * `debug.codegenStringSeq`, which compiles each subtree's source).
+    * HotSpot never JIT-compiles a method over 8,000 bytes.
+    */
+  def generatedMethodBytes(df: DataFrame): Seq[Int] =
+    codegenStringSeq(df.queryExecution.executedPlan).map(_._3.maxMethodCodeSize)
 }

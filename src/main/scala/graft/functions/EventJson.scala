@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * whose value is a canonical integer is emitted as a bare JSON number: the
   * reference inserts `t` as i64 and everything else of the map as strings
   * (fortinet.rs:90,105; syslog.rs:55-64; the numeric proc_id is the
-  * documented string deviation, see PatternDictionary.syslog3164MapG).
+  * documented string deviation, see PatternDictionary's knowing deviations).
   */
 object EventJson {
 

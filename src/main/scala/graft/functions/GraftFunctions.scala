@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{CurrentTimeZone, Expression, Literal}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{call_function, current_timezone, lit, typedlit}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Session-scoped registration of graft's custom Catalyst expressions plus
@@ -83,7 +85,32 @@ object GraftFunctions {
     kernel("event_json", "EventJson.serialize", StringMap)(_ => StringType),
     kernel("logfmt_merge_field", "MergeFieldMaps.mergeField",
       StringMap, StringType, BooleanType)(_ => StringMap,
-      args = e => Seq(e(0), stringParam(e(1)), Literal(e(2).eval().asInstanceOf[Boolean])))
+      args = e => Seq(e(0), stringParam(e(1)), boolParam(e(2)))),
+    // the dictionary's per-format field kernels (ParseFields): a group
+    // array in, the format's fields map out; `year` is the run clock's
+    // year in the session time zone
+    kernel("fortinet_fields", "ParseFields.fortinet",
+      StringType, Strings, Strings, StringType, LongType)(_ => CompactFields,
+      args = e => Seq(e(0), e(1), e(2), zoneParam(e(3)), longParam(e(4)))),
+    kernel("syslog3164_fields", "ParseFields.syslog3164",
+      Strings, StringType, StringType, LongType)(_ => StringMap,
+      args = e => Seq(e(0), e(1), zoneParam(e(2)), longParam(e(3)))),
+    kernel("syslog5424_fields", "ParseFields.syslog5424", Strings, LongType)(
+      _ => StringMap, args = e => Seq(e(0), longParam(e(1)))),
+    kernel("combined_fields", "ParseFields.combined", Strings)(_ => CompactFields),
+    kernel("error_fields", "ParseFields.error", Strings, StringType)(_ => CompactFields,
+      args = e => Seq(e(0), zoneParam(e(1)))),
+    kernel("kern_fields", "ParseFields.kern", Strings, StringType, StringType)(
+      _ => CompactFields, args = e => Seq(e(0), e(1), zoneParam(e(2)))),
+    kernel("mini_fields", "ParseFields.mini", Strings)(_ => CompactFields),
+    kernel("format_spec_fields", "ParseFields.spec", Strings, Strings,
+      ArrayType(IntegerType), ArrayType(BooleanType), IntegerType, StringType,
+      BooleanType, BooleanType, StringType, LongType)(_ => CompactFields,
+      args = e => e.take(4) ++ Seq(intParam(e(4)), stringParam(e(5)),
+        boolParam(e(6)), boolParam(e(7)), zoneParam(e(8)), longParam(e(9)))),
+    kernel("transcript_line", "TranscriptText.line", IntegerType, LongType, LongType,
+      StringType, DoubleType, TimestampType, IntegerType, StringType)(_ => StringType,
+      mayReturnNull = true, args = e => e.take(7) :+ zoneParam(e(7)))
   )
 
   // Declared argument types of the kernel calls. Element nullability is
@@ -93,6 +120,7 @@ object GraftFunctions {
   private val Longs = ArrayType(LongType)
   private val Signature = ArrayType(LongType, containsNull = false)
   private val StringMap = MapType(StringType, StringType)
+  private val CompactFields = MapType(StringType, StringType, valueContainsNull = false)
 
   /** `name` as one [[KernelCall]] of `graft.functions.<method>`, whose
     * arguments have the declared `inputs` types. `args` maps the call's
@@ -108,7 +136,7 @@ object GraftFunctions {
     })
 
   // Kernel parameters (k, bandBits, seed, the BPE pair, the logfmt field
-  // and its overwrite flag) must be foldable;
+  // and its overwrite flag, a time zone or run clock) must be foldable;
   // they are evaluated once here and passed on as literals.
   private def intParam(e: Expression) = Literal(e.eval().asInstanceOf[Int])
   private def longParam(e: Expression) = Literal(e.eval() match {
@@ -116,6 +144,18 @@ object GraftFunctions {
     case l: Long => l
   })
   private def stringParam(e: Expression) = Literal(e.eval().toString)
+  private def boolParam(e: Expression) = Literal(e.eval().asInstanceOf[Boolean])
+
+  /** A time zone parameter as the id Spark's datetime expressions resolve
+    * it to. `current_timezone()` (what the Column wrappers pass) is read
+    * from the conf of the session analyzing the call, as the optimizer
+    * would replace it.
+    */
+  private def zoneParam(e: Expression) = Literal(DateTimeUtils.getZoneId(e match {
+    case _: CurrentTimeZone => SQLConf.get.sessionLocalTimeZone
+    case z => z.eval().toString
+  }).getId)
+
   private val withInt = (e: Seq[Expression]) => Seq(e(0), intParam(e(1)))
 
   private def elementsMayBeNull(e: Expression): Boolean = e.dataType match {
@@ -262,6 +302,48 @@ object GraftFunctions {
   /** One-shot regex match returning all capture groups (null = no match). */
   def regexp_groups(c: Column, pattern: String): Column =
     call_function("regexp_groups", c, org.apache.spark.sql.functions.lit(pattern))
+
+  // The dictionary's field kernels, one per format (see [[ParseFields]]),
+  // each in the time zone of the session that analyzes it.
+
+  def fortinet_fields(text: Column, date: Column, time: Column,
+      runTsMillis: Long): Column =
+    call_function("fortinet_fields", text, date, time, current_timezone(), lit(runTsMillis))
+
+  def syslog3164_fields(groups: Column, year: Column, runTsMillis: Long): Column =
+    call_function("syslog3164_fields", groups, year, current_timezone(), lit(runTsMillis))
+
+  def syslog5424_fields(groups: Column, runTsMillis: Long): Column =
+    call_function("syslog5424_fields", groups, lit(runTsMillis))
+
+  def combined_fields(groups: Column): Column = call_function("combined_fields", groups)
+
+  def error_fields(groups: Column): Column =
+    call_function("error_fields", groups, current_timezone())
+
+  def kern_fields(groups: Column, year: Column): Column =
+    call_function("kern_fields", groups, year, current_timezone())
+
+  def mini_fields(groups: Column): Column = call_function("mini_fields", groups)
+
+  def format_spec_fields(groups: Column, spec: graft.model.FormatSpec,
+      runTsMillis: Long): Column = {
+    val ts = spec.ts
+    call_function("format_spec_fields", groups,
+      typedlit(spec.fields.map(_.name)), typedlit(spec.fields.map(_.group)),
+      typedlit(spec.fields.map(_.cast == "long")), lit(ts.fold(0)(_.group)),
+      lit(ts.fold("")(_.pattern)), lit(ts.exists(_.unit == "seconds")),
+      lit(ts.exists(_.fallbackRunClock)), current_timezone(), lit(runTsMillis))
+  }
+
+  /** The text of a synthetic transcript turn in `format` (0-7), from its
+    * events columns (see [[TranscriptText]]); `nulls` flags the nullable
+    * columns that are null, which arrive with placeholder values.
+    */
+  def transcript_line(format: Column, eventId: Column, userId: Column, eventType: Column,
+      value: Column, ts: Column, nulls: Column): Column =
+    call_function("transcript_line", format, eventId, userId, eventType, value, ts, nulls,
+      current_timezone())
 
   /** Rademacher random projection of array<float> to outDims dims. */
   def rp_project(c: Column, outDims: Int, seed: Long): Column = {

@@ -100,18 +100,17 @@ object Pipeline {
     // per-sink-loop + persist version paid a cache materialization plus a
     // second full pass and scaled at half the rate.
     val s0 = System.nanoTime()
-    format.overwritePartitions(
-      todo
-        // leading (sink, bucket) satisfies the planned write's required
-        // ordering (partitionBy sorts by partition cols, NON-stably —
-        // without it the writer's own sort would scramble row order)
-        .repartition(derivedShufflePartitions(spark, cfg), col("sink"),
-          col("bucket"), pmod(col("turn_idx"), lit(4)))
-        .sortWithinPartitions("sink", "bucket", "conv_id", "turn_idx")
-        .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-          col("ts"), col("format"), col("fields"), col("role_kind"),
-          col("tool_category"), col("sink"), col("bucket")),
-      s"${cfg.outputRoot}/data", Seq("sink", "bucket"))
+    val out = todo
+      // leading (sink, bucket) satisfies the planned write's required
+      // ordering (partitionBy sorts by partition cols, NON-stably —
+      // without it the writer's own sort would scramble row order)
+      .repartition(derivedShufflePartitions(spark, cfg), col("sink"),
+        col("bucket"), pmod(col("turn_idx"), lit(4)))
+      .sortWithinPartitions("sink", "bucket", "conv_id", "turn_idx")
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
+        col("ts"), col("format"), col("fields"), col("role_kind"),
+        col("tool_category"), col("sink"), col("bucket"))
+    format.overwritePartitions(out, s"${cfg.outputRoot}/data", Seq("sink", "bucket"))
     val writeWallMs = (System.nanoTime() - s0) / 1000000
 
     // The audit scan reads MANIFEST-CLASS data (3 pruned columns of the
@@ -127,7 +126,9 @@ object Pipeline {
     audit.conf.set("spark.sql.files.maxPartitionBytes", "512m")
     audit.conf.set("spark.sql.files.openCostInBytes", (4L << 20).toString)
     audit.conf.set("spark.sql.shuffle.partitions", "8")
-    val written = format.readSnapshot(audit, s"${cfg.outputRoot}/data")
+    // read with the schema the write used: nothing is inferred from the
+    // files, so an empty input (no data file written) reads as no rows
+    val written = format.readSnapshot(audit, s"${cfg.outputRoot}/data", out.schema.toDDL)
 
     // ONE read-back pass over the durable table yields BOTH the
     // per-(sink,bucket) lineage the manifest commits AND the per-(sink,

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Deterministic transcripts table derived from the driver-provided `events`
   * parquet (TESTDATA.md) — no external data. Every derivation here is a pure
   * function of events columns so the DuckDB oracle can compute the EXPECTED
@@ -37,58 +39,32 @@ object Transcripts {
     .otherwise("PUT")
 
   def status: Column = (lit(200) + pmod(K, lit(5)) * 100).cast("string")
-  def sizeCol: Column = floor(abs(col("value")) * 100).cast("long")
-  def userStr: Column = when(U % 3 === 0, "-").otherwise(concat(lit("u"), U))
-  def hostStr: Column = concat(lit("h"), pmod(U, lit(50)))
-  def level: Column = when(E === "error", "error")
-    .when(E === "click", "notice")
-    .when(E === "view", "info")
-    .otherwise("warn")
 
-  private def d(fmt: String): Column = date_format(col("ts"), fmt)
+  /** The text of each turn in `format` (an int column: 0 fortinet, 1
+    * syslog, 2 combined, 3 error, 4 kern, 5 json, 6 mini, 7 malformed),
+    * built by the `transcript_line` kernel (graft.functions.TranscriptText,
+    * which documents each format). The nullable columns reach it with a
+    * placeholder and a bit of `nulls`, so a null prints as null text
+    * exactly where `concat` would give one. The line columns call a graft
+    * function, so their session must be registered (`fromEvents` and
+    * `withText` register it).
+    */
+  private def line(format: Column): Column = {
+    import graft.functions.TranscriptText._
+    val ts = col("ts").cast("timestamp")
+    val nulls = Seq(U -> UserNull, E -> TypeNull, col("value") -> ValueNull, ts -> TsNull)
+      .map { case (c, bit) => when(c.isNull, bit).otherwise(0) }.reduce(_ bitwiseOR _)
+    GraftFunctions.transcript_line(format.cast("int"), K,
+      coalesce(U, lit(0L)), coalesce(E, lit("")), coalesce(col("value"), lit(0.0)),
+      coalesce(ts, timestamp_micros(lit(0L))), nulls)
+  }
 
-  def fortinetLine: Column = concat(
-    lit("<190>date="), d("yyyy-MM-dd"), lit(" time="), d("HH:mm:ss"),
-    lit(" devname=FGT"), U, lit(" devid=FGT"), U,
-    lit(" logid="), K,
-    lit(" type="), when(K % 3 === 0, "event").otherwise("utm"),
-    lit(" subtype=app-ctrl level=information vd=\"root\" user=\"u"), U,
-    lit("\" srcip=192.168.1."), pmod(U, lit(250)),
-    lit(" srcport="), (lit(1024) + pmod(K, lit(60000))),
-    lit(" dstport=443 proto=6 service=\"HTTPS\" action="),
-    when(K % 7 === 0, "block").otherwise("pass"),
-    lit(" msg=\""), E, lit(": SSL,\" apprisk=elevated"))
+  def fortinetLine: Column = line(lit(0))
 
   /** Syslog mix covering the reference's full parse_syslog surface
-    * (syslog.rs:22-97), variant by event_id % 5:
-    *   0,1 — RFC3164, plain text body
-    *   2   — RFC3164, JSON-object body (keys merged into the event)
-    *   3   — RFC5424 with msg_id + structured data + plain body
-    *   4   — RFC5424 with nil timestamp/hostname/procid (run-clock
-    *         fallback) + JSON-object body
+    * (syslog.rs:22-97): RFC 3164 and RFC 5424 variants by event_id % 5.
     */
-  def syslogLine: Column = {
-    val pri = pmod(K, lit(192))
-    val jsonBody = concat(
-      lit("{\"etype\": \""), E, lit("\", \"k\": \""), K, lit("\"}"))
-    val plainBody = concat(lit("evt "), E, lit(" "), K)
-    val m5 = pmod(K, lit(5))
-    val rfc3164Head = concat(
-      lit("<"), pri, lit(">"), d("MMM dd HH:mm:ss"),
-      lit(" host"), U, lit(" app"), pmod(K, lit(7)),
-      lit("["), pmod(K, lit(30000)), lit("]: "))
-    when(m5 <= 1, concat(rfc3164Head, plainBody))
-      .when(m5 === 2, concat(rfc3164Head, jsonBody))
-      .when(m5 === 3, concat(
-        lit("<"), pri, lit(">1 "), d("yyyy-MM-dd'T'HH:mm:ss'Z'"),
-        lit(" host"), U, lit(" app"), pmod(K, lit(7)),
-        lit(" "), pmod(K, lit(30000)), lit(" mid"), pmod(K, lit(9)),
-        lit(" [exampleSDID@32473 iut=\""), pmod(K, lit(4)),
-        lit("\" eventSource=\""), E, lit("\"] "), plainBody))
-      .otherwise(concat(
-        lit("<"), pri, lit(">1 - - app"), pmod(K, lit(7)),
-        lit(" - mid"), pmod(K, lit(9)), lit(" - "), jsonBody))
-  }
+  def syslogLine: Column = line(lit(1))
 
   /** Fortinet ROUTE input mix: 4/5 normal pri-prefixed lines, 1/5 with no
     * '>' at all — exercising the transform's parse_syslog fallback
@@ -98,35 +74,15 @@ object Transcripts {
     when(pmod(K, lit(5)) === 4, regexp_replace(fortinetLine, "^<190>", ""))
       .otherwise(fortinetLine)
 
-  def combinedLine: Column = concat(
-    hostStr, lit(" - "), userStr,
-    lit(" ["), d("dd/MMM/yyyy:HH:mm:ss"), lit(" +0000] \""),
-    method, lit(" /p/"), K, lit(" HTTP/1.1\" "), status, lit(" "), sizeCol,
-    lit(" \""), when(K % 4 === 0, lit("-")).otherwise(concat(lit("http://r/"), pmod(K, lit(10)))),
-    lit("\" \"Mozilla/5.0 (test)\""))
+  def combinedLine: Column = line(lit(2))
 
-  def errorLine: Column = concat(
-    lit("["), d("EEE MMM dd HH:mm:ss"), lit("."), d("SSSSSS"), lit(" "), d("yyyy"),
-    lit("] [core:"), level, lit("] [pid "), pmod(K, lit(30000)),
-    when(K % 2 === 0, concat(lit(":tid "), pmod(K, lit(500)))).otherwise(lit("")),
-    lit("] "),
-    when(K % 3 =!= 0,
-      concat(lit("[client 10.0.0."), pmod(U, lit(250)), lit(":"),
-        lit(1024) + pmod(K, lit(50000)), lit("] "))).otherwise(lit("")),
-    lit("AH"), lpad(pmod(K, lit(100000)).cast("string"), 5, "0"),
-    lit(": "), E, lit(" happened"))
+  def errorLine: Column = line(lit(3))
 
-  def kernLine: Column = concat(
-    d("MMM d HH:mm:ss"), lit(" host"), U, lit(" kernel: ["), K, lit("."),
-    lpad(pmod(K, lit(1000000)).cast("string"), 6, "0"),
-    lit("] ACPI: "), E, lit(" stopped"))
+  def kernLine: Column = line(lit(4))
 
-  def jsonLine: Column = concat(
-    lit("{\"etype\": \""), E, lit("\", \"k\": \""), K, lit("\"}"))
+  def jsonLine: Column = line(lit(5))
 
-  def miniLine: Column = concat(method, lit(" /p/"), K, lit(" "), status)
-
-  def malformedLine: Column = concat(lit("###"), K)
+  def miniLine: Column = line(lit(6))
 
   /** The transcript envelope (input_hint schema) over events: one turn per
     * event, text by the format mix, conversation = user.
@@ -141,15 +97,8 @@ object Transcripts {
     * hostile lines inside the otherwise-normal envelope.
     */
   def fromEvents(ev: DataFrame, textOverride: Option[Column] = None): DataFrame = {
-    val m = pmod(K, lit(8))
-    val text = textOverride.getOrElse(when(m === 0, fortinetLine)
-      .when(m === 1, syslogLine)
-      .when(m === 2, combinedLine)
-      .when(m === 3, errorLine)
-      .when(m === 4, kernLine)
-      .when(m === 5, jsonLine)
-      .when(m === 6, miniLine)
-      .otherwise(malformedLine))
+    GraftFunctions.ensureRegistered(ev.sparkSession)
+    val text = textOverride.getOrElse(line(pmod(K, lit(8))))
     ev.select(
       concat(lit("conv-"), U).as("conv_id"),
       K.cast("int").as("turn_idx"),
@@ -165,6 +114,8 @@ object Transcripts {
   /** Single-format text frames for the per-format parse queries: the raw
     * events columns are carried alongside so outputs can be keyed.
     */
-  def withText(spark: SparkSession, sfDir: String, line: Column): DataFrame =
+  def withText(spark: SparkSession, sfDir: String, line: Column): DataFrame = {
+    GraftFunctions.ensureRegistered(spark)
     events(spark, sfDir).withColumn("text", line)
+  }
 }

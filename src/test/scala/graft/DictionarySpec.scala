@@ -98,6 +98,31 @@ class DictionarySpec extends SparkSpec {
     }
   }
 
+  test("no generated method outgrows HotSpot's 8,000-byte JIT limit") {
+    // Staying in whole-stage codegen is not enough: HotSpot never
+    // JIT-compiles a method over 8,000 bytes of bytecode (HugeMethodLimit),
+    // and Spark does not split expression code inside a fused stage, so an
+    // over-limit stage runs as interpreted bytecode. The dictionary's
+    // `fields` built from Catalyst expressions made one such method (~30 KB)
+    // in every plan that parses. AQE off: the plan is final before it runs.
+    val s = PlanDump.withoutAqe(spark)
+    val dir = sf("0.001")
+    val in = java.nio.file.Files.createTempDirectory("graft_jit").toString + "/input"
+    graft.pipeline.TranscriptGen.transcripts(spark, 400).write.parquet(in)
+    val cfg = PipelineConfig.default(in, "", Transcripts.RunTsMillis)
+    // the pipeline's map side: transform, then the write's salted repartition
+    val pipelineMap = graft.pipeline.Pipeline.transform(s.read.parquet(in), cfg,
+        graft.enrich.Enrich.defaultLookup(s))
+      .repartition(4, col("sink"), col("bucket"), pmod(col("turn_idx"), lit(4)))
+    val frames = SparkEntry.queries.toSeq.sortBy(_._1).iterator
+      .map { case (q, build) => q -> build(s, dir) } ++
+      Iterator("pipeline map side" -> pipelineMap)
+    val over = try frames.flatMap { case (q, df) =>
+      PlanDump.generatedMethodBytes(df).filter(_ > 8000).map(q -> _)
+    }.toList finally graft.ops.TrainingOps.releaseCaches(s, dir)
+    assert(over === Nil, "generated methods over 8,000 bytes")
+  }
+
   test("no query sorts its output") {
     // every reader of a query compares row multisets (the oracle check,
     // perfbench's fingerprint), and count() drops a root sort anyway: a

@@ -106,6 +106,21 @@ class PipelineSpec extends SparkSpec {
     assert(sys.rows < expectedSystem && sys.rows > 0)
   }
 
+  test("an empty input runs: every sink reports 0 rows and nothing commits") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).limit(0).write.parquet(in)
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+    val report = Pipeline.run(spark, cfg)
+    assert(report.totalRows === 0L)
+    assert(report.sinks.map(_.sink).toSet ===
+      (cfg.sinks.map(_.name) ++ Seq(cfg.defaultSink, cfg.quarantineSink)).toSet)
+    report.sinks.foreach(s => assert(s.rows === 0L && s.buckets === 0, s"sink ${s.sink}"))
+    assert(new ManifestStore(spark, s"$out/_manifest").read().count() === 0L)
+    val metrics = spark.read.parquet(s"$out/_metrics")
+    assert(metrics.count() === report.sinks.size.toLong)
+    assert(metrics.filter(col("rows") =!= 0L || col("observed_total") =!= 0L).count() === 0L)
+  }
+
   test("metrics: observed counters count every row under data/") {
     val (in, out) = freshDirs()
     TranscriptGen.transcripts(spark, N).write.parquet(in)

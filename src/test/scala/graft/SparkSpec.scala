@@ -20,11 +20,16 @@ trait SparkSpec extends AnyFunSuite {
   def drainListenerBus(): Unit =
     listenerBus.getClass.getMethod("waitUntilEmpty").invoke(listenerBus)
 
-  /** The number of listeners on the bus, once it is drained. */
-  def busListeners(): Int = {
+  /** The number of `StreamingQueryListenerBus` listeners on the bus, once
+    * it is drained. Stream queries add these and no GC removes them, while
+    * Spark's ContextCleaner drops other listeners (a collected session's
+    * `ExecutionListenerBus`) at times no test controls.
+    */
+  def streamingBusListeners(): Int = {
     drainListenerBus()
     listenerBus.getClass.getMethod("listeners").invoke(listenerBus)
-      .asInstanceOf[java.util.List[_]].size
+      .asInstanceOf[java.util.List[AnyRef]].toArray
+      .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
   }
 }
 

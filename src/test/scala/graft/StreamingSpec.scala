@@ -233,15 +233,15 @@ class StreamingSpec extends SparkSpec {
       assert(table.count() > 0, "the returned frame lost its rows")
     }
     run("stream_reuse_warmup")
-    val beforeRuns = busListeners()
+    val beforeRuns = streamingBusListeners()
     (1 to 4).foreach(i => run(s"stream_reuse_$i"))
-    val viaRunOnce = busListeners() - beforeRuns
+    val viaRunOnce = streamingBusListeners() - beforeRuns
 
     // the same four stateful queries started directly on one session whose
     // query manager already exists
     val direct = spark.newSession()
     direct.streams.active
-    val beforeDirect = busListeners()
+    val beforeDirect = streamingBusListeners()
     (1 to 4).foreach { i =>
       val q = counts(direct).writeStream.format("memory")
         .queryName(s"stream_direct_$i")
@@ -250,7 +250,7 @@ class StreamingSpec extends SparkSpec {
         .outputMode(OutputMode.Complete).start()
       try q.processAllAvailable() finally q.stop()
     }
-    val viaSession = busListeners() - beforeDirect
+    val viaSession = streamingBusListeners() - beforeDirect
     info(s"four runs added $viaRunOnce bus listeners, four direct queries $viaSession")
     assert(viaRunOnce <= viaSession,
       s"four runs added $viaRunOnce bus listeners, four direct queries $viaSession")
