@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
@@ -16,30 +16,39 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
   *
   *   scan → dictionary parse (WholeStageCodegen) → broadcast enrich →
   *   sink tag projection → one write partitioned by (sink, bucket)
-  *   (dynamic partition overwrite, manifest-gated) → per-sink aggregates
-  *   + lineage metrics from one read-back of the written table.
+  *   (dynamic partition overwrite, manifest-gated) that also counts what it
+  *   delivers → per-sink aggregates + lineage metrics from those counts.
   *
   * Scale design (100 TB / 1000 executors):
   *   - the fact side is never shuffled for the enrich join (broadcast);
   *   - the only shuffle is the salted repartition before the ordered sink
-  *     write: key = (sink, bucket, pmod(turn_idx, 4)). `bucket` is a pure
-  *     function of conv_id, which keeps manifest granularity deterministic,
-  *     so one conversation's rows of a sink land in one bucket and spread
-  *     over at most 4 tasks. The key takes at most sinks × `saltBuckets` × 4
-  *     values, which caps the reducers that receive rows whatever
-  *     [[derivedShufflePartitions]] returns (640 for 5 sinks at
-  *     app.Main's 32 buckets);
+  *     write: key = (sink, bucket, pmod(xxhash64(conv_id), 4)). `bucket` is
+  *     a pure function of conv_id, which keeps manifest granularity
+  *     deterministic, and so is the salt, so one conversation's rows of a
+  *     sink land in one task. The salt hashes differently from the bucket,
+  *     so a bucket's conversations spread over 4 tasks, and a (sink, bucket)
+  *     directory gets at most 4 files. The key takes at most sinks ×
+  *     `saltBuckets` × 4 values (640 for 5 sinks at app.Main's 32 buckets),
+  *     and the repartition is clamped to that count;
   *   - parse-once fan-out: ONE write job partitions the routed frame by
   *     sink, with nothing persisted (the reference reuses one configured
   *     input across routes, site/docs/config.md:355-358);
+  *   - delivery counting rides the write: an observed `delivery_cube` over
+  *     the sorted write input yields the per-(sink, bucket, format) cube
+  *     behind the manifest rows, `_aggregates` and `_metrics`, so a fresh
+  *     run never re-reads `data/` (the reference counts on the sink's
+  *     acknowledgement, file.rs:129-134, speed.rs:54-60);
   *   - resume skips committed (sink, bucket) pairs via the manifest, so a
-  *     rerun after failure reprocesses only missing buckets.
+  *     rerun after failure reprocesses only missing buckets, and reads back
+  *     only the committed pairs' cube.
   */
 object Pipeline {
 
   final case class SinkReport(sink: String, rows: Long, buckets: Int, wallMs: Long,
       skippedBuckets: Int)
-  final case class RunReport(totalRows: Long, sinks: Seq[SinkReport], wallMs: Long) {
+  /** `formatRows`: the rows this run wrote, per parse format. */
+  final case class RunReport(totalRows: Long, sinks: Seq[SinkReport], wallMs: Long,
+      formatRows: Map[String, Long]) {
     def turnsPerSec: Double = if (wallMs == 0) 0 else totalRows * 1000.0 / wallMs
   }
 
@@ -54,11 +63,11 @@ object Pipeline {
 
   /** Shuffle width for the ordered fan-out write: explicit count when the
     * config pins one, else derived from the INPUT SIZE —
-    * max(cluster parallelism, bytes / 128 MB + 1). This is the partition
-    * count only: the write's key takes at most sinks × `saltBuckets` × 4
-    * distinct values, so no more reducers than that receive rows, and a
-    * 100 TB run's ~800k partitions are mostly empty. AQE's coalescing
-    * handles the overshoot on small inputs.
+    * max(cluster parallelism, bytes / 128 MB + 1). [[run]] clamps it to the
+    * write key's cardinality (sinks × `saltBuckets` × 4): no more reducers
+    * than that receive rows, and AQE's `CoalesceShufflePartitions` leaves a
+    * repartition to a fixed count alone, so every partition over that
+    * would be scheduled as an empty task.
     */
   def derivedShufflePartitions(spark: SparkSession, cfg: PipelineConfig): Int =
     if (cfg.shufflePartitions > 0) cfg.shufflePartitions
@@ -94,71 +103,73 @@ object Pipeline {
 
     // ONE write job for every sink, and the ONLY pass that runs the parse
     // stage: fan-out is directory layout (data/sink=X/bucket=Y), not one
-    // serialized Spark job per sink. Lineage counts and delivery
-    // aggregates are derived afterwards from the WRITTEN parquet (columnar
-    // scan of 3 small columns), so rows are parsed exactly once — the
-    // per-sink-loop + persist version paid a cache materialization plus a
-    // second full pass and scaled at half the rate.
+    // serialized Spark job per sink. The write counts what it delivers:
+    // the delivery cube is an observed metric of the write's own tasks, so
+    // no job re-reads the rows it wrote.
     val s0 = System.nanoTime()
+    val keys = allSinks.size * cfg.saltBuckets * 4
     val out = todo
+      // the key takes at most `keys` values, and AQE does not coalesce a
+      // repartition to a fixed count, so more partitions are empty tasks
+      .repartition(math.min(derivedShufflePartitions(spark, cfg), keys), col("sink"),
+        col("bucket"), pmod(xxhash64(col("conv_id")), lit(4)))
       // leading (sink, bucket) satisfies the planned write's required
       // ordering (partitionBy sorts by partition cols, NON-stably —
       // without it the writer's own sort would scramble row order)
-      .repartition(derivedShufflePartitions(spark, cfg), col("sink"),
-        col("bucket"), pmod(col("turn_idx"), lit(4)))
       .sortWithinPartitions("sink", "bucket", "conv_id", "turn_idx")
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("ts"), col("format"), col("fields"), col("role_kind"),
         col("tool_category"), col("sink"), col("bucket"))
-    format.overwritePartitions(out, s"${cfg.outputRoot}/data", Seq("sink", "bucket"))
+    // per-(sink, bucket, format) counts of the rows the write's tasks
+    // deliver, merged once per successful task like the write's own
+    // commit; exact because the key above keeps a conversation's rows of a
+    // sink in one task and the sort makes it one run there
+    val delivered = Observation("delivered")
+    format.overwritePartitions(
+      out.observe(delivered, GraftFunctions.delivery_cube(col("sink"), col("bucket"),
+        col("format"), col("conv_id"), col("turn_idx")).as("cube")),
+      s"${cfg.outputRoot}/data", Seq("sink", "bucket"))
     val writeWallMs = (System.nanoTime() - s0) / 1000000
+    val written = delivered.get("cube").asInstanceOf[Seq[Row]].map(cubeRow)
 
-    // The audit scan reads MANIFEST-CLASS data (3 pruned columns of the
-    // just-written output) — its split sizing should fit that scan, not
-    // inherit the parse job's conf (bench sessions bin input at 2 MB for
-    // parse-stage parallelism, which shredded this ~200 MB read into 106
-    // tasks: a fixed ~4 s post-write tail at ANY executor count, 29% of
-    // the big level's wall in the N->4N scaling runs). newSession()
-    // isolates the SQL conf while sharing the SparkContext; the audit
-    // aggregate is a few hundred groups, so a narrow shuffle is right
-    // regardless of the data scale that sized the parent's width.
-    val audit = spark.newSession()
-    audit.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    audit.conf.set("spark.sql.files.openCostInBytes", (4L << 20).toString)
-    audit.conf.set("spark.sql.shuffle.partitions", "8")
-    // read with the schema the write used: nothing is inferred from the
-    // files, so an empty input (no data file written) reads as no rows
-    val written = format.readSnapshot(audit, s"${cfg.outputRoot}/data", out.schema.toDDL)
+    // A resumed run did not write the committed pairs, so it reads their
+    // cube back from data/ to keep `_aggregates` and the observed counters
+    // over all of data/. The filter is on the partition columns, so the
+    // scan reads only those (sink, bucket) directories (the parquet
+    // binding's file index still lists data/ once). The read-back is
+    // manifest-class work (3 columns, a few hundred groups), so it runs in
+    // a child session sized for that — newSession() isolates the SQL conf
+    // while sharing the SparkContext — instead of inheriting the parse
+    // job's split and shuffle widths.
+    val resumed =
+      if (committed.isEmpty) Nil
+      else {
+        val audit = spark.newSession()
+        audit.conf.set("spark.sql.files.maxPartitionBytes", "512m")
+        audit.conf.set("spark.sql.files.openCostInBytes", (4L << 20).toString)
+        audit.conf.set("spark.sql.shuffle.partitions", "8")
+        val skipped = committed.groupBy(_._1).map { case (sink, pairs) =>
+          col("sink") === sink && col("bucket").isin(pairs.map(_._2).toSeq: _*)
+        }.reduce(_ || _)
+        // read with the schema the write used: nothing is inferred from the
+        // files, so a committed pair with no data reads as no rows
+        format.readSnapshot(audit, s"${cfg.outputRoot}/data", out.schema.toDDL)
+          .where(skipped)
+          .groupBy("sink", "bucket", "format")
+          .agg(count(lit(1)).as("n"),
+            countDistinct(col("conv_id")).as("n_conv"),
+            min(col("turn_idx")).cast("long").as("min_turn"),
+            max(col("turn_idx")).cast("long").as("max_turn"))
+          .collect().toSeq.map(cubeRow)
+      }
+    val cube = written ++ resumed
+    val observedTotal = cube.map(_.n).sum
+    val observedMalformed = cube.filter(_.format == "malformed").map(_.n).sum
 
-    // ONE read-back pass over the durable table yields BOTH the
-    // per-(sink,bucket) lineage the manifest commits AND the per-(sink,
-    // format) delivery aggregates (the reference's counters) and the
-    // observed row counters. The finest grouping is
-    // (sink, bucket, format) — manifest-class metadata (sinks x buckets x
-    // formats rows) — and per-(sink,format) distinct-conversation counts
-    // are EXACT sums of per-bucket distincts because bucket is a pure
-    // function of conv_id (each conversation lives in exactly one
-    // bucket). The previous version ran two separate full scans (lineage
-    // groupBy + aggregate groupBy): a whole extra pass over the output at
-    // 100 TB, and a second fixed job cost in the post-write tail that
-    // throttled N->4N wall-clock scaling (the tail does not shrink with
-    // the write).
-    val cube = written
-      .groupBy("sink", "bucket", "format")
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("conv_id")).as("n_conv"),
-        min(col("turn_idx")).cast("long").as("min_turn"),
-        max(col("turn_idx")).cast("long").as("max_turn"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-    val observedTotal = cube.map(_._4).sum
-    val observedMalformed = cube.filter(_._3 == "malformed").map(_._4).sum
-
-    val allPairs = cube.groupBy(t => (t._1, t._2)).view
-      .mapValues(_.map(_._4).sum).toSeq
+    // every written pair is uncommitted (the anti-join above), so the
+    // written cube is exactly what this run commits
+    val bucketRows = written.groupMapReduce(c => (c.sink, c.bucket))(_.n)(_ + _).toSeq
       .map { case ((sink, bucket), n) => (sink, bucket, n) }
-    val bucketRows = allPairs.filterNot(p => committed.contains((p._1, p._2)))
       .sortBy(p => (p._1, p._2))
 
     val skippedBySink = committed.groupBy(_._1).view.mapValues(_.size).toMap
@@ -169,10 +180,11 @@ object Pipeline {
     }
 
     // per-(sink,format) delivery aggregates folded on the driver from the
-    // same read-back metadata (schema identical to Router.sinkAggregates)
-    val aggRows = cube.groupBy(t => (t._1, t._3)).map { case ((sink, fmt), rs) =>
-      (sink, fmt, rs.map(_._4).sum, rs.map(_._5).sum,
-        rs.map(_._6).min, rs.map(_._7).max)
+    // cube (schema identical to Router.sinkAggregates); n_conv sums exactly
+    // over buckets because bucket is a pure function of conv_id
+    val aggRows = cube.groupBy(c => (c.sink, c.format)).map { case ((sink, fmt), cs) =>
+      (sink, fmt, cs.map(_.n).sum, cs.map(_.nConv).sum,
+        cs.flatMap(_.minTurn).minOption, cs.flatMap(_.maxTurn).maxOption)
     }.toSeq.sortBy(t => (t._1, t._2))
 
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -218,6 +230,15 @@ object Pipeline {
       })
     tail.foreach(Await.result(_, Duration.Inf))
 
-    RunReport(reports.map(_.rows).sum, reports, wallMs)
+    RunReport(reports.map(_.rows).sum, reports, wallMs,
+      written.groupMapReduce(_.format)(_.n)(_ + _))
   }
+
+  /** One (sink, bucket, format) of the delivery cube. */
+  private final case class CubeRow(sink: String, bucket: Int, format: String, n: Long,
+      nConv: Long, minTurn: Option[Long], maxTurn: Option[Long])
+
+  private def cubeRow(r: Row): CubeRow =
+    CubeRow(r.getString(0), r.getInt(1), r.getString(2), r.getLong(3), r.getLong(4),
+      Option(r.get(5)).map(_.asInstanceOf[Long]), Option(r.get(6)).map(_.asInstanceOf[Long]))
 }

@@ -1,7 +1,19 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, SparkPlanInfo}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.enrich.Enrich
 import graft.model.PipelineConfig
@@ -13,7 +25,7 @@ import graft.state.ManifestStore
   * routed-row ordering, manifest resume idempotence (the partition-level
   * analogue of the reference's state-file resume test, file.rs:738-813).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val N = 5000L
 
@@ -135,13 +147,16 @@ class PipelineSpec extends SparkSpec {
       (rows(0).getLong(0), rows(0).getLong(1))
     }
 
-    // fresh: the input rows, and the malformed rows the router tags
-    Pipeline.run(spark, cfg)
+    // fresh: the input rows, and the malformed rows the router tags; the
+    // report's per-format rows split the rows it wrote
+    val report = Pipeline.run(spark, cfg)
     val routedMalformed = Router.sinkAggregates(Pipeline.transform(
         spark.read.parquet(in), cfg, Enrich.defaultLookup(spark)))
       .filter(col("format") === "malformed").agg(sum("n")).first().getLong(0)
     assert(routedMalformed > 0, "fixture should contain malformed rows")
     assert(observed(out) === ((N, routedMalformed)))
+    assert(report.formatRows.values.sum === report.totalRows)
+    assert(report.formatRows("malformed") === routedMalformed)
 
     // resumed over a manifest that already holds four 'system' buckets:
     // those are never written, and the counters follow what data/ holds
@@ -153,5 +168,112 @@ class PipelineSpec extends SparkSpec {
     assert(data.count() < N)
     assert(observed(out2) ===
       ((data.count(), data.filter(col("format") === "malformed").count())))
+  }
+
+  private def aggregates(df: DataFrame): Set[(String, String, Long, Long, Long, Long)] =
+    df.select("sink", "format", "n", "n_conv", "min_turn", "max_turn").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))).toSet
+
+  test("aggregates: _aggregates equals Router.sinkAggregates, fresh and resumed") {
+    val (in, out) = freshDirs()
+    // one 2,000-turn conversation among them, written by 8 tasks
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+      .copy(shufflePartitions = 8)
+    def reference(input: String) = aggregates(Router.sinkAggregates(Pipeline.transform(
+      spark.read.parquet(input), cfg, Enrich.defaultLookup(spark))))
+    val expected = reference(in)
+
+    Pipeline.run(spark, cfg)
+    assert(aggregates(spark.read.parquet(s"$out/_aggregates")) === expected)
+
+    // the generator gives a conversation's rows of one format one turn_idx
+    // residue mod 4; at turn_idx / 8 they take all four, so a write key
+    // salted by turn_idx would spread them over tasks
+    val spread = in + "_spread"
+    spark.read.parquet(in).withColumn("turn_idx", (col("turn_idx") / 8).cast("int"))
+      .write.parquet(spread)
+    Pipeline.run(spark, cfg.copy(inputPath = spread, outputRoot = spread + "_out"))
+    assert(aggregates(spark.read.parquet(s"${spread}_out/_aggregates")) === reference(spread))
+
+    // a finished run's data/ with only its even buckets committed: the rerun
+    // writes the odd ones and reads the even ones back
+    val out2 = out + "_resumed"
+    FileUtils.copyDirectory(new File(s"$out/data"), new File(s"$out2/data"))
+    val even = new ManifestStore(spark, s"$out/_manifest").read()
+      .select("sink", "bucket", "rows").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).filter(_._2 % 2 == 0).toSeq
+    new ManifestStore(spark, s"$out2/_manifest").commit(cfg.runId, even,
+      wallMs = 0L, committedAt = cfg.runTsMillis)
+    val resumed = Pipeline.run(spark, cfg.copy(outputRoot = out2))
+    assert(resumed.totalRows === N - even.map(_._3).sum)
+    assert(aggregates(spark.read.parquet(s"$out2/_aggregates")) === expected)
+    assert(spark.read.parquet(s"$out2/_metrics").select("observed_total").distinct()
+      .collect().map(_.getLong(0)).toSeq === Seq(N))
+  }
+
+  test("a fresh run reads nothing back from data/ and sorts the write once") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+
+    // the locations of every file scan any session of the context plans
+    // (a session-scoped listener cannot see a child session's queries)
+    val scanned = new ConcurrentLinkedQueue[String]()
+    def scans(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan")) p.metadata.get("Location").foreach(scanned.add)
+      p.children.foreach(scans)
+    }
+    val scanListener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    // the executed plans of this session's queries, the write among them
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(scanListener)
+    spark.listenerManager.register(planListener)
+    try Pipeline.run(spark, cfg)
+    finally {
+      drainListenerBus()
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(scanListener)
+    }
+
+    assert(scanned.asScala.exists(_.contains(in)), "the listener sees the input scan")
+    assert(!scanned.asScala.exists(_.contains(s"$out/data")), scanned.asScala.toSeq)
+    val writes = plans.asScala.toSeq.filter(_.toString.contains(s"$out/data"))
+    assert(writes.size === 1)
+    assert(collect(writes.head) { case s: SortExec => s }.size === 1, writes.head)
+  }
+
+  test("write: no more tasks than the write key has values") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    // 5 sinks x 2 buckets x 4 salts = 40 key values against 10,000 partitions
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+      .copy(shufflePartitions = 10000, saltBuckets = 2)
+    val tasks = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val report =
+      try Pipeline.run(spark, cfg)
+      finally {
+        drainListenerBus()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(report.totalRows === N)
+    assert(tasks.asScala.max <= 40, tasks.asScala.toSeq)
   }
 }
