@@ -4,10 +4,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,7 +50,7 @@ case class DeliveryCube(sink: Expression, bucket: Expression, format: Expression
 
   override def dataType: DataType = Type
 
-  override def prettyName: String = "delivery_cube"
+  override def prettyName: String = DeliveryCube.InternalName
 
   override def createAggregationBuffer(): Cube = new Cube
 
@@ -141,6 +143,21 @@ case class DeliveryCube(sink: Expression, bucket: Expression, format: Expression
 }
 
 object DeliveryCube {
+
+  /** The registry name behind [[column]]; not a query function. */
+  val InternalName = "graft_internal_delivery_cube"
+
+  /** The aggregate as a Column, for the pipeline's sink write only: its
+    * `n_conv` holds only over rows that arrive in each task sorted by
+    * (sink, bucket, conv_id, turn_idx), with every conversation's rows of a
+    * sink in one task; in a plain GROUP BY or select it over-counts. Spark 4
+    * builds a Column from a Catalyst expression only inside its own
+    * packages, so the call goes through the session registry under
+    * [[InternalName]] (see `GraftFunctions.ensureRegistered`).
+    */
+  def column(sink: Column, bucket: Column, format: Column, convId: Column,
+      turnIdx: Column): Column =
+    call_function(InternalName, sink, bucket, format, convId, turnIdx)
 
   /** One element of the result, named as the `_aggregates` columns. */
   val Type: DataType = ArrayType(StructType(Seq(

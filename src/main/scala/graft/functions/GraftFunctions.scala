@@ -23,7 +23,10 @@ object GraftFunctions {
     "regexp_groups" -> ((exprs: Seq[Expression]) => RegexpGroups(exprs(0),
       exprs(1).eval().toString)),
     "compact_map" -> ((exprs: Seq[Expression]) => CompactMap(exprs)),
-    "delivery_cube" -> ((e: Seq[Expression]) => DeliveryCube(e(0), e(1), e(2), e(3), e(4))),
+    // the pipeline write's delivery count, under an internal name: its
+    // n_conv needs the write's sorted, conversation-keyed input
+    DeliveryCube.InternalName -> ((e: Seq[Expression]) =>
+      DeliveryCube(e(0), e(1), e(2), e(3), e(4))),
     // centroid table arrives as a foldable array<array<float>> literal and
     // is baked into the expression at build time
     "nearest_cell" -> ((exprs: Seq[Expression]) => {
@@ -260,13 +263,6 @@ object GraftFunctions {
 
   /** Null-skipping one-allocation map<string,string> from k1,v1,k2,v2,... */
   def compact_map(kvs: Column*): Column = call_function("compact_map", kvs: _*)
-
-  /** The per-(sink, bucket, format) delivery cube of rows written sorted by
-    * (sink, bucket, conv_id, turn_idx); see [[DeliveryCube]].
-    */
-  def delivery_cube(sink: Column, bucket: Column, format: Column, convId: Column,
-      turnIdx: Column): Column =
-    call_function("delivery_cube", sink, bucket, format, convId, turnIdx)
 
   /** Merge map `upper` into `lower`, upper winning on key collision — the
     * reference's serde_json insert-overwrite, made safe against Spark's

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
-import graft.functions.GraftFunctions
+import graft.functions.{DeliveryCube, GraftFunctions}
 import graft.model.PipelineConfig
 import graft.parse.PatternDictionary
 import graft.route.Router
@@ -27,13 +27,11 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
   *     deterministic, and so is the salt, so one conversation's rows of a
   *     sink land in one task. The salt hashes differently from the bucket,
   *     so a bucket's conversations spread over 4 tasks, and a (sink, bucket)
-  *     directory gets at most 4 files. The key takes at most sinks ×
-  *     `saltBuckets` × 4 values (640 for 5 sinks at app.Main's 32 buckets),
-  *     and the repartition is clamped to that count;
+  *     directory gets at most 4 files;
   *   - parse-once fan-out: ONE write job partitions the routed frame by
   *     sink, with nothing persisted (the reference reuses one configured
   *     input across routes, site/docs/config.md:355-358);
-  *   - delivery counting rides the write: an observed `delivery_cube` over
+  *   - delivery counting rides the write: an observed [[DeliveryCube]] over
   *     the sorted write input yields the per-(sink, bucket, format) cube
   *     behind the manifest rows, `_aggregates` and `_metrics`, so a fresh
   *     run never re-reads `data/` (the reference counts on the sink's
@@ -63,11 +61,10 @@ object Pipeline {
 
   /** Shuffle width for the ordered fan-out write: explicit count when the
     * config pins one, else derived from the INPUT SIZE —
-    * max(cluster parallelism, bytes / 128 MB + 1). [[run]] clamps it to the
-    * write key's cardinality (sinks × `saltBuckets` × 4): no more reducers
-    * than that receive rows, and AQE's `CoalesceShufflePartitions` leaves a
-    * repartition to a fixed count alone, so every partition over that
-    * would be scheduled as an empty task.
+    * max(cluster parallelism, bytes / 128 MB + 1). AQE's
+    * `CoalesceShufflePartitions` leaves a repartition to a fixed count
+    * alone, so every partition is scheduled as a task, and those past the
+    * write key's cardinality (sinks × `saltBuckets` × 4) receive no rows.
     */
   def derivedShufflePartitions(spark: SparkSession, cfg: PipelineConfig): Int =
     if (cfg.shufflePartitions > 0) cfg.shufflePartitions
@@ -107,12 +104,9 @@ object Pipeline {
     // the delivery cube is an observed metric of the write's own tasks, so
     // no job re-reads the rows it wrote.
     val s0 = System.nanoTime()
-    val keys = allSinks.size * cfg.saltBuckets * 4
     val out = todo
-      // the key takes at most `keys` values, and AQE does not coalesce a
-      // repartition to a fixed count, so more partitions are empty tasks
-      .repartition(math.min(derivedShufflePartitions(spark, cfg), keys), col("sink"),
-        col("bucket"), pmod(xxhash64(col("conv_id")), lit(4)))
+      .repartition(derivedShufflePartitions(spark, cfg), col("sink"), col("bucket"),
+        pmod(xxhash64(col("conv_id")), lit(4)))
       // leading (sink, bucket) satisfies the planned write's required
       // ordering (partitionBy sorts by partition cols, NON-stably —
       // without it the writer's own sort would scramble row order)
@@ -126,7 +120,7 @@ object Pipeline {
     // sink in one task and the sort makes it one run there
     val delivered = Observation("delivered")
     format.overwritePartitions(
-      out.observe(delivered, GraftFunctions.delivery_cube(col("sink"), col("bucket"),
+      out.observe(delivered, DeliveryCube.column(col("sink"), col("bucket"),
         col("format"), col("conv_id"), col("turn_idx")).as("cube")),
       s"${cfg.outputRoot}/data", Seq("sink", "bucket"))
     val writeWallMs = (System.nanoTime() - s0) / 1000000

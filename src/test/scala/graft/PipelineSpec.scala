@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -253,27 +253,5 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val writes = plans.asScala.toSeq.filter(_.toString.contains(s"$out/data"))
     assert(writes.size === 1)
     assert(collect(writes.head) { case s: SortExec => s }.size === 1, writes.head)
-  }
-
-  test("write: no more tasks than the write key has values") {
-    val (in, out) = freshDirs()
-    TranscriptGen.transcripts(spark, N).write.parquet(in)
-    // 5 sinks x 2 buckets x 4 salts = 40 key values against 10,000 partitions
-    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
-      .copy(shufflePartitions = 10000, saltBuckets = 2)
-    val tasks = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        tasks.add(e.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val report =
-      try Pipeline.run(spark, cfg)
-      finally {
-        drainListenerBus()
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    assert(report.totalRows === N)
-    assert(tasks.asScala.max <= 40, tasks.asScala.toSeq)
   }
 }
