@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import graft.enrich.Enrich
 import graft.model.{PipelineConfig, SinkRule}
 import graft.pipeline.{Pipeline, Transcripts}
-import graft.streaming.StreamingPipeline
 
 /** spark-submit entry point for the transcripts pipeline.
   *
@@ -83,7 +82,7 @@ object Main {
       // and plan validation with zero input IO
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StreamingPipeline.TranscriptSchema)
+        Pipeline.InputSchema)
       Pipeline.transform(empty, cfg, Enrich.defaultLookup(spark)).explain("formatted")
     } else {
       val report = Pipeline.run(spark, cfg)

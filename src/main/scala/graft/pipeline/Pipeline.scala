@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.enrich.Enrich
 import graft.functions.{DeliveryCube, GraftFunctions}
@@ -22,12 +23,15 @@ import graft.state.{ManifestStore, ParquetFormat, TableFormat}
   * Scale design (100 TB / 1000 executors):
   *   - the fact side is never shuffled for the enrich join (broadcast);
   *   - the only shuffle is the salted repartition before the ordered sink
-  *     write: key = (sink, bucket, pmod(xxhash64(conv_id), 4)). `bucket` is
+  *     write: key = (sink, bucket, pmod(xxhash64(conv_id), S)). `bucket` is
   *     a pure function of conv_id, which keeps manifest granularity
   *     deterministic, and so is the salt, so one conversation's rows of a
-  *     sink land in one task. The salt hashes differently from the bucket,
-  *     so a bucket's conversations spread over 4 tasks, and a (sink, bucket)
-  *     directory gets at most 4 files;
+  *     sink land in one task. S = ⌈4·P / D⌉ for P write partitions and D
+  *     (sink, bucket) directories: while D ≥ 4·P the salt is constant, so
+  *     each directory is ONE file written by one task; past that the key
+  *     has about 4 values per partition, so few partitions stay empty, and
+  *     the salt (a hash independent of the bucket's) spreads a directory
+  *     over at most S files;
   *   - parse-once fan-out: ONE write job partitions the routed frame by
   *     sink, with nothing persisted (the reference reuses one configured
   *     input across routes, site/docs/config.md:355-358);
@@ -50,6 +54,10 @@ object Pipeline {
     def turnsPerSec: Double = if (wallMs == 0) 0 else totalRows * 1000.0 / wallMs
   }
 
+  /** The transcripts table a run reads (and the stream's file source). */
+  val InputSchema: StructType = StructType.fromDDL(
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
+
   /** Pure transform part (no IO): parse + enrich + route tag. */
   def transform(input: DataFrame, cfg: PipelineConfig, lookup: DataFrame): DataFrame = {
     GraftFunctions.ensureRegistered(input.sparkSession)
@@ -63,8 +71,11 @@ object Pipeline {
     * config pins one, else derived from the INPUT SIZE —
     * max(cluster parallelism, bytes / 128 MB + 1). AQE's
     * `CoalesceShufflePartitions` leaves a repartition to a fixed count
-    * alone, so every partition is scheduled as a task, and those past the
-    * write key's cardinality (sinks × `saltBuckets` × 4) receive no rows.
+    * alone, so every partition is scheduled as a task. The write key's salt
+    * widens with this count to about 4 key values per partition, so hash
+    * placement leaves about e⁻⁴ ≈ 2% of a wide write's tasks empty; while
+    * sinks × `saltBuckets` ≥ 4 × this count, the salt is constant and each
+    * (sink, bucket) directory is written as one file.
     */
   def derivedShufflePartitions(spark: SparkSession, cfg: PipelineConfig): Int =
     if (cfg.shufflePartitions > 0) cfg.shufflePartitions
@@ -82,7 +93,8 @@ object Pipeline {
     GraftFunctions.ensureRegistered(spark)
     val t0 = System.nanoTime()
 
-    val input = format.readSnapshot(spark, cfg.inputPath)
+    // the declared schema: no job infers one from the input's files
+    val input = format.readSnapshot(spark, cfg.inputPath, Some(InputSchema))
     val routed = transform(input, cfg, Enrich.defaultLookup(spark))
 
     val manifest = new ManifestStore(spark, s"${cfg.outputRoot}/_manifest", format)
@@ -103,10 +115,17 @@ object Pipeline {
     // serialized Spark job per sink. The write counts what it delivers:
     // the delivery cube is an observed metric of the write's own tasks, so
     // no job re-reads the rows it wrote.
+    //
+    // The salt's width S = ⌈4·P / D⌉ over the D (sink, bucket) directories
+    // gives the key about 4 values per write partition, or one value (one
+    // file per directory) while D ≥ 4·P. Long: 4·P overflows an Int.
     val s0 = System.nanoTime()
+    val partitions = derivedShufflePartitions(spark, cfg)
+    val dirs = allSinks.size.toLong * cfg.saltBuckets
+    val saltWidth = (4L * partitions + dirs - 1) / dirs
     val out = todo
-      .repartition(derivedShufflePartitions(spark, cfg), col("sink"), col("bucket"),
-        pmod(xxhash64(col("conv_id")), lit(4)))
+      .repartition(partitions, col("sink"), col("bucket"),
+        pmod(xxhash64(col("conv_id")), lit(saltWidth)))
       // leading (sink, bucket) satisfies the planned write's required
       // ordering (partitionBy sorts by partition cols, NON-stably —
       // without it the writer's own sort would scramble row order)

@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** The narrow table-format seam promised in SURVEY.md §7.1.7: everything the
   * pipeline needs from a table store is "read the current snapshot", "append
@@ -23,8 +24,11 @@ trait TableFormat {
   /** Current snapshot; empty frame with `schemaDdl` if the table is absent. */
   def readSnapshot(spark: SparkSession, path: String, schemaDdl: String): DataFrame
 
-  /** Snapshot of a table that must exist. */
-  def readSnapshot(spark: SparkSession, path: String): DataFrame
+  /** Snapshot of a table that must exist, read with `schema` when one is
+    * given instead of a schema inferred from its files.
+    */
+  def readSnapshot(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame
 
   def exists(spark: SparkSession, path: String): Boolean
 
@@ -82,10 +86,11 @@ class FileTableFormat(source: String) extends TableFormat {
     if (exists(spark, path)) spark.read.schema(schemaDdl).format(source).load(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
+      StructType.fromDDL(schemaDdl))
 
-  override def readSnapshot(spark: SparkSession, path: String): DataFrame =
-    spark.read.format(source).load(path)
+  override def readSnapshot(spark: SparkSession, path: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).format(source).load(path)
 
   override def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 import graft.enrich.Enrich
 import graft.functions.GraftFunctions
@@ -22,9 +21,6 @@ import graft.state.Scratch
   */
 object StreamingPipeline {
 
-  val TranscriptSchema: StructType = StructType.fromDDL(
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
-
   /** Open the transcripts dir as a file-source stream and apply the batch
     * pipeline's transform unchanged.
     */
@@ -32,7 +28,7 @@ object StreamingPipeline {
       maxFilesPerTrigger: Int = 8): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     val stream = spark.readStream
-      .schema(TranscriptSchema)
+      .schema(Pipeline.InputSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
     Pipeline.transform(stream, cfg, Enrich.defaultLookup(spark))

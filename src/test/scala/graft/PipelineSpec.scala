@@ -7,8 +7,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
@@ -253,5 +253,61 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val writes = plans.asScala.toSeq.filter(_.toString.contains(s"$out/data"))
     assert(writes.size === 1)
     assert(collect(writes.head) { case s: SortExec => s }.size === 1, writes.head)
+  }
+
+  test("a missing input path fails the run") {
+    val (in, out) = freshDirs()
+    intercept[AnalysisException](
+      Pipeline.run(spark, PipelineConfig.default(in, out, Transcripts.RunTsMillis)))
+  }
+
+  test("write: a small run writes one file per (sink, bucket) directory") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    // 5 sinks x 8 buckets = 40 directories >= 4 x 4 partitions: salt width 1
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+      .copy(shufflePartitions = 4)
+    Pipeline.run(spark, cfg)
+
+    val dirs = new File(s"$out/data").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.isDirectory)).toSeq
+    assert(dirs.size === 40)
+    dirs.foreach { d =>
+      val parts = d.list().filter(_.startsWith("part-"))
+      assert(parts.length === 1, s"$d holds ${parts.mkString(", ")}")
+    }
+  }
+
+  test("write: a wide write puts rows in nearly every task, with exact aggregates") {
+    val (in, out) = freshDirs()
+    TranscriptGen.transcripts(spark, N).write.parquet(in)
+    // 5 sinks x 2 buckets = 10 directories, salt width ceil(4 x 64 / 10) = 26
+    val cfg = PipelineConfig.default(in, out, Transcripts.RunTsMillis)
+      .copy(shufflePartitions = 64, saltBuckets = 2)
+
+    // rows each task of each stage reads from a shuffle
+    val shuffleRead = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffleRead.add(e.stageId -> e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Pipeline.run(spark, cfg)
+    finally {
+      drainListenerBus()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+
+    // the write stage: the one that reads every routed row from the shuffle
+    val writes = shuffleRead.asScala.toSeq.groupMap(_._1)(_._2).values
+      .filter(_.sum == N).toSeq
+    assert(writes.size === 1, shuffleRead.asScala.toSeq)
+    assert(writes.head.size === 64)
+    assert(writes.head.count(_ > 0) >= 56, writes.head)
+
+    val expected = aggregates(Router.sinkAggregates(Pipeline.transform(
+      spark.read.parquet(in), cfg, Enrich.defaultLookup(spark))))
+    assert(aggregates(spark.read.parquet(s"$out/_aggregates")) === expected)
   }
 }
